@@ -61,6 +61,13 @@ _REMEDY = "use the spark-avro datasource (spark.jars.packages) for this"
 # ---------------------------------------------------------------- binary --
 
 
+# A 64-bit zigzag value needs at most 10 varint bytes, and the 10th
+# may carry only bit 63. Every decode path (the row decoder, the block
+# skipper, the vectorized decoder) rejects anything longer or wider
+# with this same error instead of truncating or wrapping it.
+_VARINT_OVERFLOW = "avro varint longer than 10 bytes or wider than 64 bits"
+
+
 def _read_long(buf: io.BytesIO) -> int:
     """Zigzag varint (the int/long wire format)."""
     shift, acc = 0, 0
@@ -68,6 +75,8 @@ def _read_long(buf: io.BytesIO) -> int:
         b = buf.read(1)
         if not b:
             raise EOFError("truncated varint")
+        if shift == 63 and b[0] > 1:
+            raise ValueError(_VARINT_OVERFLOW)
         acc |= (b[0] & 0x7F) << shift
         if not b[0] & 0x80:
             break
@@ -550,8 +559,8 @@ elif mv[p + 6] < 128: p += 7
 elif mv[p + 7] < 128: p += 8
 elif mv[p + 8] < 128: p += 9
 elif mv[p + 9] < 128: p += 10
-else: raise ValueError("avro varint longer than 10 bytes")
-"""
+else: raise ValueError(%r)
+""" % _VARINT_OVERFLOW
 
 _SKIP_FIXED = """\
 A(p)
@@ -734,9 +743,9 @@ def _vec_varint_values(np, buf, starts, valid):
     limit = max(len(buf) - 1, 0)
     shift = np.uint64(0)
     while cont.any():
-        if shift > np.uint64(63):
-            raise ValueError("avro varint longer than 10 bytes")
         b = buf[np.minimum(idx, limit)]
+        if shift == np.uint64(63) and (cont & (b > 1)).any():
+            raise ValueError(_VARINT_OVERFLOW)
         add = (b & 0x7F).astype(np.uint64) << shift
         acc = np.where(cont, acc | add, acc)
         cont = cont & (b >= 0x80)

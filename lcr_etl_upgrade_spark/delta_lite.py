@@ -58,11 +58,13 @@ that keeps Delta semantics runnable (and tested) here.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
 import shutil
 import struct
+import time
 import urllib.parse
 import uuid
 from dataclasses import dataclass, field
@@ -1886,6 +1888,120 @@ def _write_commit_file(commit_path: str, actions: list[dict]) -> None:
         raise
 
 
+def _remove_action(
+    state: TableState, rel: str, now_ms: int, data_change: bool = True
+) -> dict:
+    """The remove action retiring ``rel``. It echoes the file's tracked
+    deletion-vector descriptor: log replay retires a file only when the
+    remove's DV identity matches (_apply_action), so a bare remove
+    would leave a DV-bearing file alive."""
+    remove = {
+        "path": urllib.parse.quote(rel, safe="/="),
+        "deletionTimestamp": now_ms,
+        "dataChange": data_change,
+    }
+    if rel in state.dvs:
+        remove["deletionVector"] = state.dvs[rel]
+    return {"remove": remove}
+
+
+_MAT_ROW_ID_KEY = "delta.rowTracking.materializedRowIdColumnName"
+_MAT_ROW_CV_KEY = (
+    "delta.rowTracking.materializedRowCommitVersionColumnName"
+)
+
+
+@dataclass
+class _RowIds:
+    """rowTracking bookkeeping for one commit that adds files (every
+    writer: append/overwrite, the DML kernel, optimize). When the table
+    lists the feature, every fresh add carries a baseRowId range that
+    collides with nothing — allocated from the ``delta.rowTracking``
+    domain's rowIdHighWaterMark using each file's own numRecords — plus
+    defaultRowCommitVersion, and the advanced watermark commits as a
+    domainMetadata action in the same version (delta-spark's scheme:
+    ranges, never per-row state, so allocation is O(files) driver
+    work). Rewrites also need the materialized row-id /
+    row-commit-version column names, named by table configuration and
+    created on first use (``new_config`` is then the configuration that
+    must commit with them)."""
+
+    on: bool
+    rid_col: str | None
+    rcv_col: str | None
+    new_config: dict | None
+    next_id: int
+    drawn: bool = False
+
+    @classmethod
+    def of(cls, state: TableState | None,
+           metadata: dict | None = None) -> "_RowIds":
+        if state is None:
+            return cls(False, None, None, None, 0)
+        cfg = dict(
+            ((metadata or state.metadata) or {}).get("configuration") or {}
+        )
+        on = "rowTracking" in set(
+            (state.protocol or {}).get("writerFeatures") or ()
+        )
+        if not on:
+            return cls(
+                False, cfg.get(_MAT_ROW_ID_KEY), cfg.get(_MAT_ROW_CV_KEY),
+                None, 0,
+            )
+        new_config = None
+        for key, prefix in (
+            (_MAT_ROW_ID_KEY, "_row-id-col-"),
+            (_MAT_ROW_CV_KEY, "_row-commit-version-col-"),
+        ):
+            if cfg.get(key) is None:
+                cfg[key] = f"{prefix}{uuid.uuid4().hex}"
+                new_config = cfg
+        next_id = 0
+        domain = state.domains.get("delta.rowTracking")
+        if domain and not domain.get("removed"):
+            next_id = int(
+                json.loads(domain.get("configuration") or "{}").get(
+                    "rowIdHighWaterMark", -1
+                )
+            ) + 1
+        return cls(
+            True, cfg[_MAT_ROW_ID_KEY], cfg[_MAT_ROW_CV_KEY], new_config,
+            next_id,
+        )
+
+    def assign(self, add: dict, stats: str | None, version: int,
+               path: str) -> None:
+        """Give a fresh ``add`` its baseRowId range and
+        defaultRowCommitVersion (no-op without the feature)."""
+        if not self.on:
+            return
+        if stats is None:
+            raise NotImplementedError(
+                f"the table at {path!r} demands rowTracking but the new "
+                f"file {add['path']!r} yielded no readable footer "
+                "statistics to size its baseRowId range; refusing rather "
+                "than committing colliding row ids"
+            )
+        add["baseRowId"] = self.next_id
+        # rowTracking commits are single-writer, so the version
+        # computed before staging IS the committed one
+        add["defaultRowCommitVersion"] = version
+        self.next_id += int(json.loads(stats)["numRecords"])
+        self.drawn = True
+
+    def watermark(self) -> dict:
+        return {
+            "domainMetadata": {
+                "domain": "delta.rowTracking",
+                "configuration": json.dumps(
+                    {"rowIdHighWaterMark": self.next_id - 1}
+                ),
+                "removed": False,
+            }
+        }
+
+
 def write_delta_lite(
     df: DataFrame,
     path: str,
@@ -2475,40 +2591,11 @@ def write_delta_lite(
         meta["configuration"] = configuration
         actions.append({"metaData": meta})
     if prior is not None and mode == "overwrite":
-        for rel in prior.files:
-            remove = {
-                "path": urllib.parse.quote(rel, safe="/="),
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-            # echo the file's tracked DV descriptor: log replay retires
-            # a file only when the remove's DV identity matches
-            # (_apply_action), so a bare remove would leave DV-bearing
-            # files alive through an overwrite
-            if rel in prior.dvs:
-                remove["deletionVector"] = prior.dvs[rel]
-            actions.append({"remove": remove})
-    # rowTracking writer obligation: when the feature is listed, every
-    # fresh add carries a baseRowId range that collides with nothing —
-    # allocated from the delta.rowTracking domain's rowIdHighWaterMark
-    # using each file's own numRecords — plus defaultRowCommitVersion;
-    # the advanced watermark commits as a domainMetadata action in the
-    # same version. (delta-spark's scheme, re-expressed: ranges, never
-    # per-row state, so allocation is O(files) driver work.)
-    row_tracking = prior is not None and (
-        "rowTracking"
-        in set((prior.protocol or {}).get("writerFeatures") or ())
-    )
-    next_row_id = 0
-    if row_tracking:
-        domain = prior.domains.get("delta.rowTracking")
-        if domain and not domain.get("removed"):
-            next_row_id = int(
-                json.loads(domain.get("configuration") or "{}").get(
-                    "rowIdHighWaterMark", -1
-                )
-            ) + 1
-
+        actions.extend(
+            _remove_action(prior, rel, now_ms) for rel in prior.files
+        )
+    row_ids = _RowIds.of(prior)
+    row_tracking = row_ids.on
     for rel, size in moved:
         add = {
             "path": urllib.parse.quote(rel, safe="/="),
@@ -2522,31 +2609,10 @@ def write_delta_lite(
         stats = stats_by_rel[rel]
         if stats is not None:
             add["stats"] = stats
-        if row_tracking:
-            if stats is None:
-                raise NotImplementedError(
-                    f"the table at {path!r} demands rowTracking but the "
-                    f"staged file {rel!r} yielded no readable footer "
-                    "statistics to size its baseRowId range; refusing "
-                    "rather than committing colliding row ids"
-                )
-            n_records = int(json.loads(stats)["numRecords"])
-            add["baseRowId"] = next_row_id
-            # version is pre-race here; rowTracking commits are single-
-            # writer (below), so the committed version IS this one
-            add["defaultRowCommitVersion"] = version
-            next_row_id += n_records
+        row_ids.assign(add, stats, version, path)
         actions.append({"add": add})
-    if row_tracking and moved:
-        actions.append({
-            "domainMetadata": {
-                "domain": "delta.rowTracking",
-                "configuration": json.dumps(
-                    {"rowIdHighWaterMark": next_row_id - 1}
-                ),
-                "removed": False,
-            }
-        })
+    if row_ids.drawn:
+        actions.append(row_ids.watermark())
 
     if txn is not None:
         actions.append(
@@ -2754,7 +2820,8 @@ def _dv_union_blobs(
     exactly once, to the one task serializing that file's new DV.
     Files whose position set did not grow (every match already masked)
     emit nothing, so a fully-no-op command can skip committing.
-    Shared by delete_rows and the DV write path of update_rows (r13)."""
+    The DML kernel's deletion-vector mask pass (every DELETE, and the
+    masked files of UPDATE and MERGE)."""
     old_rows = []
     old_total = 0
     for rel, dv in sorted(old_dvs.items()):
@@ -2930,276 +2997,6 @@ def _dv_protocol_upgrade_action(state, mapping: str) -> dict | None:
     }
 
 
-def delete_rows(
-    spark: SparkSession,
-    path: str,
-    predicate: Column | str,
-    inline_threshold: int = DV_INLINE_THRESHOLD,
-) -> int:
-    """DELETE FROM the table at ``path`` WHERE ``predicate`` — without
-    rewriting any parquet file: matching row positions are recorded as
-    DELETION VECTORS per the public protocol (the write direction of the
-    r6 reader feature; roaring_lite.serialize_roaring_bitmap_array).
-    Returns the committed version (the current version unchanged if
-    nothing matched).
-
-    Mechanics, mirroring the reader's contracts exactly:
-    - the predicate is evaluated over the LOGICAL schema (column-mapped
-      tables scan physically and rename first, like read_delta_lite);
-    - per-file positions come from ``_metadata.row_index`` and are
-      serialized to bitmaps EXECUTOR-side (one task per touched file via
-      applyInPandas); only the compact roaring bytes reach the driver,
-      STREAMED one partition at a time (u-storage blobs hit disk
-      immediately; a fully-no-op delete — every match already masked —
-      returns the current version without committing), with
-      DELETE_MAX_TOTAL_DV_BYTES capping the total funneled per commit
-      on both the old-blob and new-blob sides;
-    - a file that already carries a DV gets the UNION of its old and new
-      positions (the protocol's re-add-replaces-DV rule), committed as
-      the remove(oldDv) + add(newDv) pair log replay keys on;
-    - descriptors use ``i`` inline storage below ``inline_threshold``
-      bitmap bytes and ``u`` UUID-named files (format version 1,
-      size/CRC framed exactly as ``_resolve_dv_blob`` verifies) above;
-    - first delete upgrades the protocol to 3/7 adding deletionVectors
-      to BOTH feature lists (preserving features already present);
-    - single-writer commit like overwrite: a lost race raises rather
-      than retrying (a concurrent writer may have rewritten the very
-      files this delete masked).
-    """
-    import zlib
-
-    base = _local(path)
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
-    _check_write_obligations(state, path, "delete")
-    mapping = _column_mapping_mode(state.metadata)
-    if mapping not in ("none", "name", "id"):
-        raise NotImplementedError(
-            f"unknown delta.columnMapping.mode {mapping!r}"
-        )
-    if not state.files:
-        return state.version
-
-    schema = state.schema
-    phys_schema = _physicalize(schema) if mapping != "none" else schema
-    phys_part_cols = [
-        pf.name
-        for f, pf in zip(schema.fields, phys_schema.fields)
-        if f.name in state.partition_columns
-    ]
-    rels = sorted(state.files)
-    abs_files = [os.path.join(base, rel) for rel in rels]
-    if mapping != "none":
-        # same footer peek as read_delta_lite: on a mapped table whose
-        # files do NOT carry physical names (foreign id-mode writers
-        # relying on parquet field-id resolution), every data column
-        # would scan as NULL and a predicate like `col IS NULL` would
-        # silently mask the whole table — refuse instead
-        _verify_physical_names(
-            spark,
-            abs_files[0],
-            [
-                pf.name
-                for pf in phys_schema.fields
-                if pf.name not in phys_part_cols
-            ],
-            known=state.historical_physical_names,
-        )
-    if phys_part_cols:
-        if not _all_files_hive_layout(state.files, phys_part_cols):
-            raise NotImplementedError(
-                "delete_rows on a partitioned table whose file paths do "
-                "not hive-encode the logged partitionValues (externally "
-                "authored layout) — rewrite via overwrite instead"
-            )
-        scan = (
-            spark.read.option("basePath", base)
-            .schema(phys_schema)
-            .parquet(*abs_files)
-        )
-    else:
-        scan = spark.read.schema(phys_schema).parquet(*abs_files)
-
-    meta_cols = [
-        F.regexp_replace(F.col("_metadata.file_path"), r"^file:/+", "/")
-        .alias("__file"),
-        F.col("_metadata.row_index").alias("__pos"),
-    ]
-    logical = scan.select(
-        *[
-            _quoted(pf.name).cast(f.dataType).alias(f.name)
-            for f, pf in zip(schema.fields, phys_schema.fields)
-        ],
-        *meta_cols,
-    )
-    pred = predicate if isinstance(predicate, Column) else F.expr(predicate)
-    matched = logical.filter(pred).select("__file", "__pos")
-
-    touched_df = _dv_union_blobs(spark, base, matched, state.dvs)
-
-    enc_to_rel = {
-        _hadoop_path_encode(os.path.abspath(os.path.join(base, rel))): rel
-        for rel in rels
-    }
-    import time
-
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "DELETE",
-            "operationParameters": {},
-        }
-    }]
-
-    upgrade = _dv_protocol_upgrade_action(state, mapping)
-    if upgrade is not None:
-        actions.append(upgrade)
-
-    dv_written: list[str] = []  # staged .bin files, for rollback
-    try:
-        per_file = _materialize_dv_descriptors(
-            base, touched_df, enc_to_rel, inline_threshold, dv_written
-        )
-        if not per_file:
-            return state.version
-
-        if str(
-            (state.metadata.get("configuration") or {}).get(
-                "delta.enableChangeDataFeed", ""
-            )
-        ).lower() == "true":
-            # CDF writer obligation: a DV delete is remove+add of the
-            # SAME path, where naive add/remove derivation double-counts
-            # — the one commit shape the protocol says must carry cdc
-            # actions. Materialize the newly-deleted rows (matched minus
-            # already-masked) as change files under _change_data/,
-            # scanning ONLY the files this delete actually touched.
-            touched_rels = sorted(r for r, _ in per_file)
-            touched_abs = [os.path.join(base, r) for r in touched_rels]
-            if phys_part_cols:
-                cdc_scan = (
-                    spark.read.option("basePath", base)
-                    .schema(phys_schema)
-                    .parquet(*touched_abs)
-                )
-            else:
-                cdc_scan = spark.read.schema(phys_schema).parquet(
-                    *touched_abs
-                )
-            cdc_src = cdc_scan.select(
-                *[
-                    _quoted(pf.name).cast(f.dataType).alias(f.name)
-                    for f, pf in zip(schema.fields, phys_schema.fields)
-                ],
-                *meta_cols,
-            ).filter(pred)
-            old_touched = {
-                r: state.dvs[r] for r in touched_rels if r in state.dvs
-            }
-            if old_touched:
-                posdf = _dv_positions(
-                    spark,
-                    base,
-                    _dv_verify(base, old_touched),
-                    list(old_touched),
-                )
-                if posdf is not None:
-                    cdc_src = cdc_src.join(
-                        posdf,
-                        (F.col("__file") == posdf["__dv_file"])
-                        & (F.col("__pos") == posdf["__dv_idx"]),
-                        "left_anti",
-                    )
-            cdc_out = cdc_src.select(
-                *[
-                    _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                    for f, pf in zip(schema.fields, phys_schema.fields)
-                ]
-            ).withColumn("_change_type", F.lit("delete"))
-            cdc_dir = os.path.join(base, "_change_data")
-            os.makedirs(cdc_dir, exist_ok=True)
-            for rel_cdc, size in _stage_and_move(
-                cdc_out, cdc_dir, tuple(phys_part_cols)
-            ):
-                full_rel = f"_change_data/{rel_cdc}"
-                dv_written.append(full_rel)  # same rollback funnel
-                actions.append(
-                    {
-                        "cdc": {
-                            "path": urllib.parse.quote(
-                                full_rel, safe="/="
-                            ),
-                            "partitionValues": _partition_values_from_rel(
-                                rel_cdc, tuple(phys_part_cols)
-                            ),
-                            "size": size,
-                            "dataChange": False,
-                        }
-                    }
-                )
-
-        n_deleted = 0
-        for rel, descriptor in sorted(per_file):
-            # DV growth IS the newly-deleted row count (the new
-            # descriptor's cardinality is the union of old and new
-            # positions) — operationMetrics for free
-            old_card = int(
-                (state.dvs.get(rel) or {}).get("cardinality", 0)
-            )
-            n_deleted += max(
-                0, int(descriptor["cardinality"]) - old_card
-            )
-            quoted = urllib.parse.quote(rel, safe="/=")
-            remove = {
-                "path": quoted,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-            if rel in state.dvs:
-                remove["deletionVector"] = state.dvs[rel]
-            actions.append({"remove": remove})
-            actions.append(
-                {
-                    "add": {
-                        "path": quoted,
-                        "partitionValues": state.files[rel],
-                        "size": os.path.getsize(os.path.join(base, rel)),
-                        "modificationTime": now_ms,
-                        "dataChange": True,
-                        "deletionVector": descriptor,
-                        # the file's bytes are unchanged, so its stats,
-                        # tags AND rowTracking assignment (baseRowId /
-                        # defaultRowCommitVersion) stay valid — dropping
-                        # them here would erase row identity on
-                        # row-tracked tables
-                        **state.adds.get(rel, {}),
-                    }
-                }
-            )
-
-        actions[0]["commitInfo"]["operationMetrics"] = {
-            "numDeletedRows": str(n_deleted),
-            "numDeletionVectorsAdded": str(len(per_file)),
-        }
-        version = state.version + 1
-        commit_path = os.path.join(_log_dir(path), f"{version:020d}.json")
-        _write_commit_file(commit_path, actions)
-    except BaseException:
-        for name in dv_written:
-            try:
-                os.remove(os.path.join(base, name))
-            except OSError:
-                pass
-        raise
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        try:  # best-effort, like write_delta_lite's hook
-            write_checkpoint(spark, path)
-        except Exception:
-            pass
-    return version
-
-
 def _predicate_sql(condition: Column | str) -> str:
     """The expression string delta-spark records in
     ``operationParameters`` (r12 ADVICE fix): string predicates pass
@@ -3219,6 +3016,42 @@ def _predicate_sql(condition: Column | str) -> str:
 DV_WRITE_MAX_FRACTION = 0.25
 
 
+def delete_rows(
+    spark: SparkSession,
+    path: str,
+    predicate: Column | str,
+    inline_threshold: int = DV_INLINE_THRESHOLD,
+) -> int:
+    """DELETE FROM the table at ``path`` WHERE ``predicate`` (evaluated
+    over the LOGICAL schema) — without rewriting any parquet file: the
+    matching row positions are committed as DELETION VECTORS, unioned
+    with each file's existing vector (remove(oldDv) + add(newDv) on the
+    same path, stats/tags/rowTracking fields kept). The first delete
+    upgrades the protocol to 3/7 with deletionVectors in both feature
+    lists; CDF tables get ``delete`` change files. Vectors below
+    ``inline_threshold`` bitmap bytes are stored inline in the log,
+    larger ones as ``deletion_vector_<uuid>.bin`` files. Returns the
+    committed version (the current one, uncommitted, when no live row
+    matched). Single-writer: a lost commit race raises.
+
+    This is ``merge_rows`` with no source and one by-source delete
+    clause, with deletion-vector routing forced; see ``merge_rows`` for
+    the shared mechanics. All-delete with forced routing keeps a
+    single scan: no touched-count pass, no replacement write."""
+    return _dml(
+        _TableWrite(spark, path, "delete_rows"),
+        "DELETE",
+        {},
+        lambda c: {
+            "numDeletedRows": str(c["deleted"] or 0),
+            "numDeletionVectorsAdded": str(c["dv_files"]),
+        },
+        nmbs=[("delete", predicate, None)],
+        use_dvs=True,
+        inline_threshold=inline_threshold,
+    )
+
+
 def update_rows(
     spark: SparkSession,
     path: str,
@@ -3228,1631 +3061,54 @@ def update_rows(
     inline_threshold: int = DV_INLINE_THRESHOLD,
 ) -> int:
     """UPDATE the table at ``path`` SET ``assignments`` WHERE
-    ``condition`` — delta-spark's classic rewrite-path UPDATE command,
-    re-expressed on the public protocol (r11; completes the CDC write
-    surface next to delete_rows/write/optimize/restore). Returns the
-    committed version (unchanged if nothing matched).
+    ``condition`` with SQL semantics: the condition and every
+    assignment see the ORIGINAL row (one simultaneous projection),
+    values cast to the column's declared type; deletion-vector-masked
+    rows never match; GENERATED columns recompute from their
+    expressions (assigning one, an identity column, or a partition
+    column refuses); CHECK constraints and invariants are enforced
+    with the whole commit rolled back on violation; CDF tables get
+    ``update_preimage`` / ``update_postimage`` change files for the
+    matched rows only; rowTracking tables keep every row's id and
+    move updated rows' commit version to this commit. Returns the
+    committed version (unchanged if nothing matched). Single-writer: a
+    lost commit race raises.
 
-    Mechanics:
-    - the condition and assignment expressions evaluate over the
-      LOGICAL schema (column-mapped tables scan physically and rename
-      first); assignment values are cast to the column's declared type;
-    - every file containing a LIVE matching row (deletion-vector-masked
-      rows are excluded — updating a deleted row would resurrect it)
-      is REWRITTEN: one new file set per touched partition group
-      carrying all live rows, assignments applied to the matching ones;
-      the old files (and their DVs) are removed. Cost is proportional
-      to TOUCHED files, exactly delta-spark's rewrite-path UPDATE —
-      at 100 TB a selective predicate touches few files and a broad
-      one was always going to cost a rewrite;
-    - DV WRITE PATH (r13, the low-selectivity answer): on tables with
-      deletion vectors enabled (the feature active, or
-      ``delta.enableDeletionVectors=true`` — delta-spark's gate), a
-      touched file whose matched-row fraction is at most
-      DV_WRITE_MAX_FRACTION is NOT rewritten: its matched positions are
-      committed as a deletion vector (union with any existing DV,
-      remove(oldDv)+add(newDv) on the same path, stats/tags/rowTracking
-      fields preserved — the bytes are unchanged) and ONLY the updated
-      rows are appended as new files. A 1%-selectivity update then
-      writes ~1% of the data instead of rewriting every touched file.
-      Routing is PER FILE — files above the fraction (or without
-      footer stats to judge by) still rewrite, so one command mixes
-      both shapes. ``use_dvs=True`` forces the DV path for every
-      touched file (upgrading the protocol if needed), ``False``
-      restores the pure rewrite path, ``None`` (default) auto-routes;
-    - GENERATED columns are recomputed from their expressions on the
-      updated rows (assigning to one directly is refused, as is
-      assigning to identity or partition columns — moving rows between
-      partitions is an overwrite, not an update);
-    - CHECK constraints / invariants ride the staging write as
-      observe() metrics (zero extra passes); violations unstage;
-    - on ``delta.enableChangeDataFeed`` tables the commit carries the
-      protocol's AUTHORITATIVE change files: the matched rows' OLD
-      values as ``update_preimage`` and NEW values as
-      ``update_postimage`` under ``_change_data/`` — unchanged rows of
-      rewritten files produce no change rows (the exact reason the
-      protocol makes cdc actions authoritative: naive add/remove
-      derivation would report the whole rewrite);
-    - rowTracking tables rewrite row-ID-preservingly, like optimize:
-      resolved row ids materialize into the config-named shadow
-      columns for every surviving row; the materialized
-      row-commit-version is kept for UNCHANGED rows and left NULL for
-      updated ones, so it falls back to the new add's
-      defaultRowCommitVersion — this commit, which IS the row's last
-      modification (the protocol's rule); fresh baseRowId ranges
-      advance the domain watermark;
-    - single-writer commit like delete_rows: a lost race raises.
-    """
-    import time as _time
+    Each touched file is either REWRITTEN or — on tables with deletion
+    vectors enabled, when its matched fraction is at most
+    DV_WRITE_MAX_FRACTION — MASKED with a deletion vector while only
+    the updated rows are appended. ``use_dvs=True`` masks every touched
+    file (upgrading the protocol if needed), ``False`` always rewrites,
+    ``None`` routes per file.
 
-    base = _local(path)
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
-    _check_write_obligations(state, path, "update")
-    mapping = _column_mapping_mode(state.metadata)
-    if mapping not in ("none", "name", "id"):
-        raise NotImplementedError(
-            f"unknown delta.columnMapping.mode {mapping!r}"
-        )
-    if not state.files:
-        return state.version
-
-    schema = state.schema
-    phys_schema = _physicalize(schema) if mapping != "none" else schema
-    logical_to_phys = {
-        f.name: pf.name
-        for f, pf in zip(schema.fields, phys_schema.fields)
-    }
-    phys_part_cols = [
-        logical_to_phys[c]
-        for c in state.partition_columns
-        if c in logical_to_phys
-    ]
-    gen_cols = dict(_generated_columns(schema))
-    ident_names = {d["name"] for d in _identity_columns(schema)}
-    for name in assignments:
-        if name not in logical_to_phys:
-            raise ValueError(f"assignment to unknown column {name!r}")
-        if name in state.partition_columns:
-            raise NotImplementedError(
-                f"update_rows cannot assign partition column {name!r} "
-                "(rows would move between partitions — rewrite via "
-                "overwrite instead)"
-            )
-        if name in gen_cols:
-            raise ValueError(
-                f"column {name!r} is GENERATED ({gen_cols[name]!r}); it "
-                "is recomputed from its expression — assign its inputs "
-                "instead"
-            )
-        if name in ident_names:
-            raise ValueError(
-                f"column {name!r} is an IDENTITY column; its values are "
-                "row identity and cannot be reassigned"
-            )
-
-    row_tracking = "rowTracking" in set(
-        (state.protocol or {}).get("writerFeatures") or ()
-    )
-    cdf_on = str(
-        (state.metadata.get("configuration") or {}).get(
-            "delta.enableChangeDataFeed", ""
-        )
-    ).lower() == "true"
-
-    rels = sorted(state.files)
-    abs_files = [os.path.join(base, rel) for rel in rels]
-    if mapping != "none":
-        _verify_physical_names(
-            spark,
-            abs_files[0],
-            [
-                pf.name
-                for pf in phys_schema.fields
-                if pf.name not in phys_part_cols
-            ],
-            known=state.historical_physical_names,
-        )
-    if phys_part_cols and not _all_files_hive_layout(
-        state.files, phys_part_cols
-    ):
-        raise NotImplementedError(
-            "update_rows on a partitioned table whose file paths do not "
-            "hive-encode the logged partitionValues (externally "
-            "authored layout) — rewrite via overwrite instead"
-        )
-
-    dv_ver = _dv_verify(base, state.dvs) if state.dvs else {}
-
-    # ---- which files carry a LIVE matching row -------------------------
-    if phys_part_cols:
-        scan = (
-            spark.read.option("basePath", base)
-            .schema(phys_schema)
-            .parquet(*abs_files)
-        )
-    else:
-        scan = spark.read.schema(phys_schema).parquet(*abs_files)
-    logical_cols = [
-        _quoted(pf.name).cast(f.dataType).alias(f.name)
-        for f, pf in zip(schema.fields, phys_schema.fields)
-    ]
-    live = _apply_dv_filter(spark, scan, base, dv_ver, rels)
-    pred = condition if isinstance(condition, Column) else F.expr(condition)
-    enc_to_rel = {
-        _hadoop_path_encode(os.path.abspath(os.path.join(base, rel))): rel
-        for rel in rels
-    }
-    touched_counts = {
-        enc_to_rel[r["__file"]]: int(r["cnt"])
-        for r in (
-            live.select(
-                *logical_cols,
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), r"^file:/+", "/"
-                ).alias("__file"),
-            )
-            .filter(pred)
-            .groupBy("__file")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-        if r["__file"] in enc_to_rel
-    }
-    touched = sorted(touched_counts)
-    if not touched:
-        return state.version
-
-    # ---- per-file routing: deletion-vector write vs rewrite ----------
-    dv_feature_on = "deletionVectors" in set(
-        (state.protocol or {}).get("readerFeatures") or ()
-    ) or str(
-        (state.metadata.get("configuration") or {}).get(
-            "delta.enableDeletionVectors", ""
-        )
-    ).lower() == "true"
-    if use_dvs is False:
-        touched_dv: list[str] = []
-    elif use_dvs is True:
-        touched_dv = list(touched)
-    elif not dv_feature_on:
-        touched_dv = []
-    else:
-        touched_dv = []
-        for rel in touched:
-            stats_json = (state.adds.get(rel) or {}).get("stats")
-            if not stats_json:
-                continue  # no footer stats to judge selectivity by
-            try:
-                n_rec = int(json.loads(stats_json)["numRecords"])
-            except (ValueError, KeyError, TypeError):
-                continue
-            live_n = n_rec - int(
-                (state.dvs.get(rel) or {}).get("cardinality", 0)
-            )
-            if live_n > 0 and touched_counts[rel] <= (
-                DV_WRITE_MAX_FRACTION * live_n
-            ):
-                touched_dv.append(rel)
-    dv_set = set(touched_dv)
-    touched_rw = [r for r in touched if r not in dv_set]
-
-    version = state.version + 1
-    now_ms = int(_time.time() * 1000)
-    constraints = _table_constraints(state.metadata, schema)
-
-    # rowTracking: resolve materialized column names (create on first
-    # use, committing the config), mirror optimize()
-    rt_cfg = dict((state.metadata or {}).get("configuration") or {})
-    rid_col = rt_cfg.get(_MAT_ROW_ID_KEY)
-    rcv_col = rt_cfg.get(_MAT_ROW_CV_KEY)
-    rt_meta_changed = False
-    if row_tracking:
-        if rid_col is None:
-            rid_col = f"_row-id-col-{uuid.uuid4().hex}"
-            rt_cfg[_MAT_ROW_ID_KEY] = rid_col
-            rt_meta_changed = True
-        if rcv_col is None:
-            rcv_col = f"_row-commit-version-col-{uuid.uuid4().hex}"
-            rt_cfg[_MAT_ROW_CV_KEY] = rcv_col
-            rt_meta_changed = True
-    next_row_id = 0
-    if row_tracking:
-        domain = state.domains.get("delta.rowTracking")
-        if domain and not domain.get("removed"):
-            next_row_id = int(
-                json.loads(domain.get("configuration") or "{}").get(
-                    "rowIdHighWaterMark", -1
-                )
-            ) + 1
-
-    # SQL UPDATE semantics (r12 ADVICE fix): the predicate is evaluated
-    # ONCE against the pristine row into a marker column, and every
-    # assignment RHS is applied in a SINGLE simultaneous select so it
-    # sees the ORIGINAL column values — the prior sequential
-    # withColumn(F.when(pred, ...)) chain re-evaluated pred and RHS
-    # against already-assigned values (assigning the predicate column
-    # silently dropped later assignments, generated-column recompute,
-    # and the rcv nulling). Generated columns then recompute in a
-    # second simultaneous select so they see the POST-assignment values
-    # of their inputs (delta forbids generated-on-generated, so
-    # simultaneity is safe there too).
-    marker = f"__upd_matched_{uuid.uuid4().hex[:8]}"
-
-    def _updated(frame: DataFrame) -> DataFrame:
-        cols = list(frame.columns)
-        out = frame.withColumn(marker, pred).select(
-            *[
-                (
-                    F.when(
-                        F.col(marker),
-                        (
-                            assignments[c]
-                            if isinstance(assignments[c], Column)
-                            else F.expr(assignments[c])
-                        ).cast(schema[c].dataType),
-                    )
-                    .otherwise(_quoted(c))
-                    .alias(c)
-                    if c in assignments
-                    else _quoted(c)
-                )
-                for c in cols
-            ],
-            F.col(marker),
-        )
-        if gen_cols:
-            out = out.select(
-                *[
-                    (
-                        F.when(
-                            F.col(marker),
-                            F.expr(gen_cols[c]).cast(schema[c].dataType),
-                        )
-                        .otherwise(_quoted(c))
-                        .alias(c)
-                        if c in gen_cols
-                        else _quoted(c)
-                    )
-                    for c in cols
-                ],
-                F.col(marker),
-            )
-        return out
-
-    by_part: dict[tuple, list[str]] = {}
-    for rel in touched_rw:
-        key = tuple(sorted((state.files[rel] or {}).items()))
-        by_part.setdefault(key, []).append(rel)
-    dv_by_part: dict[tuple, list[str]] = {}
-    for rel in touched_dv:
-        key = tuple(sorted((state.files[rel] or {}).items()))
-        dv_by_part.setdefault(key, []).append(rel)
-
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "UPDATE",
-            # delta-spark string-encodes operationParameters values
-            # (and records the expression SQL, not the Column repr)
-            "operationParameters": {"predicate": _predicate_sql(condition)},
-        }
-    }]
-    if rt_meta_changed:
-        meta_out = dict(state.metadata)
-        meta_out["configuration"] = rt_cfg
-        actions.append({"metaData": meta_out})
-
-    staged: list[str] = []  # everything to roll back on failure
-    n_rewritten = 0
-    up_metrics = {"updated": 0, "rewritten_rows": 0, "derivable": True}
-    try:
-        for key, group in sorted(by_part.items()):
-            pvals = dict(key)
-            group_abs = [os.path.join(base, r) for r in group]
-            data_fields = [
-                f
-                for f in phys_schema.fields
-                if f.name not in phys_part_cols
-            ]
-            if row_tracking:
-                rt_read_schema = T.StructType(
-                    data_fields
-                    + [
-                        T.StructField(rid_col, T.LongType()),
-                        T.StructField(rcv_col, T.LongType()),
-                    ]
-                )
-                gdf = _with_materialized_row_ids(
-                    spark,
-                    base,
-                    group,
-                    state.adds,
-                    rt_read_schema,
-                    rid_col,
-                    rcv_col,
-                    dv_ver=dv_ver,
-                )
-            else:
-                gdf = spark.read.schema(
-                    T.StructType(data_fields)
-                ).parquet(*group_abs)
-                gdf = _apply_dv_filter(spark, gdf, base, dv_ver, group)
-            # logical view (partition columns as typed literals so the
-            # predicate/assignments may reference them)
-            lg = gdf.select(
-                *[
-                    (
-                        _typed_partition_lit(
-                            pvals.get(logical_to_phys[f.name]),
-                            f.dataType,
-                        ).alias(f.name)
-                        if f.name in state.partition_columns
-                        else _quoted(logical_to_phys[f.name])
-                        .cast(f.dataType)
-                        .alias(f.name)
-                    )
-                    for f in schema.fields
-                ],
-                *(
-                    [_quoted(rid_col), _quoted(rcv_col)]
-                    if row_tracking
-                    else []
-                ),
-            )
-            upd = _updated(lg)
-            if row_tracking:
-                # unchanged rows keep their resolved commit version;
-                # updated rows fall back to the new default (= this
-                # commit, their last modification). The marker carries
-                # the PRISTINE-row match (pred over post-assignment
-                # values would miss rows whose assignment falsified it)
-                upd = upd.withColumn(
-                    rcv_col,
-                    F.when(
-                        F.col(marker), F.lit(None).cast("long")
-                    ).otherwise(_quoted(rcv_col)),
-                )
-            # operationMetrics: updated-row count rides the staging
-            # write (zero extra passes, delta-spark history parity)
-            from pyspark.sql import Observation
-
-            obs_m = Observation()
-            upd = upd.observe(
-                obs_m,
-                F.coalesce(
-                    F.sum(F.col(marker).cast("long")), F.lit(0)
-                ).alias("u"),
-            )
-            obs = None
-            if constraints:
-                upd, obs, name_map = _attach_constraint_observer(
-                    upd, schema, constraints, path
-                )
-            # back to physical layout, partition columns dropped (they
-            # live in the directory name)
-            out_phys = upd.select(
-                *[
-                    _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                    for f, pf in zip(schema.fields, phys_schema.fields)
-                    if pf.name not in phys_part_cols
-                ],
-                *(
-                    [_quoted(rid_col), _quoted(rcv_col)]
-                    if row_tracking
-                    else []
-                ),
-            )
-            part_dir = os.path.dirname(group[0])
-            staging = os.path.join(base, f"_staging-{uuid.uuid4().hex}")
-            out_phys.write.mode("overwrite").parquet(staging)
-            try:
-                if obs is not None:
-                    violated = [
-                        name_map[k]
-                        for k, v in obs.get.items()
-                        if int(v or 0) > 0
-                    ]
-                    if violated:
-                        raise ValueError(
-                            f"update violates constraint(s) "
-                            f"{sorted(violated)} on {path!r}; nothing "
-                            "was committed"
-                        )
-                for name in sorted(os.listdir(staging)):
-                    if not name.endswith(".parquet"):
-                        continue
-                    src = os.path.join(staging, name)
-                    pf_meta = None
-                    try:
-                        import pyarrow.parquet as _pq
-
-                        pf_meta = _pq.ParquetFile(src).metadata.num_rows
-                    except Exception:
-                        pf_meta = None
-                    if pf_meta == 0:
-                        continue  # never commit zero-row part files
-                    rel_new = (
-                        os.path.join(part_dir, name) if part_dir else name
-                    )
-                    dst = os.path.join(base, rel_new)
-                    os.makedirs(os.path.dirname(dst) or base, exist_ok=True)
-                    size = os.path.getsize(src)
-                    shutil.move(src, dst)
-                    staged.append(rel_new)
-                    add = {
-                        "path": urllib.parse.quote(rel_new, safe="/="),
-                        "partitionValues": pvals,
-                        "size": size,
-                        "modificationTime": now_ms,
-                        "dataChange": True,
-                    }
-                    stats = _file_stats_json(dst)
-                    if stats is not None:
-                        add["stats"] = stats
-                        up_metrics["rewritten_rows"] += int(
-                            json.loads(stats)["numRecords"]
-                        )
-                    else:
-                        up_metrics["derivable"] = False
-                    if row_tracking:
-                        if stats is None:
-                            raise NotImplementedError(
-                                f"the table at {path!r} demands "
-                                f"rowTracking but the rewritten file "
-                                f"{rel_new!r} yielded no readable footer "
-                                "statistics to size its baseRowId range"
-                            )
-                        n_records = int(json.loads(stats)["numRecords"])
-                        add["baseRowId"] = next_row_id
-                        add["defaultRowCommitVersion"] = version
-                        next_row_id += n_records
-                    actions.append({"add": add})
-                up_metrics["updated"] += int(obs_m.get["u"] or 0)
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-
-            # CDF obligation: matched rows only, old and new images
-            if cdf_on:
-                matched_lg = lg.filter(pred)
-                pre = matched_lg.select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in zip(
-                            schema.fields, phys_schema.fields
-                        )
-                        if pf.name not in phys_part_cols
-                    ]
-                ).withColumn("_change_type", F.lit("update_preimage"))
-                post = _updated(matched_lg).select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in zip(
-                            schema.fields, phys_schema.fields
-                        )
-                        if pf.name not in phys_part_cols
-                    ]
-                ).withColumn("_change_type", F.lit("update_postimage"))
-                cdc_dir = os.path.join(base, "_change_data")
-                os.makedirs(cdc_dir, exist_ok=True)
-                cdc_sub = part_dir  # mirror the data layout per group
-                cdc_target = (
-                    os.path.join(cdc_dir, cdc_sub) if cdc_sub else cdc_dir
-                )
-                for rel_cdc, size in _stage_and_move(
-                    pre.unionByName(post), cdc_target, ()
-                ):
-                    full_rel = "/".join(
-                        x
-                        for x in ("_change_data", cdc_sub, rel_cdc)
-                        if x
-                    )
-                    staged.append(full_rel)
-                    actions.append(
-                        {
-                            "cdc": {
-                                "path": urllib.parse.quote(
-                                    full_rel, safe="/="
-                                ),
-                                "partitionValues": pvals,
-                                "size": size,
-                                "dataChange": False,
-                            }
-                        }
-                    )
-
-            for rel in group:
-                remove = {
-                    "path": urllib.parse.quote(rel, safe="/="),
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-                if rel in state.dvs:
-                    remove["deletionVector"] = state.dvs[rel]
-                actions.append({"remove": remove})
-                n_rewritten += 1
-
-        # ---- DV write path: mask matched positions, append only the
-        # updated rows (delta-spark's DV-based UPDATE shape) ----------
-        n_dv_added = 0
-        if dv_by_part:
-            upgrade = _dv_protocol_upgrade_action(state, mapping)
-            if upgrade is not None:
-                actions.append(upgrade)
-        for key, group in sorted(dv_by_part.items()):
-            pvals = dict(key)
-            part_dir = os.path.dirname(group[0])
-            group_abs = [os.path.join(base, r) for r in group]
-            data_fields = [
-                f
-                for f in phys_schema.fields
-                if f.name not in phys_part_cols
-            ]
-            if row_tracking:
-                rt_read_schema = T.StructType(
-                    data_fields
-                    + [
-                        T.StructField(rid_col, T.LongType()),
-                        T.StructField(rcv_col, T.LongType()),
-                    ]
-                )
-                gdf = _with_materialized_row_ids(
-                    spark,
-                    base,
-                    group,
-                    state.adds,
-                    rt_read_schema,
-                    rid_col,
-                    rcv_col,
-                    dv_ver=dv_ver,
-                    keep_position=True,
-                    keep_path=True,
-                ).withColumnsRenamed(
-                    {"__rt_path": "__file", "__rt_idx": "__pos"}
-                )
-            else:
-                gdf = (
-                    spark.read.schema(T.StructType(data_fields))
-                    .parquet(*group_abs)
-                    .select(
-                        "*",
-                        F.regexp_replace(
-                            F.col("_metadata.file_path"), r"^file:/+", "/"
-                        ).alias("__file"),
-                        F.col("_metadata.row_index").alias("__pos"),
-                    )
-                )
-                gdf = _apply_dv_filter(spark, gdf, base, dv_ver, group)
-            # logical view of the MATCHED live rows only — the entire
-            # point: downstream cost is proportional to matched rows,
-            # not to the files they live in
-            matched_lg = (
-                gdf.select(
-                    *[
-                        (
-                            _typed_partition_lit(
-                                pvals.get(logical_to_phys[f.name]),
-                                f.dataType,
-                            ).alias(f.name)
-                            if f.name in state.partition_columns
-                            else _quoted(logical_to_phys[f.name])
-                            .cast(f.dataType)
-                            .alias(f.name)
-                        )
-                        for f in schema.fields
-                    ],
-                    *(
-                        [_quoted(rid_col), _quoted(rcv_col)]
-                        if row_tracking
-                        else []
-                    ),
-                    "__file",
-                    "__pos",
-                )
-                .filter(pred)
-                .persist()
-            )
-            try:
-                # (a) the new deletion vectors: matched positions ∪ old
-                group_old_dvs = {
-                    r: state.dvs[r] for r in group if r in state.dvs
-                }
-                per_file_dv = _materialize_dv_descriptors(
-                    base,
-                    _dv_union_blobs(
-                        spark,
-                        base,
-                        matched_lg.select("__file", "__pos"),
-                        group_old_dvs,
-                    ),
-                    enc_to_rel,
-                    inline_threshold,
-                    staged,
-                )
-                # (b) the replacement rows: assignments applied to the
-                # matched rows only, appended as fresh files. rcv NULL
-                # -> falls back to this add's defaultRowCommitVersion
-                # (= this commit, the row's last modification); rid
-                # carries the ORIGINAL row id — identity is preserved
-                # because the masked original is no longer live.
-                upd = _updated(matched_lg.drop("__file", "__pos"))
-                if row_tracking:
-                    upd = upd.withColumn(
-                        rcv_col, F.lit(None).cast("long")
-                    )
-                from pyspark.sql import Observation
-
-                obs_m = Observation()
-                upd = upd.observe(
-                    obs_m,
-                    F.coalesce(
-                        F.sum(F.col(marker).cast("long")), F.lit(0)
-                    ).alias("u"),
-                )
-                obs = None
-                if constraints:
-                    upd, obs, name_map = _attach_constraint_observer(
-                        upd, schema, constraints, path
-                    )
-                out_phys = upd.select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in zip(schema.fields, phys_schema.fields)
-                        if pf.name not in phys_part_cols
-                    ],
-                    *(
-                        [_quoted(rid_col), _quoted(rcv_col)]
-                        if row_tracking
-                        else []
-                    ),
-                )
-                # replacement rows are a small fraction of the group by
-                # construction — coalesce to roughly the table's own
-                # rows-per-file so a 1% update appends ~1 right-sized
-                # file instead of one sliver per scan partition
-                group_matched = sum(touched_counts[r] for r in group)
-                avg_live = max(
-                    1,
-                    sum(
-                        int(
-                            json.loads(
-                                (state.adds.get(r) or {}).get(
-                                    "stats", '{"numRecords": 0}'
-                                )
-                            ).get("numRecords", 0)
-                        )
-                        - int(
-                            (state.dvs.get(r) or {}).get("cardinality", 0)
-                        )
-                        for r in group
-                    )
-                    // max(1, len(group)),
-                )
-                n_out = max(
-                    1, min(len(group), -(-group_matched // avg_live))
-                )
-                out_phys = out_phys.coalesce(n_out)
-                staging = os.path.join(
-                    base, f"_staging-{uuid.uuid4().hex}"
-                )
-                out_phys.write.mode("overwrite").parquet(staging)
-                try:
-                    if obs is not None:
-                        violated = [
-                            name_map[k]
-                            for k, v in obs.get.items()
-                            if int(v or 0) > 0
-                        ]
-                        if violated:
-                            raise ValueError(
-                                f"update violates constraint(s) "
-                                f"{sorted(violated)} on {path!r}; "
-                                "nothing was committed"
-                            )
-                    next_row_id = _merge_move_staged(
-                        staging,
-                        base,
-                        part_dir,
-                        pvals,
-                        now_ms,
-                        version,
-                        row_tracking,
-                        next_row_id,
-                        staged,
-                        actions,
-                        path,
-                        metrics=up_metrics,
-                    )
-                    up_metrics["updated"] += int(obs_m.get["u"] or 0)
-                finally:
-                    shutil.rmtree(staging, ignore_errors=True)
-
-                # (c) CDF obligation — identical to the rewrite path's
-                if cdf_on:
-                    pre = matched_lg.select(
-                        *[
-                            _quoted(f.name).cast(pf.dataType).alias(
-                                pf.name
-                            )
-                            for f, pf in zip(
-                                schema.fields, phys_schema.fields
-                            )
-                            if pf.name not in phys_part_cols
-                        ]
-                    ).withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                    post = _updated(
-                        matched_lg.drop("__file", "__pos")
-                    ).select(
-                        *[
-                            _quoted(f.name).cast(pf.dataType).alias(
-                                pf.name
-                            )
-                            for f, pf in zip(
-                                schema.fields, phys_schema.fields
-                            )
-                            if pf.name not in phys_part_cols
-                        ]
-                    ).withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                    cdc_dir = os.path.join(base, "_change_data")
-                    os.makedirs(cdc_dir, exist_ok=True)
-                    cdc_sub = part_dir
-                    cdc_target = (
-                        os.path.join(cdc_dir, cdc_sub)
-                        if cdc_sub
-                        else cdc_dir
-                    )
-                    for rel_cdc, size in _stage_and_move(
-                        pre.unionByName(post), cdc_target, ()
-                    ):
-                        full_rel = "/".join(
-                            x
-                            for x in ("_change_data", cdc_sub, rel_cdc)
-                            if x
-                        )
-                        staged.append(full_rel)
-                        actions.append(
-                            {
-                                "cdc": {
-                                    "path": urllib.parse.quote(
-                                        full_rel, safe="/="
-                                    ),
-                                    "partitionValues": pvals,
-                                    "size": size,
-                                    "dataChange": False,
-                                }
-                            }
-                        )
-
-                # (d) remove(oldDv) + add(newDv) on the untouched bytes:
-                # stats, tags and rowTracking fields stay valid
-                for rel, descriptor in sorted(per_file_dv):
-                    quoted = urllib.parse.quote(rel, safe="/=")
-                    remove = {
-                        "path": quoted,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                    if rel in state.dvs:
-                        remove["deletionVector"] = state.dvs[rel]
-                    actions.append({"remove": remove})
-                    actions.append(
-                        {
-                            "add": {
-                                "path": quoted,
-                                "partitionValues": state.files[rel],
-                                "size": os.path.getsize(
-                                    os.path.join(base, rel)
-                                ),
-                                "modificationTime": now_ms,
-                                "dataChange": True,
-                                "deletionVector": descriptor,
-                                **state.adds.get(rel, {}),
-                            }
-                        }
-                    )
-                    n_dv_added += 1
-            finally:
-                matched_lg.unpersist(blocking=False)
-
-        if row_tracking:
-            actions.append({
-                "domainMetadata": {
-                    "domain": "delta.rowTracking",
-                    "configuration": json.dumps(
-                        {"rowIdHighWaterMark": next_row_id - 1}
-                    ),
-                    "removed": False,
-                }
-            })
-        op_metrics = {
-            "numUpdatedRows": str(up_metrics["updated"]),
-            "numRemovedFiles": str(n_rewritten),
-            "numAddedFiles": str(
-                sum(1 for a in actions if "add" in a)
+    This is ``merge_rows`` with no source and one by-source update
+    clause; see ``merge_rows`` for the shared mechanics."""
+    return _dml(
+        _TableWrite(spark, path, "update_rows"),
+        "UPDATE",
+        # delta-spark string-encodes operationParameters values (and
+        # records the expression SQL, not the Column repr)
+        {"predicate": _predicate_sql(condition)},
+        lambda c: {
+            "numUpdatedRows": str(c["updated"]),
+            "numRemovedFiles": str(c["files_removed"]),
+            # a DV mask pair is not a file add or remove
+            "numAddedFiles": str(c["files_added"]),
+            **(
+                {"numDeletionVectorsAdded": str(c["dv_files"])}
+                if c["dv_files"]
+                else {}
             ),
-        }
-        if n_dv_added:
-            op_metrics["numDeletionVectorsAdded"] = str(n_dv_added)
-        if up_metrics["derivable"]:
-            # rewrites conserve rows, so copied = rewritten - updated
-            op_metrics["numCopiedRows"] = str(
-                max(
-                    0,
-                    up_metrics["rewritten_rows"] - up_metrics["updated"],
-                )
-            )
-        actions[0]["commitInfo"]["operationMetrics"] = op_metrics
-        commit_path = os.path.join(_log_dir(path), f"{version:020d}.json")
-        _write_commit_file(commit_path, actions)
-    except BaseException:
-        for rel in staged:
-            try:
-                os.remove(os.path.join(base, rel))
-            except OSError:
-                pass
-        raise
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        try:
-            write_checkpoint(spark, path)
-        except Exception:
-            pass
-    return version
-
-
-def _merge_move_staged(
-    staging: str,
-    base: str,
-    part_dir: str,
-    pvals: dict,
-    now_ms: int,
-    version: int,
-    row_tracking: bool,
-    next_row_id: int,
-    staged: list[str],
-    actions: list[dict],
-    path: str,
-    metrics: dict | None = None,
-) -> int:
-    """Move a rewrite group's staged part files into place and append
-    their add actions (zero-row files never commit; rowTracking adds
-    draw fresh baseRowId ranges). Returns the advanced next_row_id.
-    Factored from update_rows' staging block for merge_rows.
-    ``metrics`` accumulates rewritten_rows / derivable for
-    operationMetrics."""
-    for name in sorted(os.listdir(staging)):
-        if not name.endswith(".parquet"):
-            continue
-        src = os.path.join(staging, name)
-        try:
-            import pyarrow.parquet as _pq
-
-            n_rows = _pq.ParquetFile(src).metadata.num_rows
-        except Exception:
-            n_rows = None
-        if n_rows == 0:
-            continue  # never commit zero-row part files
-        rel_new = os.path.join(part_dir, name) if part_dir else name
-        dst = os.path.join(base, rel_new)
-        os.makedirs(os.path.dirname(dst) or base, exist_ok=True)
-        size = os.path.getsize(src)
-        shutil.move(src, dst)
-        staged.append(rel_new)
-        add = {
-            "path": urllib.parse.quote(rel_new, safe="/="),
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        stats = _file_stats_json(dst)
-        if stats is not None:
-            add["stats"] = stats
-        if metrics is not None:
-            if stats is not None:
-                metrics["rewritten_rows"] = metrics.get(
-                    "rewritten_rows", 0
-                ) + int(json.loads(stats)["numRecords"])
-            else:
-                metrics["derivable"] = False
-        if row_tracking:
-            if stats is None:
-                raise NotImplementedError(
-                    f"the table at {path!r} demands rowTracking but the "
-                    f"rewritten file {rel_new!r} yielded no readable "
-                    "footer statistics to size its baseRowId range"
-                )
-            n_records = int(json.loads(stats)["numRecords"])
-            add["baseRowId"] = next_row_id
-            add["defaultRowCommitVersion"] = version
-            next_row_id += n_records
-        actions.append({"add": add})
-    return next_row_id
-
-
-def _merge_rewrite_groups(
-    spark: SparkSession,
-    base: str,
-    path: str,
-    state,
-    touched: list[str],
-    dec: DataFrame | None,
-    matched: list,
-    nmbs: list,
-    schema: T.StructType,
-    phys_schema: T.StructType,
-    logical_to_phys: dict[str, str],
-    phys_part_cols: list[str],
-    gen_cols: dict[str, str],
-    new_names: dict[str, str],
-    assigners: dict[str, list[int]],
-    upd_idx: list[int],
-    del_idx: list[int],
-    dv_ver: dict,
-    row_tracking: bool,
-    rid_col: str | None,
-    rcv_col: str | None,
-    cdf_on: bool,
-    constraints,
-    now_ms: int,
-    version: int,
-    next_row_id: int,
-    staged: list[str],
-    actions: list[dict],
-    persisted: list,
-    metrics: dict | None = None,
-    dv_mode: bool = False,
-    touched_counts: dict[str, int] | None = None,
-    inline_threshold: int = DV_INLINE_THRESHOLD,
-) -> int:
-    """Rewrite every touched partition group applying the per-row merge
-    decisions (joined from ``dec`` on file path + row position),
-    appending add/remove/cdc actions. Returns the advanced
-    next_row_id. ``metrics`` accumulates updated-row counts via an
-    observe() riding each group's staging write (zero extra passes)."""
-    from pyspark.sql import Observation
-    if not touched:
-        return next_row_id
-    nmbs_upd_idx = [j for j, (k, _c, _v) in enumerate(nmbs) if k == "update"]
-    nmbs_del_idx = [j for j, (k, _c, _v) in enumerate(nmbs) if k == "delete"]
-
-    by_part: dict[tuple, list[str]] = {}
-    for rel in touched:
-        key = tuple(sorted((state.files[rel] or {}).items()))
-        by_part.setdefault(key, []).append(rel)
-
-    data_fields = [
-        f for f in phys_schema.fields if f.name not in phys_part_cols
-    ]
-    phys_data_cols = [
-        (f, pf)
-        for f, pf in zip(schema.fields, phys_schema.fields)
-        if pf.name not in phys_part_cols
-    ]
-
-    for key, group in sorted(by_part.items()):
-        pvals = dict(key)
-        group_abs = [os.path.join(base, r) for r in group]
-        if row_tracking:
-            rt_read_schema = T.StructType(
-                data_fields
-                + [
-                    T.StructField(rid_col, T.LongType()),
-                    T.StructField(rcv_col, T.LongType()),
-                ]
-            )
-            gdf = _with_materialized_row_ids(
-                spark,
-                base,
-                group,
-                state.adds,
-                rt_read_schema,
-                rid_col,
-                rcv_col,
-                dv_ver=dv_ver,
-                keep_position=True,
-                keep_path=True,
-            ).withColumnsRenamed(
-                {"__rt_path": "__mrg_base", "__rt_idx": "__mrg_pos"}
-            )
-        else:
-            gdf = spark.read.schema(
-                T.StructType(data_fields)
-            ).parquet(*group_abs)
-            gdf = _apply_dv_filter(spark, gdf, base, dv_ver, group)
-            gdf = gdf.select(
-                "*",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), r"^file:/+", "/"
-                ).alias("__mrg_base"),
-                F.col("_metadata.row_index").alias("__mrg_pos"),
-            )
-        # logical view, partition columns as typed literals
-        lg = gdf.select(
-            *[
-                (
-                    _typed_partition_lit(
-                        pvals.get(logical_to_phys[f.name]), f.dataType
-                    ).alias(f.name)
-                    if f.name in state.partition_columns
-                    else _quoted(logical_to_phys[f.name])
-                    .cast(f.dataType)
-                    .alias(f.name)
-                )
-                for f in schema.fields
-            ],
-            *([_quoted(rid_col), _quoted(rcv_col)] if row_tracking else []),
-            F.col("__mrg_base"),
-            F.col("__mrg_pos"),
-        )
-        j = lg.alias("t")
-        if dec is not None:
-            # no broadcast hint: dec is proportional to matched rows —
-            # AQE flips to BHJ when it is actually small
-            j = j.join(
-                dec.drop("__mrg_nmod"),
-                ["__mrg_base", "__mrg_pos"],
-                "left",
-            )
-        else:
-            j = j.withColumns(
-                {
-                    "__mrg_clause": F.lit(None).cast("int"),
-                    "__mrg_matched": F.lit(None).cast("boolean"),
-                }
-            )
-        # not-matched-by-source clause decision (target-only exprs)
-        nmbs_clause = F.lit(None).cast("int")
-        if nmbs:
-            branch = None
-            for jx, (_k, cond, _v) in enumerate(nmbs):
-                c = _merge_cond_col(cond)
-                branch = (
-                    F.when(c, F.lit(jx))
-                    if branch is None
-                    else branch.when(c, F.lit(jx))
-                )
-            nmbs_clause = F.when(
-                F.col("__mrg_matched").isNull(), branch
-            )
-        j = j.withColumn("__mrg_nmbs", nmbs_clause)
-        deleted = F.col("__mrg_clause").isin(del_idx) if del_idx else F.lit(
-            False
-        )
-        if nmbs_del_idx:
-            deleted = deleted | F.col("__mrg_nmbs").isin(nmbs_del_idx)
-        updated = F.col("__mrg_clause").isin(upd_idx) if upd_idx else F.lit(
-            False
-        )
-        if nmbs_upd_idx:
-            updated = updated | F.col("__mrg_nmbs").isin(nmbs_upd_idx)
-        j = j.withColumns(
-            {
-                "__mrg_deleted": F.coalesce(deleted, F.lit(False)),
-                "__mrg_updated": F.coalesce(updated, F.lit(False)),
-            }
-        )
-        if dv_mode:
-            # DV mode: every downstream consumer (positions, replacement
-            # rows, change images) reads only the AFFECTED rows — filter
-            # before persisting so the cache is proportional to the
-            # modified fraction, not to the group
-            j = j.filter(
-                F.col("__mrg_deleted") | F.col("__mrg_updated")
-            ).persist()
-            persisted.append(j)
-        elif cdf_on:
-            # the decided group frame feeds the rewrite AND the
-            # pre/post/delete change staging — persist it for the
-            # group's duration instead of re-running the scan + dec
-            # join per action (measured: merge CDF overhead halves).
-            # Unpersisted at the end of the iteration; the caller's
-            # finally releases it on the error path too.
-            j = j.persist()
-            persisted.append(j)
-
-        if cdf_on:
-            # originals of modified rows, BEFORE the rewrite projection
-            pre = (
-                j.filter(F.col("__mrg_updated"))
-                .select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in phys_data_cols
-                    ]
-                )
-                .withColumn("_change_type", F.lit("update_preimage"))
-            )
-            dels = (
-                j.filter(F.col("__mrg_deleted"))
-                .select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in phys_data_cols
-                    ]
-                )
-                .withColumn("_change_type", F.lit("delete"))
-            )
-
-        # DV mode writes ONLY the updated rows (deleted rows are just
-        # masked; unchanged rows stay in the original, untouched file)
-        kept = (
-            j.filter(F.col("__mrg_updated"))
-            if dv_mode
-            else j.filter(~F.col("__mrg_deleted"))
-        )
-        # ONE simultaneous projection: every new value sees the
-        # ORIGINAL row (matched-update values were already computed
-        # against the pristine pair in `dec`; by-source updates
-        # evaluate here over the original target columns)
-        out_cols = []
-        for f in schema.fields:
-            c = f.name
-            val = None
-            if c in assigners and assigners[c]:
-                val = F.when(
-                    F.col("__mrg_clause").isin(assigners[c]),
-                    F.col(new_names[c]),
-                )
-            for jx in nmbs_upd_idx:
-                values = nmbs[jx][2]
-                if c in values:
-                    v = values[c]
-                    expr = (
-                        v if isinstance(v, Column) else F.expr(v)
-                    ).cast(f.dataType)
-                    val = (
-                        F.when(F.col("__mrg_nmbs") == jx, expr)
-                        if val is None
-                        else val.when(F.col("__mrg_nmbs") == jx, expr)
-                    )
-            out_cols.append(
-                (val.otherwise(_quoted(c)) if val is not None else _quoted(c)).alias(c)
-            )
-        upd = kept.select(
-            *out_cols,
-            *([_quoted(rid_col), _quoted(rcv_col)] if row_tracking else []),
-            F.col("__mrg_updated"),
-        )
-        if gen_cols:
-            upd = upd.select(
-                *[
-                    (
-                        F.when(
-                            F.col("__mrg_updated"),
-                            F.expr(gen_cols[f.name]).cast(f.dataType),
-                        )
-                        .otherwise(_quoted(f.name))
-                        .alias(f.name)
-                        if f.name in gen_cols
-                        else _quoted(f.name)
-                    )
-                    for f in schema.fields
-                ],
-                *(
-                    [_quoted(rid_col), _quoted(rcv_col)]
-                    if row_tracking
-                    else []
-                ),
-                F.col("__mrg_updated"),
-            )
-        if row_tracking:
-            upd = upd.withColumn(
-                rcv_col,
-                F.when(
-                    F.col("__mrg_updated"), F.lit(None).cast("long")
-                ).otherwise(_quoted(rcv_col)),
-            )
-        obs_m = None
-        if metrics is not None:
-            obs_m = Observation()
-            upd = upd.observe(
-                obs_m,
-                F.coalesce(
-                    F.sum(F.col("__mrg_updated").cast("long")), F.lit(0)
-                ).alias("u"),
-            )
-        if cdf_on:
-            # derived BEFORE the constraint observer attaches: the cdc
-            # staging write must not re-materialize the observed node
-            post = (
-                upd.filter(F.col("__mrg_updated"))
-                .select(
-                    *[
-                        _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                        for f, pf in phys_data_cols
-                    ]
-                )
-                .withColumn("_change_type", F.lit("update_postimage"))
-            )
-        obs = None
-        if constraints:
-            upd, obs, name_map = _attach_constraint_observer(
-                upd, schema, constraints, path
-            )
-        out_phys = upd.select(
-            *[
-                _quoted(f.name).cast(pf.dataType).alias(pf.name)
-                for f, pf in phys_data_cols
-            ],
-            *([_quoted(rid_col), _quoted(rcv_col)] if row_tracking else []),
-        )
-        if dv_mode:
-            # replacement rows are a small fraction of the group by
-            # construction — coalesce to roughly the table's own
-            # rows-per-file sizing (mirrors update_rows' DV path)
-            group_modified = sum(
-                (touched_counts or {}).get(r, 0) for r in group
-            )
-            avg_live = max(
-                1,
-                sum(
-                    int(
-                        json.loads(
-                            (state.adds.get(r) or {}).get(
-                                "stats", '{"numRecords": 0}'
-                            )
-                        ).get("numRecords", 0)
-                    )
-                    - int((state.dvs.get(r) or {}).get("cardinality", 0))
-                    for r in group
-                )
-                // max(1, len(group)),
-            )
-            out_phys = out_phys.coalesce(
-                max(1, min(len(group), -(-group_modified // avg_live)))
-            )
-        part_dir = os.path.dirname(group[0])
-        staging = os.path.join(base, f"_staging-{uuid.uuid4().hex}")
-        out_phys.write.mode("overwrite").parquet(staging)
-        try:
-            if obs is not None:
-                violated = [
-                    name_map[k]
-                    for k, v in obs.get.items()
-                    if int(v or 0) > 0
-                ]
-                if violated:
-                    raise ValueError(
-                        f"merge violates constraint(s) {sorted(violated)} "
-                        f"on {path!r}; nothing was committed"
-                    )
-            # DV groups account their replacement rows separately:
-            # they are NOT part of the rewrite-conservation arithmetic
-            # the deleted-rows metric derives from
-            group_metrics = (
-                {"rewritten_rows": 0, "derivable": True}
-                if dv_mode and metrics is not None
-                else metrics
-            )
-            next_row_id = _merge_move_staged(
-                staging,
-                base,
-                part_dir,
-                pvals,
-                now_ms,
-                version,
-                row_tracking,
-                next_row_id,
-                staged,
-                actions,
-                path,
-                metrics=group_metrics,
-            )
-            if dv_mode and metrics is not None:
-                metrics["dv_rewritten"] = metrics.get(
-                    "dv_rewritten", 0
-                ) + group_metrics["rewritten_rows"]
-                if not group_metrics["derivable"]:
-                    metrics["derivable"] = False
-            if obs_m is not None:
-                metrics["updated"] = metrics.get("updated", 0) + int(
-                    obs_m.get["u"] or 0
-                )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-
-        if cdf_on:
-            cdc_dir = os.path.join(base, "_change_data")
-            os.makedirs(cdc_dir, exist_ok=True)
-            cdc_sub = part_dir
-            cdc_target = (
-                os.path.join(cdc_dir, cdc_sub) if cdc_sub else cdc_dir
-            )
-            for rel_cdc, size in _stage_and_move(
-                pre.unionByName(post).unionByName(dels), cdc_target, ()
-            ):
-                full_rel = "/".join(
-                    x for x in ("_change_data", cdc_sub, rel_cdc) if x
-                )
-                staged.append(full_rel)
-                actions.append(
-                    {
-                        "cdc": {
-                            "path": urllib.parse.quote(full_rel, safe="/="),
-                            "partitionValues": pvals,
-                            "size": size,
-                            "dataChange": False,
-                        }
-                    }
-                )
-
-        if dv_mode:
-            # mask the affected positions: remove(oldDv) + add(newDv)
-            # on the untouched bytes — stats, tags and rowTracking
-            # fields stay valid
-            enc_map = {
-                _hadoop_path_encode(
-                    os.path.abspath(os.path.join(base, rel))
-                ): rel
-                for rel in group
-            }
-            per_file_dv = _materialize_dv_descriptors(
-                base,
-                _dv_union_blobs(
-                    spark,
-                    base,
-                    j.select(
-                        F.col("__mrg_base").alias("__file"),
-                        F.col("__mrg_pos").alias("__pos"),
-                    ),
-                    {r: state.dvs[r] for r in group if r in state.dvs},
-                ),
-                enc_map,
-                inline_threshold,
-                staged,
-            )
-            for rel, descriptor in sorted(per_file_dv):
-                if metrics is not None:
-                    old_card = int(
-                        (state.dvs.get(rel) or {}).get("cardinality", 0)
-                    )
-                    metrics["dv_mask_growth"] = metrics.get(
-                        "dv_mask_growth", 0
-                    ) + max(
-                        0, int(descriptor["cardinality"]) - old_card
-                    )
-                    metrics["dv_files"] = metrics.get("dv_files", 0) + 1
-                quoted = urllib.parse.quote(rel, safe="/=")
-                remove = {
-                    "path": quoted,
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-                if rel in state.dvs:
-                    remove["deletionVector"] = state.dvs[rel]
-                actions.append({"remove": remove})
-                actions.append(
-                    {
-                        "add": {
-                            "path": quoted,
-                            "partitionValues": state.files[rel],
-                            "size": os.path.getsize(
-                                os.path.join(base, rel)
-                            ),
-                            "modificationTime": now_ms,
-                            "dataChange": True,
-                            "deletionVector": descriptor,
-                            **state.adds.get(rel, {}),
-                        }
-                    }
-                )
-        else:
-            for rel in group:
-                remove = {
-                    "path": urllib.parse.quote(rel, safe="/="),
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-                if rel in state.dvs:
-                    remove["deletionVector"] = state.dvs[rel]
-                actions.append({"remove": remove})
-        if dv_mode or cdf_on:
-            j.unpersist(blocking=False)
-    return next_row_id
-
-
-def _merge_inserts(
-    spark: SparkSession,
-    base: str,
-    path: str,
-    rels: list[str],
-    tgt_scan,
-    src: DataFrame,
-    on_cond: Column,
-    not_matched: list,
-    schema: T.StructType,
-    phys_schema: T.StructType,
-    phys_part_cols: list[str],
-    gen_cols: dict[str, str],
-    row_tracking: bool,
-    rid_col: str | None,
-    rcv_col: str | None,
-    cdf_on: bool,
-    constraints,
-    now_ms: int,
-    version: int,
-    next_row_id: int,
-    staged: list[str],
-    actions: list[dict],
-    persisted: list,
-    metrics: dict | None = None,
-) -> int:
-    """Stage the WHEN NOT MATCHED inserts as new add files (hive-
-    partitioned on partitioned tables) plus their cdc insert rows,
-    appending the actions. Returns the advanced next_row_id."""
-    if not not_matched:
-        return next_row_id
-    if rels:
-        ins = src.alias("s").join(
-            tgt_scan(False).alias("t"), on_cond, "left_anti"
-        )
-    else:
-        ins = src.alias("s")  # empty table: every source row inserts
-    branch = None
-    for k, (_kind, cond, _v) in enumerate(not_matched):
-        c = _merge_cond_col(cond)
-        branch = (
-            F.when(c, F.lit(k)) if branch is None else branch.when(c, F.lit(k))
-        )
-    ins = ins.withColumn("__mrg_ins", branch).filter(
-        F.col("__mrg_ins").isNotNull()
+            **(
+                {"numCopiedRows": str(c["copied"])}
+                if c["copied"] is not None
+                else {}
+            ),
+        },
+        nmbs=[("update", condition, dict(assignments))],
+        use_dvs=use_dvs,
+        inline_threshold=inline_threshold,
     )
-    # simultaneous projection: every value expression sees the source
-    # row; omitted columns insert as typed nulls
-    val_cols = []
-    for f in schema.fields:
-        if f.name in gen_cols:
-            continue  # computed below from the generation expression
-        b = None
-        for k, (_kind, _cond, values) in enumerate(not_matched):
-            if f.name in values:
-                v = values[f.name]
-                expr = (v if isinstance(v, Column) else F.expr(v)).cast(
-                    f.dataType
-                )
-                b = (
-                    F.when(F.col("__mrg_ins") == k, expr)
-                    if b is None
-                    else b.when(F.col("__mrg_ins") == k, expr)
-                )
-        val_cols.append(
-            (b if b is not None else F.lit(None).cast(f.dataType)).alias(
-                f.name
-            )
-        )
-    new_rows = ins.select(*val_cols)
-    if gen_cols:
-        new_rows = new_rows.select(
-            "*",
-            *[
-                F.expr(gexpr).cast(schema[name].dataType).alias(name)
-                for name, gexpr in gen_cols.items()
-            ],
-        ).select(*[_quoted(f.name) for f in schema.fields])
-    obs = None
-    if constraints:
-        new_rows, obs, name_map = _attach_constraint_observer(
-            new_rows, schema, constraints, path
-        )
-    out_phys = new_rows.select(
-        *[
-            _quoted(f.name).cast(pf.dataType).alias(pf.name)
-            for f, pf in zip(schema.fields, phys_schema.fields)
-        ]
-    )
-    if cdf_on:
-        # reused by the cdc insert staging below — one anti-join, not two
-        out_phys = out_phys.persist()
-        persisted.append(out_phys)
-    moved = _stage_and_move(out_phys, base, tuple(phys_part_cols))
-    kept_adds: list[tuple[str, dict, int]] = []
-    try:
-        if obs is not None:
-            violated = [
-                name_map[k] for k, v in obs.get.items() if int(v or 0) > 0
-            ]
-            if violated:
-                raise ValueError(
-                    f"merge insert violates constraint(s) "
-                    f"{sorted(violated)} on {path!r}; nothing was "
-                    "committed"
-                )
-    except BaseException:
-        for rel, _size in moved:
-            try:
-                os.remove(os.path.join(base, rel))
-            except OSError:
-                pass
-        raise
-    for rel, size in moved:
-        dst = os.path.join(base, rel)
-        stats = _file_stats_json(dst)
-        n_records = (
-            int(json.loads(stats)["numRecords"]) if stats is not None else None
-        )
-        if n_records == 0:
-            try:
-                os.remove(dst)
-            except OSError:
-                pass
-            continue
-        if metrics is not None:
-            if n_records is not None:
-                metrics["inserted"] = (
-                    metrics.get("inserted", 0) + n_records
-                )
-            else:
-                metrics["derivable"] = False
-        staged.append(rel)
-        pvals = (
-            _partition_values_from_rel(rel, phys_part_cols)
-            if phys_part_cols
-            else {}
-        )
-        add = {
-            "path": urllib.parse.quote(rel, safe="/="),
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        if stats is not None:
-            add["stats"] = stats
-        if row_tracking:
-            if n_records is None:
-                raise NotImplementedError(
-                    f"the table at {path!r} demands rowTracking but the "
-                    f"inserted file {rel!r} yielded no readable footer "
-                    "statistics to size its baseRowId range"
-                )
-            add["baseRowId"] = next_row_id
-            add["defaultRowCommitVersion"] = version
-            next_row_id += n_records
-        actions.append({"add": add})
-    if cdf_on:
-        cdc_dir = os.path.join(base, "_change_data")
-        os.makedirs(cdc_dir, exist_ok=True)
-        cdc_rows = out_phys.withColumn("_change_type", F.lit("insert"))
-        for rel_cdc, size in _stage_and_move(
-            cdc_rows, cdc_dir, tuple(phys_part_cols)
-        ):
-            try:
-                import pyarrow.parquet as _pq
-
-                if (
-                    _pq.ParquetFile(os.path.join(cdc_dir, rel_cdc))
-                    .metadata.num_rows
-                    == 0
-                ):
-                    os.remove(os.path.join(cdc_dir, rel_cdc))
-                    continue
-            except Exception:
-                pass
-            full_rel = "/".join(("_change_data", rel_cdc))
-            staged.append(full_rel)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": urllib.parse.quote(full_rel, safe="/="),
-                        "partitionValues": (
-                            _partition_values_from_rel(
-                                rel_cdc, phys_part_cols
-                            )
-                            if phys_part_cols
-                            else {}
-                        ),
-                        "size": size,
-                        "dataChange": False,
-                    }
-                }
-            )
-    if cdf_on:
-        out_phys.unpersist(blocking=False)
-    return next_row_id
 
 
 def _merge_norm_clauses(
@@ -4906,12 +3162,12 @@ def merge_rows(
 ) -> int:
     """Transactional MERGE INTO the table at ``path`` USING ``source``
     ON ``on`` — delta-spark's merge command re-expressed on the public
-    protocol (r12; the last of the DELETE/UPDATE/MERGE write trio, and
-    the production spelling of the reference's incremental upsert load,
-    /root/reference/ingest.py:802-822). ONE commit carries every
-    rewrite, insert, and (on CDF tables) the authoritative mixed
-    insert / update_preimage / update_postimage / delete change files.
-    Returns the committed version (unchanged if nothing changed).
+    protocol, and the production spelling of the reference's
+    incremental upsert load (the reference's ingest.py:802-822). ONE
+    commit carries every rewrite, insert, and (on CDF tables) the
+    authoritative mixed insert / update_preimage / update_postimage /
+    delete change files. Returns the committed version (unchanged if
+    nothing changed).
 
     Clause lists are ORDERED, delta-spark style — for a given row the
     FIRST clause whose condition holds wins and later clauses are not
@@ -4941,15 +3197,17 @@ def merge_rows(
     existing columns refuse. A merge that changes no rows commits no
     schema change.
 
-    SQL semantics throughout, sharing update_rows' r12 rules: every
-    clause condition and update RHS sees the ORIGINAL row (new values
-    are computed in one simultaneous projection); generated columns
-    recompute from their expressions on updated and inserted rows
-    (direct assignment refused); partition/identity columns refuse
-    assignment; CHECK constraints ride the staging writes as observe()
-    metrics and roll the whole commit back on violation.
+    SQL semantics throughout: every clause condition and update RHS
+    sees the ORIGINAL row (new values are computed in one simultaneous
+    projection); generated columns recompute from their expressions on
+    updated and inserted rows (direct assignment refused);
+    partition/identity columns refuse assignment; CHECK constraints
+    ride the staging writes as observe() metrics and roll the whole
+    commit back on violation.
 
-    Scale mechanics:
+    This is the one DML kernel: ``update_rows`` and ``delete_rows`` are
+    source-less merges over the same table-write context
+    (``_TableWrite``) and commit tail. Mechanics:
     - the source is persisted for the command's duration (delta-spark
       materializes merge sources for the same reason: a
       non-deterministic source must see ONE consistent snapshot across
@@ -4958,27 +3216,33 @@ def merge_rows(
       by (file, row position): clause index plus the already-evaluated
       new values for update-assigned columns. Only per-FILE aggregates
       of it reach the driver (ambiguity check + touched-file set);
+      by-source clauses add one per-file count pass over the live
+      target;
     - a target row matched by MORE THAN ONE modifying source row
       raises (delta's multiple-source-rows-match error) BEFORE any
       file is staged;
-    - cost is proportional to TOUCHED files (rows matched by a
-      modifying clause), exactly like update_rows: untouched files are
-      neither read twice nor rewritten; inserts append new files;
-    - rowTracking tables rewrite row-ID-preservingly (updated rows
-      keep their ids, their row-commit-version falls to this commit;
-      inserted rows draw fresh baseRowId ranges);
-    - DV WRITE PATH (r13, same routing as update_rows): on tables with
-      deletion vectors enabled, a touched file whose modified-row
-      fraction is at most DV_WRITE_MAX_FRACTION commits a deletion
-      vector masking its updated+deleted positions plus appended
-      replacement rows for the updates, instead of a rewrite — the
-      incremental-upsert load (few keys per batch against a huge
-      target) then writes data proportional to the BATCH, not to the
-      touched files. Per-file routing; ``use_dvs`` forces as in
-      update_rows.
+    - cost is proportional to TOUCHED files (rows modified by some
+      clause): untouched files are neither read twice nor rewritten;
+      inserts append new files;
+    - each touched file is REWRITTEN (one new file set per partition
+      group, carrying every surviving row) or MASKED: on tables with
+      deletion vectors enabled (the feature active, or
+      ``delta.enableDeletionVectors=true`` — delta-spark's gate) a file
+      whose modified-row fraction is at most DV_WRITE_MAX_FRACTION
+      commits a deletion vector over its updated+deleted positions
+      (the union with any existing vector; per-file bitmaps serialize
+      executor-side and stream to the driver, capped by
+      DELETE_MAX_FILE_POSITIONS / DELETE_MAX_TOTAL_DV_BYTES) plus
+      appended replacement rows for the updates, so a small batch
+      against a huge target writes data proportional to the BATCH.
+      ``use_dvs=True`` masks every touched file, ``False`` always
+      rewrites, ``None`` routes per file;
+    - rowTracking tables rewrite row-ID-preservingly (resolved ids
+      materialize into the configured shadow columns; updated rows'
+      commit version falls to this commit; new files draw fresh
+      baseRowId ranges above the domain watermark);
+    - single-writer commit: a lost race raises.
     """
-    import time as _time
-
     matched = _merge_norm_clauses(matched, ("update", "delete"), "matched")
     not_matched = _merge_norm_clauses(
         not_matched, ("insert",), "not_matched"
@@ -4991,20 +3255,8 @@ def merge_rows(
     if not (matched or not_matched or nmbs):
         raise ValueError("merge_rows needs at least one clause")
 
-    base = _local(path)
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
-    _check_write_obligations(state, path, "merge")
-    mapping = _column_mapping_mode(state.metadata)
-    if mapping not in ("none", "name", "id"):
-        raise NotImplementedError(
-            f"unknown delta.columnMapping.mode {mapping!r}"
-        )
-
-    schema = state.schema
-    meta_out: dict | None = None
-    evolved_names: set[str] = set()
-    if schema_evolution:
+    def _evolve(state: TableState, mapping: str):
+        schema = state.schema
         existing = {f.name for f in schema.fields}
         first_lower: dict[str, str] = {}
         for c in existing:
@@ -5023,242 +3275,559 @@ def merge_rows(
                 "resolves column names case-insensitively — rename them "
                 "or match the table's casing"
             )
-        if new_assign:
-            # type each new column from its assigning expression —
-            # analysis only, no job runs
-            probe = spark.createDataFrame([], schema).alias("t").join(
-                source.limit(0).alias("s"), F.lit(True), "cross"
+        if not new_assign:
+            return schema, None, set()
+        # type each new column from its assigning expression —
+        # analysis only, no job runs
+        probe = spark.createDataFrame([], schema).alias("t").join(
+            source.limit(0).alias("s"), F.lit(True), "cross"
+        )
+        new_fields = []
+        for name, val in new_assign.items():
+            expr = val if isinstance(val, Column) else F.expr(val)
+            dt = probe.select(expr.alias("__x")).schema[0].dataType
+            new_fields.append(T.StructField(name, dt, True))
+        schema = T.StructType(list(schema.fields) + new_fields)
+        meta_out = dict(state.metadata)
+        cfg2 = dict(meta_out.get("configuration") or {})
+        if mapping != "none":
+            prior_max = max(
+                int(cfg2.get("delta.columnMapping.maxColumnId", 0)),
+                _max_mapped_id(state.schema),
             )
-            new_fields = []
-            for name, val in new_assign.items():
-                expr = val if isinstance(val, Column) else F.expr(val)
-                dt = probe.select(expr.alias("__x")).schema[0].dataType
-                new_fields.append(T.StructField(name, dt, True))
-            evolved_names = set(new_assign)
-            schema = T.StructType(list(schema.fields) + new_fields)
-            meta_out = dict(state.metadata)
-            cfg2 = dict(meta_out.get("configuration") or {})
-            if mapping != "none":
-                prior_max = max(
-                    int(cfg2.get("delta.columnMapping.maxColumnId", 0)),
-                    _max_mapped_id(state.schema),
-                )
-                counter = [prior_max + 1]
-                schema = _mapped_schema(schema, state.schema, counter)
-                cfg2["delta.columnMapping.maxColumnId"] = max(
-                    _max_mapped_id(schema), prior_max
-                )
-                meta_out["configuration"] = cfg2
-            meta_out["schemaString"] = schema.json()
-
-    phys_schema = _physicalize(schema) if mapping != "none" else schema
-    logical_to_phys = {
-        f.name: pf.name
-        for f, pf in zip(schema.fields, phys_schema.fields)
-    }
-    phys_part_cols = [
-        logical_to_phys[c]
-        for c in state.partition_columns
-        if c in logical_to_phys
-    ]
-    gen_cols = dict(_generated_columns(schema))
-    ident_names = {d["name"] for d in _identity_columns(schema)}
-
-    # ---- static clause validation over the table schema ----------------
-    def _check_assign(values: dict, label: str) -> None:
-        for name in values:
-            if name not in logical_to_phys:
-                raise ValueError(
-                    f"{label} assigns unknown column {name!r}"
-                )
-            if name in state.partition_columns and label.startswith(
-                ("matched", "not_matched_by_source")
-            ):
-                raise NotImplementedError(
-                    f"{label} cannot assign partition column {name!r} "
-                    "(rows would move between partitions — rewrite via "
-                    "overwrite instead)"
-                )
-            if name in gen_cols:
-                raise ValueError(
-                    f"column {name!r} is GENERATED ({gen_cols[name]!r}); "
-                    "it is recomputed from its expression — assign its "
-                    "inputs instead"
-                )
-            if name in ident_names:
-                raise ValueError(
-                    f"column {name!r} is an IDENTITY column; its values "
-                    "cannot be assigned"
-                )
-
-    upd_assign_cols: set[str] = set()
-    for i, (kind, _c, values) in enumerate(matched):
-        if kind == "update":
-            _check_assign(values, f"matched[{i}]")
-            upd_assign_cols |= set(values)
-    for j, (kind, _c, values) in enumerate(nmbs):
-        if kind == "update":
-            _check_assign(values, f"not_matched_by_source[{j}]")
-    if not_matched and ident_names:
-        raise NotImplementedError(
-            f"merge_rows cannot INSERT into the table at {path!r}: its "
-            f"IDENTITY column(s) {sorted(ident_names)} need generated "
-            "values this writer does not allocate — use append with "
-            "explicit identity handling instead"
-        )
-    for k, (_kind, _c, values) in enumerate(not_matched):
-        _check_assign(values, f"not_matched[{k}]")
-        for f in schema.fields:
-            if (
-                not f.nullable
-                and f.name not in values
-                and f.name not in gen_cols
-            ):
-                raise ValueError(
-                    f"not_matched[{k}] omits non-nullable column "
-                    f"{f.name!r}"
-                )
-
-    row_tracking = "rowTracking" in set(
-        (state.protocol or {}).get("writerFeatures") or ()
-    )
-    cdf_on = str(
-        (state.metadata.get("configuration") or {}).get(
-            "delta.enableChangeDataFeed", ""
-        )
-    ).lower() == "true"
-
-    rels = sorted(state.files)
-    abs_files = [os.path.join(base, rel) for rel in rels]
-    # row identity = (encoded full path, row position) — basenames
-    # alone collide across hive partition directories
-    base_to_rel = {
-        _hadoop_path_encode(os.path.abspath(os.path.join(base, rel))): rel
-        for rel in rels
-    }
-    if rels and mapping != "none":
-        # evolved columns are absent from pre-evolution files by
-        # definition — verify only the pre-existing physical names
-        _verify_physical_names(
-            spark,
-            abs_files[0],
-            [
-                pf.name
-                for f, pf in zip(schema.fields, phys_schema.fields)
-                if pf.name not in phys_part_cols
-                and f.name not in evolved_names
-            ],
-            known=state.historical_physical_names,
-        )
-    if rels and phys_part_cols and not _all_files_hive_layout(
-        state.files, phys_part_cols
-    ):
-        raise NotImplementedError(
-            "merge_rows on a partitioned table whose file paths do not "
-            "hive-encode the logged partitionValues (externally authored "
-            "layout) — rewrite via overwrite instead"
-        )
-
-    dv_ver = _dv_verify(base, state.dvs) if state.dvs else {}
-    on_cond = on if isinstance(on, Column) else F.expr(on)
-    logical_cols = [
-        _quoted(pf.name).cast(f.dataType).alias(f.name)
-        for f, pf in zip(schema.fields, phys_schema.fields)
-    ]
-
-    def _tgt_scan(with_pos: bool) -> DataFrame:
-        """The live logical target, optionally with (basename, row
-        position) identity columns."""
-        if phys_part_cols:
-            scan = (
-                spark.read.option("basePath", base)
-                .schema(phys_schema)
-                .parquet(*abs_files)
+            counter = [prior_max + 1]
+            schema = _mapped_schema(schema, state.schema, counter)
+            # table configuration is a string -> string map
+            cfg2["delta.columnMapping.maxColumnId"] = str(
+                max(_max_mapped_id(schema), prior_max)
             )
-        else:
-            scan = spark.read.schema(phys_schema).parquet(*abs_files)
-        live = _apply_dv_filter(spark, scan, base, dv_ver, rels)
-        extra = (
+            meta_out["configuration"] = cfg2
+        meta_out["schemaString"] = schema.json()
+        return schema, meta_out, set(new_assign)
+
+    def _clauses(clauses) -> str:
+        # delta-spark string-encodes every value; clause lists are JSON
+        # arrays of {predicate?, actionType}
+        return json.dumps(
             [
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), r"^file:/+", "/"
-                ).alias("__mrg_base"),
-                F.col("_metadata.row_index").alias("__mrg_pos"),
+                {
+                    **(
+                        {"predicate": _predicate_sql(c)}
+                        if c is not None
+                        else {}
+                    ),
+                    "actionType": k,
+                }
+                for k, c, _v in clauses
             ]
-            if with_pos
-            else []
         )
-        return live.select(*logical_cols, *extra)
 
-    # matched-update clause indices / assigned-column bookkeeping
-    upd_idx = [i for i, (k, _c, _v) in enumerate(matched) if k == "update"]
-    del_idx = [i for i, (k, _c, _v) in enumerate(matched) if k == "delete"]
-    new_names = {
-        c: f"__mrg_new_{n}" for n, c in enumerate(sorted(upd_assign_cols))
-    }
-    assigners = {
-        c: [
-            i
-            for i in upd_idx
-            if c in (matched[i][2] or {})
-        ]
-        for c in upd_assign_cols
-    }
-
-    version = state.version + 1
-    now_ms = int(_time.time() * 1000)
-    constraints = _table_constraints(state.metadata, schema)
-
-    # rowTracking bookkeeping (mirrors update_rows); configuration
-    # builds on the evolution-updated metadata when both change
-    rt_cfg = dict(
-        (meta_out or state.metadata or {}).get("configuration") or {}
+    return _dml(
+        _TableWrite(
+            spark,
+            path,
+            "merge_rows",
+            evolve=_evolve if schema_evolution else None,
+        ),
+        "MERGE",
+        {
+            "predicate": _predicate_sql(on),
+            "matchedPredicates": _clauses(matched),
+            "notMatchedPredicates": _clauses(not_matched),
+            "notMatchedBySourcePredicates": _clauses(nmbs),
+        },
+        lambda c: {
+            "numSourceRows": str(c["source_rows"]),
+            "numTargetRowsUpdated": str(c["updated"]),
+            "numTargetRowsInserted": str(c["inserted"]),
+            # a DV mask pair is not a file add or remove
+            "numTargetFilesRemoved": str(c["files_removed"]),
+            "numTargetFilesAdded": str(c["files_added"]),
+            **(
+                {"numDeletionVectorsAdded": str(c["dv_files"])}
+                if c["dv_files"]
+                else {}
+            ),
+            **(
+                {"numTargetRowsDeleted": str(c["deleted"])}
+                if c["deleted"] is not None
+                else {}
+            ),
+        },
+        source=source,
+        on=on,
+        matched=matched,
+        not_matched=not_matched,
+        nmbs=nmbs,
+        use_dvs=use_dvs,
+        inline_threshold=inline_threshold,
     )
-    rid_col = rt_cfg.get(_MAT_ROW_ID_KEY)
-    rcv_col = rt_cfg.get(_MAT_ROW_CV_KEY)
-    rt_meta_changed = False
-    if row_tracking:
-        if rid_col is None:
-            rid_col = f"_row-id-col-{uuid.uuid4().hex}"
-            rt_cfg[_MAT_ROW_ID_KEY] = rid_col
-            rt_meta_changed = True
-        if rcv_col is None:
-            rcv_col = f"_row-commit-version-col-{uuid.uuid4().hex}"
-            rt_cfg[_MAT_ROW_CV_KEY] = rcv_col
-            rt_meta_changed = True
-    next_row_id = 0
-    if row_tracking:
-        domain = state.domains.get("delta.rowTracking")
-        if domain and not domain.get("removed"):
-            next_row_id = int(
-                json.loads(domain.get("configuration") or "{}").get(
-                    "rowIdHighWaterMark", -1
-                )
-            ) + 1
 
-    # if the CALLER already persisted the source, persist() is a no-op
-    # returning the same plan — unpersisting in the finally would evict
-    # THEIR cache (r13 ADVICE low); only release what this command pinned
-    lvl = source.storageLevel
-    caller_persisted = bool(lvl.useMemory or lvl.useDisk)
-    src = source if caller_persisted else source.persist()
-    n_source_rows = src.count()  # materializes the cached source
-    dec = None
-    touched: list[str] = []
-    touched_counts: dict[str, int] = {}
-    persisted: list = []  # per-group/insert caches, released in finally
-    # operationMetrics accumulation (delta-spark history parity):
-    # updated rows via observe() riding each group's staging write,
-    # rewritten/inserted rows from the add stats already being parsed,
-    # deleted rows by conservation (removed_live - rewritten)
-    metrics: dict = {
-        "updated": 0, "inserted": 0, "rewritten_rows": 0,
-        "derivable": True,
-    }
-    try:
+
+class _TableWrite:
+    """The table-write context every DML command (delete_rows,
+    update_rows, merge_rows) builds ONCE from ``replay_log``: the
+    writer-protocol and appendOnly obligations, the column-mapping mode
+    with the physical schema and logical->physical map, the hive-layout
+    refusal and the ``_verify_physical_names`` footer peek, the CDF /
+    deletion-vector / rowTracking flags, the verified deletion vectors,
+    the encoded-path map row identity keys on, and the rowTracking
+    column names and watermark (``_RowIds``).
+
+    It then accumulates the command's commit — ``actions`` plus every
+    file ``staged`` on the way — and ``commit()`` is the one commit
+    tail. Used as a context manager: any exception rolls the staged
+    files back, and the frames the command pinned are released.
+    ``evolve(state, mapping) -> (schema, metaData|None, new names)`` is
+    merge's schema-evolution hook."""
+
+    def __init__(self, spark: SparkSession, path: str, cmd: str,
+                 evolve=None):
+        self.spark, self.path, self.cmd = spark, path, cmd
+        self.verb = cmd.split("_")[0]  # delete / update / merge
+        self.base = base = _local(path)
+        self.state = state = replay_log(spark, path)
+        _check_writer_protocol(state.protocol, path)
+        _check_write_obligations(state, path, self.verb)
+        self.mapping = mapping = _column_mapping_mode(state.metadata)
+        if mapping not in ("none", "name", "id"):
+            raise NotImplementedError(
+                f"unknown delta.columnMapping.mode {mapping!r}"
+            )
+        self.schema, self.meta_out, evolved = (
+            evolve(state, mapping) if evolve else (state.schema, None, ())
+        )
+        schema = self.schema
+        self.phys_schema = (
+            _physicalize(schema) if mapping != "none" else schema
+        )
+        self.logical_to_phys = {
+            f.name: pf.name
+            for f, pf in zip(schema.fields, self.phys_schema.fields)
+        }
+        self.phys_part_cols = [
+            self.logical_to_phys[c]
+            for c in state.partition_columns
+            if c in self.logical_to_phys
+        ]
+        self.rels = sorted(state.files)
+        if self.rels and mapping != "none":
+            # on a mapped table whose files do NOT carry physical names
+            # (foreign id-mode writers relying on parquet field-id
+            # resolution) every data column would scan as NULL and a
+            # predicate like `col IS NULL` would match the whole table
+            # — refuse instead. Evolved columns are absent from
+            # pre-evolution files by definition.
+            _verify_physical_names(
+                spark,
+                os.path.join(base, self.rels[0]),
+                [
+                    pf.name
+                    for f, pf in zip(schema.fields, self.phys_schema.fields)
+                    if pf.name not in self.phys_part_cols
+                    and f.name not in evolved
+                ],
+                known=state.historical_physical_names,
+            )
+        if (
+            self.rels
+            and self.phys_part_cols
+            and not _all_files_hive_layout(state.files, self.phys_part_cols)
+        ):
+            raise NotImplementedError(
+                f"{cmd} on a partitioned table whose file paths do not "
+                "hive-encode the logged partitionValues (externally "
+                "authored layout) — rewrite via overwrite instead"
+            )
+        config = state.metadata.get("configuration") or {}
+        self.cdf_on = (
+            str(config.get("delta.enableChangeDataFeed", "")).lower()
+            == "true"
+        )
+        self.dv_feature_on = "deletionVectors" in set(
+            (state.protocol or {}).get("readerFeatures") or ()
+        ) or str(config.get("delta.enableDeletionVectors", "")).lower() == (
+            "true"
+        )
+        # row identity = (encoded full path, row position) — basenames
+        # alone collide across hive partition directories
+        self.enc_to_rel = {
+            _hadoop_path_encode(os.path.abspath(os.path.join(base, rel))): rel
+            for rel in self.rels
+        }
+        self.rows = _RowIds.of(state, self.meta_out)
+        self.gen_cols = dict(_generated_columns(schema))
+        self.ident_names = {d["name"] for d in _identity_columns(schema)}
+        self.constraints = _table_constraints(state.metadata, schema)
+        self.version = state.version + 1
+        self.now_ms = int(time.time() * 1000)
+        self.actions: list[dict] = []
+        self.staged: list[str] = []  # table-relative, for rollback
+        self.persisted: list[DataFrame] = []  # released on exit
+
+    @functools.cached_property
+    def dv_ver(self) -> dict:
+        return _dv_verify(self.base, self.state.dvs) if self.state.dvs else {}
+
+    def __enter__(self) -> "_TableWrite":
+        return self
+
+    def __exit__(self, exc_type, *_exc) -> bool:
+        if exc_type is not None:
+            self.rollback()
+        for frame in self.persisted:
+            frame.unpersist(blocking=False)
+        return False
+
+    def rollback(self) -> None:
+        for rel in self.staged:
+            try:
+                os.remove(os.path.join(self.base, rel))
+            except OSError:
+                pass
+        self.staged.clear()
+
+    def scan(self, rels: list[str], live: bool = True,
+             row_ids: bool = False, ids: bool = True) -> DataFrame:
+        """The logical rows of ``rels`` (partition columns parsed from
+        the hive paths) with ``__file`` / ``__pos`` row identity (the
+        encoded path and parquet row position) when ``ids`` — a scan
+        that selects ``_metadata`` builds it for every row even when
+        nothing downstream reads it, so callers that need no identity
+        leave it out. ``live`` drops rows masked by deletion vectors;
+        ``row_ids`` adds the resolved materialized rowTracking
+        columns."""
+        spark, base = self.spark, self.base
+        dv_ver = self.dv_ver if live else {}
+        phys_fields = list(self.phys_schema.fields)
+        part_base = base if self.phys_part_cols else None
+        if row_ids:
+            rid, rcv = self.rows.rid_col, self.rows.rcv_col
+            df = _with_materialized_row_ids(
+                spark,
+                base,
+                rels,
+                self.state.adds,
+                T.StructType(
+                    phys_fields
+                    + [
+                        T.StructField(rid, T.LongType()),
+                        T.StructField(rcv, T.LongType()),
+                    ]
+                ),
+                rid,
+                rcv,
+                dv_ver=dv_ver,
+                keep_position=ids,
+                keep_path=ids,
+                base_path=part_base,
+            ).withColumnsRenamed({"__rt_path": "__file", "__rt_idx": "__pos"})
+        else:
+            reader = spark.read.schema(self.phys_schema)
+            if part_base:
+                reader = reader.option("basePath", part_base)
+            df = reader.parquet(*[os.path.join(base, r) for r in rels])
+            if ids:
+                df = df.select(
+                    "*",
+                    F.regexp_replace(
+                        F.col("_metadata.file_path"), r"^file:/+", "/"
+                    ).alias("__file"),
+                    F.col("_metadata.row_index").alias("__pos"),
+                )
+            if dv_ver:
+                df = _apply_dv_filter(spark, df, base, dv_ver, rels)
+        return df.select(
+            *[
+                _quoted(pf.name).cast(f.dataType).alias(f.name)
+                for f, pf in zip(self.schema.fields, phys_fields)
+            ],
+            *(
+                [_quoted(self.rows.rid_col), _quoted(self.rows.rcv_col)]
+                if row_ids
+                else []
+            ),
+            *(["__file", "__pos"] if ids else []),
+        )
+
+    def to_phys(self, frame: DataFrame, parts: bool = True,
+                row_ids: bool = False) -> DataFrame:
+        """Logical rows -> the physical parquet layout (partition
+        columns dropped unless ``parts``; a ``_change_type`` column
+        rides along)."""
+        return frame.select(
+            *[
+                _quoted(f.name).cast(pf.dataType).alias(pf.name)
+                for f, pf in zip(self.schema.fields, self.phys_schema.fields)
+                if parts or pf.name not in self.phys_part_cols
+            ],
+            *(
+                [_quoted(self.rows.rid_col), _quoted(self.rows.rcv_col)]
+                if row_ids
+                else []
+            ),
+            *(["_change_type"] if "_change_type" in frame.columns else []),
+        )
+
+    def stage_rows(self, rows: DataFrame, what: str,
+                   group: list[str] | None = None, row_ids: bool = False,
+                   n_files: int | None = None) -> int | None:
+        """Write logical ``rows`` as new data files and append their
+        adds: into ``group``'s partition directory under its logged
+        partitionValues (a rewrite), else hive-partitioned on the
+        partition columns. CHECK constraints / invariants ride the
+        write as observe() metrics (zero extra passes) and a violation
+        raises before anything commits. Zero-row part files never
+        commit; on rowTracking tables every add draws a fresh baseRowId
+        range. Returns the rows added, None when some file's footer
+        was unreadable."""
+        obs = None
+        if self.constraints:
+            rows, obs, name_map = _attach_constraint_observer(
+                rows, self.schema, self.constraints, self.path
+            )
+        out = self.to_phys(rows, parts=group is None, row_ids=row_ids)
+        if n_files:
+            out = out.coalesce(n_files)
+        if group is None:
+            moved = _stage_and_move(out, self.base, tuple(self.phys_part_cols))
+        else:
+            part_dir = os.path.dirname(group[0])
+            moved = [
+                (os.path.join(part_dir, rel), size)
+                for rel, size in _stage_and_move(
+                    out, os.path.join(self.base, part_dir), ()
+                )
+            ]
+        self.staged.extend(rel for rel, _ in moved)
+        if obs is not None:
+            violated = [
+                name_map[k] for k, v in obs.get.items() if int(v or 0) > 0
+            ]
+            if violated:
+                raise ValueError(
+                    f"{what} violates constraint(s) {sorted(violated)} on "
+                    f"{self.path!r}; nothing was committed"
+                )
+        total: int | None = 0
+        for rel, size in moved:
+            dst = os.path.join(self.base, rel)
+            stats = _file_stats_json(dst)
+            n = json.loads(stats)["numRecords"] if stats else None
+            if n == 0:
+                os.remove(dst)
+                continue
+            add = {
+                "path": urllib.parse.quote(rel, safe="/="),
+                "partitionValues": (
+                    dict(self.state.files[group[0]] or {})
+                    if group is not None
+                    else _partition_values_from_rel(rel, self.phys_part_cols)
+                ),
+                "size": size,
+                "modificationTime": self.now_ms,
+                "dataChange": True,
+            }
+            if stats is not None:
+                add["stats"] = stats
+            self.rows.assign(add, stats, self.version, self.path)
+            self.actions.append({"add": add})
+            total = None if total is None or n is None else total + int(n)
+        return total
+
+    def stage_changes(self, changes: DataFrame) -> None:
+        """Stage logical change rows (with ``_change_type``) under
+        ``_change_data/``, hive-partitioned like the data, and append
+        their cdc actions — the protocol's authoritative change record,
+        which readers prefer over add/remove derivation (a DV mask is a
+        remove+add of the SAME path, a rewrite re-adds unchanged rows).
+        Zero-row files never commit."""
+        import pyarrow.parquet as pq
+
+        cdc_dir = os.path.join(self.base, "_change_data")
+        os.makedirs(cdc_dir, exist_ok=True)
+        for rel, size in _stage_and_move(
+            self.to_phys(changes), cdc_dir, tuple(self.phys_part_cols)
+        ):
+            full_rel = f"_change_data/{rel}"
+            self.staged.append(full_rel)
+            dst = os.path.join(cdc_dir, rel)
+            if pq.ParquetFile(dst).metadata.num_rows == 0:
+                os.remove(dst)
+                continue
+            self.actions.append(
+                {
+                    "cdc": {
+                        "path": urllib.parse.quote(full_rel, safe="/="),
+                        "partitionValues": _partition_values_from_rel(
+                            rel, self.phys_part_cols
+                        ),
+                        "size": size,
+                        "dataChange": False,
+                    }
+                }
+            )
+
+    def commit(self, operation: str, parameters: dict,
+               op_metrics) -> int:
+        """The one commit tail: nothing added or removed -> roll the
+        staged files back and return the current version uncommitted;
+        otherwise commitInfo (``op_metrics`` maps the kernel's counts to
+        the command's operationMetrics), the metaData the command
+        changed, the rowTracking watermark when rows drew ids, the
+        atomic log write, and the best-effort checkpoint hook."""
+        n_adds = sum(1 for a in self.actions if "add" in a)
+        n_removes = sum(1 for a in self.actions if "remove" in a)
+        if not (n_adds or n_removes):
+            self.rollback()
+            return self.state.version
+        head = [{
+            "commitInfo": {
+                "timestamp": self.now_ms,
+                "operation": operation,
+                "operationParameters": parameters,
+                "operationMetrics": op_metrics(n_adds, n_removes),
+            }
+        }]
+        meta = self.meta_out
+        if self.rows.drawn and self.rows.new_config is not None:
+            # ONE metaData action carries both an evolved schema and the
+            # newly named materialized rowTracking columns
+            meta = dict(meta or self.state.metadata)
+            meta["configuration"] = self.rows.new_config
+        if meta is not None:
+            head.append({"metaData": meta})
+        tail = [self.rows.watermark()] if self.rows.drawn else []
+        _write_commit_file(
+            os.path.join(_log_dir(self.path), f"{self.version:020d}.json"),
+            head + self.actions + tail,
+        )
+        self.staged.clear()
+        if self.version > 0 and self.version % CHECKPOINT_INTERVAL == 0:
+            try:  # best-effort, like write_delta_lite's hook
+                write_checkpoint(self.spark, self.path)
+            except Exception:
+                pass
+        return self.version
+
+
+def _dml(
+    tw: _TableWrite,
+    operation: str,
+    parameters: dict,
+    op_metrics,
+    source: DataFrame | None = None,
+    on: Column | str | None = None,
+    matched=(),
+    not_matched=(),
+    nmbs=(),
+    use_dvs: bool | None = None,
+    inline_threshold: int = DV_INLINE_THRESHOLD,
+) -> int:
+    """The decision -> rewrite / DV-mask -> insert kernel behind
+    merge_rows (and, source-less, update_rows and delete_rows): see
+    merge_rows for the semantics. ``op_metrics`` maps the kernel's
+    counts to the command's operationMetrics names."""
+    from pyspark.sql import Observation
+
+    with tw:
+        state, schema = tw.state, tw.schema
+        rels = tw.rels
+        gen_cols = tw.gen_cols
+
+        # ---- static clause validation over the table schema ------------
+        def _check_assign(values: dict, label: str, insert=False) -> None:
+            for name in values:
+                if name not in tw.logical_to_phys:
+                    raise ValueError(
+                        f"{label} assigns unknown column {name!r}"
+                    )
+                if name in state.partition_columns and not insert:
+                    raise NotImplementedError(
+                        f"{label} cannot assign partition column {name!r} "
+                        "(rows would move between partitions — rewrite "
+                        "via overwrite instead)"
+                    )
+                if name in gen_cols:
+                    raise ValueError(
+                        f"column {name!r} is GENERATED "
+                        f"({gen_cols[name]!r}); it is recomputed from its "
+                        "expression — assign its inputs instead"
+                    )
+                if name in tw.ident_names:
+                    raise ValueError(
+                        f"column {name!r} is an IDENTITY column; its "
+                        "values cannot be assigned"
+                    )
+
+        def _label(kind: str, i: int) -> str:
+            return f"{kind}[{i}]" if source is not None else tw.cmd
+
+        upd_assign_cols: set[str] = set()
+        for i, (kind, _c, values) in enumerate(matched):
+            if kind == "update":
+                _check_assign(values, _label("matched", i))
+                upd_assign_cols |= set(values)
+        for j, (kind, _c, values) in enumerate(nmbs):
+            if kind == "update":
+                _check_assign(values, _label("not_matched_by_source", j))
+        if not_matched and tw.ident_names:
+            raise NotImplementedError(
+                f"merge_rows cannot INSERT into the table at {tw.path!r}: "
+                f"its IDENTITY column(s) {sorted(tw.ident_names)} need "
+                "generated values this writer does not allocate — use "
+                "append with explicit identity handling instead"
+            )
+        for k, (_kind, _c, values) in enumerate(not_matched):
+            _check_assign(values, f"not_matched[{k}]", insert=True)
+            for f in schema.fields:
+                if (
+                    not f.nullable
+                    and f.name not in values
+                    and f.name not in gen_cols
+                ):
+                    raise ValueError(
+                        f"not_matched[{k}] omits non-nullable column "
+                        f"{f.name!r}"
+                    )
+
+        def _kind_idx(clauses, kind: str) -> list[int]:
+            return [i for i, (k, _c, _v) in enumerate(clauses) if k == kind]
+
+        upd_idx = _kind_idx(matched, "update")
+        del_idx = _kind_idx(matched, "delete")
+        nmbs_upd_idx = _kind_idx(nmbs, "update")
+        nmbs_del_idx = _kind_idx(nmbs, "delete")
+        new_names = {
+            c: f"__mrg_new_{n}" for n, c in enumerate(sorted(upd_assign_cols))
+        }
+        assigners = {
+            c: [i for i in upd_idx if c in (matched[i][2] or {})]
+            for c in upd_assign_cols
+        }
+        has_updates = bool(upd_idx or nmbs_upd_idx)
+
+        src = None
+        n_source_rows = 0
+        if source is not None:
+            # if the CALLER already persisted the source, persist() is a
+            # no-op returning the same plan — unpersisting on exit would
+            # evict THEIR cache (r13 ADVICE low); only release what this
+            # command pinned
+            lvl = source.storageLevel
+            if lvl.useMemory or lvl.useDisk:
+                src = source
+            else:
+                src = source.persist()
+                tw.persisted.append(src)
+            n_source_rows = src.count()  # materializes the cached source
+            on_cond = on if isinstance(on, Column) else F.expr(on)
+
         # ---- global decision frame: one match pass ----------------------
-        if rels and (matched or nmbs):
-            pairs = _tgt_scan(True).alias("t").join(
+        dec = None
+        touched_counts: dict[str, int] = {}
+        if src is not None and rels and (matched or nmbs):
+            pairs = tw.scan(rels).alias("t").join(
                 src.alias("s"), on_cond, "inner"
             )
             clause = None
@@ -5276,10 +3845,9 @@ def merge_rows(
             for c, nm in new_names.items():
                 branch = None
                 for i in assigners[c]:
-                    val = matched[i][2][c]
-                    expr = (
-                        val if isinstance(val, Column) else F.expr(val)
-                    ).cast(schema[c].dataType)
+                    expr = _merge_cond_col(matched[i][2][c]).cast(
+                        schema[c].dataType
+                    )
                     branch = (
                         F.when(clause_col == i, expr)
                         if branch is None
@@ -5292,14 +3860,14 @@ def merge_rows(
                         else F.lit(None).cast(schema[c].dataType)
                     ).alias(nm)
                 )
-            per_pair = pairs.select(
-                F.col("__mrg_base"),
-                F.col("__mrg_pos"),
-                clause_col.alias("__mrg_clause"),
-                *new_cols,
-            )
             dec = (
-                per_pair.groupBy("__mrg_base", "__mrg_pos")
+                pairs.select(
+                    F.col("__file"),
+                    F.col("__pos"),
+                    clause_col.alias("__mrg_clause"),
+                    *new_cols,
+                )
+                .groupBy("__file", "__pos")
                 .agg(
                     F.count(
                         F.when(F.col("__mrg_clause").isNotNull(), 1)
@@ -5318,9 +3886,9 @@ def merge_rows(
                 # entirely when no by-source clause exists
                 dec = dec.filter(F.col("__mrg_clause").isNotNull())
             dec = dec.persist()
-
+            tw.persisted.append(dec)
             per_file = (
-                dec.groupBy("__mrg_base")
+                dec.groupBy("__file")
                 .agg(
                     F.max("__mrg_nmod").alias("mx"),
                     F.sum(
@@ -5336,320 +3904,474 @@ def merge_rows(
                     "source on the merge keys first (delta-spark raises "
                     "the same error)"
                 )
-            # per-file MODIFIED-row counts: drives the touched set and
-            # (r13) the DV-vs-rewrite routing
-            touched_counts: dict[str, int] = {
-                base_to_rel[r["__mrg_base"]]: int(r["nmod_rows"] or 0)
+            # per-file MODIFIED-row counts: the touched set and the
+            # DV-vs-rewrite routing input
+            touched_counts = {
+                tw.enc_to_rel[r["__file"]]: int(r["nmod_rows"] or 0)
                 for r in per_file
-                if int(r["nmod_rows"] or 0)
-                and r["__mrg_base"] in base_to_rel
+                if int(r["nmod_rows"] or 0) and r["__file"] in tw.enc_to_rel
             }
-            if nmbs:
+
+        # all-delete with forced DV routing: every file is a candidate
+        # and the mask pass itself finds the matches (the union with the
+        # old vector drops files with nothing new) — no count pass
+        mask_all = src is None and use_dvs is True and not has_updates
+        if mask_all:
+            touched = list(rels)
+        else:
+            if nmbs and rels:
                 any_nmbs = F.lit(False)
                 for _k, cond, _v in nmbs:
                     any_nmbs = any_nmbs | _merge_cond_col(cond)
-                nmbs_b = (
-                    _tgt_scan(True)
-                    .alias("t")
-                    .join(
-                        dec.select("__mrg_base", "__mrg_pos"),
-                        ["__mrg_base", "__mrg_pos"],
+                tgt = tw.scan(rels).alias("t")
+                if dec is not None:
+                    tgt = tgt.join(
+                        dec.select("__file", "__pos"),
+                        ["__file", "__pos"],
                         "left_anti",
                     )
-                    .filter(any_nmbs)
-                    .groupBy("__mrg_base")
+                for r in (
+                    tgt.filter(any_nmbs)
+                    .groupBy("__file")
                     .agg(F.count(F.lit(1)).alias("cnt"))
                     .collect()
-                )
-                for r in nmbs_b:
-                    rel_b = base_to_rel.get(r["__mrg_base"])
+                ):
+                    rel_b = tw.enc_to_rel.get(r["__file"])
                     if rel_b is not None:
                         touched_counts[rel_b] = touched_counts.get(
                             rel_b, 0
                         ) + int(r["cnt"])
             touched = sorted(touched_counts)
 
-        # ---- per-file routing: deletion-vector write vs rewrite ------
-        dv_feature_on = "deletionVectors" in set(
-            (state.protocol or {}).get("readerFeatures") or ()
-        ) or str(
-            (state.metadata.get("configuration") or {}).get(
-                "delta.enableDeletionVectors", ""
-            )
-        ).lower() == "true"
-        if use_dvs is False or not touched:
-            touched_dv: list[str] = []
-        elif use_dvs is True:
-            touched_dv = list(touched)
-        elif not dv_feature_on:
-            touched_dv = []
-        else:
-            touched_dv = []
-            for rel in touched:
-                stats_json = (state.adds.get(rel) or {}).get("stats")
-                if not stats_json:
-                    continue
-                try:
-                    n_rec = int(json.loads(stats_json)["numRecords"])
-                except (ValueError, KeyError, TypeError):
-                    continue
-                live_n = n_rec - int(
-                    (state.dvs.get(rel) or {}).get("cardinality", 0)
-                )
-                if live_n > 0 and touched_counts[rel] <= (
-                    DV_WRITE_MAX_FRACTION * live_n
-                ):
-                    touched_dv.append(rel)
-        touched_rw = [r for r in touched if r not in set(touched_dv)]
+        # ---- per-file routing: deletion-vector mask vs rewrite ----------
+        def _dv_card(rel: str) -> int:
+            return int((state.dvs.get(rel) or {}).get("cardinality", 0))
 
-        actions: list[dict] = [{
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "MERGE",
-                # delta-spark string-encodes every value; clause lists
-                # are JSON arrays of {predicate?, actionType}
-                "operationParameters": {
-                    "predicate": _predicate_sql(on),
-                    "matchedPredicates": json.dumps(
-                        [
-                            {
-                                **(
-                                    {"predicate": _predicate_sql(c)}
-                                    if c is not None
-                                    else {}
-                                ),
-                                "actionType": k,
-                            }
-                            for k, c, _v in matched
-                        ]
-                    ),
-                    "notMatchedPredicates": json.dumps(
-                        [
-                            {
-                                **(
-                                    {"predicate": _predicate_sql(c)}
-                                    if c is not None
-                                    else {}
-                                ),
-                                "actionType": k,
-                            }
-                            for k, c, _v in not_matched
-                        ]
-                    ),
-                    "notMatchedBySourcePredicates": json.dumps(
-                        [
-                            {
-                                **(
-                                    {"predicate": _predicate_sql(c)}
-                                    if c is not None
-                                    else {}
-                                ),
-                                "actionType": k,
-                            }
-                            for k, c, _v in nmbs
-                        ]
-                    ),
-                },
-            }
-        }]
-        if rt_meta_changed or meta_out is not None:
-            # ONE metaData action carries both the evolved schema and
-            # the rowTracking materialized-column config
-            mo = meta_out if meta_out is not None else dict(state.metadata)
-            if rt_meta_changed:
-                mo["configuration"] = rt_cfg
-            actions.append({"metaData": mo})
+        def _live_rows(rel: str) -> int | None:
+            stats_json = (state.adds.get(rel) or {}).get("stats")
+            try:
+                n_rec = int(json.loads(stats_json)["numRecords"])
+            except (ValueError, KeyError, TypeError):
+                return None  # no footer stats to judge selectivity by
+            return n_rec - _dv_card(rel)
 
-        staged: list[str] = []
-        try:
-            if touched_dv:
-                upgrade = _dv_protocol_upgrade_action(state, mapping)
-                if upgrade is not None:
-                    actions.append(upgrade)
-            next_row_id = _merge_rewrite_groups(
-                spark=spark,
-                base=base,
-                path=path,
-                state=state,
-                touched=touched_rw,
-                dec=dec,
-                matched=matched,
-                nmbs=nmbs,
-                schema=schema,
-                phys_schema=phys_schema,
-                logical_to_phys=logical_to_phys,
-                phys_part_cols=phys_part_cols,
-                gen_cols=gen_cols,
-                new_names=new_names,
-                assigners=assigners,
-                upd_idx=upd_idx,
-                del_idx=del_idx,
-                dv_ver=dv_ver,
-                row_tracking=row_tracking,
-                rid_col=rid_col,
-                rcv_col=rcv_col,
-                cdf_on=cdf_on,
-                constraints=constraints,
-                now_ms=now_ms,
-                version=version,
-                next_row_id=next_row_id,
-                staged=staged,
-                actions=actions,
-                persisted=persisted,
-                metrics=metrics,
-            )
-            if touched_dv:
-                next_row_id = _merge_rewrite_groups(
-                    spark=spark,
-                    base=base,
-                    path=path,
-                    state=state,
-                    touched=touched_dv,
-                    dec=dec,
-                    matched=matched,
-                    nmbs=nmbs,
-                    schema=schema,
-                    phys_schema=phys_schema,
-                    logical_to_phys=logical_to_phys,
-                    phys_part_cols=phys_part_cols,
-                    gen_cols=gen_cols,
-                    new_names=new_names,
-                    assigners=assigners,
-                    upd_idx=upd_idx,
-                    del_idx=del_idx,
-                    dv_ver=dv_ver,
-                    row_tracking=row_tracking,
-                    rid_col=rid_col,
-                    rcv_col=rcv_col,
-                    cdf_on=cdf_on,
-                    constraints=constraints,
-                    now_ms=now_ms,
-                    version=version,
-                    next_row_id=next_row_id,
-                    staged=staged,
-                    actions=actions,
-                    persisted=persisted,
-                    metrics=metrics,
-                    dv_mode=True,
-                    touched_counts=touched_counts,
-                    inline_threshold=inline_threshold,
-                )
-            next_row_id = _merge_inserts(
-                spark=spark,
-                base=base,
-                path=path,
-                rels=rels,
-                tgt_scan=_tgt_scan,
-                src=src,
-                on_cond=on_cond,
-                not_matched=not_matched,
-                schema=schema,
-                phys_schema=phys_schema,
-                phys_part_cols=phys_part_cols,
-                gen_cols=gen_cols,
-                row_tracking=row_tracking,
-                rid_col=rid_col,
-                rcv_col=rcv_col,
-                cdf_on=cdf_on,
-                constraints=constraints,
-                now_ms=now_ms,
-                version=version,
-                next_row_id=next_row_id,
-                staged=staged,
-                actions=actions,
-                persisted=persisted,
-                metrics=metrics,
+        def _mask(rel: str) -> bool:
+            if use_dvs is not None:
+                return use_dvs
+            if not tw.dv_feature_on:
+                return False
+            live_n = _live_rows(rel)
+            return live_n is not None and 0 < live_n and (
+                touched_counts[rel] <= DV_WRITE_MAX_FRACTION * live_n
             )
 
-            n_adds = sum(1 for a in actions if "add" in a)
-            n_removes = sum(1 for a in actions if "remove" in a)
-            if n_adds == 0 and n_removes == 0:
-                return state.version  # nothing matched any clause
+        masked = {r: _mask(r) for r in touched}
+        touched_dv = [r for r in touched if masked[r]]
+        touched_rw = [r for r in touched if not masked[r]]
+        if touched_dv:
+            upgrade = _dv_protocol_upgrade_action(state, tw.mapping)
+            if upgrade is not None:
+                tw.actions.append(upgrade)
 
-            dv_files = int(metrics.get("dv_files", 0))
-            op_metrics = {
-                "numSourceRows": str(n_source_rows),
-                "numTargetRowsUpdated": str(metrics["updated"]),
-                "numTargetRowsInserted": str(metrics["inserted"]),
-                # a DV file's remove+add pair is a mask update, not a
-                # file removal
-                "numTargetFilesRemoved": str(n_removes - dv_files),
-                "numTargetFilesAdded": str(n_adds - dv_files),
-            }
-            if dv_files:
-                op_metrics["numDeletionVectorsAdded"] = str(dv_files)
-            removed_live = 0
-            for rel in touched_rw:
-                stats_s = (state.adds.get(rel) or {}).get("stats")
-                n = None
-                if stats_s:
-                    try:
-                        n = int(json.loads(stats_s)["numRecords"])
-                    except Exception:
-                        n = None
-                if n is None:
-                    try:
-                        import pyarrow.parquet as _pq
+        counts = {
+            "updated": 0, "inserted": 0, "rewritten_rows": 0,
+            "dv_rewritten": 0, "dv_mask_growth": 0, "dv_files": 0,
+            "derivable": True,
+        }
 
-                        n = _pq.ParquetFile(
-                            os.path.join(base, rel)
-                        ).metadata.num_rows
-                    except Exception:
-                        metrics["derivable"] = False
-                        break
-                card = int(
-                    (state.dvs.get(rel) or {}).get("cardinality", 0)
+        def _decide(frame: DataFrame) -> DataFrame:
+            """Per-row decisions: the matched clause (joined from ``dec``
+            on file + position), the by-source clause, and the
+            __mrg_deleted / __mrg_updated flags."""
+            j = frame.alias("t")
+            if dec is not None:
+                # no broadcast hint: dec is proportional to matched rows
+                # — AQE flips to BHJ when it is actually small
+                j = j.join(
+                    dec.drop("__mrg_nmod"), ["__file", "__pos"], "left"
                 )
-                removed_live += max(0, n - card)
-            if metrics["derivable"]:
-                # rewrites conserve non-deleted rows, so deletes fall
-                # out of the arithmetic — no extra pass. DV groups:
-                # mask growth counts updated+deleted positions, and the
-                # replacement rows are exactly the updates
-                op_metrics["numTargetRowsDeleted"] = str(
-                    max(0, removed_live - metrics["rewritten_rows"])
-                    + max(
-                        0,
-                        int(metrics.get("dv_mask_growth", 0))
-                        - int(metrics.get("dv_rewritten", 0)),
-                    )
-                )
-            actions[0]["commitInfo"]["operationMetrics"] = op_metrics
-
-            if row_tracking:
-                actions.append({
-                    "domainMetadata": {
-                        "domain": "delta.rowTracking",
-                        "configuration": json.dumps(
-                            {"rowIdHighWaterMark": next_row_id - 1}
-                        ),
-                        "removed": False,
+            else:
+                j = j.withColumns(
+                    {
+                        "__mrg_clause": F.lit(None).cast("int"),
+                        "__mrg_matched": F.lit(None).cast("boolean"),
                     }
-                })
-            commit_path = os.path.join(
-                _log_dir(path), f"{version:020d}.json"
+                )
+            nmbs_clause = F.lit(None).cast("int")
+            if nmbs:
+                branch = None
+                for jx, (_k, cond, _v) in enumerate(nmbs):
+                    c = _merge_cond_col(cond)
+                    branch = (
+                        F.when(c, F.lit(jx))
+                        if branch is None
+                        else branch.when(c, F.lit(jx))
+                    )
+                nmbs_clause = F.when(F.col("__mrg_matched").isNull(), branch)
+            j = j.withColumn("__mrg_nmbs", nmbs_clause)
+            deleted = F.lit(False)
+            if del_idx:
+                deleted = deleted | F.col("__mrg_clause").isin(del_idx)
+            if nmbs_del_idx:
+                deleted = deleted | F.col("__mrg_nmbs").isin(nmbs_del_idx)
+            updated = F.lit(False)
+            if upd_idx:
+                updated = updated | F.col("__mrg_clause").isin(upd_idx)
+            if nmbs_upd_idx:
+                updated = updated | F.col("__mrg_nmbs").isin(nmbs_upd_idx)
+            return j.withColumns(
+                {
+                    "__mrg_deleted": F.coalesce(deleted, F.lit(False)),
+                    "__mrg_updated": F.coalesce(updated, F.lit(False)),
+                }
             )
-            _write_commit_file(commit_path, actions)
-        except BaseException:
-            for rel in staged:
+
+        def _new_values(kept: DataFrame, row_ids: bool) -> DataFrame:
+            """ONE simultaneous projection: every new value sees the
+            ORIGINAL row (matched-update values were computed against
+            the pristine pair in ``dec``; by-source updates evaluate
+            here over the original target columns). Generated columns
+            then recompute over the post-assignment values; updated
+            rows' materialized commit version falls to this commit."""
+            rid = (
+                [_quoted(tw.rows.rid_col), _quoted(tw.rows.rcv_col)]
+                if row_ids
+                else []
+            )
+            out_cols = []
+            for f in schema.fields:
+                c = f.name
+                val = None
+                if assigners.get(c):
+                    val = F.when(
+                        F.col("__mrg_clause").isin(assigners[c]),
+                        F.col(new_names[c]),
+                    )
+                for jx in nmbs_upd_idx:
+                    if c in nmbs[jx][2]:
+                        expr = _merge_cond_col(nmbs[jx][2][c]).cast(
+                            f.dataType
+                        )
+                        hit = F.col("__mrg_nmbs") == jx
+                        val = (
+                            F.when(hit, expr)
+                            if val is None
+                            else val.when(hit, expr)
+                        )
+                out_cols.append(
+                    (
+                        val.otherwise(_quoted(c)) if val is not None
+                        else _quoted(c)
+                    ).alias(c)
+                )
+            upd = kept.select(*out_cols, *rid, F.col("__mrg_updated"))
+            if gen_cols:
+                upd = upd.select(
+                    *[
+                        (
+                            F.when(
+                                F.col("__mrg_updated"),
+                                F.expr(gen_cols[f.name]).cast(f.dataType),
+                            )
+                            .otherwise(_quoted(f.name))
+                            .alias(f.name)
+                            if f.name in gen_cols
+                            else _quoted(f.name)
+                        )
+                        for f in schema.fields
+                    ],
+                    *rid,
+                    F.col("__mrg_updated"),
+                )
+            if row_ids:
+                upd = upd.withColumn(
+                    tw.rows.rcv_col,
+                    F.when(
+                        F.col("__mrg_updated"), F.lit(None).cast("long")
+                    ).otherwise(_quoted(tw.rows.rcv_col)),
+                )
+            return upd
+
+        def _observe_updates(upd: DataFrame):
+            obs = Observation()
+            return upd.observe(
+                obs,
+                F.coalesce(
+                    F.sum(F.col("__mrg_updated").cast("long")), F.lit(0)
+                ).alias("u"),
+            ), obs
+
+        has_deletes = bool(del_idx or nmbs_del_idx)
+
+        def _changes(j: DataFrame, upd: DataFrame | None) -> DataFrame:
+            """The modified rows' change images: originals of updated
+            rows (read BEFORE the rewrite projection), their new values,
+            and the deleted rows — only the kinds some clause produces,
+            since each image is one more read of ``j``."""
+            def img(frame, flag, kind):
+                return frame.filter(F.col(flag)).select(
+                    *[_quoted(f.name) for f in schema.fields],
+                    F.lit(kind).alias("_change_type"),
+                )
+
+            images = []
+            if has_updates:
+                images += [
+                    img(j, "__mrg_updated", "update_preimage"),
+                    img(upd, "__mrg_updated", "update_postimage"),
+                ]
+            if has_deletes:
+                images.append(img(j, "__mrg_deleted", "delete"))
+            return functools.reduce(DataFrame.unionByName, images)
+
+        # ---- rewrite: one new file set per touched partition group -----
+        by_part: dict[tuple, list[str]] = {}
+        for rel in touched_rw:
+            key = tuple(sorted((state.files[rel] or {}).items()))
+            by_part.setdefault(key, []).append(rel)
+        for _key, group in sorted(by_part.items()):
+            j = _decide(
+                tw.scan(group, row_ids=tw.rows.on, ids=dec is not None)
+            )
+            if tw.cdf_on and dec is not None:
+                # the decided group frame feeds the rewrite AND the
+                # change images — persist it for the group's duration
+                # instead of re-running the scan + source join per
+                # image. A source-less decision is a plain filter, so
+                # there the images re-scan rather than cache every row
+                # of the group (measured: caching 5M rows made a 1%
+                # CDF UPDATE 2.3x slower at local[4])
+                j = j.persist()
+                tw.persisted.append(j)
+            new = _new_values(j.filter(~F.col("__mrg_deleted")), tw.rows.on)
+            # the change images read the UNOBSERVED projection: an
+            # observe() node would block pushing their filters below it
+            changes = _changes(j, new) if tw.cdf_on else None
+            upd, obs_u = _observe_updates(new)
+            n = tw.stage_rows(upd, tw.verb, group=group, row_ids=tw.rows.on)
+            if n is None:
+                counts["derivable"] = False
+            else:
+                counts["rewritten_rows"] += n
+            counts["updated"] += int(obs_u.get["u"] or 0)
+            if changes is not None:
+                tw.stage_changes(changes)
+                j.unpersist(blocking=False)
+            tw.actions.extend(
+                _remove_action(state, rel, tw.now_ms) for rel in group
+            )
+
+        # ---- DV mask: one pass over every masked file ------------------
+        def _affected(rels: list[str], live: bool) -> DataFrame:
+            row_ids = live and tw.rows.on and has_updates
+            return _decide(
+                tw.scan(rels, live=live, row_ids=row_ids)
+            ).filter(F.col("__mrg_deleted") | F.col("__mrg_updated"))
+
+        if touched_dv:
+            if has_updates:
+                # positions, replacement rows and change images all read
+                # the AFFECTED live rows: cache them (proportional to the
+                # modified fraction, not to the masked files)
+                j = _affected(touched_dv, live=True).persist()
+                tw.persisted.append(j)
+            else:
+                # positions alone need no liveness (the union with the
+                # old vector absorbs already-masked rows): one raw scan
+                j = _affected(touched_dv, live=False)
+            per_file_dv = _materialize_dv_descriptors(
+                tw.base,
+                _dv_union_blobs(
+                    tw.spark,
+                    tw.base,
+                    j.select("__file", "__pos"),
+                    {r: state.dvs[r] for r in touched_dv if r in state.dvs},
+                ),
+                tw.enc_to_rel,
+                inline_threshold,
+                tw.staged,
+            )
+            if per_file_dv:
+                new = changes = None
+                if has_updates:
+                    new = _new_values(
+                        j.filter(F.col("__mrg_updated")), tw.rows.on
+                    )
+                elif tw.cdf_on:
+                    # delete images: the live matches of the files whose
+                    # vector grew
+                    j = _affected(sorted(r for r, _ in per_file_dv), True)
+                if tw.cdf_on:
+                    changes = _changes(j, new)
+                if new is not None:
+                    upd, obs_u = _observe_updates(new)
+                    # replacement rows are a small fraction of the masked
+                    # files by construction — coalesce to roughly the
+                    # table's own rows-per-file
+                    avg_live = max(
+                        1,
+                        sum(_live_rows(r) or 0 for r in touched_dv)
+                        // len(touched_dv),
+                    )
+                    modified = sum(
+                        touched_counts.get(r, 0) for r in touched_dv
+                    )
+                    n = tw.stage_rows(
+                        upd,
+                        tw.verb,
+                        row_ids=tw.rows.on,
+                        n_files=max(
+                            1, min(len(touched_dv), -(-modified // avg_live))
+                        ),
+                    )
+                    if n is None:
+                        counts["derivable"] = False
+                    else:
+                        counts["dv_rewritten"] += n
+                    counts["updated"] += int(obs_u.get["u"] or 0)
+                if changes is not None:
+                    tw.stage_changes(changes)
+            # remove(oldDv) + add(newDv) on the untouched bytes: stats,
+            # tags and rowTracking assignment stay valid
+            for rel, descriptor in sorted(per_file_dv):
+                counts["dv_mask_growth"] += max(
+                    0, int(descriptor["cardinality"]) - _dv_card(rel)
+                )
+                counts["dv_files"] += 1
+                tw.actions.append(_remove_action(state, rel, tw.now_ms))
+                tw.actions.append(
+                    {
+                        "add": {
+                            "path": urllib.parse.quote(rel, safe="/="),
+                            "partitionValues": state.files[rel],
+                            "size": os.path.getsize(
+                                os.path.join(tw.base, rel)
+                            ),
+                            "modificationTime": tw.now_ms,
+                            "dataChange": True,
+                            "deletionVector": descriptor,
+                            **state.adds.get(rel, {}),
+                        }
+                    }
+                )
+
+        # ---- WHEN NOT MATCHED inserts ----------------------------------
+        if not_matched:
+            ins = src.alias("s")  # empty table: every source row inserts
+            if rels:
+                ins = ins.join(
+                    tw.scan(rels, ids=False).alias("t"), on_cond, "left_anti"
+                )
+            branch = None
+            for k, (_kind, cond, _v) in enumerate(not_matched):
+                c = _merge_cond_col(cond)
+                branch = (
+                    F.when(c, F.lit(k))
+                    if branch is None
+                    else branch.when(c, F.lit(k))
+                )
+            ins = ins.withColumn("__mrg_ins", branch).filter(
+                F.col("__mrg_ins").isNotNull()
+            )
+            # simultaneous projection: every value expression sees the
+            # source row; omitted columns insert as typed nulls
+            val_cols = []
+            for f in schema.fields:
+                if f.name in gen_cols:
+                    continue  # computed below from the generation expr
+                b = None
+                for k, (_kind, _cond, values) in enumerate(not_matched):
+                    if f.name in values:
+                        expr = _merge_cond_col(values[f.name]).cast(
+                            f.dataType
+                        )
+                        hit = F.col("__mrg_ins") == k
+                        b = F.when(hit, expr) if b is None else b.when(
+                            hit, expr
+                        )
+                val_cols.append(
+                    (
+                        b if b is not None else F.lit(None).cast(f.dataType)
+                    ).alias(f.name)
+                )
+            new_rows = ins.select(*val_cols)
+            if gen_cols:
+                new_rows = new_rows.select(
+                    "*",
+                    *[
+                        F.expr(gexpr).cast(schema[name].dataType).alias(name)
+                        for name, gexpr in gen_cols.items()
+                    ],
+                ).select(*[_quoted(f.name) for f in schema.fields])
+            if tw.cdf_on:
+                # reused by the cdc insert staging — one anti-join, not two
+                new_rows = new_rows.persist()
+                tw.persisted.append(new_rows)
+            n = tw.stage_rows(new_rows, "merge insert")
+            if n is None:
+                counts["derivable"] = False
+            else:
+                counts["inserted"] += n
+            if tw.cdf_on:
+                tw.stage_changes(
+                    new_rows.withColumn("_change_type", F.lit("insert"))
+                )
+
+        # ---- operationMetrics (delta-spark history parity) -------------
+        # rewrites conserve non-deleted rows, so deletes fall out of the
+        # arithmetic — no extra pass. Masked files: mask growth counts
+        # updated+deleted positions, and the replacement rows are
+        # exactly the updates
+        removed_live = 0
+        for rel in touched_rw:
+            n = _live_rows(rel)
+            if n is None:
                 try:
-                    os.remove(os.path.join(base, rel))
-                except OSError:
-                    pass
-            raise
-    finally:
-        for frame in persisted:
-            frame.unpersist(blocking=False)
-        if dec is not None:
-            dec.unpersist(blocking=False)
-        if not caller_persisted:
-            src.unpersist(blocking=False)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        try:
-            write_checkpoint(spark, path)
-        except Exception:
-            pass
-    return version
+                    import pyarrow.parquet as pq
+
+                    n = pq.ParquetFile(
+                        os.path.join(tw.base, rel)
+                    ).metadata.num_rows - _dv_card(rel)
+                except Exception:
+                    counts["derivable"] = False
+                    break
+            removed_live += max(0, n)
+
+        def _metrics(n_adds: int, n_removes: int) -> dict:
+            ok = counts["derivable"]
+            dv_files = counts["dv_files"]
+            return op_metrics(
+                {
+                    "source_rows": n_source_rows,
+                    "updated": counts["updated"],
+                    "inserted": counts["inserted"],
+                    "dv_files": dv_files,
+                    "files_added": n_adds - dv_files,
+                    "files_removed": n_removes - dv_files,
+                    "deleted": (
+                        max(0, removed_live - counts["rewritten_rows"])
+                        + max(
+                            0,
+                            counts["dv_mask_growth"]
+                            - counts["dv_rewritten"],
+                        )
+                        if ok
+                        else None
+                    ),
+                    "copied": (
+                        max(
+                            0,
+                            counts["rewritten_rows"]
+                            + counts["dv_rewritten"]
+                            - counts["updated"],
+                        )
+                        if ok
+                        else None
+                    ),
+                }
+            )
+
+        return tw.commit(operation, parameters, _metrics)
 
 
 def _dv_bin_rel(base: str, dv: dict | None) -> str | None:
@@ -6595,12 +5317,6 @@ def latest_version(path: str) -> int:
 # ---- OPTIMIZE (bin-packing compaction + Z-order clustering) --------------
 
 
-_MAT_ROW_ID_KEY = "delta.rowTracking.materializedRowIdColumnName"
-_MAT_ROW_CV_KEY = (
-    "delta.rowTracking.materializedRowCommitVersionColumnName"
-)
-
-
 def _with_materialized_row_ids(
     spark: SparkSession,
     base: str,
@@ -6613,6 +5329,7 @@ def _with_materialized_row_ids(
     keep_basename: bool = False,
     keep_position: bool = False,
     keep_path: bool = False,
+    base_path: str | None = None,
 ) -> DataFrame:
     """Scan ``rels`` with each row's RESOLVED row-tracking identity
     materialized into ``rid_col``/``rcv_col`` (protocol rule: the
@@ -6631,7 +5348,9 @@ def _with_materialized_row_ids(
     leaves the ``__rt_base`` key column for callers that need further
     per-file joins (partition-value injection) downstream;
     ``keep_position`` leaves ``__rt_idx`` (the parquet row position)
-    for callers joining per-row decisions (merge_rows)."""
+    for callers joining per-row decisions (the DML kernel);
+    ``base_path`` reads hive partition columns listed in
+    ``read_schema`` from the paths under it."""
     basenames = [os.path.basename(r) for r in rels]
     if len(set(basenames)) != len(basenames):
         raise AssertionError(
@@ -6648,9 +5367,11 @@ def _with_materialized_row_ids(
         ],
         "__rt_base string, __rt_rid bigint, __rt_dcv bigint",
     )
+    reader = spark.read.schema(read_schema)
+    if base_path:
+        reader = reader.option("basePath", base_path)
     df = (
-        spark.read.schema(read_schema)
-        .parquet(*[os.path.join(base, r) for r in rels])
+        reader.parquet(*[os.path.join(base, r) for r in rels])
         .select(
             "*",
             F.element_at(
@@ -7031,16 +5752,21 @@ def optimize(
         return {"version": None, "rewritten": 0, "added": 0}
 
     undroppable = ("baseRowId", "defaultRowCommitVersion")
-    row_tracking = "rowTracking" in set(
-        (state.protocol or {}).get("writerFeatures") or ()
-    )
+    # row-ID-PRESERVING rewrite (r11): each row's resolved identity
+    # (materialized value, else baseRowId + position) is written into
+    # the protocol's materialized shadow columns — invisible to normal
+    # reads (every reader scans with the table schema, so parquet
+    # prunes them). The rewritten adds then take FRESH baseRowId ranges
+    # (delta-spark's scheme: the materialized values override the
+    # defaults, so logical ids survive any reordering or merging)
+    row_ids = _RowIds.of(state)
     ids_carried = any(
         k in (state.adds.get(rel) or {})
         for _, rels in groups
         for rel in rels
         for k in undroppable
     )
-    if ids_carried and not row_tracking:
+    if ids_carried and not row_ids.on:
         # ids without the feature: a foreign anomaly this writer cannot
         # rewrite protocol-correctly (no feature, no config keys)
         raise NotImplementedError(
@@ -7049,33 +5775,10 @@ def optimize(
             "not list rowTracking — cannot preserve row identity "
             "without the feature's materialized-column machinery"
         )
-    rt_cfg = dict((state.metadata or {}).get("configuration") or {})
-    rid_col = rt_cfg.get(_MAT_ROW_ID_KEY)
-    rcv_col = rt_cfg.get(_MAT_ROW_CV_KEY)
-    rt_meta_changed = False
-    if row_tracking:
-        # row-ID-PRESERVING rewrite (r11): each row's resolved identity
-        # (materialized value, else baseRowId + position) is written
-        # into the protocol's materialized shadow columns — named by
-        # table configuration, created here on first use, invisible to
-        # normal reads (every reader scans with the table schema, so
-        # parquet prunes them). The rewritten adds then take FRESH
-        # baseRowId ranges (delta-spark's scheme: the materialized
-        # values override the defaults, so logical ids survive any
-        # reordering or merging of files).
-        if rid_col is None:
-            rid_col = f"_row-id-col-{uuid.uuid4().hex}"
-            rt_cfg[_MAT_ROW_ID_KEY] = rid_col
-            rt_meta_changed = True
-        if rcv_col is None:
-            rcv_col = f"_row-commit-version-col-{uuid.uuid4().hex}"
-            rt_cfg[_MAT_ROW_CV_KEY] = rcv_col
-            rt_meta_changed = True
-
-    import time as _time
+    rid_col, rcv_col = row_ids.rid_col, row_ids.rcv_col
 
     dv_ver = _dv_verify(base, state.dvs) if state.dvs else {}
-    now_ms = int(_time.time() * 1000)
+    now_ms = int(time.time() * 1000)
     version = state.version + 1
     actions: list[dict] = [{
         "commitInfo": {
@@ -7087,23 +5790,14 @@ def optimize(
             },
         }
     }]
-    if rt_meta_changed:
+    if row_ids.new_config is not None:
         meta_out = dict(state.metadata)
-        meta_out["configuration"] = rt_cfg
+        meta_out["configuration"] = row_ids.new_config
         actions.append({"metaData": meta_out})
-    next_row_id = 0
-    if row_tracking:
-        domain = state.domains.get("delta.rowTracking")
-        if domain and not domain.get("removed"):
-            next_row_id = int(
-                json.loads(domain.get("configuration") or "{}").get(
-                    "rowIdHighWaterMark", -1
-                )
-            ) + 1
     n_added = 0
     n_rewritten = 0
     for pvals, rels in groups:
-        if row_tracking:
+        if row_ids.on:
             rt_read_schema = T.StructType(
                 list(data_schema.fields)
                 + [
@@ -7164,43 +5858,18 @@ def optimize(
                 stats = _file_stats_json(dst)
                 if stats is not None:
                     add["stats"] = stats
-                if row_tracking:
-                    if stats is None:
-                        raise NotImplementedError(
-                            f"the table at {path!r} demands rowTracking "
-                            f"but the rewritten file {rel_new!r} yielded "
-                            "no readable footer statistics to size its "
-                            "baseRowId range; refusing rather than "
-                            "committing colliding row ids"
-                        )
-                    n_records = int(json.loads(stats)["numRecords"])
-                    add["baseRowId"] = next_row_id
-                    add["defaultRowCommitVersion"] = version
-                    next_row_id += n_records
+                row_ids.assign(add, stats, version, path)
                 actions.append({"add": add})
                 n_added += 1
         finally:
             shutil.rmtree(staging, ignore_errors=True)
         for rel in rels:
-            remove = {
-                "path": urllib.parse.quote(rel, safe="/="),
-                "deletionTimestamp": now_ms,
-                "dataChange": False,
-            }
-            if rel in state.dvs:
-                remove["deletionVector"] = state.dvs[rel]
-            actions.append({"remove": remove})
+            actions.append(
+                _remove_action(state, rel, now_ms, data_change=False)
+            )
             n_rewritten += 1
-    if row_tracking and n_added:
-        actions.append({
-            "domainMetadata": {
-                "domain": "delta.rowTracking",
-                "configuration": json.dumps(
-                    {"rowIdHighWaterMark": next_row_id - 1}
-                ),
-                "removed": False,
-            }
-        })
+    if row_ids.drawn:
+        actions.append(row_ids.watermark())
     actions[0]["commitInfo"]["operationMetrics"] = {
         "numRemovedFiles": str(n_rewritten),
         "numAddedFiles": str(n_added),
@@ -7329,8 +5998,9 @@ def add_columns(
         )
         counter = [prior_max + 1]
         new_schema = _mapped_schema(new_schema, schema, counter)
-        cfg["delta.columnMapping.maxColumnId"] = max(
-            _max_mapped_id(new_schema), prior_max
+        # table configuration is a string -> string map
+        cfg["delta.columnMapping.maxColumnId"] = str(
+            max(_max_mapped_id(new_schema), prior_max)
         )
         meta_out["configuration"] = cfg
     meta_out["schemaString"] = new_schema.json()
@@ -8056,15 +6726,7 @@ def restore_table(
     # the remove's DV identity matches the tracked one, so either order
     # reconciles to the same state — this one also nets correctly under
     # a naive sequential applier
-    for rel in to_remove:
-        remove = {
-            "path": urllib.parse.quote(rel, safe="/="),
-            "deletionTimestamp": now_ms,
-            "dataChange": True,
-        }
-        if rel in cur.dvs:
-            remove["deletionVector"] = cur.dvs[rel]
-        actions.append({"remove": remove})
+    actions.extend(_remove_action(cur, rel, now_ms) for rel in to_remove)
     for rel in to_add:
         add = {
             "path": urllib.parse.quote(rel, safe="/="),

@@ -155,7 +155,9 @@ def optimize_layout(
             F.floor(
                 F.col("__zkey").cast("decimal(38,0)")
                 * F.lit(int(num_files))
-                / F.lit(key_space).cast("decimal(38,0)")
+                # from a string: 2**63 (e.g. 3 columns x 21 bits)
+                # overflows a long literal at plan build
+                / F.lit(str(key_space)).cast("decimal(38,0)")
             )
         ).cast("long")
     keyed = df.withColumn("__zkey", zorder_key(buckets, bits)).withColumn(

@@ -980,3 +980,123 @@ def test_vector_decoder_rejects_corrupt_blocks():
         decode_block(b"\x04\x0e", 1)  # branch 2 of a 2-branch union
     with pytest.raises(EOFError):
         decode_block(b"\x02", 1)  # truncated value
+
+
+@pytest.mark.parametrize(
+    "raw,expected",
+    [
+        # the widest legal encoding: 10 bytes, the last carrying bit 63
+        (b"\xfe" + b"\xff" * 8 + b"\x01", 2**63 - 1),
+        (b"\xff" * 9 + b"\x01", -(2**63)),
+        # 10 bytes whose last byte sets bits past 64: wider than a long
+        (b"\xff" * 9 + b"\x02", None),
+        (b"\x80" * 9 + b"\x7f", None),
+        # 11 bytes: longer than any 64-bit varint
+        (b"\xff" * 10 + b"\x01", None),
+        (b"\x80" * 10 + b"\x00", None),
+    ],
+    ids=["max", "min", "wide", "wide_zeros", "long", "long_zeros"],
+)
+def test_row_and_vector_varint_decoders_agree_on_overflow(raw, expected):
+    """The row decoder, the block skipper and the vectorized decoder
+    read the same varint bytes the same way: equal values, or the same
+    ValueError — never a truncated or wrapped value on one path."""
+    import numpy as np
+
+    from lcr_etl_upgrade_spark.avro_lite import (
+        _read_long,
+        _vec_varint_values,
+        _vector_block_decoder,
+    )
+
+    decode_block, _ = _vector_block_decoder(
+        {"type": "record", "name": "r",
+         "fields": [{"name": "x", "type": "long"}]}
+    )
+    buf = np.frombuffer(raw, np.uint8)
+    decoders = [
+        lambda: _read_long(io.BytesIO(raw)),
+        lambda: int(_vec_varint_values(np, buf, np.zeros(1, np.int64),
+                                       None)[0]),
+        lambda: decode_block(raw, 1)[0].to_pylist()[0],
+    ]
+    for decode in decoders:
+        if expected is None:
+            with pytest.raises(
+                ValueError,
+                match="longer than 10 bytes or wider than 64 bits",
+            ):
+                decode()
+        else:
+            assert decode() == expected
+
+
+def test_vector_decoder_derived_offsets_match_row_decoder():
+    """Adjacent bare fixed-width fields after a recorded one take the
+    skipper's derived-offset path (no per-row offset recorded): the
+    values must still match the row decoder exactly."""
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [
+            {"name": "l", "type": "long"},
+            {"name": "d1", "type": "double"},
+            {"name": "d2", "type": "double"},
+            {"name": "f", "type": "float"},
+            {"name": "b", "type": "boolean"},
+            {"name": "fx", "type": {"type": "fixed", "name": "fx4",
+                                    "size": 4}},
+            {"name": "s", "type": "string"},
+            {"name": "d3", "type": "double"},
+        ],
+    }
+    rows = [
+        {
+            "l": (-1) ** k * k**4,
+            "d1": k / 3.0,
+            "d2": -k * 1.5,
+            "f": float(k % 97),
+            "b": k % 3 == 0,
+            "fx": bytes([k % 256, 0, 255, 7]),
+            "s": "y" * (k % 13),
+            "d3": k * 0.125,
+        }
+        for k in range(500)
+    ]
+    data = encode_container(schema, iter(rows), codec="null")
+    _, row_rows = decode_container(data)
+    assert _vec_decode_rows(data) == row_rows
+    assert row_rows[7]["d2"] == -10.5 and row_rows[7]["fx"] == bytes(
+        [7, 0, 255, 7]
+    )
+
+
+def test_read_mixed_flat_and_union_directory(spark, tmp_path):
+    """A directory whose first file is flat (``long``: vectorized) and
+    whose second spells the same column as an ``["int", "long"]`` union
+    (row-only physical schema): the vectorized read falls back to the
+    row decoder for that one file and returns every row."""
+    flat = {"type": "record", "name": "r",
+            "fields": [{"name": "x", "type": "long"},
+                       {"name": "s", "type": "string"}]}
+    union = {"type": "record", "name": "r",
+             "fields": [{"name": "x", "type": ["int", "long"]},
+                        {"name": "s", "type": "string"}]}
+    with open(tmp_path / "a.avro", "wb") as fh:
+        fh.write(encode_container(
+            flat, iter([{"x": k, "s": f"a{k}"} for k in range(50)])
+        ))
+    with open(tmp_path / "b.avro", "wb") as fh:
+        fh.write(encode_container(
+            union,
+            iter([{"x": 2**40 + k if k % 2 else k, "s": f"b{k}"}
+                  for k in range(50)]),
+        ))
+    got = sorted(
+        (r.x, r.s) for r in read_avro_lite(spark, str(tmp_path)).collect()
+    )
+    want = sorted(
+        [(k, f"a{k}") for k in range(50)]
+        + [(2**40 + k if k % 2 else k, f"b{k}") for k in range(50)]
+    )
+    assert got == want

@@ -112,8 +112,21 @@ def test_delete_preserves_assignment(spark, tmp_path):
         if "baseRowId" in extras
     }
     assert before
-    delete_rows(spark, path, F.col("id") == 5)
+
+    def _hwm(state):
+        return json.loads(
+            state.domains["delta.rowTracking"]["configuration"]
+        )["rowIdHighWaterMark"]
+
+    hwm_before = _hwm(replay_log(spark, path))
+    v = delete_rows(spark, path, F.col("id") == 5)
     after = replay_log(spark, path)
+    # a DV delete adds no rows: its commit draws no ids and names no
+    # materialized columns — no metaData, no domainMetadata
+    log = os.path.join(path, "_delta_log", f"{v:020d}.json")
+    kinds = {k for line in open(log) for k in json.loads(line)}
+    assert not kinds & {"metaData", "domainMetadata"}
+    assert _hwm(after) == hwm_before
     for rel, extras in before.items():
         got = after.adds.get(rel) or {}
         assert got.get("baseRowId") == extras["baseRowId"]

@@ -59,6 +59,8 @@ def test_low_selectivity_update_writes_dvs_not_rewrites(spark, tmp_path):
     m = table_history(path)[0]["operationMetrics"]
     assert m["numRemovedFiles"] == "0"
     assert m["numDeletionVectorsAdded"] == "4"
+    # a DV mask pair is not a file add: only the one replacement file
+    assert m["numAddedFiles"] == "1"
     assert m["numUpdatedRows"] == "40"
     got = read_delta_lite(spark, path)
     assert got.count() == 4000

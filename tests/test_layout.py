@@ -118,16 +118,19 @@ def test_zorder_prunes_both_dims_linear_sort_only_one(xy, tmp_path):
 
 
 def test_zorder_is_a_permutation(xy):
-    out = optimize_layout(
-        xy,
-        ["x", "y"],
-        N_FILES,
-        bits=8,
-        bounds={"x": (0.0, 10_000.0), "y": (0.0, 10_000.0)},
-    )
-    assert out.count() == N_ROWS
-    assert out.select("id").distinct().count() == N_ROWS
-    assert out.columns == xy.columns  # key column dropped
+    bounds = {
+        "x": (0.0, 10_000.0),
+        "y": (0.0, 10_000.0),
+        "id": (0.0, float(N_ROWS)),
+    }
+    # 3 x 21 = 63 key bits: the file assignment leaves exact long
+    # arithmetic for the decimal path, whose 2**63 key-space literal
+    # must not overflow at plan build
+    for cols, bits in ((["x", "y"], 8), (["x", "y", "id"], 21)):
+        out = optimize_layout(xy, cols, N_FILES, bits=bits, bounds=bounds)
+        assert out.count() == N_ROWS
+        assert out.select("id").distinct().count() == N_ROWS
+        assert out.columns == xy.columns  # key column dropped
 
 
 def test_quantile_buckets_balance_under_skew(spark):

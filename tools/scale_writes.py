@@ -4,8 +4,9 @@ verdict ask #2 — the r11 UPDATE/VACUUM additions shipped with
 proportionality ARGUMENTS; the house standard is measured. MERGE is
 measured in the same run since it landed this round).
 
-What is measured, all on local[32], fresh table copy per run,
-best-of-N alternating configs, load-gated like bench.py:
+What is measured, all on local[$SPARK_GRAFT_CPUS] (default 32), fresh
+table copy per run, best-of-N alternating configs, load-gated like
+bench.py:
 
   update_rows on a 5M-row / 32-file table at TWO selectivities
     (~1% and ~50% matched), CDF off and on. The SCALE.md claim under
@@ -21,12 +22,15 @@ best-of-N alternating configs, load-gated like bench.py:
   merge_rows upsert-shaped (50% of a 250k-row source updates, 50%
     inserts), CDF off/on: one match pass + touched rewrites + insert
     append in ONE commit.
+  delete_rows at ~1% selectivity, CDF off and on: deletion vectors on
+    every file plus (with CDF) the delete change rows, in ONE scan.
   vacuum(retain_hours=1) with ~64 and ~512 expired files (appends
     backdated past the horizon, then overwritten dead): wall-time must
     scale with the file count at unlink cost, never opening data.
 
 Output: one JSON artifact (default BENCH_writes_r12.json) with
-per-config best/spread, touched-file and change-row counts.
+per-config best/spread, touched-file, deletion-vector, added-byte and
+change-row counts, plus the Spark jobs one command ran.
 
 Usage: python tools/scale_writes.py [--reps 3] [--out BENCH_writes_r12.json]
 """
@@ -41,7 +45,9 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 N_ROWS = 5_000_000
 N_FILES = 32
@@ -153,16 +159,51 @@ def _fresh_copy(template: str, scratch: str) -> str:
     return dst
 
 
-def measure_update(spark, template, scratch, pred, cdf, reps, dvs=False):
+def _bytes_added(path: str, before: set, after) -> int:
+    """Bytes the commit ADDED (new data files + DV bitmaps): the 100 TB
+    discriminator — wall-seconds converge at 5M page-cached rows, but a
+    rewrite writes O(touched file bytes) while the DV path writes
+    O(matched rows + bitmap)."""
+    total = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in set(after.files) - before
+        if os.path.exists(os.path.join(path, f))
+    )
+    for dv in after.dvs.values():
+        if isinstance(dv, dict):  # bitmap size, inline or on-disk
+            total += int(dv.get("sizeInBytes") or 0)
+    return total
+
+
+def _timed_jobs(spark, fn):
+    """Run ``fn`` under its own job group: (result, seconds, Spark jobs
+    it ran)."""
+    sc = spark.sparkContext
+    group = f"scale-writes-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        t0 = time.monotonic()
+        out = fn()
+        dt = time.monotonic() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, dt, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _measure_dml(spark, template, scratch, cdf, reps, dvs, command,
+                 change_type=None):
+    """Best/worst wall time of ``command(path) -> version`` over ``reps``
+    fresh copies, with the last run's touched-file, DV-file, added-byte
+    and Spark-job counts (and, on CDF tables, its ``change_type``
+    change rows)."""
     from lcr_etl_upgrade_spark.delta_lite import (
         read_delta_changes,
         replay_log,
-        update_rows,
     )
     from pyspark.sql import functions as F
 
     best, worst = float("inf"), 0.0
-    touched = change_rows = dv_files = bytes_added = None
+    rec: dict = {}
     for _ in range(reps):
         path = _fresh_copy(template, scratch)
         if cdf:
@@ -170,47 +211,52 @@ def measure_update(spark, template, scratch, pred, cdf, reps, dvs=False):
         if dvs:
             _enable_dvs(path)
         before = set(replay_log(spark, path).files)
-        t0 = time.monotonic()
-        v = update_rows(spark, path, pred, {"v": F.col("v") + 1})
-        dt = time.monotonic() - t0
+        v, dt, jobs = _timed_jobs(spark, lambda: command(path))
         best, worst = min(best, dt), max(worst, dt)
         after = replay_log(spark, path)
-        # rewritten files leave the live set; DV'd files stay (same
-        # path, remove(old)+add(same path + deletionVector))
-        touched = len(before - set(after.files))
-        dv_files = len(after.dvs)
-        # bytes the commit ADDED (new data files + DV files): the
-        # 100 TB discriminator — wall-seconds converge at 5M page-
-        # cached rows, but a rewrite writes O(touched file bytes)
-        # while the DV path writes O(matched rows + bitmap)
-        new_files = set(after.files) - before
-        bytes_added = sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in new_files
-            if os.path.exists(os.path.join(path, f))
-        )
-        for dv in getattr(after, "dvs", {}).values():
-            if isinstance(dv, dict):  # bitmap size, inline or on-disk
-                bytes_added += int(dv.get("sizeInBytes") or 0)
-        if cdf:
-            change_rows = (
+        rec = {
+            # rewritten files leave the live set; DV'd files stay (same
+            # path, remove(old)+add(same path + deletionVector))
+            "touched_files": len(before - set(after.files)),
+            "dv_files": len(after.dvs),
+            "bytes_added": _bytes_added(path, before, after),
+            "jobs": jobs,
+        }
+        if change_type is not None:
+            rec["change_rows"] = (
                 read_delta_changes(spark, path, v, v)
-                .filter(F.col("_change_type") == "update_postimage")
+                .filter(F.col("_change_type") == change_type)
                 .count()
+                if cdf
+                else None
             )
         shutil.rmtree(path, ignore_errors=True)
-    return {
-        "best_sec": round(best, 3),
-        "worst_sec": round(worst, 3),
-        "touched_files": touched,
-        "dv_files": dv_files,
-        "bytes_added": bytes_added,
-        "change_rows": change_rows,
-    }
+    return {"best_sec": round(best, 3), "worst_sec": round(worst, 3), **rec}
+
+
+def measure_update(spark, template, scratch, pred, cdf, reps, dvs=False):
+    from lcr_etl_upgrade_spark.delta_lite import update_rows
+    from pyspark.sql import functions as F
+
+    return _measure_dml(
+        spark, template, scratch, cdf, reps, dvs,
+        lambda path: update_rows(spark, path, pred, {"v": F.col("v") + 1}),
+        change_type="update_postimage",
+    )
+
+
+def measure_delete(spark, template, scratch, pred, cdf, reps):
+    from lcr_etl_upgrade_spark.delta_lite import delete_rows
+
+    return _measure_dml(
+        spark, template, scratch, cdf, reps, False,
+        lambda path: delete_rows(spark, path, pred),
+        change_type="delete",
+    )
 
 
 def measure_merge(spark, template, scratch, cdf, reps, dvs=False, sel="half"):
-    from lcr_etl_upgrade_spark.delta_lite import merge_rows, replay_log
+    from lcr_etl_upgrade_spark.delta_lite import merge_rows
     from pyspark.sql import functions as F
 
     if sel == "half":
@@ -237,17 +283,9 @@ def measure_merge(spark, template, scratch, cdf, reps, dvs=False, sel="half"):
         raise ValueError(f"unknown merge selectivity {sel!r}")
     src = src.persist()
     src.count()
-    best, worst = float("inf"), 0.0
-    touched = dv_files = bytes_added = None
-    for _ in range(reps):
-        path = _fresh_copy(template, scratch)
-        if cdf:
-            _enable_cdf(path)
-        if dvs:
-            _enable_dvs(path)
-        before = set(replay_log(spark, path).files)
-        t0 = time.monotonic()
-        merge_rows(
+    out = _measure_dml(
+        spark, template, scratch, cdf, reps, dvs,
+        lambda path: merge_rows(
             spark,
             path,
             src,
@@ -256,34 +294,10 @@ def measure_merge(spark, template, scratch, cdf, reps, dvs=False, sel="half"):
             not_matched=(
                 ("insert", None, {"id": "s.k", "v": "s.nv", "s": "'new'"}),
             ),
-        )
-        dt = time.monotonic() - t0
-        best, worst = min(best, dt), max(worst, dt)
-        after = replay_log(spark, path)
-        # rewritten files leave the live set; DV'd files stay
-        touched = len(before - set(after.files))
-        dv_files = len(after.dvs)
-        # bytes the commit ADDED (inserted/rewritten data files + DV
-        # bitmaps) — the state-independent 100 TB discriminator, same
-        # as measure_update
-        new_files = set(after.files) - before
-        bytes_added = sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in new_files
-            if os.path.exists(os.path.join(path, f))
-        )
-        for dv in getattr(after, "dvs", {}).values():
-            if isinstance(dv, dict):
-                bytes_added += int(dv.get("sizeInBytes") or 0)
-        shutil.rmtree(path, ignore_errors=True)
+        ),
+    )
     src.unpersist()
-    return {
-        "best_sec": round(best, 3),
-        "worst_sec": round(worst, 3),
-        "touched_files": touched,
-        "dv_files": dv_files,
-        "bytes_added": bytes_added,
-    }
+    return out
 
 
 def measure_vacuum(spark, scratch, n_dead, reps):
@@ -374,7 +388,7 @@ def main() -> int:
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", "6g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -444,6 +458,13 @@ def main() -> int:
                     measure_merge, spark, uniform, scratch, cdf,
                     args.reps, dvs=dvs, sel="1pct",
                 )
+        # DELETE at ~1%: deletion vectors on every file from one scan
+        for cdf in (False, True):
+            _gated(
+                rec, f"delete_1pct_{'cdf' if cdf else 'nocdf'}",
+                measure_delete,
+                spark, uniform, scratch, "id % 100 = 0", cdf, args.reps,
+            )
         for n_dead in (64, 512):
             _gated(
                 rec, f"vacuum_{n_dead}_dead",
