@@ -604,6 +604,13 @@ def _hadoop_path_encode(path: str) -> str:
     )
 
 
+def _file_key(base: str, rel: str) -> str:
+    """The table file ``rel`` as ``_metadata.file_path`` names it
+    (scheme stripped): the per-file join key of row identity, row
+    tracking and deletion vectors."""
+    return _hadoop_path_encode(os.path.abspath(os.path.join(base, rel)))
+
+
 def _resolve_dv_blob(base: str, dv: dict) -> bytes:
     """DeletionVector descriptor -> serialized RoaringBitmapArray bytes,
     per the public protocol's three storage types: ``i`` inline (Z85 of
@@ -716,7 +723,7 @@ def _dv_positions(
     # cover this path unchanged.
     desc_rows = [
         (
-            _hadoop_path_encode(os.path.abspath(os.path.join(base, rel))),
+            _file_key(base, rel),
             json.dumps(dv),
             int(verified[rel][1]),
         )
@@ -2841,14 +2848,7 @@ def _dv_union_blobs(
                 f"deletion vector for {rel!r}: descriptor cardinality "
                 f"{card} != {n} parsed positions"
             )
-        old_rows.append(
-            (
-                _hadoop_path_encode(
-                    os.path.abspath(os.path.join(base, rel))
-                ),
-                bytearray(blob),
-            )
-        )
+        old_rows.append((_file_key(base, rel), bytearray(blob)))
     old_df = spark.createDataFrame(
         old_rows or [("", bytearray(b""))], "__file string, old binary"
     )
@@ -3452,7 +3452,7 @@ class _TableWrite:
         # row identity = (encoded full path, row position) — basenames
         # alone collide across hive partition directories
         self.enc_to_rel = {
-            _hadoop_path_encode(os.path.abspath(os.path.join(base, rel))): rel
+            _file_key(base, rel): rel
             for rel in self.rels
         }
         self.rows = _RowIds.of(state, self.meta_out)
@@ -3734,6 +3734,8 @@ def _dml(
         state, schema = tw.state, tw.schema
         rels = tw.rels
         gen_cols = tw.gen_cols
+        if source is None and not rels:
+            return state.version  # UPDATE / DELETE on an empty table
 
         # ---- static clause validation over the table schema ------------
         def _check_assign(values: dict, label: str, insert=False) -> None:
@@ -3741,6 +3743,8 @@ def _dml(
                 if name not in tw.logical_to_phys:
                     raise ValueError(
                         f"{label} assigns unknown column {name!r}"
+                        if source is not None
+                        else f"assignment to unknown column {name!r}"
                     )
                 if name in state.partition_columns and not insert:
                     raise NotImplementedError(
@@ -3757,7 +3761,12 @@ def _dml(
                 if name in tw.ident_names:
                     raise ValueError(
                         f"column {name!r} is an IDENTITY column; its "
-                        "values cannot be assigned"
+                        + (
+                            "values cannot be assigned"
+                            if source is not None
+                            else "values are row identity and cannot be "
+                            "reassigned"
+                        )
                     )
 
         def _label(kind: str, i: int) -> str:
@@ -5326,7 +5335,6 @@ def _with_materialized_row_ids(
     rid_col: str,
     rcv_col: str,
     dv_ver: dict | None = None,
-    keep_basename: bool = False,
     keep_position: bool = False,
     keep_path: bool = False,
     base_path: str | None = None,
@@ -5338,60 +5346,44 @@ def _with_materialized_row_ids(
 
     ONE scan over all files + a broadcast join against a one-row-per-
     file descriptor frame (baseRowId, defaultRowCommitVersion keyed by
-    part-file basename — globally unique within a table: every writer
-    path stages through uuid-carrying part names), so the plan does not
-    grow with file count the way a per-file union would. ``read_schema``
-    must already include ``rid_col``/``rcv_col`` as nullable longs —
-    parquet null-fills them for files that never materialized ids.
-    Deletion vectors (``dv_ver``) apply BEFORE the join — the DV filter
-    resolves ``_metadata`` columns, which joins sever. ``keep_basename``
-    leaves the ``__rt_base`` key column for callers that need further
-    per-file joins (partition-value injection) downstream;
-    ``keep_position`` leaves ``__rt_idx`` (the parquet row position)
-    for callers joining per-row decisions (the DML kernel);
-    ``base_path`` reads hive partition columns listed in
-    ``read_schema`` from the paths under it."""
-    basenames = [os.path.basename(r) for r in rels]
-    if len(set(basenames)) != len(basenames):
-        raise AssertionError(
-            f"part-file basename collision among {rels!r}"
-        )
+    the file's encoded full path — basenames repeat across hive
+    partition directories when one task writes several partitions), so
+    the plan does not grow with file count the way a per-file union
+    would. ``read_schema`` must already include ``rid_col``/``rcv_col``
+    as nullable longs — parquet null-fills them for files that never
+    materialized ids. Deletion vectors (``dv_ver``) apply BEFORE the
+    join — the DV filter resolves ``_metadata`` columns, which joins
+    sever. ``keep_path`` leaves the ``__rt_path`` key column (the
+    ``_file_key`` of the row's file) for callers that need further
+    per-file joins downstream; ``keep_position`` leaves
+    ``__rt_idx`` (the parquet row position) for callers joining
+    per-row decisions (the DML kernel); ``base_path`` reads hive
+    partition columns listed in ``read_schema`` from the paths under
+    it."""
     desc = spark.createDataFrame(
         [
             (
-                os.path.basename(rel),
+                _file_key(base, rel),
                 (adds.get(rel) or {}).get("baseRowId"),
                 (adds.get(rel) or {}).get("defaultRowCommitVersion"),
             )
             for rel in rels
         ],
-        "__rt_base string, __rt_rid bigint, __rt_dcv bigint",
+        "__rt_path string, __rt_rid bigint, __rt_dcv bigint",
     )
     reader = spark.read.schema(read_schema)
     if base_path:
         reader = reader.option("basePath", base_path)
-    df = (
-        reader.parquet(*[os.path.join(base, r) for r in rels])
-        .select(
-            "*",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__rt_base"),
-            F.col("_metadata.row_index").alias("__rt_idx"),
-            *(
-                [
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), r"^file:/+", "/"
-                    ).alias("__rt_path")
-                ]
-                if keep_path
-                else []
-            ),
-        )
+    df = reader.parquet(*[os.path.join(base, r) for r in rels]).select(
+        "*",
+        F.regexp_replace(
+            F.col("_metadata.file_path"), r"^file:/+", "/"
+        ).alias("__rt_path"),
+        F.col("_metadata.row_index").alias("__rt_idx"),
     )
     if dv_ver:
         df = _apply_dv_filter(spark, df, base, dv_ver, rels)
-    df = df.join(F.broadcast(desc), "__rt_base", "left")
+    df = df.join(F.broadcast(desc), "__rt_path", "left")
     df = (
         df.withColumn(
             rid_col,
@@ -5406,7 +5398,7 @@ def _with_materialized_row_ids(
     )
     if not keep_position:
         df = df.drop("__rt_idx")
-    return df if keep_basename else df.drop("__rt_base")
+    return df if keep_path else df.drop("__rt_path")
 
 
 def set_cluster_by(
@@ -5578,11 +5570,11 @@ def read_row_ids(
         rid_col,
         rcv_col,
         dv_ver=dv_ver,
-        keep_basename=bool(phys_part_cols),
+        keep_path=bool(phys_part_cols),
     )
     # partition columns live in directory names, not the files; inject
     # them from each file's logged partitionValues via the same
-    # basename-keyed broadcast descriptor
+    # path-keyed broadcast descriptor
     if phys_part_cols:
         logical_parts = [
             (f, pf)
@@ -5592,7 +5584,7 @@ def read_row_ids(
         pdesc = spark.createDataFrame(
             [
                 tuple(
-                    [os.path.basename(rel)]
+                    [_file_key(base, rel)]
                     + [
                         (state.files.get(rel) or {}).get(pf.name)
                         for _, pf in logical_parts
@@ -5601,20 +5593,20 @@ def read_row_ids(
                 for rel in rels
             ],
             T.StructType(
-                [T.StructField("__rt_base", T.StringType())]
+                [T.StructField("__rt_path", T.StringType())]
                 + [
                     T.StructField(f"__rt_p{i}", T.StringType())
                     for i in range(len(logical_parts))
                 ]
             ),
         )
-        df = df.join(F.broadcast(pdesc), "__rt_base", "left")
+        df = df.join(F.broadcast(pdesc), "__rt_path", "left")
         for i, (f, pf) in enumerate(logical_parts):
             df = df.withColumn(
                 pf.name, F.col(f"__rt_p{i}").cast(f.dataType)
             )
         df = df.drop(
-            "__rt_base", *[f"__rt_p{i}" for i in range(len(logical_parts))]
+            "__rt_path", *[f"__rt_p{i}" for i in range(len(logical_parts))]
         )
     out_cols = [
         _quoted(pf.name).alias(f.name)

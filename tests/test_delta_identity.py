@@ -249,3 +249,24 @@ def test_merge_schema_cannot_add_identity_column(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="delta.identity"):
         write_delta_lite(new, path, mode="append", merge_schema=True)
+
+
+def test_update_refuses_identity_assignment(spark, tmp_path):
+    from lcr_etl_upgrade_spark.delta_lite import update_rows
+
+    path = str(tmp_path / "t")
+    _create_empty(spark, path)
+    # an empty table returns before any assignment is checked
+    v = replay_log(spark, path).version
+    assert update_rows(spark, path, "v = 'a'", {"id": F.lit(9)}) == v
+    write_delta_lite(
+        spark.createDataFrame([("a",), ("b",)], "v string"),
+        path,
+        mode="append",
+    )
+    with pytest.raises(
+        ValueError,
+        match="IDENTITY column; its values are row identity and cannot be "
+        "reassigned",
+    ):
+        update_rows(spark, path, "v = 'a'", {"id": F.lit(9)})

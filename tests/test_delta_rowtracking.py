@@ -317,3 +317,64 @@ def test_read_row_ids_refuses_untracked_files(spark, tmp_path):
     # v0's file never got an assignment and nothing is materialized
     with pytest.raises(ValueError, match="no baseRowId"):
         read_row_ids(spark, path)
+
+
+def test_partitioned_dv_dml_keeps_row_ids(spark, tmp_path):
+    """One task writing several partitions gives every partition
+    directory a part file of the SAME basename; row identity must key
+    on the full path, or DV-routed UPDATE/MERGE spanning two partitions
+    of a row-tracked table mixes (or refuses) those files' ids."""
+    from lcr_etl_upgrade_spark.delta_lite import (
+        merge_rows,
+        read_row_ids,
+        set_table_properties,
+        update_rows,
+    )
+
+    path = str(tmp_path / "t")
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            "id",
+            (F.col("id") % 2).cast("int").alias("p"),
+            F.lit("x").alias("s"),
+        )
+
+    write_delta_lite(rows(0, 1), path, partition_by=("p",))
+    _enable_row_tracking(path)
+    write_delta_lite(
+        rows(0, 400).coalesce(1), path, mode="overwrite",
+        partition_by=("p",),
+    )
+    set_table_properties(
+        spark, path, {"delta.enableDeletionVectors": "true"}
+    )
+    names = [os.path.basename(r) for r in replay_log(spark, path).files]
+    assert len(names) == 2 and len(set(names)) == 1
+
+    def ids():
+        return {
+            r["id"]: r["_row_id"]
+            for r in read_row_ids(spark, path).collect()
+        }
+
+    before = ids()
+    assert len(set(before.values())) == 400
+    # 8 of 400 rows, four in each partition: DV routing on both files
+    update_rows(spark, path, F.col("id") % 100 < 2, {"s": F.lit("u")})
+    st = replay_log(spark, path)
+    assert len(st.dvs) == 2
+    assert ids() == before
+    src = spark.createDataFrame([(10, "m"), (11, "m")], "k long, s2 string")
+    merge_rows(
+        spark, path, src, "t.id = s.k",
+        matched=(("update", None, {"s": "s.s2"}),),
+        use_dvs=True,
+    )
+    assert ids() == before
+    got = {r.id: r.s for r in read_delta_lite(spark, path).collect()}
+    assert len(got) == 400
+    assert {i for i, s in got.items() if s == "u"} == {
+        0, 1, 100, 101, 200, 201, 300, 301
+    }
+    assert {i for i, s in got.items() if s == "m"} == {10, 11}

@@ -37,6 +37,14 @@ unique, on the start/step lattice, and strictly advancing across
 appends; explicit inserts refuse under GENERATED ALWAYS and sync the
 watermark under BY DEFAULT.
 
+plus a row-tracking family: a hive-partitioned, row-tracked table with
+deletion vectors enabled, every write one task across all partitions
+(so part-file names repeat across partition directories), driven by
+random append / update_rows / delete_rows / merge_rows (use_dvs
+None, True or False). After every op the rows must equal the oracle's,
+every row keeps the row id it was first read with, and no two rows
+share an id.
+
 The final read (read_delta_lite) must equal the oracle's multiset over
 the expected column set — old files reading evolved columns as null is
 part of what the compare checks.
@@ -667,6 +675,141 @@ def run_alter_case(spark, rng, i: int) -> dict | None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def run_rowtrack_case(spark, rng, i: int) -> dict | None:
+    from pyspark.sql import functions as F
+
+    from lcr_etl_upgrade_spark.delta_lite import (
+        delete_rows,
+        merge_rows,
+        read_delta_lite,
+        read_row_ids,
+        replay_log,
+        set_table_properties,
+        update_rows,
+        write_delta_lite,
+    )
+
+    tmp = tempfile.mkdtemp(prefix="rowtrack_fuzz_")
+    path = os.path.join(tmp, "t")
+    n_parts = int(rng.integers(2, 5))
+    ops: list[str] = []
+
+    def frame(ids):
+        # one task writes every partition: basenames repeat per dir
+        return spark.createDataFrame(
+            [(k, k % n_parts, k % 7) for k in ids], "id long, p int, v long"
+        ).coalesce(1)
+
+    try:
+        write_delta_lite(frame([0]), path, partition_by=("p",))
+        state = replay_log(spark, path)
+        meta = dict(state.metadata)
+        meta["configuration"] = {
+            **(meta.get("configuration") or {}),
+            "delta.enableRowTracking": "true",
+        }
+        _raw_commit(path, [
+            {"protocol": {
+                "minReaderVersion": 1, "minWriterVersion": 7,
+                "writerFeatures": ["appendOnly", "domainMetadata",
+                                   "invariants", "rowTracking"],
+            }},
+            {"metaData": meta},
+        ])
+        n0 = int(rng.integers(8, 40))
+        write_delta_lite(
+            frame(range(n0)), path, mode="overwrite", partition_by=("p",)
+        )
+        set_table_properties(
+            spark, path, {"delta.enableDeletionVectors": "true"}
+        )
+        expected = {k: k % 7 for k in range(n0)}
+        next_id = n0
+        row_id: dict[int, int] = {}
+        ops.append(f"create(n={n0}, parts={n_parts})")
+
+        def check() -> dict | None:
+            got = {
+                r["id"]: r["v"]
+                for r in read_delta_lite(spark, path).collect()
+            }
+            if got != expected:
+                return {"kind": "rowtrack_state_mismatch", "ops": ops,
+                        "got_n": len(got), "want_n": len(expected)}
+            ids = {
+                r["id"]: r["_row_id"]
+                for r in read_row_ids(spark, path).collect()
+            }
+            if len(set(ids.values())) != len(ids):
+                return {"kind": "row_id_reused", "ops": ops}
+            moved = sorted(
+                k for k, rid in row_id.items()
+                if k in ids and ids[k] != rid
+            )
+            if moved:
+                return {"kind": "row_id_changed", "ops": ops,
+                        "ids": moved[:5]}
+            row_id.update(ids)
+            return None
+
+        for _ in range(int(rng.integers(3, 8))):
+            rec = check()
+            if rec is not None:
+                return rec
+            op = ["append", "update", "delete", "merge"][
+                int(rng.integers(0, 4))
+            ]
+            use_dvs = [None, True, False][int(rng.integers(0, 3))]
+            k, r = int(rng.integers(2, 8)), int(rng.integers(0, 8))
+            pred = F.col("id") % k == r % k
+            if op == "append":
+                new = list(range(next_id, next_id + int(rng.integers(1, 9))))
+                next_id = new[-1] + 1
+                write_delta_lite(frame(new), path, mode="append")
+                expected.update({n: n % 7 for n in new})
+            elif op == "update":
+                update_rows(
+                    spark, path, pred, {"v": F.col("v") + 1},
+                    use_dvs=use_dvs,
+                )
+                for n in expected:
+                    if n % k == r % k:
+                        expected[n] += 1
+            elif op == "delete":
+                delete_rows(spark, path, pred)
+                expected = {
+                    n: v for n, v in expected.items() if n % k != r % k
+                }
+            else:
+                hits = [n for n in sorted(expected) if rng.random() < 0.3]
+                new = list(range(next_id, next_id + int(rng.integers(0, 4))))
+                next_id += len(new)
+                src_rows = [(n, n % n_parts, 100 + n) for n in hits + new]
+                if not src_rows:
+                    continue
+                merge_rows(
+                    spark, path,
+                    spark.createDataFrame(
+                        src_rows, "k long, kp int, nv long"
+                    ),
+                    "t.id = s.k",
+                    matched=(("update", None, {"v": "s.nv"}),),
+                    not_matched=(
+                        ("insert", None,
+                         {"id": "s.k", "p": "s.kp", "v": "s.nv"}),
+                    ),
+                    use_dvs=use_dvs,
+                )
+                expected.update({n: 100 + n for n in hits + new})
+            ops.append(f"op:{op}(k={k},r={r % k},dvs={use_dvs})")
+        return check()
+    except Exception as exc:  # noqa: BLE001 — any raise is a finding
+        return {"kind": "rowtrack_raised", "ops": ops,
+                "err": f"{type(exc).__name__}: {exc}"[:300]}
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def main() -> int:
     global MUTATE
     ap = argparse.ArgumentParser()
@@ -687,6 +830,8 @@ def main() -> int:
         rng = np.random.default_rng(args.seed * 7_000_003 + i)
         if i % 8 == 5:
             rec = run_alter_case(spark, rng, i)
+        elif i % 8 == 1:
+            rec = run_rowtrack_case(spark, rng, i)
         elif i % 4 == 3:
             rec = run_identity_case(spark, rng, i)
         else:

@@ -24,6 +24,13 @@ bench.py:
     append in ONE commit.
   delete_rows at ~1% selectivity, CDF off and on: deletion vectors on
     every file plus (with CDF) the delete change rows, in ONE scan.
+  the deletion-vector paths on two more layouts: a row-tracked table
+    hive-partitioned 8 ways (32 files whose part-file names repeat
+    across partition directories) under a 1% DV update and a 1%
+    delete spanning every partition, CDF off and on; and a table
+    whose every file already carries a deletion vector under a 1% DV
+    update (CDF off and on) and a 1% DV merge, so the new masks union
+    with the old.
   vacuum(retain_hours=1) with ~64 and ~512 expired files (appends
     backdated past the horizon, then overwritten dead): wall-time must
     scale with the file count at unlink cost, never opening data.
@@ -111,6 +118,11 @@ def _enable_cdf(path: str) -> None:
     pact = {
         "minReaderVersion": proto.get("minReaderVersion", 1),
         "minWriterVersion": 7,
+        **(
+            {"readerFeatures": proto["readerFeatures"]}
+            if proto.get("readerFeatures")
+            else {}
+        ),
         "writerFeatures": sorted(feats),
     }
     with open(
@@ -151,6 +163,99 @@ def _enable_dvs(path: str) -> None:
     ) as fh:
         fh.write(json.dumps({"protocol": pact}) + "\n")
         fh.write(json.dumps({"metaData": meta}) + "\n")
+
+
+def _enable_row_tracking(path: str) -> None:
+    """List rowTracking (+ domainMetadata) in the protocol and set
+    delta.enableRowTracking via a config-only commit; files written
+    afterwards get baseRowId ranges."""
+    from pyspark.sql import SparkSession
+
+    from lcr_etl_upgrade_spark.delta_lite import replay_log
+
+    spark = SparkSession.getActiveSession()
+    st = replay_log(spark, path)
+    meta = dict(st.metadata)
+    cfg = dict(meta.get("configuration") or {})
+    cfg["delta.enableRowTracking"] = "true"
+    meta["configuration"] = cfg
+    proto = st.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
+    feats = set(proto.get("writerFeatures") or ())
+    feats |= {"rowTracking", "domainMetadata", "appendOnly", "invariants"}
+    pact = {
+        "minReaderVersion": proto.get("minReaderVersion", 1),
+        "minWriterVersion": 7,
+        "writerFeatures": sorted(feats),
+    }
+    with open(
+        os.path.join(path, "_delta_log", f"{st.version + 1:020d}.json"),
+        "w",
+    ) as fh:
+        fh.write(json.dumps({"protocol": pact}) + "\n")
+        fh.write(json.dumps({"metaData": meta}) + "\n")
+
+
+def _build_partitioned_template(spark, out: str) -> None:
+    """The row-tracked, 8-way hive-partitioned table: 4 write tasks
+    each cover every partition, so each part-file name appears in all
+    8 partition directories."""
+    from pyspark.sql import functions as F
+
+    from lcr_etl_upgrade_spark.delta_lite import write_delta_lite
+
+    def rows(n):
+        return spark.range(0, n).select(
+            "id",
+            (F.col("id") % 997).alias("v"),
+            F.sha1(F.col("id").cast("string")).alias("s"),
+            (F.col("id") % 8).cast("int").alias("p"),
+        )
+
+    write_delta_lite(rows(1), out, partition_by=("p",))
+    _enable_row_tracking(out)
+    write_delta_lite(
+        rows(N_ROWS).repartition(4), out, mode="overwrite",
+        partition_by=("p",),
+    )
+
+
+def _build_dv_template(spark, uniform: str, out: str) -> None:
+    """The uniform table with deletion vectors enabled and a ~1%
+    delete already masked into every file."""
+    from lcr_etl_upgrade_spark.delta_lite import delete_rows
+
+    shutil.copytree(uniform, out)
+    _enable_dvs(out)
+    delete_rows(spark, out, "id % 100 = 1")
+
+
+def measure_dv_layouts(spark, uniform: str, scratch: str, reps: int,
+                       rec: dict) -> None:
+    """The deletion-vector paths on the partitioned and the
+    DV-bearing layouts (configs ``*_part_*`` and ``*_dvtable_*``)."""
+    part = os.path.join(scratch, "template-partitioned")
+    _build_partitioned_template(spark, part)
+    dvtable = os.path.join(scratch, "template-dvtable")
+    _build_dv_template(spark, uniform, dvtable)
+    # % 101 hits every partition (a multiple of 100 is even)
+    for cdf in (False, True):
+        tag = "cdf" if cdf else "nocdf"
+        _gated(
+            rec, f"update_1pct_dv_part_{tag}", measure_update,
+            spark, part, scratch, "id % 101 = 0", cdf, reps, dvs=True,
+        )
+        _gated(
+            rec, f"delete_1pct_part_{tag}", measure_delete,
+            spark, part, scratch, "id % 101 = 0", cdf, reps,
+        )
+        _gated(
+            rec, f"update_1pct_dv_dvtable_{tag}", measure_update,
+            spark, dvtable, scratch, "id % 100 = 0", cdf, reps,
+        )
+    _gated(
+        rec, "merge_1pct_dv_dvtable_nocdf", measure_merge,
+        spark, dvtable, scratch, False, reps, sel="1pct",
+    )
 
 
 def _fresh_copy(template: str, scratch: str) -> str:
@@ -465,6 +570,7 @@ def main() -> int:
                 measure_delete,
                 spark, uniform, scratch, "id % 100 = 0", cdf, args.reps,
             )
+        measure_dv_layouts(spark, uniform, scratch, args.reps, rec)
         for n_dead in (64, 512):
             _gated(
                 rec, f"vacuum_{n_dead}_dead",
