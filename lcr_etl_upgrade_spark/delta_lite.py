@@ -966,31 +966,6 @@ def _max_mapped_id(dt: T.DataType) -> int:
     return 0
 
 
-def _physicalize_df(df: DataFrame, mapped: T.StructType) -> DataFrame:
-    """Rename ``df``'s columns to the mapped schema's physical names
-    (nested fields via a positional struct cast, same trick the reader
-    uses in reverse) and attach ``parquet.field.id`` metadata so Spark's
-    parquet writer stamps field ids into the footers — what id-mode
-    readers resolve by, and what delta-spark itself writes under
-    mapping."""
-    phys = _physicalize(mapped)
-    cols = []
-    for f, pf in zip(mapped.fields, phys.fields):
-        cols.append(
-            _quoted(f.name)
-            .cast(pf.dataType)
-            .alias(
-                pf.name,
-                metadata={
-                    "parquet.field.id": int(
-                        f.metadata["delta.columnMapping.id"]
-                    )
-                },
-            )
-        )
-    return df.select(*cols)
-
-
 def _physical_name_set(dt: T.DataType) -> set[str]:
     """Every delta.columnMapping.physicalName anywhere in the schema
     tree (top level and nested)."""
@@ -1404,7 +1379,7 @@ def _partition_values_from_rel(
 # Writer-side table features (minWriterVersion=7) this writer actually
 # honors. columnMapping: it writes physicalName-named parquet, carries
 # id/physicalName field metadata through metaData, and keys
-# partitionValues by physical name (_mapped_schema/_physicalize_df).
+# partitionValues by physical name (_mapped_schema/_TableWrite.to_phys).
 # deletionVectors: delete_rows writes spec-format DVs (roaring_lite
 # serializer, inline or u-storage files), DV updates commit the
 # protocol's remove(oldDv)+add(newDv) pair, and overwrite's removes echo
@@ -1482,6 +1457,56 @@ def _implicit_legacy_writer_features(writer_v: int) -> set[str]:
     for v, feats in _LEGACY_TIER_FEATURES.items():
         if writer_v >= v:
             out.update(feats)
+    return out
+
+
+# Features a READER must understand too: listed in readerFeatures AND
+# writerFeatures (reader version 3). Every other feature is writer-only.
+_READER_WRITER_FEATURES = frozenset(
+    {"columnMapping", "deletionVectors", "timestampNtz", "typeWidening",
+     "v2Checkpoint", "vacuumProtocolCheck", "variantType"}
+)
+
+
+def _protocol_with(state: TableState, features: set[str]) -> dict | None:
+    """The protocol a commit needing ``features`` must carry: None when
+    the table already lists (or its legacy writer tier implies) all of
+    them; a new table always gets one (1/2 when nothing is needed). The
+    one upgrade rule, in three parts:
+
+    - reader+writer features (_READER_WRITER_FEATURES) go into both
+      lists at reader v3; every other feature is writer-only;
+    - a legacy writer tier upgrading to 7 lists the FULL implicit
+      feature set of its tier, or downstream writers stop enforcing it;
+    - a column-mapped or legacy reader-v2 table (reader v2 IS column
+      mapping) moving to reader features lists columnMapping explicitly,
+      or feature-gated readers resolve columns by logical name and read
+      NULLs."""
+    new = state.version < 0
+    proto = state.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
+    reader_v = int(proto.get("minReaderVersion", 1))
+    writer_v = int(proto.get("minWriterVersion", 2))
+    readers = set(proto.get("readerFeatures") or ())
+    writers = set(proto.get("writerFeatures") or ())
+    if writer_v < 7 and not new:
+        writers |= _implicit_legacy_writer_features(writer_v)
+    want_r = set(features) & _READER_WRITER_FEATURES
+    if want_r and (
+        reader_v == 2
+        or _column_mapping_mode(state.metadata or {}) != "none"
+    ):
+        want_r.add("columnMapping")
+    want_w = set(features) | want_r
+    if not (want_w - writers or want_r - (readers if reader_v >= 3 else set())):
+        return {"minReaderVersion": 1, "minWriterVersion": 2} if new else None
+    readers |= want_r
+    out: dict = {
+        "minReaderVersion": 3 if readers else reader_v,
+        "minWriterVersion": 7,
+    }
+    if readers:
+        out["readerFeatures"] = sorted(readers)
+    out["writerFeatures"] = sorted(writers | want_w)
     return out
 
 
@@ -1739,19 +1764,27 @@ def _attach_constraint_observer(
     return observed, obs, name_map
 
 
+# The commands delta.appendOnly=true refuses: the ones that retire
+# live rows. Appends, OPTIMIZE (a dataChange=false rewrite) and the
+# metadata-only ALTER family stay allowed.
+_APPEND_ONLY_REFUSED = frozenset(
+    {"overwrite", "delete", "update", "merge", "restore"}
+)
+
+
 def _check_write_obligations(state: TableState, path: str,
                              operation: str) -> None:
     """Enforce the legacy/listed features whose semantics this writer
     honors by REFUSAL: appendOnly (delta.appendOnly=true forbids every
-    non-append operation). Row-level obligations — delta.invariants
-    field metadata and delta.constraints.* CHECK constraints — are
-    EVALUATED, not refused: write_delta_lite wires them as observe()
-    metrics into the staging write (_attach_constraint_observer) and
+    _APPEND_ONLY_REFUSED operation). Row-level obligations —
+    delta.invariants field metadata and delta.constraints.* CHECK
+    constraints — are EVALUATED, not refused: staging wires them as
+    observe() metrics into the write (_attach_constraint_observer) and
     rolls back on violation; deletes add no rows, so delete_rows and
     restore_table have nothing to evaluate."""
     config = (state.metadata or {}).get("configuration") or {}
     if str(config.get("delta.appendOnly", "")).lower() == "true" and (
-        operation != "append"
+        operation in _APPEND_ONLY_REFUSED
     ):
         raise ValueError(
             f"the table at {path!r} sets delta.appendOnly=true; "
@@ -2085,16 +2118,9 @@ def write_delta_lite(
         raise ValueError(
             f"column_mapping must be None|'name'|'id', got {column_mapping!r}"
         )
-    base = _local(path)
     spark = df.sparkSession
-    try:
-        prior = replay_log(spark, path)
-    except FileNotFoundError:
-        prior = None
-
-    if prior is not None:
-        _check_writer_protocol(prior.protocol, path)
-        _check_write_obligations(prior, path, mode)
+    tw = _TableWrite(spark, path, mode, create=True)
+    prior = tw.state if tw.state.version >= 0 else None
     if txn is not None and prior is not None:
         # idempotent-writer watermark (the protocol's setTransaction):
         # a (appId, version) at or below the table's recorded watermark
@@ -2105,10 +2131,10 @@ def write_delta_lite(
             return prior.version
     # an overwrite (or fresh create) whose incoming schema DECLARES
     # delta.invariants commits that metadata into the table — legal,
-    # because this writer now EVALUATES invariants and CHECK constraints
-    # on every write (_attach_constraint_observer below); the rows of
-    # THIS write are validated too, so the enforcement promise the
-    # metadata makes to real readers is kept from version one
+    # because this writer EVALUATES invariants and CHECK constraints on
+    # every write (stage_rows); the rows of THIS write are validated
+    # too, so the enforcement promise the metadata makes to real
+    # readers is kept from version one
 
     prior_mapping = (
         _column_mapping_mode(prior.metadata) if prior is not None else "none"
@@ -2247,7 +2273,7 @@ def write_delta_lite(
                     "(delta-spark refuses this too)"
                 )
         # names AND types (nullability aside), mirroring the retry-path
-        # gate: under mapping, _physicalize_df casts to the table type,
+        # gate: staging casts to the table type,
         # which would turn a wrong-typed append into silent NULLs
         # instead of the documented refusal; under merge_schema the
         # check runs on the SHARED columns (new ones have no table type
@@ -2283,10 +2309,6 @@ def write_delta_lite(
             *[c for c in want if c in got], *[f.name for f in evolved]
         )
 
-    import time
-
-    now_ms = int(time.time() * 1000)
-    os.makedirs(_log_dir(path), exist_ok=True)
     part_cols = list(partition_by)
 
     # the LOGICAL schema the table's metaData declares after this
@@ -2300,20 +2322,6 @@ def write_delta_lite(
         )
     else:
         table_schema = df.schema
-
-    # row-level write obligations: CHECK constraints come from the
-    # table CONFIGURATION (preserved across overwrites), invariants
-    # from the post-write schema — evaluated as observe() metrics
-    # riding the staging write (zero extra passes), checked after it
-    constraints = _table_constraints(
-        prior.metadata if prior is not None else None, table_schema
-    )
-    constraint_obs = None
-    constraint_names: dict[str, str] = {}
-    if constraints:
-        df, constraint_obs, constraint_names = _attach_constraint_observer(
-            df, table_schema, constraints, path
-        )
 
     identity_cols = _identity_columns(table_schema)
     identity_obs = None
@@ -2351,46 +2359,30 @@ def write_delta_lite(
     # partition dirs, partitionValues keys) is physical; everything the
     # LOG's metaData sees (schemaString field names, partitionColumns)
     # stays logical — mirroring read_delta_lite's contract exactly.
+    # schema_out is the schemaString this commit leaves: the logical
+    # schema, with id/physicalName assignments under mapping
+    schema_out, max_id = table_schema, 0
     if mapping != "none":
+        prior_cfg = tw.config if prior is not None else {}
         if mode == "append" and prior is not None:
-            prior_max = int(
-                (prior.metadata.get("configuration") or {}).get(
-                    "delta.columnMapping.maxColumnId",
-                    _max_mapped_id(prior.schema),
-                )
-            )
+            # existing fields KEEP their ids/physical names (stability
+            # rule), evolved columns draw fresh ids above the recorded
+            # maxColumnId
+            max_id = int(prior_cfg.get(
+                "delta.columnMapping.maxColumnId",
+                _max_mapped_id(prior.schema),
+            ))
+            schema_out = prior.schema  # assignments live in the schema
             if evolved:
-                # extend the prior assignments: existing fields KEEP
-                # their ids/physical names (stability rule), evolved
-                # columns draw fresh ids above the recorded maxColumnId
-                counter = [prior_max + 1]
-                mapped = _mapped_schema(table_schema, prior.schema, counter)
-                max_id = max(_max_mapped_id(mapped), prior_max)
-            else:
-                mapped = prior.schema  # assignments live in the schema
-                max_id = prior_max
-            # merge_schema may OMIT nullable columns, but the
-            # physicalizing select is positional over the full mapped
-            # field list — stage the absent ones as typed nulls
-            present = set(df.columns)
-            absent = [f for f in mapped.fields if f.name not in present]
-            if absent:
-                df = df.select(
-                    *[
-                        _quoted(f.name)
-                        if f.name in present
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                        for f in mapped.fields
-                    ]
+                schema_out = _mapped_schema(
+                    table_schema, prior.schema, [max_id + 1]
                 )
         else:
-            counter = [1]
             prior_mapped = (
                 prior.schema
                 if prior is not None and prior_mapping != "none"
                 else None
             )
-            prior_max = 0
             if prior_mapped is not None:
                 # seed ABOVE the configured maxColumnId, not just above
                 # the ids still present in the schema: a column dropped
@@ -2398,281 +2390,121 @@ def write_delta_lite(
                 # or a later column would reuse it and id-tracking
                 # readers would silently read the new data as the old
                 # column (protocol monotonic-id rule)
-                prior_max = max(
-                    int(
-                        (prior.metadata.get("configuration") or {}).get(
-                            "delta.columnMapping.maxColumnId", 0
-                        )
-                    ),
+                max_id = max(
+                    int(prior_cfg.get("delta.columnMapping.maxColumnId", 0)),
                     _max_mapped_id(prior_mapped),
                 )
-                counter = [prior_max + 1]
-            mapped = _mapped_schema(df.schema, prior_mapped, counter)
-            max_id = max(_max_mapped_id(mapped), prior_max)
-        logical_to_phys = {
-            f.name: pf.name
-            for f, pf in zip(mapped.fields, _physicalize(mapped).fields)
-        }
-        stage_df = _physicalize_df(df, mapped)
-        stage_part_cols = [logical_to_phys[c] for c in part_cols]
-    else:
-        stage_df, stage_part_cols = df, part_cols
+            schema_out = _mapped_schema(df.schema, prior_mapped, [max_id + 1])
+        max_id = max(_max_mapped_id(schema_out), max_id)
 
-    moved = _stage_and_move(stage_df, base, tuple(stage_part_cols))
-
-    # drop zero-row part files: Spark emits one part per task even when
-    # a task produced nothing, and committing those as adds buys every
-    # future scan a useless file open (and would give rowTracking
-    # dangling empty baseRowId ranges past the watermark) — delta-spark
-    # does not register them either. Footer stats are read ONCE here
-    # and reused by the add loop below.
-    kept: list[tuple[str, int]] = []
-    stats_by_rel: dict[str, str | None] = {}
-    for rel, size in moved:
-        stats = _file_stats_json(os.path.join(base, rel))
-        if stats is not None and json.loads(stats)["numRecords"] == 0:
-            try:
-                os.remove(os.path.join(base, rel))
-            except OSError:
-                pass
-            continue
-        kept.append((rel, size))
-        stats_by_rel[rel] = stats
-    moved = kept
-
-    if constraint_obs is not None:
-        # the staging write executed the observed plan; a violation
-        # unstages everything BEFORE any commit is attempted
-        counts = constraint_obs.get
-        violated = {
-            constraint_names[k]: int(v)
-            for k, v in counts.items()
-            if v
-        }
-        if violated:
-            for rel, _size in moved:
-                try:
-                    os.remove(os.path.join(base, rel))
-                except OSError:
-                    pass
-            by_name = dict(constraints)
-            detail = "; ".join(
-                f"{n!r} ({by_name[n]!r}): {c} row(s)"
-                for n, c in sorted(violated.items())
-            )
-            raise ValueError(
-                f"write to {path!r} violates table constraints — "
-                f"{detail}. NULL results count as violations "
-                "(delta-spark semantics)."
-            )
-
-    identity_hwms: dict[str, int] = {}
-    if identity_obs is not None:
-        vals = identity_obs.get
-        for k, ident in enumerate(identity_cols):
-            v = vals.get(f"i{k}")
-            if v is None:
-                continue  # empty write: nothing generated or provided
-            v = int(v)
-            cur_h = ident["hwm"]
-            if cur_h is None or (
-                v > cur_h if ident["step"] > 0 else v < cur_h
-            ):
-                identity_hwms[ident["name"]] = v
-    if identity_hwms:
-        # the watermark lives in field metadata: re-emit metaData with
-        # it advanced, so the NEXT writer generates past this write
-        table_schema = _with_identity_hwm(table_schema, identity_hwms)
-        if mapping != "none":
-            mapped = _with_identity_hwm(mapped, identity_hwms)
-
-    actions: list[dict] = []
-    version = 0 if prior is None else prior.version + 1
-    protocol_action = None
-    needs_upgrade = False
-    # features this commit's table state DEMANDS: column mapping, and
-    # the type-borne ones the post-write schema carries (an NTZ or
-    # variant column under protocol 1/2 would hand v1 readers silently
-    # wrong values, so the spec gates them on reader v3 + the feature)
-    want_feats = _schema_type_features(table_schema)
-    if mapping != "none":
-        want_feats.add("columnMapping")
-    if want_feats:
-        prior_proto = (prior.protocol or {}) if prior is not None else {}
-        reader_feats = set(prior_proto.get("readerFeatures") or ())
-        writer_feats = set(prior_proto.get("writerFeatures") or ())
-        # upgrade whenever a demanded feature isn't ALREADY listed — a
-        # table can sit at reader v3 for other features (e.g. a prior
-        # delete_rows upgrade) and still need columnMapping declared,
-        # or spec-compliant readers resolve by the wrong column names
-        needs_upgrade = prior is None or (
-            not want_feats <= reader_feats
-            or not want_feats <= writer_feats
-            or int(prior_proto.get("minReaderVersion", 1)) < 3
-        )
-        if prior is not None and int(
-            prior_proto.get("minReaderVersion", 1)
-        ) == 2:
-            # legacy reader v2 implies columnMapping; the upgraded
-            # explicit lists must carry it (r9 advice-fix rule)
-            want_feats.add("columnMapping")
-        reader_feats |= want_feats
-        writer_feats |= want_feats
-        if prior is not None:
-            prior_wv = int(prior_proto.get("minWriterVersion", 2))
-            if prior_wv < 7:
-                # upgrading a legacy table must carry the FULL implicit
-                # feature set of its tier (v2: appendOnly/invariants;
-                # v3: +checkConstraints; v4: +changeDataFeed/generated;
-                # v5: +columnMapping; v6: +identityColumns) or
-                # downstream writers stop enforcing them
-                writer_feats |= _implicit_legacy_writer_features(
-                    prior_wv
-                )
-        protocol_action = {
-            "protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(reader_feats),
-                "writerFeatures": sorted(writer_feats),
-            }
-        }
-    elif prior is None:
-        protocol_action = {
-            "protocol": {"minReaderVersion": 1, "minWriterVersion": 2}
-        }
-    if prior is None or needs_upgrade:
-        actions.append(protocol_action)
     if prior is None or mode == "overwrite":
-        meta_id = prior.metadata["id"] if prior else str(uuid.uuid4())
         # overwrite REPLACES schema and data but PRESERVES table
         # configuration (delta.checkpointPolicy, user properties, ...)
         # — the real overwriteSchema contract; rebuilding it from
         # scratch silently stripped properties other components key off
         # (found in the round-9 review pass)
-        configuration = dict(
-            (prior.metadata.get("configuration") or {})
-            if prior is not None
-            else {}
-        )
+        configuration = dict(tw.config) if prior is not None else {}
         if mapping != "none":
             configuration.update({
                 "delta.columnMapping.mode": mapping,
                 "delta.columnMapping.maxColumnId": str(max_id),
             })
-        schema_json = (
-            mapped.json() if mapping != "none" else table_schema.json()
+        tw.set_metadata({
+            "id": prior.metadata["id"] if prior else str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema_out.json(),
+            "partitionColumns": part_cols,
+            "configuration": configuration,
+            "createdTime": tw.now_ms,
+        })
+        tw.actions.extend(
+            _remove_action(prior, rel, tw.now_ms)
+            for rel in (prior.files if prior is not None else ())
         )
-        actions.append(
-            {
-                "metaData": _fold_lineage_names(
-                    {
-                        "id": meta_id,
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": schema_json,
-                        "partitionColumns": part_cols,
-                        "configuration": configuration,
-                        "createdTime": now_ms,
-                    },
-                    prior.historical_physical_names
-                    if prior is not None
-                    else set(),
-                )
-            }
-        )
-    elif evolved or identity_hwms:
-        # schema-evolving append, or an identity watermark advance: the
-        # prior metaData verbatim except the updated schemaString (and
-        # maxColumnId under mapping) — id, createdTime, partitioning and
-        # every configuration key survive
+    elif evolved:
+        # schema-evolving append: the prior metaData verbatim except the
+        # extended schemaString (and maxColumnId under mapping) — id,
+        # createdTime, partitioning and every configuration key survive
         meta = dict(prior.metadata)
-        configuration = dict(prior.metadata.get("configuration") or {})
+        meta["schemaString"] = schema_out.json()
         if mapping != "none":
-            if evolved:
-                configuration["delta.columnMapping.maxColumnId"] = str(
-                    max_id
-                )
-            meta["schemaString"] = mapped.json()
-        else:
-            meta["schemaString"] = table_schema.json()
-        meta["configuration"] = configuration
-        actions.append({"metaData": meta})
-    if prior is not None and mode == "overwrite":
-        actions.extend(
-            _remove_action(prior, rel, now_ms) for rel in prior.files
-        )
-    row_ids = _RowIds.of(prior)
-    row_tracking = row_ids.on
-    for rel, size in moved:
-        add = {
-            "path": urllib.parse.quote(rel, safe="/="),
-            "partitionValues": _partition_values_from_rel(
-                rel, stage_part_cols
-            ),
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        stats = stats_by_rel[rel]
-        if stats is not None:
-            add["stats"] = stats
-        row_ids.assign(add, stats, version, path)
-        actions.append({"add": add})
-    if row_ids.drawn:
-        actions.append(row_ids.watermark())
-
-    if txn is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn[0],
-                    "version": int(txn[1]),
-                    "lastUpdated": now_ms,
-                }
+            meta["configuration"] = {
+                **(prior.metadata.get("configuration") or {}),
+                "delta.columnMapping.maxColumnId": str(max_id),
             }
+        tw.set_metadata(meta)
+    # features this commit's table state DEMANDS: column mapping, and
+    # the type-borne ones the post-write schema carries (an NTZ or
+    # variant column under protocol 1/2 would hand v1 readers silently
+    # wrong values, so the spec gates them on reader v3 + the feature)
+    tw.features |= _schema_type_features(table_schema)
+    if mapping != "none":
+        tw.features.add("columnMapping")
+    # fresh adds carry no materialized row-id columns, so a WRITE names
+    # none (the rewriting commands name them on first use)
+    tw.rows.new_config = None
+    # a merge_schema append may OMIT nullable columns: a mapped table
+    # stages them as typed nulls, an unmapped one leaves them out of
+    # its files (both read back as null)
+    absent = [f for f in tw.schema.fields if f.name not in df.columns]
+    if absent and mapping != "none":
+        df = df.select(
+            "*",
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in absent],
         )
-    # commitInfo first, delta-spark's convention: makes the commit's
-    # operation and timestamp log-authoritative (DESCRIBE HISTORY via
-    # table_history; the change feed's _commit_timestamp no longer
-    # depends on file mtimes surviving copies)
-    actions.insert(0, {
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "WRITE",
-            "operationParameters": {"mode": mode},
-        }
-    })
+    else:
+        tw.omitted = {f.name for f in absent}
 
-    def _rollback() -> None:
-        for rel, _size in moved:
-            try:
-                os.remove(os.path.join(base, rel))
-            except OSError:
-                pass
+    with tw:
+        tw.stage_rows(df, "write")
+        identity_hwms: dict[str, int] = {}
+        if identity_obs is not None:
+            vals = identity_obs.get
+            for k, ident in enumerate(identity_cols):
+                v = vals.get(f"i{k}")
+                if v is None:
+                    continue  # empty write: nothing generated or provided
+                v = int(v)
+                cur_h = ident["hwm"]
+                if cur_h is None or (
+                    v > cur_h if ident["step"] > 0 else v < cur_h
+                ):
+                    identity_hwms[ident["name"]] = v
+        if identity_hwms:
+            # the watermark lives in field metadata: re-emit metaData
+            # with it advanced, so the NEXT writer generates past this
+            # write
+            meta = dict(tw.meta_out or prior.metadata)
+            meta["schemaString"] = _with_identity_hwm(
+                schema_out, identity_hwms
+            ).json()
+            tw.meta_out = meta
+        if txn is not None:
+            tw.actions.append(
+                {
+                    "txn": {
+                        "appId": txn[0],
+                        "version": int(txn[1]),
+                        "lastUpdated": tw.now_ms,
+                    }
+                }
+            )
+        retries = [0]
 
-    # Append commits carry a disjoint file set (UUID-named parts) and no
-    # metadata change, so losing the version race is not a logical
-    # conflict per the public protocol's optimistic-concurrency rules:
-    # re-replay, confirm schema/partitioning still match, and re-commit
-    # at the next version. Overwrite keeps single-writer semantics (two
-    # concurrent overwrites ARE a logical conflict).
-    for attempt in range(_APPEND_RETRIES + 1):
-        commit_path = os.path.join(_log_dir(path), f"{version:020d}.json")
-        try:
-            _write_commit_file(commit_path, actions)
-            break
-        except FileExistsError:
-            lost_race = True
-        except BaseException:
-            _rollback()  # disk-full/interrupt mid-commit: unstage
-            raise
-        if lost_race:
-            if mode != "append" or evolved or identity_hwms or (
-                row_tracking
-            ) or attempt >= _APPEND_RETRIES:
-                _rollback()
+        def _rebase() -> int | None:
+            # Append commits carry a disjoint file set (UUID-named
+            # parts) and no metadata change, so losing the version race
+            # is not a logical conflict per the public protocol's
+            # optimistic-concurrency rules: re-replay, confirm
+            # schema/partitioning still match, and re-commit at the next
+            # version. Overwrite keeps single-writer semantics (two
+            # concurrent overwrites ARE a logical conflict).
+            single = bool(evolved or identity_hwms or tw.rows.on)
+            retries[0] += 1
+            if mode != "append" or single or retries[0] > _APPEND_RETRIES:
                 raise FileExistsError(
-                    f"concurrent commit to {path!r} at version {version}; "
+                    f"concurrent commit to {path!r} at version "
+                    f"{tw.version}; "
                     + (
                         "a schema-evolving, identity-generating or "
                         "row-tracked append carries metaData/"
@@ -2680,7 +2512,7 @@ def write_delta_lite(
                         "re-read the table and retry (retrying blind "
                         "could reuse identity values or row-id ranges "
                         "the racing writer also allocated)"
-                        if evolved or identity_hwms or row_tracking
+                        if single
                         else "append retries exhausted — retry after "
                         "the other commits settle"
                         if mode == "append"
@@ -2689,30 +2521,25 @@ def write_delta_lite(
                     )
                 )
             current = replay_log(spark, path)
-            try:
-                # the racing commit may have UPGRADED the protocol (e.g.
-                # delta-spark enabling writer features) or flipped
-                # delta.appendOnly / added invariants: our retried
-                # add-only commit would then be non-compliant
-                _check_writer_protocol(current.protocol, path)
-                _check_write_obligations(current, path, mode)
-            except (NotImplementedError, ValueError):
-                _rollback()
-                raise
+            # the racing commit may have UPGRADED the protocol (e.g.
+            # delta-spark enabling writer features) or flipped
+            # delta.appendOnly / added invariants: our retried add-only
+            # commit would then be non-compliant
+            _check_writer_protocol(current.protocol, path)
+            _check_write_obligations(current, path, mode)
             # compare names AND types: a racing overwrite that changed a
             # column's TYPE must refuse too, or the retried append would
             # commit parquet files whose physical type contradicts the
-            # table's metaData schema (nullability aside). A merge_schema
-            # append that OMITTED nullable columns retries as long as its
-            # columns are a type-matching subset and every column it
-            # lacks is still nullable
+            # table's metaData schema (nullability aside). A
+            # merge_schema append that OMITTED nullable columns retries
+            # as long as its columns are a type-matching subset and
+            # every column it lacks is still nullable
             cur_types = {
                 f.name: f.dataType.simpleString()
                 for f in current.schema.fields
             }
             df_types = {
-                f.name: f.dataType.simpleString()
-                for f in df.schema.fields
+                f.name: f.dataType.simpleString() for f in df.schema.fields
             }
             if merge_schema:
                 same_schema = all(
@@ -2729,25 +2556,25 @@ def write_delta_lite(
             # overwrite): our staged files carry the OLD physical layout
             # and committing them would make the whole table unreadable
             # (_verify_physical_names refuses at read time)
-            current_mapping = _column_mapping_mode(current.metadata)
-            same_mapping = current_mapping == mapping and (
+            same_mapping = _column_mapping_mode(current.metadata) == (
+                mapping
+            ) and (
                 mapping == "none"
                 or [f.name for f in _physicalize(current.schema).fields]
-                == [f.name for f in _physicalize(mapped).fields]
+                == [f.name for f in tw.phys_schema.fields]
             )
             # a racing commit may also have ADDED or changed row-level
             # obligations (delta.constraints.*, delta.invariants): our
             # staged rows were validated against the PRIOR set only
             same_constraints = _table_constraints(
                 current.metadata, current.schema
-            ) == constraints
+            ) == tw.constraints
             if (
                 not same_schema
                 or current.partition_columns != part_cols
                 or not same_mapping
                 or not same_constraints
             ):
-                _rollback()
                 raise FileExistsError(
                     f"concurrent commit to {path!r} changed the table's "
                     "schema, partitioning, column mapping or "
@@ -2763,25 +2590,12 @@ def write_delta_lite(
                 if seen is not None and int(
                     seen.get("version", -1)
                 ) >= int(txn[1]):
-                    _rollback()
                     return current.version
-            version = current.version + 1
-            # the table definitely exists now; a retried append is pure
-            # add actions (never protocol/metaData) plus the txn stamp
-            # and the commitInfo header
-            actions = [
-                a for a in actions
-                if "add" in a or "txn" in a or "commitInfo" in a
-            ]
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        # best-effort (a failed checkpoint never fails the commit — the
-        # JSON log alone is authoritative); bounds replay to at most
-        # CHECKPOINT_INTERVAL commits however long the table lives
-        try:
-            write_checkpoint(spark, path)
-        except Exception:
-            pass
-    return version
+            tw.version = current.version + 1
+            return None
+
+        tw.rebase = _rebase
+        return tw.commit("WRITE", {"mode": mode})
 
 
 CHECKPOINT_INTERVAL = 10  # delta-spark's default cadence
@@ -2965,36 +2779,6 @@ def _materialize_dv_descriptors(
             }
         per_file.append((rel, descriptor))
     return per_file
-
-
-def _dv_protocol_upgrade_action(state, mapping: str) -> dict | None:
-    """The protocol action a first DV-writing commit must carry (3/7
-    with deletionVectors in BOTH feature lists, preserving what is
-    already active), or None when the table already lists it."""
-    proto = state.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
-    reader_feats = set(proto.get("readerFeatures") or ())
-    writer_feats = set(proto.get("writerFeatures") or ())
-    if mapping != "none":  # preserve the active feature set
-        reader_feats.add("columnMapping")
-        writer_feats.add("columnMapping")
-    if "deletionVectors" in reader_feats and int(
-        proto.get("minReaderVersion", 1)
-    ) >= 3:
-        return None
-    reader_feats.add("deletionVectors")
-    writer_feats.add("deletionVectors")
-    if (pw := int(proto.get("minWriterVersion", 2))) < 7:
-        # legacy upgrade carries the FULL implicit feature set of
-        # its tier (v2..v6), or downstream writers stop enforcing
-        writer_feats |= _implicit_legacy_writer_features(pw)
-    return {
-        "protocol": {
-            "minReaderVersion": 3,
-            "minWriterVersion": 7,
-            "readerFeatures": sorted(reader_feats),
-            "writerFeatures": sorted(writer_feats),
-        }
-    }
 
 
 def _predicate_sql(condition: Column | str) -> str:
@@ -3276,7 +3060,7 @@ def merge_rows(
                 "or match the table's casing"
             )
         if not new_assign:
-            return schema, None, set()
+            return None, set()
         # type each new column from its assigning expression —
         # analysis only, no job runs
         probe = spark.createDataFrame([], schema).alias("t").join(
@@ -3303,7 +3087,7 @@ def merge_rows(
             )
             meta_out["configuration"] = cfg2
         meta_out["schemaString"] = schema.json()
-        return schema, meta_out, set(new_assign)
+        return meta_out, set(new_assign)
 
     def _clauses(clauses) -> str:
         # delta-spark string-encodes every value; clause lists are JSON
@@ -3322,13 +3106,13 @@ def merge_rows(
             ]
         )
 
+    tw = _TableWrite(spark, path, "merge_rows")
+    if schema_evolution:
+        meta_out, new_names = _evolve(tw.state, tw.mapping)
+        if meta_out is not None:
+            tw.set_metadata(meta_out, evolved=new_names)
     return _dml(
-        _TableWrite(
-            spark,
-            path,
-            "merge_rows",
-            evolve=_evolve if schema_evolution else None,
-        ),
+        tw,
         "MERGE",
         {
             "predicate": _predicate_sql(on),
@@ -3365,39 +3149,69 @@ def merge_rows(
 
 
 class _TableWrite:
-    """The table-write context every DML command (delete_rows,
-    update_rows, merge_rows) builds ONCE from ``replay_log``: the
-    writer-protocol and appendOnly obligations, the column-mapping mode
-    with the physical schema and logical->physical map, the hive-layout
-    refusal and the ``_verify_physical_names`` footer peek, the CDF /
-    deletion-vector / rowTracking flags, the verified deletion vectors,
-    the encoded-path map row identity keys on, and the rowTracking
-    column names and watermark (``_RowIds``).
+    """The one table-write context. Every committing command — WRITE
+    (create / append / overwrite), the DML kernel, OPTIMIZE, RESTORE,
+    CONVERT TO DELTA, CLUSTER BY and the ALTER family — builds it ONCE
+    from ``replay_log`` (``create`` lets a missing table start from the
+    empty state): the writer-protocol and appendOnly obligations, then
+    the schema view of the table's metaData (``set_metadata`` swaps in
+    the metaData the commit writes): the column-mapping mode with the
+    physical schema and logical->physical map, the CDF / deletion-vector
+    / rowTracking flags, the rowTracking column names and watermark
+    (``_RowIds``) and the row-level constraints. Commands that scan the
+    table's files also get the hive-layout refusal, the
+    ``_verify_physical_names`` footer peek and the verified deletion
+    vectors, on first use; metadata-only commands never open a file.
 
-    It then accumulates the command's commit — ``actions`` plus every
-    file ``staged`` on the way — and ``commit()`` is the one commit
-    tail. Used as a context manager: any exception rolls the staged
-    files back, and the frames the command pinned are released.
-    ``evolve(state, mapping) -> (schema, metaData|None, new names)`` is
-    merge's schema-evolution hook."""
+    It then accumulates the command's commit — ``actions``, the table
+    ``features`` it needs, plus every file ``staged`` on the way — and
+    ``commit()`` is the one commit tail. Used as a context manager: any
+    exception rolls the staged files back, and the frames the command
+    pinned are released."""
 
     def __init__(self, spark: SparkSession, path: str, cmd: str,
-                 evolve=None):
+                 create: bool = False):
         self.spark, self.path, self.cmd = spark, path, cmd
-        self.verb = cmd.split("_")[0]  # delete / update / merge
-        self.base = base = _local(path)
-        self.state = state = replay_log(spark, path)
+        self.verb = cmd.split("_")[0]  # append / delete / optimize / ...
+        self.base = _local(path)
+        try:
+            self.state = state = replay_log(spark, path)
+        except FileNotFoundError:
+            if not create:
+                raise
+            self.state = state = TableState()
         _check_writer_protocol(state.protocol, path)
         _check_write_obligations(state, path, self.verb)
-        self.mapping = mapping = _column_mapping_mode(state.metadata)
+        self.rels = sorted(state.files)
+        self.version = state.version + 1
+        self.now_ms = int(time.time() * 1000)
+        self.actions: list[dict] = []
+        self.features: set[str] = set()  # table features the commit needs
+        self.meta_out: dict | None = None  # the metaData the commit writes
+        self.evolved: set[str] = set()  # columns existing files predate
+        # columns the staged frame may leave out (an unmapped
+        # merge_schema append; files without them read back as null)
+        self.omitted: set[str] = set()
+        # lost-race hook: returns a version when the commit already
+        # landed, None after moving ``version`` forward; unset = raise
+        self.rebase = None
+        self.staged: list[str] = []  # table-relative, for rollback
+        self.persisted: list[DataFrame] = []  # released on exit
+        self._files_checked = False  # the footer peek ran
+        if state.metadata is not None:
+            self._view(state.metadata)
+
+    def _view(self, meta: dict) -> None:
+        """Derive the schema view of metaData ``meta``."""
+        self.config = config = dict(meta.get("configuration") or {})
+        self.mapping = mapping = _column_mapping_mode(meta)
         if mapping not in ("none", "name", "id"):
             raise NotImplementedError(
                 f"unknown delta.columnMapping.mode {mapping!r}"
             )
-        self.schema, self.meta_out, evolved = (
-            evolve(state, mapping) if evolve else (state.schema, None, ())
+        self.schema = schema = T.StructType.fromJson(
+            json.loads(meta["schemaString"])
         )
-        schema = self.schema
         self.phys_schema = (
             _physicalize(schema) if mapping != "none" else schema
         )
@@ -3407,11 +3221,52 @@ class _TableWrite:
         }
         self.phys_part_cols = [
             self.logical_to_phys[c]
-            for c in state.partition_columns
+            for c in meta.get("partitionColumns") or []
             if c in self.logical_to_phys
         ]
-        self.rels = sorted(state.files)
-        if self.rels and mapping != "none":
+        self.cdf_on = (
+            str(config.get("delta.enableChangeDataFeed", "")).lower()
+            == "true"
+        )
+        self.dv_feature_on = "deletionVectors" in set(
+            (self.state.protocol or {}).get("readerFeatures") or ()
+        ) or str(config.get("delta.enableDeletionVectors", "")).lower() == (
+            "true"
+        )
+        self.rows = _RowIds.of(self.state, meta)
+        self.gen_cols = dict(_generated_columns(schema))
+        self.ident_names = {d["name"] for d in _identity_columns(schema)}
+        self.constraints = _table_constraints(meta, schema)
+
+    def set_metadata(self, meta: dict, evolved=()) -> None:
+        """Make ``meta`` (lineage names folded in) the metaData this
+        commit writes, and the schema view everything after reads;
+        ``evolved`` names the columns the table's files predate."""
+        self.meta_out = _fold_lineage_names(
+            meta, self.state.historical_physical_names
+        )
+        self.evolved = set(evolved)
+        self._view(self.meta_out)
+
+    @functools.cached_property
+    def enc_to_rel(self) -> dict[str, str]:
+        # row identity = (encoded full path, row position) — basenames
+        # alone collide across hive partition directories
+        return {_file_key(self.base, rel): rel for rel in self.rels}
+
+    @functools.cached_property
+    def dv_ver(self) -> dict:
+        return _dv_verify(self.base, self.state.dvs) if self.state.dvs else {}
+
+    @functools.cached_property
+    def hive_layout(self) -> bool:
+        return _all_files_hive_layout(self.state.files, self.phys_part_cols)
+
+    def _check_files(self, parts: bool) -> None:
+        """The refusals of a command that scans the table's files."""
+        if not self.rels:
+            return
+        if self.mapping != "none" and not self._files_checked:
             # on a mapped table whose files do NOT carry physical names
             # (foreign id-mode writers relying on parquet field-id
             # resolution) every data column would scan as NULL and a
@@ -3419,55 +3274,25 @@ class _TableWrite:
             # — refuse instead. Evolved columns are absent from
             # pre-evolution files by definition.
             _verify_physical_names(
-                spark,
-                os.path.join(base, self.rels[0]),
+                self.spark,
+                os.path.join(self.base, self.rels[0]),
                 [
                     pf.name
-                    for f, pf in zip(schema.fields, self.phys_schema.fields)
+                    for f, pf in zip(
+                        self.schema.fields, self.phys_schema.fields
+                    )
                     if pf.name not in self.phys_part_cols
-                    and f.name not in evolved
+                    and f.name not in self.evolved
                 ],
-                known=state.historical_physical_names,
+                known=self.state.historical_physical_names,
             )
-        if (
-            self.rels
-            and self.phys_part_cols
-            and not _all_files_hive_layout(state.files, self.phys_part_cols)
-        ):
+        self._files_checked = True
+        if parts and self.phys_part_cols and not self.hive_layout:
             raise NotImplementedError(
-                f"{cmd} on a partitioned table whose file paths do not "
-                "hive-encode the logged partitionValues (externally "
+                f"{self.cmd} on a partitioned table whose file paths do "
+                "not hive-encode the logged partitionValues (externally "
                 "authored layout) — rewrite via overwrite instead"
             )
-        config = state.metadata.get("configuration") or {}
-        self.cdf_on = (
-            str(config.get("delta.enableChangeDataFeed", "")).lower()
-            == "true"
-        )
-        self.dv_feature_on = "deletionVectors" in set(
-            (state.protocol or {}).get("readerFeatures") or ()
-        ) or str(config.get("delta.enableDeletionVectors", "")).lower() == (
-            "true"
-        )
-        # row identity = (encoded full path, row position) — basenames
-        # alone collide across hive partition directories
-        self.enc_to_rel = {
-            _file_key(base, rel): rel
-            for rel in self.rels
-        }
-        self.rows = _RowIds.of(state, self.meta_out)
-        self.gen_cols = dict(_generated_columns(schema))
-        self.ident_names = {d["name"] for d in _identity_columns(schema)}
-        self.constraints = _table_constraints(state.metadata, schema)
-        self.version = state.version + 1
-        self.now_ms = int(time.time() * 1000)
-        self.actions: list[dict] = []
-        self.staged: list[str] = []  # table-relative, for rollback
-        self.persisted: list[DataFrame] = []  # released on exit
-
-    @functools.cached_property
-    def dv_ver(self) -> dict:
-        return _dv_verify(self.base, self.state.dvs) if self.state.dvs else {}
 
     def __enter__(self) -> "_TableWrite":
         return self
@@ -3488,19 +3313,27 @@ class _TableWrite:
         self.staged.clear()
 
     def scan(self, rels: list[str], live: bool = True,
-             row_ids: bool = False, ids: bool = True) -> DataFrame:
+             row_ids: bool = False, ids: bool = True,
+             parts: bool = True) -> DataFrame:
         """The logical rows of ``rels`` (partition columns parsed from
-        the hive paths) with ``__file`` / ``__pos`` row identity (the
-        encoded path and parquet row position) when ``ids`` — a scan
-        that selects ``_metadata`` builds it for every row even when
-        nothing downstream reads it, so callers that need no identity
-        leave it out. ``live`` drops rows masked by deletion vectors;
-        ``row_ids`` adds the resolved materialized rowTracking
-        columns."""
+        the hive paths; ``parts=False`` reads the data columns only, so
+        any file layout will do) with ``__file`` / ``__pos`` row
+        identity (the encoded path and parquet row position) when
+        ``ids`` — a scan that selects ``_metadata`` builds it for every
+        row even when nothing downstream reads it, so callers that need
+        no identity leave it out. ``live`` drops rows masked by
+        deletion vectors; ``row_ids`` adds the resolved materialized
+        rowTracking columns."""
+        self._check_files(parts)
         spark, base = self.spark, self.base
         dv_ver = self.dv_ver if live else {}
-        phys_fields = list(self.phys_schema.fields)
-        part_base = base if self.phys_part_cols else None
+        fields = [
+            (f, pf)
+            for f, pf in zip(self.schema.fields, self.phys_schema.fields)
+            if parts or pf.name not in self.phys_part_cols
+        ]
+        phys_fields = [pf for _, pf in fields]
+        part_base = base if parts and self.phys_part_cols else None
         if row_ids:
             rid, rcv = self.rows.rid_col, self.rows.rcv_col
             df = _with_materialized_row_ids(
@@ -3523,7 +3356,7 @@ class _TableWrite:
                 base_path=part_base,
             ).withColumnsRenamed({"__rt_path": "__file", "__rt_idx": "__pos"})
         else:
-            reader = spark.read.schema(self.phys_schema)
+            reader = spark.read.schema(T.StructType(phys_fields))
             if part_base:
                 reader = reader.option("basePath", part_base)
             df = reader.parquet(*[os.path.join(base, r) for r in rels])
@@ -3540,7 +3373,7 @@ class _TableWrite:
         return df.select(
             *[
                 _quoted(pf.name).cast(f.dataType).alias(f.name)
-                for f, pf in zip(self.schema.fields, phys_fields)
+                for f, pf in fields
             ],
             *(
                 [_quoted(self.rows.rid_col), _quoted(self.rows.rcv_col)]
@@ -3552,37 +3385,72 @@ class _TableWrite:
 
     def to_phys(self, frame: DataFrame, parts: bool = True,
                 row_ids: bool = False) -> DataFrame:
-        """Logical rows -> the physical parquet layout (partition
-        columns dropped unless ``parts``; a ``_change_type`` column
-        rides along)."""
+        """Logical rows -> the physical parquet layout: physical names
+        (stamped with their parquet field ids on mapped tables — what
+        id-mode readers resolve by), partition columns dropped unless
+        ``parts``, a ``_change_type`` column riding along. Every table
+        column must be in the frame except the ``omitted`` ones. On an
+        unmapped table a column whose type already reads as the
+        table's (nullability aside) is written as it is: Spark refuses
+        to cast a nullable array element or struct field to a
+        non-nullable one, and parquet does not care."""
+        mapped = self.mapping != "none"
+        have = {
+            f.name: f.dataType.simpleString() for f in frame.schema.fields
+        }
+
+        def phys(f: T.StructField, pf: T.StructField) -> Column:
+            col = _quoted(f.name)
+            if mapped:
+                return col.cast(pf.dataType).alias(
+                    pf.name,
+                    metadata={
+                        "parquet.field.id": int(
+                            f.metadata["delta.columnMapping.id"]
+                        )
+                    },
+                )
+            if have.get(f.name) != pf.dataType.simpleString():
+                col = col.cast(pf.dataType)
+            return col.alias(pf.name)
+
         return frame.select(
             *[
-                _quoted(f.name).cast(pf.dataType).alias(pf.name)
+                phys(f, pf)
                 for f, pf in zip(self.schema.fields, self.phys_schema.fields)
-                if parts or pf.name not in self.phys_part_cols
+                if (parts or pf.name not in self.phys_part_cols)
+                and f.name not in self.omitted
             ],
             *(
                 [_quoted(self.rows.rid_col), _quoted(self.rows.rcv_col)]
                 if row_ids
                 else []
             ),
-            *(["_change_type"] if "_change_type" in frame.columns else []),
+            *(
+                ["_change_type"]
+                if "_change_type" in frame.columns
+                and "_change_type" not in self.logical_to_phys
+                else []
+            ),
         )
 
     def stage_rows(self, rows: DataFrame, what: str,
                    group: list[str] | None = None, row_ids: bool = False,
-                   n_files: int | None = None) -> int | None:
+                   n_files: int | None = None,
+                   data_change: bool = True) -> int | None:
         """Write logical ``rows`` as new data files and append their
         adds: into ``group``'s partition directory under its logged
         partitionValues (a rewrite), else hive-partitioned on the
-        partition columns. CHECK constraints / invariants ride the
-        write as observe() metrics (zero extra passes) and a violation
-        raises before anything commits. Zero-row part files never
+        partition columns. Rows that change data carry the table's
+        CHECK constraints / invariants as observe() metrics riding the
+        write (zero extra passes), and a violation raises before
+        anything commits; a ``data_change=False`` rewrite (OPTIMIZE)
+        moves rows the table already holds. Zero-row part files never
         commit; on rowTracking tables every add draws a fresh baseRowId
-        range. Returns the rows added, None when some file's footer
-        was unreadable."""
+        range. Returns the rows added, None when some file's footer was
+        unreadable."""
         obs = None
-        if self.constraints:
+        if self.constraints and data_change:
             rows, obs, name_map = _attach_constraint_observer(
                 rows, self.schema, self.constraints, self.path
             )
@@ -3601,13 +3469,19 @@ class _TableWrite:
             ]
         self.staged.extend(rel for rel, _ in moved)
         if obs is not None:
-            violated = [
-                name_map[k] for k, v in obs.get.items() if int(v or 0) > 0
-            ]
+            violated = {
+                name_map[k]: int(v) for k, v in obs.get.items() if v
+            }
             if violated:
+                by_name = dict(self.constraints)
+                detail = "; ".join(
+                    f"{n!r} ({by_name[n]!r}): {c} row(s)"
+                    for n, c in sorted(violated.items())
+                )
                 raise ValueError(
-                    f"{what} violates constraint(s) {sorted(violated)} on "
-                    f"{self.path!r}; nothing was committed"
+                    f"{what} to {self.path!r} violates table constraints "
+                    f"— {detail}. NULL results count as violations "
+                    "(delta-spark semantics); nothing was committed."
                 )
         total: int | None = 0
         for rel, size in moved:
@@ -3626,7 +3500,7 @@ class _TableWrite:
                 ),
                 "size": size,
                 "modificationTime": self.now_ms,
-                "dataChange": True,
+                "dataChange": data_change,
             }
             if stats is not None:
                 add["stats"] = stats
@@ -3669,42 +3543,69 @@ class _TableWrite:
             )
 
     def commit(self, operation: str, parameters: dict,
-               op_metrics) -> int:
-        """The one commit tail: nothing added or removed -> roll the
-        staged files back and return the current version uncommitted;
-        otherwise commitInfo (``op_metrics`` maps the kernel's counts to
-        the command's operationMetrics), the metaData the command
-        changed, the rowTracking watermark when rows drew ids, the
-        atomic log write, and the best-effort checkpoint hook."""
-        n_adds = sum(1 for a in self.actions if "add" in a)
-        n_removes = sum(1 for a in self.actions if "remove" in a)
-        if not (n_adds or n_removes):
-            self.rollback()
-            return self.state.version
-        head = [{
-            "commitInfo": {
-                "timestamp": self.now_ms,
-                "operation": operation,
-                "operationParameters": parameters,
-                "operationMetrics": op_metrics(n_adds, n_removes),
-            }
-        }]
+               op_metrics=None) -> int:
+        """The one commit tail: commitInfo (``op_metrics`` maps the
+        commit's add / remove counts to the command's
+        operationMetrics), the protocol upgrade ``features`` need
+        (_protocol_with), the metaData the command changed (plus newly
+        named materialized rowTracking columns once rows drew ids), the
+        actions, the rowTracking watermark; then the atomic log write —
+        a lost version race goes to ``rebase`` when the command set one
+        and raises otherwise — and the best-effort checkpoint hook."""
+        info = {
+            "timestamp": self.now_ms,
+            "operation": operation,
+            "operationParameters": parameters,
+        }
+        if op_metrics is not None:
+            info["operationMetrics"] = op_metrics(
+                sum(1 for a in self.actions if "add" in a),
+                sum(1 for a in self.actions if "remove" in a),
+            )
+        head: list[dict] = [{"commitInfo": info}]
+        protocol = _protocol_with(self.state, self.features)
+        if protocol is not None:
+            head.append({"protocol": protocol})
         meta = self.meta_out
         if self.rows.drawn and self.rows.new_config is not None:
-            # ONE metaData action carries both an evolved schema and the
+            # ONE metaData action carries both a changed schema and the
             # newly named materialized rowTracking columns
             meta = dict(meta or self.state.metadata)
             meta["configuration"] = self.rows.new_config
         if meta is not None:
             head.append({"metaData": meta})
         tail = [self.rows.watermark()] if self.rows.drawn else []
-        _write_commit_file(
-            os.path.join(_log_dir(self.path), f"{self.version:020d}.json"),
-            head + self.actions + tail,
-        )
+        actions = head + self.actions + tail
+        os.makedirs(_log_dir(self.path), exist_ok=True)
+        while True:
+            try:
+                _write_commit_file(
+                    os.path.join(
+                        _log_dir(self.path), f"{self.version:020d}.json"
+                    ),
+                    actions,
+                )
+                break
+            except FileExistsError:
+                if self.rebase is None:
+                    raise
+                landed = self.rebase()
+                if landed is not None:
+                    self.rollback()
+                    return landed
+            # the re-based commit is the add actions, the txn stamp and
+            # the commitInfo header — never protocol or metaData
+            actions = [
+                a for a in actions
+                if "add" in a or "txn" in a or "commitInfo" in a
+            ]
         self.staged.clear()
         if self.version > 0 and self.version % CHECKPOINT_INTERVAL == 0:
-            try:  # best-effort, like write_delta_lite's hook
+            # best-effort (a failed checkpoint never fails the commit —
+            # the JSON log alone is authoritative); bounds replay to at
+            # most CHECKPOINT_INTERVAL commits however long the table
+            # lives
+            try:
                 write_checkpoint(self.spark, self.path)
             except Exception:
                 pass
@@ -3978,9 +3879,7 @@ def _dml(
         touched_dv = [r for r in touched if masked[r]]
         touched_rw = [r for r in touched if not masked[r]]
         if touched_dv:
-            upgrade = _dv_protocol_upgrade_action(state, tw.mapping)
-            if upgrade is not None:
-                tw.actions.append(upgrade)
+            tw.features.add("deletionVectors")
 
         counts = {
             "updated": 0, "inserted": 0, "rewritten_rows": 0,
@@ -4380,6 +4279,11 @@ def _dml(
                 }
             )
 
+        if not tw.actions:
+            # nothing added or removed: commit nothing — not even an
+            # evolved schema or a protocol upgrade
+            tw.rollback()
+            return state.version
         return tw.commit(operation, parameters, _metrics)
 
 
@@ -4432,15 +4336,13 @@ def vacuum(
     bins are still never reclaimed (an in-flight delete_rows stages its
     .bin BEFORE committing; reclaiming those would corrupt the racing
     writer) — only log-referenced-then-expired ones are."""
-    import time as _time
-
     base = _local(path)
     log_dir = _log_dir(path)
     state = replay_log(spark, path)  # validates before touching files
     horizon_ms = (
         None
         if retain_hours is None
-        else int(_time.time() * 1000) - int(retain_hours * 3_600_000)
+        else int(time.time() * 1000) - int(retain_hours * 3_600_000)
     )
     referenced: set[str] = set()
     last_ref_ms: dict[str, int] = {}
@@ -4603,72 +4505,21 @@ def _write_actions_parquet(
 
 
 def enable_v2_checkpoint(spark: SparkSession, path: str) -> int:
-    """Commit a protocol upgrade adding the ``v2Checkpoint`` table
-    feature (reader AND writer lists, per the public protocol's table
-    features spec) AND setting ``delta.checkpointPolicy=v2`` in the
-    table configuration — the property real writers key the layout off,
-    committed together the way delta-spark's enablement does;
-    subsequent ``write_checkpoint`` calls emit the UUID-named v2 layout
-    the policy mandates. Preserves every feature already listed (a
-    legacy writer-v2 protocol carries its implicit appendOnly/
-    invariants forward, like delete_rows' upgrade). No-op returning the
-    current version if both halves are already in place."""
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
-    proto = state.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
-    reader_feats = set(proto.get("readerFeatures") or ())
-    writer_feats = set(proto.get("writerFeatures") or ())
-    config = dict((state.metadata or {}).get("configuration") or {})
-    needs_cm = (
-        _column_mapping_mode(state.metadata) != "none"
-        or int(proto.get("minReaderVersion", 1)) == 2
-    )
-    if (
-        "v2Checkpoint" in reader_feats
-        and "v2Checkpoint" in writer_feats
-        and config.get("delta.checkpointPolicy") == "v2"
-        and (not needs_cm or (
-            "columnMapping" in reader_feats
-            and "columnMapping" in writer_feats
-        ))
+    """Enable the v2 checkpoint layout: ``set_table_properties`` with
+    ``delta.checkpointPolicy=v2`` — the property real writers key the
+    layout off — whose one protocol rule adds the ``v2Checkpoint``
+    table feature (reader AND writer lists, carrying a legacy tier's
+    implicit features and an implicit columnMapping) in the same
+    commit, the way delta-spark's enablement does; subsequent
+    ``write_checkpoint`` calls emit the UUID-named v2 layout the policy
+    mandates. No-op returning the current version if both halves are
+    already in place."""
+    tw = _TableWrite(spark, path, "enable_v2_checkpoint")
+    if tw.config.get("delta.checkpointPolicy") == "v2" and (
+        _protocol_with(tw.state, {"v2Checkpoint"}) is None
     ):
-        return state.version
-    reader_feats.add("v2Checkpoint")
-    writer_feats.add("v2Checkpoint")
-    if (pw := int(proto.get("minWriterVersion", 2))) < 7:
-        # FULL implicit set of the legacy tier, not just v2's
-        writer_feats |= _implicit_legacy_writer_features(pw)
-    if needs_cm:
-        # A legacy minReaderVersion=2 table (or any column-mapped one)
-        # carries an IMPLICIT columnMapping reader requirement;
-        # upgrading to reader v3 with only v2Checkpoint listed would
-        # let a feature-gated reader resolve columns by logical name
-        # and read NULLs. Mirror delete_rows' upgrade and make it
-        # explicit. The no-op early return above ALSO requires this
-        # half, so a table upgraded by the pre-fix code is repairable
-        # by calling enable_v2_checkpoint again.
-        reader_feats.add("columnMapping")
-        writer_feats.add("columnMapping")
-    config["delta.checkpointPolicy"] = "v2"
-    metadata = dict(state.metadata)
-    metadata["configuration"] = config
-    version = state.version + 1
-    commit_path = os.path.join(_log_dir(path), f"{version:020d}.json")
-    _write_commit_file(
-        commit_path,
-        [
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(reader_feats),
-                    "writerFeatures": sorted(writer_feats),
-                }
-            },
-            {"metaData": metadata},
-        ],
-    )
-    return version
+        return tw.state.version
+    return _set_properties(tw, {"delta.checkpointPolicy": "v2"}, ())
 
 
 def cleanup_log(spark: SparkSession, path: str) -> list[str]:
@@ -4878,13 +4729,11 @@ def write_checkpoint(spark: SparkSession, path: str) -> int:
                 sidecar_path,
             )
             sidecar_written = sidecar_path
-            import time as _time
-
             top_rows.append({
                 "sidecar": {
                     "path": sidecar_name,
                     "sizeInBytes": os.path.getsize(sidecar_path),
-                    "modificationTime": int(_time.time() * 1000),
+                    "modificationTime": int(time.time() * 1000),
                 }
             })
         cp_path = os.path.join(
@@ -5413,53 +5262,18 @@ def set_cluster_by(
     clustering rewrite, delta-spark's contract. Pass ``[]`` to remove
     the clustering spec (CLUSTER BY NONE). Returns the committed
     version."""
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
-    schema = state.schema
-    mapping = _column_mapping_mode(state.metadata)
-    phys_schema = _physicalize(schema) if mapping != "none" else schema
-    logical_to_phys = {
-        f.name: pf.name
-        for f, pf in zip(schema.fields, phys_schema.fields)
-    }
-    bad = [c for c in columns if c not in logical_to_phys]
+    tw = _TableWrite(spark, path, "set_cluster_by")
+    bad = [c for c in columns if c not in tw.logical_to_phys]
     if bad:
         raise ValueError(f"cluster-by columns not in schema: {bad}")
-    in_part = [c for c in columns if c in state.partition_columns]
+    in_part = [c for c in columns if c in tw.state.partition_columns]
     if in_part:
         raise ValueError(
             f"cluster-by columns {in_part} are partition columns — "
             "constant within every file, nothing to cluster"
         )
-    import time as _time
-
-    version = state.version + 1
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": int(_time.time() * 1000),
-            "operation": "CLUSTER BY",
-            "operationParameters": {
-                "clusteringColumns": json.dumps(list(columns))
-            },
-        }
-    }]
-    proto = state.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
-    writer_feats = set(proto.get("writerFeatures") or ())
-    if "clusteredTable" not in writer_feats or int(
-        proto.get("minWriterVersion", 2)
-    ) < 7:
-        writer_feats |= {"clusteredTable", "domainMetadata"}
-        if (pw := int(proto.get("minWriterVersion", 2))) < 7:
-            writer_feats |= _implicit_legacy_writer_features(pw)
-        pact = {
-            "minReaderVersion": proto.get("minReaderVersion", 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(writer_feats),
-        }
-        if proto.get("readerFeatures"):
-            pact["readerFeatures"] = proto["readerFeatures"]
-        actions.append({"protocol": pact})
-    actions.append({
+    tw.features |= {"clusteredTable", "domainMetadata"}
+    tw.actions.append({
         "domainMetadata": {
             "domain": "delta.clustering",
             "configuration": json.dumps(
@@ -5467,16 +5281,15 @@ def set_cluster_by(
                 # stored form (top-level columns only here: nested
                 # clustering keys don't exist in this engine's tables)
                 {"clusteringColumns": [
-                    [logical_to_phys[c]] for c in columns
+                    [tw.logical_to_phys[c]] for c in columns
                 ]}
             ),
             "removed": False,
         }
     })
-    _write_commit_file(
-        os.path.join(_log_dir(path), f"{version:020d}.json"), actions
+    return tw.commit(
+        "CLUSTER BY", {"clusteringColumns": json.dumps(list(columns))}
     )
-    return version
 
 
 def cluster_columns(spark: SparkSession, path: str) -> list[str]:
@@ -5657,218 +5470,134 @@ def optimize(
     ever merge. Returns ``{"version", "rewritten", "added"}`` (version
     None = nothing to do).
     """
-    base = _local(path)
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
-    mapping = _column_mapping_mode(state.metadata)
-    schema = state.schema
-    phys_schema = _physicalize(schema) if mapping != "none" else schema
-    if zorder_by is None:
-        # clusteredTable writer obligation (r11): a plain OPTIMIZE on a
-        # clustered table IS a clustering rewrite on the declared
-        # columns (set_cluster_by / the delta.clustering domain)
-        domain = state.domains.get("delta.clustering")
-        if domain and not domain.get("removed"):
-            stored = json.loads(
-                domain.get("configuration") or "{}"
-            ).get("clusteringColumns") or []
-            phys_to_logical = {
-                pf.name: f.name
-                for f, pf in zip(schema.fields, phys_schema.fields)
-            }
-            cols = [
-                phys_to_logical.get(
-                    p[0] if isinstance(p, list) else p,
-                    p[0] if isinstance(p, list) else p,
-                )
-                for p in stored
-            ]
-            if cols:
-                zorder_by = cols
-    phys_part_cols = [
-        pf.name
-        for f, pf in zip(schema.fields, phys_schema.fields)
-        if f.name in state.partition_columns
-    ]
-    data_schema = T.StructType(
-        [f for f in phys_schema.fields if f.name not in phys_part_cols]
-    )
-    logical_to_phys = {
-        f.name: pf.name
-        for f, pf in zip(schema.fields, phys_schema.fields)
-    }
-    if zorder_by:
-        bad = [c for c in zorder_by if c not in logical_to_phys]
-        if bad:
-            raise ValueError(f"zorder_by columns not in schema: {bad}")
-        in_part = [c for c in zorder_by if c in state.partition_columns]
-        if in_part:
-            raise ValueError(
-                f"zorder_by columns {in_part} are partition columns — "
-                "they are constant within every rewrite group"
-            )
-
-    sizes = {
-        rel: int((state.adds.get(rel) or {}).get("size", 0))
-        for rel in state.files
-    }
-    # fall back to the filesystem when the add didn't carry size
-    for rel in sizes:
-        if sizes[rel] <= 0:
-            try:
-                sizes[rel] = os.path.getsize(os.path.join(base, rel))
-            except OSError:
-                sizes[rel] = 0
-
-    by_part: dict[tuple, list[str]] = {}
-    for rel, pvals in state.files.items():
-        key = tuple(sorted((pvals or {}).items()))
-        by_part.setdefault(key, []).append(rel)
-
-    groups: list[tuple[dict, list[str]]] = []  # (pvals, rels to rewrite)
-    for key, rels in sorted(by_part.items()):
-        pvals = dict(key)
+    with _TableWrite(spark, path, "optimize") as tw:
+        state = tw.state
+        if zorder_by is None:
+            # clusteredTable writer obligation (r11): a plain OPTIMIZE on
+            # a clustered table IS a clustering rewrite on the declared
+            # columns (set_cluster_by / the delta.clustering domain)
+            domain = state.domains.get("delta.clustering")
+            if domain and not domain.get("removed"):
+                phys_to_logical = {
+                    p: c for c, p in tw.logical_to_phys.items()
+                }
+                cols = [
+                    phys_to_logical.get(p, p)
+                    for p in (
+                        s[0] if isinstance(s, list) else s
+                        for s in json.loads(
+                            domain.get("configuration") or "{}"
+                        ).get("clusteringColumns") or []
+                    )
+                ]
+                if cols:
+                    zorder_by = cols
         if zorder_by:
-            if len(rels) >= 1:
-                groups.append((pvals, sorted(rels)))
-            continue
-        small = sorted(
-            r for r in rels
-            if sizes[r] < target_file_bytes or r in state.dvs
-        )
-        # bin-pack: rewrite when something merges or a DV materializes
-        if len(small) >= 2 or any(r in state.dvs for r in small):
-            groups.append((pvals, small))
+            bad = [c for c in zorder_by if c not in tw.logical_to_phys]
+            if bad:
+                raise ValueError(f"zorder_by columns not in schema: {bad}")
+            in_part = [c for c in zorder_by if c in state.partition_columns]
+            if in_part:
+                raise ValueError(
+                    f"zorder_by columns {in_part} are partition columns — "
+                    "they are constant within every rewrite group"
+                )
 
-    if not groups:
-        return {"version": None, "rewritten": 0, "added": 0}
+        sizes = {
+            rel: int((state.adds.get(rel) or {}).get("size", 0))
+            for rel in state.files
+        }
+        # fall back to the filesystem when the add didn't carry size
+        for rel in sizes:
+            if sizes[rel] <= 0:
+                try:
+                    sizes[rel] = os.path.getsize(os.path.join(tw.base, rel))
+                except OSError:
+                    sizes[rel] = 0
 
-    undroppable = ("baseRowId", "defaultRowCommitVersion")
-    # row-ID-PRESERVING rewrite (r11): each row's resolved identity
-    # (materialized value, else baseRowId + position) is written into
-    # the protocol's materialized shadow columns — invisible to normal
-    # reads (every reader scans with the table schema, so parquet
-    # prunes them). The rewritten adds then take FRESH baseRowId ranges
-    # (delta-spark's scheme: the materialized values override the
-    # defaults, so logical ids survive any reordering or merging)
-    row_ids = _RowIds.of(state)
-    ids_carried = any(
-        k in (state.adds.get(rel) or {})
-        for _, rels in groups
-        for rel in rels
-        for k in undroppable
-    )
-    if ids_carried and not row_ids.on:
-        # ids without the feature: a foreign anomaly this writer cannot
-        # rewrite protocol-correctly (no feature, no config keys)
-        raise NotImplementedError(
-            "optimize would rewrite files carrying baseRowId/"
-            "defaultRowCommitVersion on a table whose protocol does "
-            "not list rowTracking — cannot preserve row identity "
-            "without the feature's materialized-column machinery"
-        )
-    rid_col, rcv_col = row_ids.rid_col, row_ids.rcv_col
+        by_part: dict[tuple, list[str]] = {}
+        for rel, pvals in state.files.items():
+            key = tuple(sorted((pvals or {}).items()))
+            by_part.setdefault(key, []).append(rel)
 
-    dv_ver = _dv_verify(base, state.dvs) if state.dvs else {}
-    now_ms = int(time.time() * 1000)
-    version = state.version + 1
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "OPTIMIZE",
-            "operationParameters": {
+        groups: list[list[str]] = []  # same-partitionValues rewrites
+        for _key, rels in sorted(by_part.items()):
+            if zorder_by:
+                groups.append(sorted(rels))
+                continue
+            small = sorted(
+                r for r in rels
+                if sizes[r] < target_file_bytes or r in state.dvs
+            )
+            # bin-pack: rewrite when something merges or a DV materializes
+            if len(small) >= 2 or any(r in state.dvs for r in small):
+                groups.append(small)
+
+        if not groups:
+            return {"version": None, "rewritten": 0, "added": 0}
+
+        # row-ID-PRESERVING rewrite (r11): each row's resolved identity
+        # (materialized value, else baseRowId + position) is written
+        # into the protocol's materialized shadow columns — invisible to
+        # normal reads (every reader scans with the table schema, so
+        # parquet prunes them). The rewritten adds then take FRESH
+        # baseRowId ranges (delta-spark's scheme: the materialized
+        # values override the defaults, so logical ids survive any
+        # reordering or merging)
+        if not tw.rows.on and any(
+            k in (state.adds.get(rel) or {})
+            for rels in groups
+            for rel in rels
+            for k in ("baseRowId", "defaultRowCommitVersion")
+        ):
+            # ids without the feature: a foreign anomaly this writer
+            # cannot rewrite protocol-correctly (no feature, no config
+            # keys)
+            raise NotImplementedError(
+                "optimize would rewrite files carrying baseRowId/"
+                "defaultRowCommitVersion on a table whose protocol does "
+                "not list rowTracking — cannot preserve row identity "
+                "without the feature's materialized-column machinery"
+            )
+        for rels in groups:
+            # data columns only: the rewrite takes partitionValues from
+            # the log, so any file layout compacts
+            df = tw.scan(rels, row_ids=tw.rows.on, ids=False, parts=False)
+            n_out = max(1, -(-sum(sizes[r] for r in rels) // target_file_bytes))
+            if zorder_by:
+                from lcr_etl_upgrade_spark.operators.layout import (
+                    optimize_layout,
+                )
+
+                df = optimize_layout(df, zorder_by, n_out, bits=zorder_bits)
+            # rewritten files land in the group's own hive directory, so
+            # the layout invariant every reader fast-path relies on holds
+            tw.stage_rows(
+                df,
+                "optimize",
+                group=rels,
+                row_ids=tw.rows.on,
+                n_files=None if zorder_by else n_out,
+                data_change=False,
+            )
+            tw.actions.extend(
+                _remove_action(state, rel, tw.now_ms, data_change=False)
+                for rel in rels
+            )
+        n_added = sum(1 for a in tw.actions if "add" in a)
+        n_removed = sum(1 for a in tw.actions if "remove" in a)
+        version = tw.commit(
+            "OPTIMIZE",
+            {
                 "targetFileBytes": int(target_file_bytes),
                 "zorderBy": list(zorder_by or []),
             },
-        }
-    }]
-    if row_ids.new_config is not None:
-        meta_out = dict(state.metadata)
-        meta_out["configuration"] = row_ids.new_config
-        actions.append({"metaData": meta_out})
-    n_added = 0
-    n_rewritten = 0
-    for pvals, rels in groups:
-        if row_ids.on:
-            rt_read_schema = T.StructType(
-                list(data_schema.fields)
-                + [
-                    T.StructField(rid_col, T.LongType()),
-                    T.StructField(rcv_col, T.LongType()),
-                ]
-            )
-            df = _with_materialized_row_ids(
-                spark,
-                base,
-                rels,
-                state.adds,
-                rt_read_schema,
-                rid_col,
-                rcv_col,
-                dv_ver=dv_ver,
-            )
-        else:
-            df = spark.read.schema(data_schema).parquet(
-                *[os.path.join(base, r) for r in rels]
-            )
-            df = _apply_dv_filter(spark, df, base, dv_ver, rels)
-        total = sum(sizes[r] for r in rels)
-        n_out = max(1, -(-total // target_file_bytes))
-        if zorder_by:
-            from lcr_etl_upgrade_spark.operators.layout import optimize_layout
-
-            df = optimize_layout(
-                df,
-                [logical_to_phys[c] for c in zorder_by],
-                n_out,
-                bits=zorder_bits,
-            )
-        else:
-            df = df.coalesce(n_out)
-        # stage flat, then move into this partition's hive directory so
-        # the layout invariant every reader fast-path relies on holds
-        part_dir = os.path.dirname(rels[0])
-        staging = os.path.join(base, f"_staging-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        try:
-            for name in sorted(os.listdir(staging)):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(staging, name)
-                rel_new = os.path.join(part_dir, name) if part_dir else name
-                dst = os.path.join(base, rel_new)
-                os.makedirs(os.path.dirname(dst) or base, exist_ok=True)
-                size = os.path.getsize(src)
-                shutil.move(src, dst)
-                add = {
-                    "path": urllib.parse.quote(rel_new, safe="/="),
-                    "partitionValues": pvals,
-                    "size": size,
-                    "modificationTime": now_ms,
-                    "dataChange": False,
-                }
-                stats = _file_stats_json(dst)
-                if stats is not None:
-                    add["stats"] = stats
-                row_ids.assign(add, stats, version, path)
-                actions.append({"add": add})
-                n_added += 1
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        for rel in rels:
-            actions.append(
-                _remove_action(state, rel, now_ms, data_change=False)
-            )
-            n_rewritten += 1
-    if row_ids.drawn:
-        actions.append(row_ids.watermark())
-    actions[0]["commitInfo"]["operationMetrics"] = {
-        "numRemovedFiles": str(n_rewritten),
-        "numAddedFiles": str(n_added),
-    }
-    commit_path = os.path.join(_log_dir(path), f"{version:020d}.json")
-    _write_commit_file(commit_path, actions)
-    return {"version": version, "rewritten": n_rewritten, "added": n_added}
+            lambda adds, removes: {
+                "numRemovedFiles": str(removes),
+                "numAddedFiles": str(adds),
+            },
+        )
+    return {"version": version, "rewritten": n_removed, "added": n_added}
 
 
 # ---------------------------------------------------------------------------
@@ -5907,34 +5636,6 @@ def _schema_references(
     return refs
 
 
-def _alter_commit(
-    path: str, state, meta_out: dict, operation: str, params: dict,
-    extra_actions: list[dict] | None = None,
-) -> int:
-    import time as _time
-
-    version = state.version + 1
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": int(_time.time() * 1000),
-            "operation": operation,
-            "operationParameters": params,
-        }
-    }]
-    actions.extend(extra_actions or [])
-    actions.append(
-        {
-            "metaData": _fold_lineage_names(
-                meta_out, state.historical_physical_names
-            )
-        }
-    )
-    _write_commit_file(
-        os.path.join(_log_dir(path), f"{version:020d}.json"), actions
-    )
-    return version
-
-
 def add_columns(
     spark: SparkSession, path: str, fields: list[T.StructField]
 ) -> int:
@@ -5947,10 +5648,10 @@ def add_columns(
     ids above maxColumnId. Returns the committed version."""
     if not fields:
         raise ValueError("add_columns needs at least one field")
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
+    tw = _TableWrite(spark, path, "add_columns")
+    state = tw.state
     schema = state.schema
-    mapping = _column_mapping_mode(state.metadata)
+    mapping = tw.mapping
     existing = {f.name for f in schema.fields}
     first_lower: dict[str, str] = {}
     for c in existing:
@@ -5996,9 +5697,9 @@ def add_columns(
         )
         meta_out["configuration"] = cfg
     meta_out["schemaString"] = new_schema.json()
-    return _alter_commit(
-        path, state, meta_out, "ADD COLUMNS",
-        {"columns": json.dumps([f.name for f in fields])},
+    tw.set_metadata(meta_out)
+    return tw.commit(
+        "ADD COLUMNS", {"columns": json.dumps([f.name for f in fields])}
     )
 
 
@@ -6013,10 +5714,9 @@ def rename_column(
     Refuses when a CHECK constraint or generated-column expression
     references the old name (drop/redefine those first, as delta-spark
     requires). Returns the committed version."""
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
-    mapping = _column_mapping_mode(state.metadata)
-    if mapping not in ("name", "id"):
+    tw = _TableWrite(spark, path, "rename_column")
+    state = tw.state
+    if tw.mapping not in ("name", "id"):
         raise NotImplementedError(
             "RENAME COLUMN requires delta.columnMapping.mode name/id "
             "(without mapping the logical name is the physical parquet "
@@ -6055,9 +5755,9 @@ def rename_column(
         meta_out["partitionColumns"] = [
             new if c == old else c for c in state.partition_columns
         ]
-    return _alter_commit(
-        path, state, meta_out, "RENAME COLUMN",
-        {"oldColumnPath": old, "newColumnPath": new},
+    tw.set_metadata(meta_out)
+    return tw.commit(
+        "RENAME COLUMN", {"oldColumnPath": old, "newColumnPath": new}
     )
 
 
@@ -6070,10 +5770,9 @@ def drop_column(spark: SparkSession, path: str, name: str) -> int:
     data (the protocol's rule). Refuses for partition columns, columns
     referenced by constraints / generated columns, and the last
     remaining column. Returns the committed version."""
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
-    mapping = _column_mapping_mode(state.metadata)
-    if mapping not in ("name", "id"):
+    tw = _TableWrite(spark, path, "drop_column")
+    state = tw.state
+    if tw.mapping not in ("name", "id"):
         raise NotImplementedError(
             "DROP COLUMN requires delta.columnMapping.mode name/id "
             "(without mapping, readers would resolve the physical "
@@ -6100,10 +5799,8 @@ def drop_column(spark: SparkSession, path: str, name: str) -> int:
     meta_out["schemaString"] = T.StructType(
         [f for f in schema.fields if f.name != name]
     ).json()
-    return _alter_commit(
-        path, state, meta_out, "DROP COLUMNS",
-        {"columns": json.dumps([name])},
-    )
+    tw.set_metadata(meta_out)
+    return tw.commit("DROP COLUMNS", {"columns": json.dumps([name])})
 
 
 def add_check_constraint(
@@ -6116,8 +5813,8 @@ def add_check_constraint(
     protocol to cover checkConstraints (legacy tier 3, or the feature
     on v7 tables). Every later write enforces it via the staging-write
     observer. Returns the committed version."""
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
+    tw = _TableWrite(spark, path, "add_check_constraint")
+    state = tw.state
     key = f"delta.constraints.{name.lower()}"
     cfg = dict((state.metadata or {}).get("configuration") or {})
     if key in cfg:
@@ -6140,24 +5837,15 @@ def add_check_constraint(
     cfg[key] = sql
     meta_out = dict(state.metadata)
     meta_out["configuration"] = cfg
-    extra: list[dict] = []
+    tw.set_metadata(meta_out)
     proto = state.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
-    writer_v = int(proto.get("minWriterVersion", 2))
-    if writer_v == 7:
-        feats = set(proto.get("writerFeatures") or ())
-        if "checkConstraints" not in feats:
-            feats.add("checkConstraints")
-            pact = dict(proto)
-            pact["writerFeatures"] = sorted(feats)
-            extra.append({"protocol": pact})
-    elif writer_v < 3:
-        pact = dict(proto)
-        pact["minWriterVersion"] = 3
-        extra.append({"protocol": pact})
-    return _alter_commit(
-        path, state, meta_out, "ADD CONSTRAINT",
-        {"name": name.lower(), "expr": sql},
-        extra_actions=extra,
+    if int(proto.get("minWriterVersion", 2)) < 3:
+        # a legacy table moves up one tier, not to table features
+        tw.actions.append({"protocol": {**proto, "minWriterVersion": 3}})
+    else:
+        tw.features.add("checkConstraints")
+    return tw.commit(
+        "ADD CONSTRAINT", {"name": name.lower(), "expr": sql}
     )
 
 
@@ -6166,8 +5854,8 @@ def drop_check_constraint(
 ) -> int:
     """ALTER TABLE ... DROP CONSTRAINT. Returns the committed
     version."""
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
+    tw = _TableWrite(spark, path, "drop_check_constraint")
+    state = tw.state
     key = f"delta.constraints.{name.lower()}"
     cfg = dict((state.metadata or {}).get("configuration") or {})
     if key not in cfg:
@@ -6175,20 +5863,19 @@ def drop_check_constraint(
     cfg.pop(key)
     meta_out = dict(state.metadata)
     meta_out["configuration"] = cfg
-    return _alter_commit(
-        path, state, meta_out, "DROP CONSTRAINT",
-        {"name": name.lower()},
-    )
+    tw.set_metadata(meta_out)
+    return tw.commit("DROP CONSTRAINT", {"name": name.lower()})
 
 
-# Properties whose ENABLEMENT obligates a writer feature the commit
+# Properties whose ENABLING value obligates a table feature the commit
 # must also declare (delta-spark's SET TBLPROPERTIES does the same
-# implicit protocol upgrade). readerFeature is None for writer-only
-# features.
-_PROPERTY_FEATURES: dict[str, tuple[str, str | None]] = {
-    "delta.enablechangedatafeed": ("changeDataFeed", None),
-    "delta.enabledeletionvectors": ("deletionVectors", "deletionVectors"),
-    "delta.appendonly": ("appendOnly", None),
+# implicit protocol upgrade; _protocol_with decides reader+writer vs
+# writer-only and whether the table already has it).
+_PROPERTY_FEATURES: dict[str, tuple[str, str]] = {
+    "delta.enablechangedatafeed": ("true", "changeDataFeed"),
+    "delta.enabledeletionvectors": ("true", "deletionVectors"),
+    "delta.appendonly": ("true", "appendOnly"),
+    "delta.checkpointpolicy": ("v2", "v2Checkpoint"),
 }
 
 
@@ -6203,9 +5890,9 @@ def set_table_properties(
     — and is the public enablement path for the feature-gated write
     behaviors (``delta.enableChangeDataFeed`` for CDF writes,
     ``delta.enableDeletionVectors`` for update_rows' DV path,
-    ``delta.appendOnly``): enabling one of those upgrades the protocol
-    to carry its feature in the same commit, exactly as delta-spark's
-    SET TBLPROPERTIES does implicitly.
+    ``delta.appendOnly``, ``delta.checkpointPolicy=v2``): enabling one
+    of those upgrades the protocol to carry its feature in the same
+    commit, exactly as delta-spark's SET TBLPROPERTIES does implicitly.
 
     Refusals (each names the right tool): ``delta.columnMapping.*``
     (mode changes are a migration, not a property set),
@@ -6213,10 +5900,16 @@ def set_table_properties(
     rows first), ``delta.enableRowTracking`` (enablement requires a
     baseRowId backfill this command does not perform — write the table
     with row tracking instead). Returns the committed version."""
-    state = replay_log(spark, path)
-    _check_writer_protocol(state.protocol, path)
-    set_props = dict(set_props or {})
-    cfg = dict((state.metadata or {}).get("configuration") or {})
+    return _set_properties(
+        _TableWrite(spark, path, "set_table_properties"),
+        dict(set_props or {}),
+        unset,
+    )
+
+
+def _set_properties(tw: _TableWrite, set_props: dict, unset) -> int:
+    """set_table_properties' commit on an already-built context."""
+    cfg = dict(tw.config)
     for key in list(set_props) + list(unset):
         low = key.lower()
         if low.startswith("delta.columnmapping."):
@@ -6242,69 +5935,18 @@ def set_table_properties(
         # case-insensitively would mutate keys we don't own, so exact
         cfg.pop(key, None)
     cfg.update({str(k): str(v) for k, v in set_props.items()})
-
-    # implicit protocol obligations for newly-enabled feature gates
-    proto = state.protocol or {
-        "minReaderVersion": 1, "minWriterVersion": 2,
-    }
-    reader_feats = set(proto.get("readerFeatures") or ())
-    writer_feats = set(proto.get("writerFeatures") or ())
-    need: list[tuple[str, str | None]] = []
     for k, v in set_props.items():
-        feat = _PROPERTY_FEATURES.get(k.lower())
-        if feat and str(v).lower() == "true":
-            wf, rf = feat
-            implied = wf in writer_feats or (
-                wf == "changeDataFeed"
-                and int(proto.get("minWriterVersion", 2)) >= 4
-            ) or (
-                wf == "appendOnly"
-                and int(proto.get("minWriterVersion", 2)) >= 2
-            )
-            if not implied:
-                need.append(feat)
-    extra_actions: list[dict] = []
-    if need:
-        for wf, rf in need:
-            writer_feats.add(wf)
-            if rf:
-                reader_feats.add(rf)
-        if (pw := int(proto.get("minWriterVersion", 2))) < 7:
-            # legacy upgrade carries the FULL implicit feature set of
-            # its tier, or downstream writers stop enforcing
-            writer_feats |= _implicit_legacy_writer_features(pw)
-        if reader_feats and (
-            _column_mapping_mode(state.metadata) != "none"
-            or int(proto.get("minReaderVersion", 1)) == 2
-        ):
-            # a column-mapped (or legacy reader-v2) table upgrading to
-            # reader v3 must list its implicit columnMapping requirement
-            reader_feats.add("columnMapping")
-            writer_feats.add("columnMapping")
-        new_proto: dict = {
-            "minReaderVersion": 3
-            if reader_feats
-            else int(proto.get("minReaderVersion", 1)),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(writer_feats),
-        }
-        if reader_feats:
-            new_proto["readerFeatures"] = sorted(reader_feats)
-        extra_actions.append({"protocol": new_proto})
-
-    meta_out = dict(state.metadata)
-    meta_out["configuration"] = cfg
-    return _alter_commit(
-        path,
-        state,
-        meta_out,
+        value, feature = _PROPERTY_FEATURES.get(k.lower(), (None, None))
+        if str(v).lower() == value:
+            tw.features.add(feature)
+    tw.set_metadata({**tw.state.metadata, "configuration": cfg})
+    return tw.commit(
         "SET TBLPROPERTIES" if set_props else "UNSET TBLPROPERTIES",
         {
             "properties": json.dumps(set_props)
             if set_props
             else json.dumps(sorted(unset)),
         },
-        extra_actions=extra_actions,
     )
 
 
@@ -6400,8 +6042,6 @@ def convert_to_delta(
     - refuses when a ``_delta_log`` already exists.
 
     Returns the committed version (0)."""
-    import time as _time
-
     base = _local(path)
     log = _log_dir(path)
     if os.path.isdir(log) and any(
@@ -6485,30 +6125,15 @@ def convert_to_delta(
         list(data_schema.fields)
         + list((partition_schema or T.StructType()).fields)
     )
-    now_ms = int(_time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CONVERT",
-                "operationParameters": {
-                    "numFiles": str(len(rels)),
-                    "partitionedBy": json.dumps(part_cols),
-                },
-            }
-        },
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": full_schema.json(),
-                "partitionColumns": part_cols,
-                "configuration": {},
-                "createdTime": now_ms,
-            }
-        },
-    ]
+    tw = _TableWrite(spark, path, "convert_to_delta", create=True)
+    tw.set_metadata({
+        "id": str(uuid.uuid4()),
+        "format": {"provider": "parquet", "options": {}},
+        "schemaString": full_schema.json(),
+        "partitionColumns": part_cols,
+        "configuration": {},
+        "createdTime": tw.now_ms,
+    })
     for rel, pvals in rels:
         full = os.path.join(base, rel)
         add = {
@@ -6521,10 +6146,11 @@ def convert_to_delta(
         stats = _file_stats_json(full)
         if stats is not None:
             add["stats"] = stats
-        actions.append({"add": add})
-    os.makedirs(log, exist_ok=True)
-    _write_commit_file(os.path.join(log, f"{0:020d}.json"), actions)
-    return 0
+        tw.actions.append({"add": add})
+    return tw.commit(
+        "CONVERT",
+        {"numFiles": str(len(rels)), "partitionedBy": json.dumps(part_cols)},
+    )
 
 
 def table_history(path: str) -> list[dict]:
@@ -6620,9 +6246,8 @@ def restore_table(
         )
     if timestamp is not None:
         version = version_at_timestamp(path, timestamp, allow_future=True)
-    cur = replay_log(spark, path)
-    _check_writer_protocol(cur.protocol, path)
-    _check_write_obligations(cur, path, "restore")
+    tw = _TableWrite(spark, path, "restore_table")
+    cur = tw.state
     version = int(version)
     if version > cur.version:
         raise ValueError(
@@ -6700,31 +6325,19 @@ def restore_table(
                     f"unresolvable ({exc}); was it vacuumed?"
                 ) from exc
 
-    import time as _time
-
-    now_ms = int(_time.time() * 1000)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "RESTORE",
-            # delta-spark serializes every operationParameters value as
-            # a string; history-parsing tools assume that encoding
-            "operationParameters": {"version": str(version)},
-        }
-    }]
     if meta_changed:
-        actions.append({"metaData": tgt.metadata})
+        tw.meta_out = tgt.metadata
     # removes first, adds second: _apply_action retires a file only when
     # the remove's DV identity matches the tracked one, so either order
     # reconciles to the same state — this one also nets correctly under
     # a naive sequential applier
-    actions.extend(_remove_action(cur, rel, now_ms) for rel in to_remove)
+    tw.actions.extend(_remove_action(cur, rel, tw.now_ms) for rel in to_remove)
     for rel in to_add:
         add = {
             "path": urllib.parse.quote(rel, safe="/="),
             "partitionValues": dict(tgt.files[rel]),
             "size": os.path.getsize(os.path.join(base, rel)),
-            "modificationTime": now_ms,
+            "modificationTime": tw.now_ms,
             "dataChange": True,
         }
         if rel in tgt.dvs:
@@ -6734,16 +6347,18 @@ def restore_table(
         # replay would otherwise erase it relative to the snapshot
         # being restored
         add.update(tgt.adds.get(rel) or {})
-        actions.append({"add": add})
-    actions[0]["commitInfo"]["operationMetrics"] = {
-        "numRestoredFiles": str(len(to_add)),
-        "numRemovedFiles": str(len(to_remove)),
-    }
-    new_version = cur.version + 1
-    commit_path = os.path.join(_log_dir(path), f"{new_version:020d}.json")
-    _write_commit_file(commit_path, actions)
+        tw.actions.append({"add": add})
     return {
-        "version": new_version,
+        "version": tw.commit(
+            "RESTORE",
+            # delta-spark serializes every operationParameters value as
+            # a string; history-parsing tools assume that encoding
+            {"version": str(version)},
+            lambda _adds, _removes: {
+                "numRestoredFiles": str(len(to_add)),
+                "numRemovedFiles": str(len(to_remove)),
+            },
+        ),
         "added": len(to_add),
         "removed": len(to_remove),
         "metadata_restored": meta_changed,

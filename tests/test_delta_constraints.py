@@ -136,6 +136,31 @@ def test_multi_row_violation_reports_counts(spark, tmp_path):
         )
 
 
+def test_dml_violation_reports_names_expressions_and_counts(
+    spark, tmp_path
+):
+    """UPDATE and MERGE stage through the same constraint observer as
+    WRITE, so their refusals carry the same detail: each violated
+    constraint's name, expression and row count."""
+    from lcr_etl_upgrade_spark.delta_lite import merge_rows, update_rows
+
+    path = str(tmp_path / "t")
+    write_delta_lite(spark.range(1, 5).select("id"), path)
+    _add_constraint(path, "small", "id < 10")
+    with pytest.raises(ValueError,
+                       match=r"'small' \('id < 10'\): 2 row\(s\)"):
+        update_rows(spark, path, "id < 3", {"id": "id + 20"})
+    with pytest.raises(ValueError,
+                       match=r"'small' \('id < 10'\): 1 row\(s\)"):
+        merge_rows(
+            spark, path, spark.range(30, 31).select("id"),
+            "t.id = s.id", not_matched=(("insert", None, {"id": "s.id"}),),
+        )
+    assert {r.id for r in read_delta_lite(spark, path).collect()} == {
+        1, 2, 3, 4,
+    }
+
+
 def test_merge_schema_omitted_column_evaluates_as_null(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta_lite(

@@ -1611,6 +1611,96 @@ def test_write_column_mapping_id_stamps_field_ids(spark, tmp_path):
     assert [r.id for r in got.collect()] == [1]
 
 
+def test_dml_and_optimize_files_carry_field_ids(spark, tmp_path):
+    """Every writer stages through the same physical layout, so files
+    that UPDATE and OPTIMIZE write to an id-mode table carry the same
+    parquet field ids as WRITE's (what id-mode readers resolve by)."""
+    import pyarrow.parquet as pq
+
+    import lcr_etl_upgrade_spark.delta_lite as dl
+
+    path = str(tmp_path / "t")
+    write_delta_lite(_df(spark, [(1, "a")]), path, column_mapping="id")
+    write_delta_lite(_df(spark, [(2, "b")]), path, mode="append")
+    dl.update_rows(spark, path, "id = 1", {"name": "'z'"})
+    written = set(replay_log(spark, path).files)
+    dl.optimize(spark, path)
+    state = replay_log(spark, path)
+    written |= set(state.files)
+    by_phys = {
+        f.metadata["delta.columnMapping.physicalName"]: f.metadata[
+            "delta.columnMapping.id"
+        ]
+        for f in state.schema.fields
+    }
+    for rel in written:
+        for field in pq.read_schema(os.path.join(path, rel)):
+            assert int(field.metadata[b"PARQUET:field_id"]) == (
+                by_phys[field.name]
+            ), rel
+    got = {(r.id, r.name) for r in read_delta_lite(spark, path).collect()}
+    assert got == {(1, "z"), (2, "b")}
+
+
+def test_append_frame_with_nullable_nested_types(spark, tmp_path):
+    """An append whose frame has the table's types but looser NESTED
+    nullability (a nullable array element or struct field where the
+    table's are non-null) is written as it is: Spark cannot cast
+    nullable to non-null, and the append gate compares types without
+    nullability."""
+    path = str(tmp_path / "t")
+    write_delta_lite(
+        _df(spark, [(1, "a b")], "id long, s string").select(
+            "id",
+            F.split("s", " ").alias("tags"),
+            F.struct(F.lit(1).alias("k")).alias("info"),
+        ),
+        path,
+    )
+    table = replay_log(spark, path).schema
+    assert not table["tags"].dataType.containsNull
+    assert not table["info"].dataType["k"].nullable
+    write_delta_lite(
+        _df(spark, [(2, ["x", "y"], (3,))],
+            "id long, tags array<string>, info struct<k:int>"),
+        path,
+        mode="append",
+    )
+    got = {
+        (r.id, tuple(r.tags), r.info.k)
+        for r in read_delta_lite(spark, path).collect()
+    }
+    assert got == {(1, ("a", "b"), 1), (2, ("x", "y"), 3)}
+
+
+def test_unknown_column_mapping_mode_refuses_every_command(spark, tmp_path):
+    """A column-mapping mode this writer does not know refuses in every
+    committing command, metadata-only ones included: they all derive
+    the table's schema view the same way."""
+    from pyspark.sql import types as T
+
+    import lcr_etl_upgrade_spark.delta_lite as dl
+
+    path = str(tmp_path / "t")
+    write_delta_lite(_df(spark, [(1, "a")]), path)
+    meta = dict(replay_log(spark, path).metadata)
+    meta["configuration"] = {"delta.columnMapping.mode": "future"}
+    with open(os.path.join(path, "_delta_log", f"{1:020d}.json"),
+              "w") as fh:
+        fh.write(json.dumps({"metaData": meta}) + "\n")
+    for command in (
+        lambda: dl.set_table_properties(spark, path, {"owner": "etl"}),
+        lambda: dl.add_columns(
+            spark, path, [T.StructField("extra", T.StringType())]
+        ),
+        lambda: write_delta_lite(_df(spark, [(2, "b")]), path,
+                                 mode="append"),
+    ):
+        with pytest.raises(NotImplementedError, match="future"):
+            command()
+    assert replay_log(spark, path).version == 1
+
+
 def test_write_column_mapping_append_and_stability(spark, tmp_path):
     """Appends inherit the mapping (no column_mapping arg needed) and an
     overwrite REUSES the physical names and ids of surviving logical
@@ -2036,6 +2126,22 @@ def test_append_only_table_refuses_non_appends(spark, tmp_path):
         write_delta_lite(_df(spark, [(9, "z")]), path, mode="overwrite")
     with pytest.raises(ValueError, match="appendOnly"):
         dl.delete_rows(spark, path, "id = 1")
+    with pytest.raises(ValueError, match="appendOnly"):
+        dl.update_rows(spark, path, "id = 1", {"name": "'q'"})
+    with pytest.raises(ValueError, match="appendOnly"):
+        dl.merge_rows(
+            spark, path, _df(spark, [(1, "m")]), "t.id = s.id",
+            matched=(("delete", None),),
+        )
+    with pytest.raises(ValueError, match="appendOnly"):
+        dl.restore_table(spark, path, version=0)
+    # commands that retire no live row stay allowed: a dataChange=false
+    # compaction and the metadata-only ALTER family
+    assert dl.optimize(spark, path)["version"] is not None
+    from pyspark.sql import types as T
+
+    dl.add_columns(spark, path, [T.StructField("extra", T.StringType())])
+    dl.set_table_properties(spark, path, {"owner": "etl"})
     assert {r.id for r in read_delta_lite(spark, path).collect()} == {1, 2}
 
 

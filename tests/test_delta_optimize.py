@@ -9,6 +9,7 @@ materialize away, and the z-order variant clusters footer stats.
 from __future__ import annotations
 
 import glob
+import json
 import os
 from collections import Counter
 
@@ -104,6 +105,159 @@ def test_optimize_respects_partitions(spark, tmp_path):
     # never mix partition values
     for rel, pvals in state.files.items():
         assert f"p={pvals['p']}" in rel
+
+
+def _two_partitions_one_deleted(spark, path):
+    """Two partitions of two files each; every row of p=1 is then
+    masked by deletion vectors."""
+    for lo in (0, 40):
+        write_delta_lite(
+            spark.range(lo, lo + 40)
+            .select("id", (F.col("id") % 2).cast("long").alias("p"))
+            .coalesce(1),
+            path,
+            mode="append",
+            partition_by=("p",),
+        )
+    delete_rows(spark, path, "p = 1")
+
+
+def _commit_actions(path, version):
+    with open(os.path.join(path, "_delta_log", f"{version:020d}.json")) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
+def test_optimize_drops_zero_row_rewrites(spark, tmp_path):
+    """A rewrite group whose rows are all deleted commits no add — the
+    zero-row rule every other writer follows — and ``added`` counts
+    only the files that hold rows."""
+    path = str(tmp_path / "t")
+    _two_partitions_one_deleted(spark, path)
+    before = _snap(spark, path, ["id", "p"])
+    res = optimize(spark, path)
+    adds = [a["add"] for a in _commit_actions(path, res["version"])
+            if "add" in a]
+    assert res["rewritten"] == 4
+    assert res["added"] == len(adds) == 1
+    assert adds[0]["partitionValues"] == {"p": "0"}
+    assert json.loads(adds[0]["stats"])["numRecords"] == 40
+    assert _snap(spark, path, ["id", "p"]) == before
+    assert not replay_log(spark, path).dvs
+
+
+def test_optimize_rolls_back_on_lost_commit_race(
+    spark, tmp_path, monkeypatch
+):
+    """A lost version race unstages every rewritten file: the table
+    directory holds exactly the files it held before."""
+    import lcr_etl_upgrade_spark.delta_lite as dl
+
+    path = str(tmp_path / "t")
+    _two_partitions_one_deleted(spark, path)
+
+    def _data_files():
+        return sorted(
+            os.path.relpath(f, path)
+            for f in glob.glob(os.path.join(path, "**", "*.parquet"),
+                               recursive=True)
+            if "_delta_log" not in f
+        )
+
+    before = _data_files()
+
+    def _lose_race(commit_path, actions):
+        raise FileExistsError(commit_path)
+
+    monkeypatch.setattr(dl, "_write_commit_file", _lose_race)
+    with pytest.raises(FileExistsError):
+        optimize(spark, path)
+    assert _data_files() == before
+
+
+def _external_log(path, meta, adds):
+    """Hand-write version 0 of an externally authored table."""
+    os.makedirs(os.path.join(path, "_delta_log"))
+    with open(os.path.join(path, "_delta_log", f"{0:020d}.json"),
+              "w") as fh:
+        fh.write(json.dumps({"protocol": {
+            "minReaderVersion": meta.pop("reader", 1),
+            "minWriterVersion": meta.pop("writer", 2),
+        }}) + "\n")
+        fh.write(json.dumps({"metaData": meta}) + "\n")
+        for rel, pvals in adds:
+            fh.write(json.dumps({"add": {
+                "path": rel, "partitionValues": pvals,
+                "size": os.path.getsize(os.path.join(path, rel)),
+                "modificationTime": 0, "dataChange": True,
+            }}) + "\n")
+
+
+def _flat_file(spark, path, name, df):
+    sub = os.path.join(path, f"stage-{name}")
+    df.coalesce(1).write.parquet(sub)
+    f = next(n for n in os.listdir(sub) if n.endswith(".parquet"))
+    os.rename(os.path.join(sub, f), os.path.join(path, name))
+
+
+def _field(name, dtype, phys=None, fid=None):
+    meta = {} if phys is None else {
+        "delta.columnMapping.physicalName": phys,
+        "delta.columnMapping.id": fid,
+    }
+    return {"name": name, "type": dtype, "nullable": True, "metadata": meta}
+
+
+def test_optimize_compacts_non_hive_partitioned_layout(spark, tmp_path):
+    """A partitioned table whose file paths do not encode the partition
+    values (flat data-N.parquet files) compacts: the rewrite reads the
+    data columns only and takes partitionValues from the log."""
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    adds = []
+    for i, part in enumerate((1, 1, 2, 2)):
+        _flat_file(spark, path, f"data-{i}.parquet",
+                   spark.range(10 * i, 10 * i + 5).select("id"))
+        adds.append((f"data-{i}.parquet", {"part": str(part)}))
+    _external_log(path, {
+        "id": "0000", "format": {"provider": "parquet", "options": {}},
+        "schemaString": json.dumps({"type": "struct", "fields": [
+            _field("id", "long"), _field("part", "integer")]}),
+        "partitionColumns": ["part"], "configuration": {},
+    }, adds)
+    before = _snap(spark, path, ["id", "part"])
+    res = optimize(spark, path)
+    assert (res["rewritten"], res["added"]) == (4, 2)
+    state = replay_log(spark, path)
+    assert sorted(v["part"] for v in state.files.values()) == ["1", "2"]
+    assert _snap(spark, path, ["id", "part"]) == before
+
+
+def test_optimize_refuses_mapped_files_without_physical_names(
+    spark, tmp_path
+):
+    """On a column-mapped table whose files carry other names than the
+    physical ones (a foreign writer resolving by field id), OPTIMIZE
+    refuses like every other command that scans files, instead of
+    rewriting every column as NULL."""
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    adds = []
+    for i in range(2):
+        _flat_file(spark, path, f"data-{i}.parquet",
+                   spark.range(i * 5, i * 5 + 5).select("id"))
+        adds.append((f"data-{i}.parquet", {}))
+    _external_log(path, {
+        "reader": 2, "writer": 5,
+        "id": "0000", "format": {"provider": "parquet", "options": {}},
+        "schemaString": json.dumps({"type": "struct", "fields": [
+            _field("id", "long", "col-aaa", 1)]}),
+        "partitionColumns": [],
+        "configuration": {"delta.columnMapping.mode": "id",
+                          "delta.columnMapping.maxColumnId": "1"},
+    }, adds)
+    with pytest.raises(NotImplementedError, match="field-id resolution"):
+        optimize(spark, path)
+    assert replay_log(spark, path).version == 0
 
 
 def test_optimize_zorder_clusters_footers(spark, tmp_path):

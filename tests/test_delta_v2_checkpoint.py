@@ -262,8 +262,11 @@ def test_two_v2_checkpoints_discovery_picks_right_version(
 def test_auto_checkpoint_hook_writes_v2_on_upgraded_table(
     spark, tmp_path, monkeypatch
 ):
-    """write_delta_lite's best-effort every-CHECKPOINT_INTERVAL hook
-    must emit the v2 layout once the feature is on."""
+    """The best-effort every-CHECKPOINT_INTERVAL hook is the commit
+    tail's, so EVERY command reaches it — here OPTIMIZE and an ALTER
+    land the checkpoint versions — and it emits the v2 layout once the
+    feature is on. Every commit carries a commitInfo, the v2 enablement
+    included."""
     import lcr_etl_upgrade_spark.delta_lite as dl
 
     monkeypatch.setattr(dl, "CHECKPOINT_INTERVAL", 3)
@@ -273,15 +276,26 @@ def test_auto_checkpoint_hook_writes_v2_on_upgraded_table(
     write_delta_lite(
         spark.range(3, 5).selectExpr("id"), path, mode="append"    # v2
     )
+    assert dl.optimize(spark, path)["version"] == 3                # v3
     write_delta_lite(
-        spark.range(5, 6).selectExpr("id"), path, mode="append"    # v3
+        spark.range(5, 6).selectExpr("id"), path, mode="append"    # v4
     )
+    write_delta_lite(
+        spark.range(6, 7).selectExpr("id"), path, mode="append"    # v5
+    )
+    assert dl.set_table_properties(spark, path, {"owner": "etl"}) == 6
     log = os.listdir(os.path.join(path, "_delta_log"))
-    assert any(
-        f.startswith(f"{3:020d}.checkpoint.") and f.endswith(".parquet")
-        and V2_NAME.match(f)
-        for f in log
-    ), log
+    for v in (3, 6):
+        assert any(
+            f.startswith(f"{v:020d}.checkpoint.") and V2_NAME.match(f)
+            for f in log
+        ), (v, log)
+    ops = [h["operation"] for h in dl.table_history(path)]
+    assert None not in ops, ops
+    assert ops[-2] == "SET TBLPROPERTIES", ops
+    assert {r.id for r in read_delta_lite(spark, path).collect()} == set(
+        range(7)
+    )
 
 
 # ---- cleanup_log ----------------------------------------------------------

@@ -31,13 +31,17 @@ bench.py:
     whose every file already carries a deletion vector under a 1% DV
     update (CDF off and on) and a 1% DV merge, so the new masks union
     with the old.
+  write_delta_lite appending 50k and 1M rows to the uniform table and
+    overwriting it with 5M (32 files); bin-packing optimize on the
+    uniform table (every file compacts) and on the DV-bearing one
+    (every deletion vector materializes).
   vacuum(retain_hours=1) with ~64 and ~512 expired files (appends
     backdated past the horizon, then overwritten dead): wall-time must
     scale with the file count at unlink cost, never opening data.
 
 Output: one JSON artifact (default BENCH_writes_r12.json) with
-per-config best/spread, touched-file, deletion-vector, added-byte and
-change-row counts, plus the Spark jobs one command ran.
+per-config best/spread, touched-file, added-file, deletion-vector,
+added-byte and change-row counts, plus the Spark jobs one command ran.
 
 Usage: python tools/scale_writes.py [--reps 3] [--out BENCH_writes_r12.json]
 """
@@ -85,15 +89,9 @@ def _gated(rec: dict, key: str, fn, *a, **k) -> None:
 
 
 def _build_template(spark, out: str, clustered: bool) -> None:
-    from pyspark.sql import functions as F
-
     from lcr_etl_upgrade_spark.delta_lite import write_delta_lite
 
-    df = spark.range(0, N_ROWS).select(
-        "id",
-        (F.col("id") % 997).alias("v"),
-        F.sha1(F.col("id").cast("string")).alias("s"),
-    )
+    df = _rows(spark, 0, N_ROWS)
     if clustered:
         df = df.repartitionByRange(N_FILES, "id")
     else:
@@ -256,6 +254,10 @@ def measure_dv_layouts(spark, uniform: str, scratch: str, reps: int,
         rec, "merge_1pct_dv_dvtable_nocdf", measure_merge,
         spark, dvtable, scratch, False, reps, sel="1pct",
     )
+    _gated(
+        rec, "optimize_dvtable", measure_optimize,
+        spark, dvtable, scratch, reps,
+    )
 
 
 def _fresh_copy(template: str, scratch: str) -> str:
@@ -323,6 +325,7 @@ def _measure_dml(spark, template, scratch, cdf, reps, dvs, command,
             # rewritten files leave the live set; DV'd files stay (same
             # path, remove(old)+add(same path + deletionVector))
             "touched_files": len(before - set(after.files)),
+            "files_added": len(set(after.files) - before),
             "dv_files": len(after.dvs),
             "bytes_added": _bytes_added(path, before, after),
             "jobs": jobs,
@@ -403,6 +406,44 @@ def measure_merge(spark, template, scratch, cdf, reps, dvs=False, sel="half"):
     )
     src.unpersist()
     return out
+
+
+def _rows(spark, lo: int, n: int):
+    """``n`` rows of the templates' schema with ids from ``lo``."""
+    from pyspark.sql import functions as F
+
+    return spark.range(lo, lo + n).select(
+        "id",
+        (F.col("id") % 997).alias("v"),
+        F.sha1(F.col("id").cast("string")).alias("s"),
+    )
+
+
+def measure_write(spark, template, scratch, mode, n, reps):
+    """write_delta_lite of ``n`` fresh rows: ``append`` adds them to the
+    table, ``overwrite`` replaces all of it (32 files, like the
+    template)."""
+    from lcr_etl_upgrade_spark.delta_lite import write_delta_lite
+
+    df = _rows(spark, N_ROWS, n)
+    if mode == "overwrite":
+        df = df.repartition(N_FILES)
+    return _measure_dml(
+        spark, template, scratch, False, reps, False,
+        lambda path: write_delta_lite(df, path, mode=mode),
+    )
+
+
+def measure_optimize(spark, template, scratch, reps):
+    """Bin-packing OPTIMIZE: every file of the template is below the
+    128 MB target, so all of them compact (materializing any deletion
+    vectors)."""
+    from lcr_etl_upgrade_spark.delta_lite import optimize
+
+    return _measure_dml(
+        spark, template, scratch, False, reps, False,
+        lambda path: optimize(spark, path)["version"],
+    )
 
 
 def measure_vacuum(spark, scratch, n_dead, reps):
@@ -570,6 +611,21 @@ def main() -> int:
                 measure_delete,
                 spark, uniform, scratch, "id % 100 = 0", cdf, args.reps,
             )
+        # WRITE (the sync stage's overwrite, drip-fed appends) and
+        # bin-packing OPTIMIZE over the same uniform table
+        for name, n in (("append_50k", 50_000), ("append_1m", 1_000_000)):
+            _gated(
+                rec, name, measure_write,
+                spark, uniform, scratch, "append", n, args.reps,
+            )
+        _gated(
+            rec, "overwrite", measure_write,
+            spark, uniform, scratch, "overwrite", N_ROWS, args.reps,
+        )
+        _gated(
+            rec, "optimize_compact", measure_optimize,
+            spark, uniform, scratch, args.reps,
+        )
         measure_dv_layouts(spark, uniform, scratch, args.reps, rec)
         for n_dead in (64, 512):
             _gated(
