@@ -791,9 +791,10 @@ def _apply_dv_filter(
     how: str = "left_anti",
 ) -> DataFrame:
     """Drop deleted rows: anti-join (file URI, row index) pairs against
-    ``_metadata`` columns. (``how="left_semi"`` inverts the filter —
-    KEEP only the rows the vectors mark — which is how the change-feed
-    reader materializes the rows a DV update deleted.) The deleted-row relation is built EXECUTOR-
+    the scan's ``__file`` / ``__pos`` row identity. (``how="left_semi"``
+    inverts the filter — KEEP only the rows the vectors mark — which is
+    how the change-feed reader materializes the rows a DV update
+    deleted.) The deleted-row relation is built EXECUTOR-
     side — a tiny descriptor DataFrame (one row per deletion vector,
     already integrity-verified by ``_dv_verify``) expands to positions
     inside ``mapInPandas``, one task per DV, so positions of arbitrary
@@ -813,22 +814,12 @@ def _apply_dv_filter(
     if deleted is None:
         # no marked rows: anti keeps everything, semi keeps nothing
         return df if how == "left_anti" else df.filter(F.lit(False))
-    scan = df.select(
-        "*",
-        # Hadoop renders local paths as file:/abs or file:///abs
-        # depending on the constructor — normalize the scheme away
-        F.regexp_replace(
-            F.col("_metadata.file_path"), r"^file:/+", "/"
-        ).alias("__dv_scan_file"),
-        F.col("_metadata.row_index").alias("__dv_scan_idx"),
-    )
-    joined = scan.join(
+    return df.join(
         deleted,
-        (scan["__dv_scan_file"] == deleted["__dv_file"])
-        & (scan["__dv_scan_idx"] == deleted["__dv_idx"]),
+        (F.col("__file") == deleted["__dv_file"])
+        & (F.col("__pos") == deleted["__dv_idx"]),
         how,
     )
-    return joined.drop("__dv_scan_file", "__dv_scan_idx")
 
 
 # ---- column mapping (protocol v2 / columnMapping feature) ---------------
@@ -1199,21 +1190,14 @@ def read_delta_lite(
     Values compare as the stats were written: numbers natively,
     strings lexicographically, dates/timestamps as ISO strings.
 
-    Partitioned tables, fast path: when every active file sits at a
-    hive-layout path matching its logged ``partitionValues`` (always true
-    for tables this writer produced, ``_stage_and_move``), the whole
-    table is ONE ``basePath``-discovered parquet relation — Spark's
-    native partition discovery types the partition columns from the
-    directory names and partition-filter pruning happens inside a single
-    scan node, so the plan does NOT grow with partition count (the
-    reference reads partitioned Delta as a single relation too,
-    /root/reference/ingest.py:644-650 via delta-spark).
-
-    Fallback (externally-authored logs whose ``add.path`` does not encode
-    the partition values): group active files by ``partitionValues`` and
-    read each group with the partition columns injected as typed
-    literals, unioned; a partition-column filter constant-folds per
-    branch and Catalyst prunes non-matching scans at plan time.
+    Partitioned tables read through ``_TableRead.scan``'s layout rule:
+    tables this writer produced (hive-layout paths, ``_stage_and_move``)
+    are ONE ``basePath``-discovered parquet relation whose partition
+    filters prune inside the scan, so the plan does not grow with
+    partition count (the reference reads partitioned Delta as a single
+    relation too, /root/reference/ingest.py:644-650 via delta-spark);
+    externally-authored logs whose ``add.path`` does not encode the
+    partition values take the typed-literal union per partition group.
     """
     if timestamp is not None:
         if version is not None:
@@ -1221,114 +1205,24 @@ def read_delta_lite(
                 "pass either version or timestamp, not both"
             )
         version = version_at_timestamp(path, timestamp)
-    base = _local(path)
     state = replay_log(spark, path, version)
-    schema = state.schema
-    mapping = _column_mapping_mode(state.metadata)
-    if mapping not in ("none", "name", "id"):
-        raise NotImplementedError(
-            f"unknown delta.columnMapping.mode {mapping!r}"
-        )
+    tr = _TableRead(spark, path, state)
+    rels = tr.rels
     if prune:
-        unknown = [c for c in prune if c not in {f.name for f in schema}]
+        unknown = [c for c in prune if c not in tr.logical_to_phys]
         if unknown:
             raise ValueError(f"prune columns not in schema: {unknown}")
-        phys_names = {
-            f.name: pf.name
-            for f, pf in zip(
-                schema.fields,
-                (_physicalize(schema) if mapping != "none" else schema).fields,
-            )
-        }
-        bounds = {phys_names[c]: v for c, v in prune.items()}
-        state.files = {
-            rel: pvals
-            for rel, pvals in state.files.items()
+        bounds = {tr.logical_to_phys[c]: v for c, v in prune.items()}
+        rels = [
+            rel
+            for rel in rels
             if not _stats_exclude(
                 (state.adds.get(rel) or {}).get("stats"), bounds
             )
-        }
-    # With column mapping on, the parquet files, the hive path segments
-    # AND the log's partitionValues keys all use PHYSICAL names (the
-    # public protocol's contract; delta-spark writes physicalName
-    # metadata for both 'name' and 'id' modes) — so the whole scan runs
-    # on the physical schema and renames to logical names ONCE at the
-    # end (a positional struct cast, which also renames nested fields).
-    phys_schema = _physicalize(schema) if mapping != "none" else schema
-    phys_part_cols = [
-        pf.name
-        for f, pf in zip(schema.fields, phys_schema.fields)
-        if f.name in state.partition_columns
-    ]
-
-    def _logicalize(df: DataFrame) -> DataFrame:
-        if mapping == "none":
-            return df
-        return df.select(
-            *[
-                _quoted(pf.name).cast(f.dataType).alias(f.name)
-                for f, pf in zip(schema.fields, phys_schema.fields)
-            ]
-        )
-
-    data_schema = T.StructType(
-        [f for f in phys_schema.fields if f.name not in phys_part_cols]
-    )
-    if not state.files:
-        return spark.createDataFrame([], schema)
-    dv_ver = _dv_verify(base, state.dvs) if state.dvs else {}
-    if mapping != "none":
-        # one footer peek: refuse (rather than silently NULL) tables
-        # whose files don't carry the physical names — e.g. foreign
-        # id-mode writers that rely on parquet field-id resolution
-        sample = os.path.join(base, next(iter(sorted(state.files))))
-        _verify_physical_names(
-            spark,
-            sample,
-            [f.name for f in data_schema.fields],
-            known=state.historical_physical_names,
-        )
-    if not phys_part_cols:
-        files = [os.path.join(base, p) for p in state.files]
-        df = spark.read.schema(phys_schema).parquet(*files)
-        df = _apply_dv_filter(spark, df, base, dv_ver, list(state.files))
-        return _logicalize(df)
-
-    if _all_files_hive_layout(state.files, phys_part_cols):
-        files = [os.path.join(base, rel) for rel in sorted(state.files)]
-        scan = (
-            spark.read.option("basePath", base)
-            .schema(phys_schema)
-            .parquet(*files)
-        )
-        scan = _apply_dv_filter(spark, scan, base, dv_ver, list(state.files))
-        if mapping == "none":
-            # restore declared column order (partition discovery appends
-            # partition columns last); under mapping, _logicalize's
-            # projection already orders
-            scan = scan.select(*[_quoted(f.name) for f in phys_schema.fields])
-        return _logicalize(scan)
-
-    by_group: dict[tuple, list[str]] = {}
-    for rel, pvals in state.files.items():
-        key = tuple(pvals.get(c) for c in phys_part_cols)
-        by_group.setdefault(key, []).append(rel)
-    types = {f.name: f.dataType for f in phys_schema.fields}
-    branches = []
-    for key, rels in sorted(by_group.items(), key=lambda kv: str(kv[0])):
-        df = spark.read.schema(data_schema).parquet(
-            *[os.path.join(base, rel) for rel in rels]
-        )
-        df = _apply_dv_filter(spark, df, base, dv_ver, rels)
-        for c, v in zip(phys_part_cols, key):
-            df = df.withColumn(c, _typed_partition_lit(v, types[c]))
-        branches.append(
-            df.select(*[_quoted(f.name) for f in phys_schema.fields])
-        )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return _logicalize(out)
+        ]
+    if not rels:
+        return spark.createDataFrame([], tr.schema)
+    return tr.scan(rels, ids=False)
 
 
 def _stage_and_move(
@@ -1974,29 +1868,28 @@ class _RowIds:
     drawn: bool = False
 
     @classmethod
-    def of(cls, state: TableState | None,
+    def of(cls, state: TableState,
            metadata: dict | None = None) -> "_RowIds":
-        if state is None:
-            return cls(False, None, None, None, 0)
         cfg = dict(
             ((metadata or state.metadata) or {}).get("configuration") or {}
         )
         on = "rowTracking" in set(
             (state.protocol or {}).get("writerFeatures") or ()
         )
-        if not on:
-            return cls(
-                False, cfg.get(_MAT_ROW_ID_KEY), cfg.get(_MAT_ROW_CV_KEY),
-                None, 0,
-            )
         new_config = None
         for key, prefix in (
             (_MAT_ROW_ID_KEY, "_row-id-col-"),
             (_MAT_ROW_CV_KEY, "_row-commit-version-col-"),
         ):
             if cfg.get(key) is None:
+                # without the feature a name no file carries: a row-id
+                # scan then resolves baseRowId + position
                 cfg[key] = f"{prefix}{uuid.uuid4().hex}"
                 new_config = cfg
+        if not on:
+            return cls(
+                False, cfg[_MAT_ROW_ID_KEY], cfg[_MAT_ROW_CV_KEY], None, 0
+            )
         next_id = 0
         domain = state.domains.get("delta.rowTracking")
         if domain and not domain.get("removed"):
@@ -2560,7 +2453,11 @@ def write_delta_lite(
                 mapping
             ) and (
                 mapping == "none"
-                or [f.name for f in _physicalize(current.schema).fields]
+                or [
+                    f.name
+                    for f in _TableRead(spark, path, current)
+                    .phys_schema.fields
+                ]
                 == [f.name for f in tw.phys_schema.fields]
             )
             # a racing commit may also have ADDED or changed row-level
@@ -3148,62 +3045,37 @@ def merge_rows(
     )
 
 
-class _TableWrite:
-    """The one table-write context. Every committing command — WRITE
-    (create / append / overwrite), the DML kernel, OPTIMIZE, RESTORE,
-    CONVERT TO DELTA, CLUSTER BY and the ALTER family — builds it ONCE
-    from ``replay_log`` (``create`` lets a missing table start from the
-    empty state): the writer-protocol and appendOnly obligations, then
-    the schema view of the table's metaData (``set_metadata`` swaps in
-    the metaData the commit writes): the column-mapping mode with the
-    physical schema and logical->physical map, the CDF / deletion-vector
-    / rowTracking flags, the rowTracking column names and watermark
-    (``_RowIds``) and the row-level constraints. Commands that scan the
-    table's files also get the hive-layout refusal, the
-    ``_verify_physical_names`` footer peek and the verified deletion
-    vectors, on first use; metadata-only commands never open a file.
+class _TableRead:
+    """The one table-read context: the schema view of one metaData and
+    the one scan over the table's files. Every reader and every
+    committing command reads through it — ``read_delta_lite``,
+    ``read_row_ids``, ``read_delta_changes`` and ``cluster_columns``
+    directly, the writers as ``_TableWrite``. The view is the
+    column-mapping mode (an unknown mode refuses), the physical schema,
+    the logical->physical map, the physical partition columns and the
+    rowTracking column names; ``files`` maps every file a scan may read
+    to its logged partitionValues (the replayed active set unless the
+    caller passes its own). The hive-layout decision, the verified
+    deletion vectors and the ``_verify_physical_names`` footer peek are
+    computed on first use, so metadata-only callers never open a
+    file."""
 
-    It then accumulates the command's commit — ``actions``, the table
-    ``features`` it needs, plus every file ``staged`` on the way — and
-    ``commit()`` is the one commit tail. Used as a context manager: any
-    exception rolls the staged files back, and the frames the command
-    pinned are released."""
-
-    def __init__(self, spark: SparkSession, path: str, cmd: str,
-                 create: bool = False):
-        self.spark, self.path, self.cmd = spark, path, cmd
-        self.verb = cmd.split("_")[0]  # append / delete / optimize / ...
+    def __init__(self, spark: SparkSession, path: str, state: TableState,
+                 meta: dict | None = None,
+                 files: dict[str, dict] | None = None):
+        self.spark, self.path, self.state = spark, path, state
         self.base = _local(path)
-        try:
-            self.state = state = replay_log(spark, path)
-        except FileNotFoundError:
-            if not create:
-                raise
-            self.state = state = TableState()
-        _check_writer_protocol(state.protocol, path)
-        _check_write_obligations(state, path, self.verb)
-        self.rels = sorted(state.files)
-        self.version = state.version + 1
-        self.now_ms = int(time.time() * 1000)
-        self.actions: list[dict] = []
-        self.features: set[str] = set()  # table features the commit needs
-        self.meta_out: dict | None = None  # the metaData the commit writes
+        self.files = state.files if files is None else files
+        self.rels = sorted(self.files)
         self.evolved: set[str] = set()  # columns existing files predate
-        # columns the staged frame may leave out (an unmapped
-        # merge_schema append; files without them read back as null)
-        self.omitted: set[str] = set()
-        # lost-race hook: returns a version when the commit already
-        # landed, None after moving ``version`` forward; unset = raise
-        self.rebase = None
-        self.staged: list[str] = []  # table-relative, for rollback
-        self.persisted: list[DataFrame] = []  # released on exit
         self._files_checked = False  # the footer peek ran
-        if state.metadata is not None:
-            self._view(state.metadata)
+        meta = meta or state.metadata
+        if meta is not None:
+            self._view(meta)
 
     def _view(self, meta: dict) -> None:
         """Derive the schema view of metaData ``meta``."""
-        self.config = config = dict(meta.get("configuration") or {})
+        self.config = dict(meta.get("configuration") or {})
         self.mapping = mapping = _column_mapping_mode(meta)
         if mapping not in ("none", "name", "id"):
             raise NotImplementedError(
@@ -3224,29 +3096,7 @@ class _TableWrite:
             for c in meta.get("partitionColumns") or []
             if c in self.logical_to_phys
         ]
-        self.cdf_on = (
-            str(config.get("delta.enableChangeDataFeed", "")).lower()
-            == "true"
-        )
-        self.dv_feature_on = "deletionVectors" in set(
-            (self.state.protocol or {}).get("readerFeatures") or ()
-        ) or str(config.get("delta.enableDeletionVectors", "")).lower() == (
-            "true"
-        )
         self.rows = _RowIds.of(self.state, meta)
-        self.gen_cols = dict(_generated_columns(schema))
-        self.ident_names = {d["name"] for d in _identity_columns(schema)}
-        self.constraints = _table_constraints(meta, schema)
-
-    def set_metadata(self, meta: dict, evolved=()) -> None:
-        """Make ``meta`` (lineage names folded in) the metaData this
-        commit writes, and the schema view everything after reads;
-        ``evolved`` names the columns the table's files predate."""
-        self.meta_out = _fold_lineage_names(
-            meta, self.state.historical_physical_names
-        )
-        self.evolved = set(evolved)
-        self._view(self.meta_out)
 
     @functools.cached_property
     def enc_to_rel(self) -> dict[str, str]:
@@ -3260,13 +3110,13 @@ class _TableWrite:
 
     @functools.cached_property
     def hive_layout(self) -> bool:
-        return _all_files_hive_layout(self.state.files, self.phys_part_cols)
+        return _all_files_hive_layout(self.files, self.phys_part_cols)
 
     def _check_files(self, parts: bool) -> None:
-        """The refusals of a command that scans the table's files."""
-        if not self.rels:
+        """The refusals of a scan of the table's files."""
+        if not self.rels or self._files_checked:
             return
-        if self.mapping != "none" and not self._files_checked:
+        if self.mapping != "none":
             # on a mapped table whose files do NOT carry physical names
             # (foreign id-mode writers relying on parquet field-id
             # resolution) every data column would scan as NULL and a
@@ -3287,7 +3137,218 @@ class _TableWrite:
                 known=self.state.historical_physical_names,
             )
         self._files_checked = True
-        if parts and self.phys_part_cols and not self.hive_layout:
+
+    def scan(self, rels: list[str], live: bool = True,
+             row_ids: bool = False, ids: bool = True,
+             parts: bool = True, cdc: bool = False) -> DataFrame:
+        """The logical rows of ``rels`` — the only read of table
+        parquet files. ``parts=False`` reads the data columns only, so
+        any file layout will do; with partition columns the layout
+        comes from the log: ONE relation when every file's path
+        hive-encodes its logged partitionValues (``basePath`` partition
+        discovery, so the plan does not grow with partition count and a
+        partition filter prunes inside the scan), else one relation per
+        partition group with the values injected as typed literals,
+        unioned (a partition filter constant-folds per branch and
+        Catalyst drops the other scans at plan time).
+
+        ``ids`` keeps the ``__file`` / ``__pos`` row identity (the
+        encoded path and parquet row position); a scan that selects
+        ``_metadata`` builds it for every row even when nothing
+        downstream reads it, so it is selected only when ``ids``, the
+        deletion vectors or the row ids need it. ``live`` drops rows
+        masked by deletion vectors; ``row_ids`` adds the resolved
+        rowTracking columns under their materialized names (the file's
+        materialized value when non-null, else baseRowId + position /
+        defaultRowCommitVersion, joined from a one-row-per-file
+        descriptor). ``cdc`` reads change files under ``_change_data/``
+        with the ``_change_type`` column they carry."""
+        self._check_files(parts)
+        spark, base = self.spark, self.base
+        marked = {
+            r: self.dv_ver[r]
+            for r in rels
+            if live and r in self.dv_ver and self.dv_ver[r][1] > 0
+        }
+        need_ids = ids or row_ids or bool(marked)
+        part_cols = self.phys_part_cols if parts else []
+        fields = [
+            (f, pf)
+            for f, pf in zip(self.schema.fields, self.phys_schema.fields)
+            if parts or pf.name not in self.phys_part_cols
+        ]
+        data = [pf for _, pf in fields if pf.name not in part_cols]
+        rid, rcv = self.rows.rid_col, self.rows.rcv_col
+        extra = (
+            [T.StructField("_change_type", T.StringType())] if cdc else []
+        ) + (
+            [T.StructField(c, T.LongType()) for c in (rid, rcv)]
+            if row_ids
+            else []
+        )
+
+        def read(files: list[str], schema: list, base_path=None):
+            reader = spark.read.schema(T.StructType(schema + extra))
+            if base_path:
+                reader = reader.option("basePath", base_path)
+            df = reader.parquet(*[os.path.join(base, r) for r in files])
+            if need_ids:
+                df = df.select(
+                    "*",
+                    # Hadoop renders local paths as file:/abs or
+                    # file:///abs depending on the constructor —
+                    # normalize the scheme away
+                    F.regexp_replace(
+                        F.col("_metadata.file_path"), r"^file:/+", "/"
+                    ).alias("__file"),
+                    F.col("_metadata.row_index").alias("__pos"),
+                )
+            return df
+
+        if not part_cols:
+            df = read(rels, data)
+        elif self.hive_layout:
+            df = read(
+                rels,
+                [pf for _, pf in fields],
+                os.path.join(base, "_change_data") if cdc else base,
+            )
+        else:
+            types = {pf.name: pf.dataType for _, pf in fields}
+            groups: dict[tuple, list[str]] = {}
+            for rel in rels:
+                pvals = self.files[rel] or {}
+                groups.setdefault(
+                    tuple(pvals.get(c) for c in part_cols), []
+                ).append(rel)
+            df = functools.reduce(DataFrame.unionByName, [
+                read(group, data).withColumns({
+                    c: _typed_partition_lit(v, types[c])
+                    for c, v in zip(part_cols, key)
+                })
+                for key, group in sorted(
+                    groups.items(), key=lambda kv: str(kv[0])
+                )
+            ])
+        if marked:
+            df = _apply_dv_filter(spark, df, base, marked, rels)
+        row_cols = []
+        if row_ids:
+            desc = spark.createDataFrame(
+                [
+                    (
+                        _file_key(base, rel),
+                        (self.state.adds.get(rel) or {}).get("baseRowId"),
+                        (self.state.adds.get(rel) or {}).get(
+                            "defaultRowCommitVersion"
+                        ),
+                    )
+                    for rel in rels
+                ],
+                "__file string, __rt_rid bigint, __rt_dcv bigint",
+            )
+            df = df.join(F.broadcast(desc), "__file", "left")
+            row_cols = [
+                F.coalesce(
+                    _quoted(rid), F.col("__rt_rid") + F.col("__pos")
+                ).alias(rid),
+                F.coalesce(_quoted(rcv), F.col("__rt_dcv")).alias(rcv),
+            ]
+        return df.select(
+            *[
+                # under column mapping the files, the hive path segments
+                # AND the log's partitionValues keys all carry PHYSICAL
+                # names (the protocol's contract), so the scan runs
+                # physical and renames once here — a positional cast,
+                # which renames nested fields too
+                _quoted(pf.name).cast(f.dataType).alias(f.name)
+                if self.mapping != "none"
+                else _quoted(f.name)
+                for f, pf in fields
+            ],
+            *(["_change_type"] if cdc else []),
+            *row_cols,
+            *(["__file", "__pos"] if ids else []),
+        )
+
+
+class _TableWrite(_TableRead):
+    """The one table-write context. Every committing command — WRITE
+    (create / append / overwrite), the DML kernel, OPTIMIZE, RESTORE,
+    CONVERT TO DELTA, CLUSTER BY and the ALTER family — builds it ONCE
+    from ``replay_log`` (``create`` lets a missing table start from the
+    empty state): the writer-protocol and appendOnly obligations, then
+    the read context's schema view of the table's metaData
+    (``set_metadata`` swaps in the metaData the commit writes) plus the
+    CDF / deletion-vector flags and the row-level constraints. Its
+    scans add one refusal to the read context's: the DML's
+    non-hive-layout partitioned table.
+
+    It then accumulates the command's commit — ``actions``, the table
+    ``features`` it needs, plus every file ``staged`` on the way — and
+    ``commit()`` is the one commit tail. Used as a context manager: any
+    exception rolls the staged files back, and the frames the command
+    pinned are released."""
+
+    def __init__(self, spark: SparkSession, path: str, cmd: str,
+                 create: bool = False):
+        self.cmd = cmd
+        self.verb = cmd.split("_")[0]  # append / delete / optimize / ...
+        try:
+            state = replay_log(spark, path)
+        except FileNotFoundError:
+            if not create:
+                raise
+            state = TableState()
+        _check_writer_protocol(state.protocol, path)
+        _check_write_obligations(state, path, self.verb)
+        self.version = state.version + 1
+        self.now_ms = int(time.time() * 1000)
+        self.actions: list[dict] = []
+        self.features: set[str] = set()  # table features the commit needs
+        self.meta_out: dict | None = None  # the metaData the commit writes
+        # columns the staged frame may leave out (an unmapped
+        # merge_schema append; files without them read back as null)
+        self.omitted: set[str] = set()
+        # lost-race hook: returns a version when the commit already
+        # landed, None after moving ``version`` forward; unset = raise
+        self.rebase = None
+        self.staged: list[str] = []  # table-relative, for rollback
+        self.persisted: list[DataFrame] = []  # released on exit
+        super().__init__(spark, path, state)
+
+    def _view(self, meta: dict) -> None:
+        super()._view(meta)
+        config, schema = self.config, self.schema
+        self.cdf_on = (
+            str(config.get("delta.enableChangeDataFeed", "")).lower()
+            == "true"
+        )
+        self.dv_feature_on = "deletionVectors" in set(
+            (self.state.protocol or {}).get("readerFeatures") or ()
+        ) or str(config.get("delta.enableDeletionVectors", "")).lower() == (
+            "true"
+        )
+        self.gen_cols = dict(_generated_columns(schema))
+        self.ident_names = {d["name"] for d in _identity_columns(schema)}
+        self.constraints = _table_constraints(meta, schema)
+
+    def set_metadata(self, meta: dict, evolved=()) -> None:
+        """Make ``meta`` (lineage names folded in) the metaData this
+        commit writes, and the schema view everything after reads;
+        ``evolved`` names the columns the table's files predate."""
+        self.meta_out = _fold_lineage_names(
+            meta, self.state.historical_physical_names
+        )
+        self.evolved = set(evolved)
+        self._view(self.meta_out)
+
+    def _check_files(self, parts: bool) -> None:
+        super()._check_files(parts)
+        if (
+            parts and self.rels and self.phys_part_cols
+            and not self.hive_layout
+        ):
             raise NotImplementedError(
                 f"{self.cmd} on a partitioned table whose file paths do "
                 "not hive-encode the logged partitionValues (externally "
@@ -3311,77 +3372,6 @@ class _TableWrite:
             except OSError:
                 pass
         self.staged.clear()
-
-    def scan(self, rels: list[str], live: bool = True,
-             row_ids: bool = False, ids: bool = True,
-             parts: bool = True) -> DataFrame:
-        """The logical rows of ``rels`` (partition columns parsed from
-        the hive paths; ``parts=False`` reads the data columns only, so
-        any file layout will do) with ``__file`` / ``__pos`` row
-        identity (the encoded path and parquet row position) when
-        ``ids`` — a scan that selects ``_metadata`` builds it for every
-        row even when nothing downstream reads it, so callers that need
-        no identity leave it out. ``live`` drops rows masked by
-        deletion vectors; ``row_ids`` adds the resolved materialized
-        rowTracking columns."""
-        self._check_files(parts)
-        spark, base = self.spark, self.base
-        dv_ver = self.dv_ver if live else {}
-        fields = [
-            (f, pf)
-            for f, pf in zip(self.schema.fields, self.phys_schema.fields)
-            if parts or pf.name not in self.phys_part_cols
-        ]
-        phys_fields = [pf for _, pf in fields]
-        part_base = base if parts and self.phys_part_cols else None
-        if row_ids:
-            rid, rcv = self.rows.rid_col, self.rows.rcv_col
-            df = _with_materialized_row_ids(
-                spark,
-                base,
-                rels,
-                self.state.adds,
-                T.StructType(
-                    phys_fields
-                    + [
-                        T.StructField(rid, T.LongType()),
-                        T.StructField(rcv, T.LongType()),
-                    ]
-                ),
-                rid,
-                rcv,
-                dv_ver=dv_ver,
-                keep_position=ids,
-                keep_path=ids,
-                base_path=part_base,
-            ).withColumnsRenamed({"__rt_path": "__file", "__rt_idx": "__pos"})
-        else:
-            reader = spark.read.schema(T.StructType(phys_fields))
-            if part_base:
-                reader = reader.option("basePath", part_base)
-            df = reader.parquet(*[os.path.join(base, r) for r in rels])
-            if ids:
-                df = df.select(
-                    "*",
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), r"^file:/+", "/"
-                    ).alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-            if dv_ver:
-                df = _apply_dv_filter(spark, df, base, dv_ver, rels)
-        return df.select(
-            *[
-                _quoted(pf.name).cast(f.dataType).alias(f.name)
-                for f, pf in fields
-            ],
-            *(
-                [_quoted(self.rows.rid_col), _quoted(self.rows.rcv_col)]
-                if row_ids
-                else []
-            ),
-            *(["__file", "__pos"] if ids else []),
-        )
 
     def to_phys(self, frame: DataFrame, parts: bool = True,
                 row_ids: bool = False) -> DataFrame:
@@ -4886,11 +4876,14 @@ def read_delta_changes(
     window that produces rows (per-commit schemas would otherwise union
     incoherently): split the read at the schema-change commit.
 
-    Scale shape: one parquet scan per (commit, change class, partition
-    tuple) over ONLY the changed files; DV diffs reuse the executor-side
-    position expansion and broadcast-vs-shuffle valve of the main
-    reader. Nothing driver-side grows beyond the file/DV descriptors —
-    the same contract as replay_log itself.
+    Scale shape: one ``_TableRead.scan`` per (commit, change class)
+    over ONLY the changed files, under the window's one schema view and
+    the main reader's layout rule — one relation per change class on
+    hive-layout tables, however many partitions the class spans; DV
+    diffs filter that scan with the executor-side position expansion
+    and broadcast-vs-shuffle valve of the main reader. Nothing
+    driver-side grows beyond the file/DV descriptors — the same
+    contract as replay_log itself.
     """
     base = _local(path)
     log_dir = _log_dir(path)
@@ -4927,7 +4920,10 @@ def read_delta_changes(
         )
 
     branches: list[tuple] = []
-    schema_keys: set[tuple] = set()
+    # schema key -> a metaData carrying it, for every schema the
+    # window's change classes read files under
+    window: dict[tuple, dict] = {}
+    files: dict[str, dict] = {}  # every file the window reads
     for v in range(start_version, end + 1):
         cpath = commit_map.get(v)
         if cpath is None:
@@ -4944,7 +4940,7 @@ def read_delta_changes(
             for a in actions
             if "cdc" in a
         }
-        key_before = _key(state.metadata) if state.metadata else None
+        meta_before = state.metadata
         inserted, deleted, dv_changed, ts_ms = _diff_commit(state, actions)
         state.version = v
         if ts_ms is None:
@@ -4954,7 +4950,8 @@ def read_delta_changes(
             # spec's rule): serve the change files, ignore derivation —
             # deriving too would double-count
             assert state.metadata is not None
-            schema_keys.add(_key(state.metadata))
+            window.setdefault(_key(state.metadata), state.metadata)
+            files.update(cdc_files)
             branches.append((v, ts_ms, None, None, None, cdc_files))
             continue
         if not (inserted or deleted or dv_changed):
@@ -4964,195 +4961,82 @@ def read_delta_changes(
         # inserts under the post-commit one, deletes/DV-diffs under the
         # pre-commit one (those files predate this commit)
         if inserted:
-            schema_keys.add(_key(state.metadata))
+            window.setdefault(_key(state.metadata), state.metadata)
         if deleted or dv_changed:
-            assert key_before is not None
-            schema_keys.add(key_before)
+            assert meta_before is not None
+            window.setdefault(_key(meta_before), meta_before)
+        for changed in (inserted, deleted, dv_changed):
+            files.update({rel: c[0] for rel, c in changed.items()})
         branches.append((v, ts_ms, inserted, deleted, dv_changed, None))
 
+    change_cols = [
+        T.StructField("_change_type", T.StringType()),
+        T.StructField("_commit_version", T.LongType()),
+        T.StructField("_commit_timestamp", T.TimestampType()),
+    ]
     if not branches:
-        meta = state.metadata
-        if meta is None:
+        if state.metadata is None:
             raise ValueError(f"no metaData action found in {log_dir}")
-        empty_schema = T.StructType(
-            list(T.StructType.fromJson(json.loads(meta["schemaString"])))
-            + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_commit_version", T.LongType()),
-                T.StructField("_commit_timestamp", T.TimestampType()),
-            ]
+        tr = _TableRead(spark, path, state)
+        return spark.createDataFrame(
+            [], T.StructType(list(tr.schema) + change_cols)
         )
-        return spark.createDataFrame([], empty_schema)
 
-    if len({(sid, pc, mm) for sid, _, pc, mm in schema_keys}) > 1:
+    if len({(sid, pc, mm) for sid, _, pc, mm in window}) > 1:
         raise NotImplementedError(
             "schema / partitioning / column-mapping changed inside the "
             "change window (nullability-insensitive compare); split the "
             "read at the metadata-change commit"
         )
-    _, schema_str, part_cols, mapping = next(iter(schema_keys))
-    schema = T.StructType.fromJson(json.loads(schema_str))
-    phys_schema = _physicalize(schema) if mapping != "none" else schema
-    phys_part_cols = [
-        pf.name
-        for f, pf in zip(schema.fields, phys_schema.fields)
-        if f.name in part_cols
-    ]
-    data_schema = T.StructType(
-        [f for f in phys_schema.fields if f.name not in phys_part_cols]
+    tr = _TableRead(
+        spark, path, state, meta=next(iter(window.values())), files=files
     )
-    types = {f.name: f.dataType for f in phys_schema.fields}
-
-    def _scan(entries: dict[str, dict]) -> DataFrame:
-        """Physical-schema scan of the given rel->partitionValues files
-        with (__f, __i) keys materialized for DV joins."""
-        by_group: dict[tuple, list[str]] = {}
-        for rel, pvals in entries.items():
-            key = tuple((pvals or {}).get(c) for c in phys_part_cols)
-            by_group.setdefault(key, []).append(rel)
-        parts = []
-        for key, rels in sorted(by_group.items(), key=lambda kv: str(kv[0])):
-            df = spark.read.schema(data_schema).parquet(
-                *[os.path.join(base, rel) for rel in sorted(rels)]
-            )
-            df = df.select(
-                "*",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), r"^file:/+", "/"
-                ).alias("__f"),
-                F.col("_metadata.row_index").alias("__i"),
-            )
-            for c, vv in zip(phys_part_cols, key):
-                df = df.withColumn(c, _typed_partition_lit(vv, types[c]))
-            parts.append(
-                df.select(
-                    *[_quoted(f.name) for f in phys_schema.fields],
-                    "__f",
-                    "__i",
-                )
-            )
-        out = parts[0]
-        for b in parts[1:]:
-            out = out.unionByName(b)
-        return out
-
-    def _dv_join(df: DataFrame, dv_map: dict[str, dict | None], how: str):
-        present = {r: d for r, d in dv_map.items() if d}
-        pos = _dv_positions(
-            spark, base, _dv_verify(base, present), list(present)
-        )
-        if pos is None:
-            return df if how == "left_anti" else df.filter(F.lit(False))
-        return df.join(
-            pos,
-            (F.col("__f") == pos["__dv_file"])
-            & (F.col("__i") == pos["__dv_idx"]),
-            how,
-        )
-
-    def _finish(df: DataFrame, ctype: str, v: int, ts_ms: int) -> DataFrame:
-        df = df.drop("__f", "__i")
-        if mapping != "none":
-            df = df.select(
-                *[
-                    _quoted(pf.name).cast(f.dataType).alias(f.name)
-                    for f, pf in zip(schema.fields, phys_schema.fields)
-                ]
-            )
-        return df.select(
-            "*",
-            F.lit(ctype).alias("_change_type"),
-            F.lit(v).cast("long").alias("_commit_version"),
-            F.timestamp_millis(F.lit(int(ts_ms))).alias(
-                "_commit_timestamp"
-            ),
-        )
-
-    def _scan_cdc(entries: dict[str, dict]) -> DataFrame:
-        """Change-file scan: the data columns (physical names, like the
-        data files they sit beside) plus the file-resident _change_type
-        column; partition values injected from the cdc action, exactly
-        like the data-file scan."""
-        cdc_schema = T.StructType(
-            list(data_schema.fields)
-            + [T.StructField("_change_type", T.StringType())]
-        )
-        by_group: dict[tuple, list[str]] = {}
-        for rel, pvals in entries.items():
-            key = tuple((pvals or {}).get(c) for c in phys_part_cols)
-            by_group.setdefault(key, []).append(rel)
-        parts = []
-        for key, rels in sorted(by_group.items(), key=lambda kv: str(kv[0])):
-            df = spark.read.schema(cdc_schema).parquet(
-                *[os.path.join(base, rel) for rel in sorted(rels)]
-            )
-            for c, vv in zip(phys_part_cols, key):
-                df = df.withColumn(c, _typed_partition_lit(vv, types[c]))
-            parts.append(
-                df.select(
-                    *[_quoted(f.name) for f in phys_schema.fields],
-                    "_change_type",
-                )
-            )
-        out = parts[0]
-        for b in parts[1:]:
-            out = out.unionByName(b)
-        return out
-
-    def _finish_cdc(df: DataFrame, v: int, ts_ms: int) -> DataFrame:
-        if mapping != "none":
-            df = df.select(
-                *[
-                    _quoted(pf.name).cast(f.dataType).alias(f.name)
-                    for f, pf in zip(schema.fields, phys_schema.fields)
-                ],
-                "_change_type",
-            )
-        return df.select(
-            *[_quoted(f.name) for f in schema.fields],
-            F.col("_change_type"),
-            F.lit(v).cast("long").alias("_commit_version"),
-            F.timestamp_millis(F.lit(int(ts_ms))).alias(
-                "_commit_timestamp"
-            ),
-        )
-
-    out_parts: list[DataFrame] = []
+    out: list[DataFrame] = []
     for v, ts_ms, inserted, deleted, dv_changed, cdc_files in branches:
+        commit_cols = [
+            F.lit(v).cast("long").alias("_commit_version"),
+            F.timestamp_millis(F.lit(int(ts_ms))).alias("_commit_timestamp"),
+        ]
         if cdc_files:
-            out_parts.append(_finish_cdc(_scan_cdc(cdc_files), v, ts_ms))
+            out.append(
+                tr.scan(sorted(cdc_files), live=False, ids=False, cdc=True)
+                .select("*", *commit_cols)
+            )
             continue
+        # (change type, files, the deletion-vector filters its rows
+        # pass in order): a DV diff deletes the rows in (new minus old)
+        # and restores, when an old vector existed, (old minus new)
+        classes = []
         if inserted:
-            df = _scan({r: pv for r, (pv, _) in inserted.items()})
-            df = _dv_join(
-                df, {r: dv for r, (_, dv) in inserted.items()}, "left_anti"
-            )
-            out_parts.append(_finish(df, "insert", v, ts_ms))
+            new = {r: dv for r, (_, dv) in inserted.items()}
+            classes.append(("insert", new, [(new, "left_anti")]))
         if deleted:
-            df = _scan({r: pv for r, (pv, _) in deleted.items()})
-            df = _dv_join(
-                df, {r: dv for r, (_, dv) in deleted.items()}, "left_anti"
-            )
-            out_parts.append(_finish(df, "delete", v, ts_ms))
+            old = {r: dv for r, (_, dv) in deleted.items()}
+            classes.append(("delete", old, [(old, "left_anti")]))
         if dv_changed:
-            pvals = {r: pv for r, (pv, _, _) in dv_changed.items()}
             old = {r: o for r, (_, o, _) in dv_changed.items()}
             new = {r: nw for r, (_, _, nw) in dv_changed.items()}
-            dels = _dv_join(
-                _dv_join(_scan(pvals), new, "left_semi"), old, "left_anti"
+            classes.append(
+                ("delete", new, [(new, "left_semi"), (old, "left_anti")])
             )
-            out_parts.append(_finish(dels, "delete", v, ts_ms))
             if any(old.values()):
-                restores = _dv_join(
-                    _dv_join(_scan(pvals), old, "left_semi"),
-                    new,
-                    "left_anti",
+                classes.append(
+                    ("insert", old, [(old, "left_semi"), (new, "left_anti")])
                 )
-                out_parts.append(_finish(restores, "insert", v, ts_ms))
-    out = out_parts[0]
-    for b in out_parts[1:]:
-        out = out.unionByName(b)
-    return out
+        for ctype, changed, dv_filters in classes:
+            df = tr.scan(sorted(changed), live=False)
+            for dvs, how in dv_filters:
+                present = {r: d for r, d in dvs.items() if d}
+                df = _apply_dv_filter(
+                    spark, df, base, _dv_verify(base, present),
+                    list(present), how,
+                )
+            out.append(
+                df.drop("__file", "__pos").select(
+                    "*", F.lit(ctype).alias("_change_type"), *commit_cols
+                )
+            )
+    return functools.reduce(DataFrame.unionByName, out)
 
 
 def latest_version(path: str) -> int:
@@ -5173,81 +5057,6 @@ def latest_version(path: str) -> int:
 
 
 # ---- OPTIMIZE (bin-packing compaction + Z-order clustering) --------------
-
-
-def _with_materialized_row_ids(
-    spark: SparkSession,
-    base: str,
-    rels: list[str],
-    adds: dict[str, dict],
-    read_schema: T.StructType,
-    rid_col: str,
-    rcv_col: str,
-    dv_ver: dict | None = None,
-    keep_position: bool = False,
-    keep_path: bool = False,
-    base_path: str | None = None,
-) -> DataFrame:
-    """Scan ``rels`` with each row's RESOLVED row-tracking identity
-    materialized into ``rid_col``/``rcv_col`` (protocol rule: the
-    file's materialized column value when non-null, else
-    baseRowId + row position / defaultRowCommitVersion).
-
-    ONE scan over all files + a broadcast join against a one-row-per-
-    file descriptor frame (baseRowId, defaultRowCommitVersion keyed by
-    the file's encoded full path — basenames repeat across hive
-    partition directories when one task writes several partitions), so
-    the plan does not grow with file count the way a per-file union
-    would. ``read_schema`` must already include ``rid_col``/``rcv_col``
-    as nullable longs — parquet null-fills them for files that never
-    materialized ids. Deletion vectors (``dv_ver``) apply BEFORE the
-    join — the DV filter resolves ``_metadata`` columns, which joins
-    sever. ``keep_path`` leaves the ``__rt_path`` key column (the
-    ``_file_key`` of the row's file) for callers that need further
-    per-file joins downstream; ``keep_position`` leaves
-    ``__rt_idx`` (the parquet row position) for callers joining
-    per-row decisions (the DML kernel); ``base_path`` reads hive
-    partition columns listed in ``read_schema`` from the paths under
-    it."""
-    desc = spark.createDataFrame(
-        [
-            (
-                _file_key(base, rel),
-                (adds.get(rel) or {}).get("baseRowId"),
-                (adds.get(rel) or {}).get("defaultRowCommitVersion"),
-            )
-            for rel in rels
-        ],
-        "__rt_path string, __rt_rid bigint, __rt_dcv bigint",
-    )
-    reader = spark.read.schema(read_schema)
-    if base_path:
-        reader = reader.option("basePath", base_path)
-    df = reader.parquet(*[os.path.join(base, r) for r in rels]).select(
-        "*",
-        F.regexp_replace(
-            F.col("_metadata.file_path"), r"^file:/+", "/"
-        ).alias("__rt_path"),
-        F.col("_metadata.row_index").alias("__rt_idx"),
-    )
-    if dv_ver:
-        df = _apply_dv_filter(spark, df, base, dv_ver, rels)
-    df = df.join(F.broadcast(desc), "__rt_path", "left")
-    df = (
-        df.withColumn(
-            rid_col,
-            F.coalesce(
-                _quoted(rid_col), F.col("__rt_rid") + F.col("__rt_idx")
-            ),
-        )
-        .withColumn(
-            rcv_col, F.coalesce(_quoted(rcv_col), F.col("__rt_dcv"))
-        )
-        .drop("__rt_rid", "__rt_dcv")
-    )
-    if not keep_position:
-        df = df.drop("__rt_idx")
-    return df if keep_path else df.drop("__rt_path")
 
 
 def set_cluster_by(
@@ -5296,20 +5105,14 @@ def cluster_columns(spark: SparkSession, path: str) -> list[str]:
     """The table's clustering columns as LOGICAL names ([] when not a
     clustered table) — the delta.clustering domain's stored physical
     names translated back through the schema."""
-    state = replay_log(spark, path)
-    domain = state.domains.get("delta.clustering")
+    tr = _TableRead(spark, path, replay_log(spark, path))
+    domain = tr.state.domains.get("delta.clustering")
     if not domain or domain.get("removed"):
         return []
     stored = json.loads(domain.get("configuration") or "{}").get(
         "clusteringColumns"
     ) or []
-    schema = state.schema
-    mapping = _column_mapping_mode(state.metadata)
-    phys_schema = _physicalize(schema) if mapping != "none" else schema
-    phys_to_logical = {
-        pf.name: f.name
-        for f, pf in zip(schema.fields, phys_schema.fields)
-    }
+    phys_to_logical = {p: c for c, p in tr.logical_to_phys.items()}
     out = []
     for parts in stored:
         name = parts[0] if isinstance(parts, list) else parts
@@ -5328,108 +5131,33 @@ def read_row_ids(
     normal reader, and a surviving row keeps the id it was assigned at
     ingest — across deletes, compactions and Z-ORDER rewrites.
 
-    Plan shape: one parquet scan over the active files + a broadcast
-    join against a one-row-per-file descriptor frame — no per-file plan
+    Plan shape: ``read_delta_lite``'s scan plus one broadcast join
+    against a one-row-per-file descriptor frame — no per-file plan
     growth. Refuses tables where some file carries NO assignment and NO
     materialized ids (foreign writer that ignored the feature)."""
-    state = replay_log(spark, path, version)
-    schema = state.schema
-    mapping = _column_mapping_mode(state.metadata)
-    phys_schema = _physicalize(schema) if mapping != "none" else schema
-    cfg = (state.metadata or {}).get("configuration") or {}
-    rid_col = cfg.get(_MAT_ROW_ID_KEY) or f"_row-id-{uuid.uuid4().hex}"
-    rcv_col = cfg.get(_MAT_ROW_CV_KEY) or f"_row-cv-{uuid.uuid4().hex}"
-    rels = sorted(state.files)
-    if not rels:
-        empty = T.StructType(
-            list(schema.fields)
+    tr = _TableRead(spark, path, replay_log(spark, path, version))
+    if not tr.rels:
+        return spark.createDataFrame([], T.StructType(
+            list(tr.schema.fields)
             + [
                 T.StructField("_row_id", T.LongType()),
                 T.StructField("_row_commit_version", T.LongType()),
             ]
-        )
-        return spark.createDataFrame([], empty)
-    for rel in rels:
-        extras = state.adds.get(rel) or {}
-        if "baseRowId" not in extras and cfg.get(_MAT_ROW_ID_KEY) is None:
+        ))
+    for rel in tr.rels:
+        extras = tr.state.adds.get(rel) or {}
+        if "baseRowId" not in extras and tr.config.get(
+            _MAT_ROW_ID_KEY
+        ) is None:
             raise ValueError(
                 f"file {rel!r} carries no baseRowId and the table "
                 "configures no materialized row-id column — row ids "
                 "are undefined (was rowTracking ever enabled?)"
             )
-    base = _local(path)
-    phys_part_cols = [
-        pf.name
-        for f, pf in zip(schema.fields, phys_schema.fields)
-        if f.name in state.partition_columns
-    ]
-    data_fields = [
-        f for f in phys_schema.fields if f.name not in phys_part_cols
-    ]
-    read_schema = T.StructType(
-        data_fields
-        + [
-            T.StructField(rid_col, T.LongType()),
-            T.StructField(rcv_col, T.LongType()),
-        ]
-    )
-    dv_ver = _dv_verify(base, state.dvs) if state.dvs else None
-    df = _with_materialized_row_ids(
-        spark,
-        base,
-        rels,
-        state.adds,
-        read_schema,
-        rid_col,
-        rcv_col,
-        dv_ver=dv_ver,
-        keep_path=bool(phys_part_cols),
-    )
-    # partition columns live in directory names, not the files; inject
-    # them from each file's logged partitionValues via the same
-    # path-keyed broadcast descriptor
-    if phys_part_cols:
-        logical_parts = [
-            (f, pf)
-            for f, pf in zip(schema.fields, phys_schema.fields)
-            if f.name in state.partition_columns
-        ]
-        pdesc = spark.createDataFrame(
-            [
-                tuple(
-                    [_file_key(base, rel)]
-                    + [
-                        (state.files.get(rel) or {}).get(pf.name)
-                        for _, pf in logical_parts
-                    ]
-                )
-                for rel in rels
-            ],
-            T.StructType(
-                [T.StructField("__rt_path", T.StringType())]
-                + [
-                    T.StructField(f"__rt_p{i}", T.StringType())
-                    for i in range(len(logical_parts))
-                ]
-            ),
-        )
-        df = df.join(F.broadcast(pdesc), "__rt_path", "left")
-        for i, (f, pf) in enumerate(logical_parts):
-            df = df.withColumn(
-                pf.name, F.col(f"__rt_p{i}").cast(f.dataType)
-            )
-        df = df.drop(
-            "__rt_path", *[f"__rt_p{i}" for i in range(len(logical_parts))]
-        )
-    out_cols = [
-        _quoted(pf.name).alias(f.name)
-        for f, pf in zip(schema.fields, phys_schema.fields)
-    ]
-    return df.select(
-        *out_cols,
-        _quoted(rid_col).alias("_row_id"),
-        _quoted(rcv_col).alias("_row_commit_version"),
-    )
+    return tr.scan(tr.rels, row_ids=True, ids=False).withColumnsRenamed({
+        tr.rows.rid_col: "_row_id",
+        tr.rows.rcv_col: "_row_commit_version",
+    })
 
 
 def optimize(

@@ -317,6 +317,45 @@ def test_partitioned_table_changes(spark, tmp_path):
     _snapshot_algebra_holds(spark, path, 0, 1, ["id", "p"])
 
 
+def test_partitioned_change_classes_read_one_relation(spark, tmp_path):
+    """On a hive-layout partitioned table every change class is ONE
+    parquet scan, however many partitions it spans: an overwrite's
+    deletes and inserts, and a deletion-vector delete's diff with its
+    one position join."""
+    from lcr_etl_upgrade_spark.delta_lite import set_table_properties
+
+    path = str(tmp_path / "t")
+
+    def rows(lo, hi):
+        return spark.range(lo, hi, numPartitions=1).select(
+            F.col("id"), (F.col("id") % 16).cast("long").alias("p")
+        )
+
+    write_delta_lite(rows(0, 160), path, partition_by=("p",))  # v0
+    set_table_properties(
+        spark, path, {"delta.enableDeletionVectors": "true"}
+    )  # v1
+    write_delta_lite(
+        rows(0, 320), path, mode="overwrite", partition_by=("p",)
+    )  # v2
+    delete_rows(spark, path, F.col("id") % 7 == 3)  # v3
+    state = replay_log(spark, path)
+    assert len({pv["p"] for pv in state.files.values()}) == 16
+    assert len(state.dvs) == len(state.files) == 16
+    for v, classes in ((2, 2), (3, 1)):
+        plan = (
+            read_delta_changes(spark, path, v, v)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert plan.count("Scan parquet") <= classes, plan
+        _snapshot_algebra_holds(spark, path, v, v, ["id", "p"])
+    plan = (
+        read_delta_changes(spark, path, 3, 3)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("BroadcastHashJoin") <= 1, plan
+
+
 def test_invalid_windows_raise(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta_lite(spark.range(3).select("id"), path)

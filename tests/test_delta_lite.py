@@ -183,11 +183,12 @@ def test_external_non_hive_layout_falls_back_to_pruned_union(
         fh.write(json.dumps({"protocol": {"minReaderVersion": 1,
                                           "minWriterVersion": 2}}) + "\n")
         fh.write(json.dumps({"metaData": meta}) + "\n")
-        for rel, pv in staged:
+        for i, (rel, pv) in enumerate(staged):
             fh.write(json.dumps(
                 {"add": {"path": rel, "partitionValues": {"part": pv},
                          "size": 1, "modificationTime": 0,
-                         "dataChange": True}}) + "\n")
+                         "dataChange": True,
+                         "baseRowId": 100 * i}}) + "\n")
     got = read_delta_lite(spark, str(path))
     assert dict(got.dtypes)["part"] == "int"
     assert {(r.id, r.part) for r in got.collect()} == {
@@ -197,6 +198,16 @@ def test_external_non_hive_layout_falls_back_to_pruned_union(
     assert q.count() == 3
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") <= 1, plan
+    # row ids resolve through the same fallback: baseRowId + position
+    from lcr_etl_upgrade_spark.delta_lite import read_row_ids
+
+    assert {
+        (r.id, r.part, r._row_id)
+        for r in read_row_ids(spark, str(path)).collect()
+    } == {
+        (10 * p + j, p, 100 * i + j)
+        for i, p in enumerate((1, 2, 3)) for j in range(3)
+    }
 
 
 def test_externally_authored_log(spark, tmp_path):
@@ -1409,16 +1420,28 @@ def test_column_mapping_id_mode_and_physical_name_verification(
             fh.write(json.dumps({"metaData": meta}) + "\n")
             fh.write(json.dumps({"add": {
                 "path": "part-0.parquet", "partitionValues": {}, "size": 1,
-                "modificationTime": 0, "dataChange": True}}) + "\n")
+                "modificationTime": 0, "dataChange": True,
+                "baseRowId": 0}}) + "\n")
         return str(path)
+
+    from lcr_etl_upgrade_spark.delta_lite import (
+        read_delta_changes,
+        read_row_ids,
+    )
 
     ok = build("idmode", "`col-aaa` long, `col-bbb` string")
     got = read_delta_lite(spark, ok)
     assert {(r.id, r.name) for r in got.collect()} == {(1, "a")}
 
+    # every reader peeks at the footer before it trusts the names
     foreign = build("idforeign", "`c1` long, `c2` string")
-    with pytest.raises(NotImplementedError, match="field-id"):
-        read_delta_lite(spark, foreign)
+    for read in (
+        lambda: read_delta_lite(spark, foreign),
+        lambda: read_row_ids(spark, foreign),
+        lambda: read_delta_changes(spark, foreign, 0, 0),
+    ):
+        with pytest.raises(NotImplementedError, match="field-id"):
+            read()
 
 
 def test_column_mapping_missing_physical_name_refuses(spark, tmp_path):
@@ -1699,6 +1722,37 @@ def test_unknown_column_mapping_mode_refuses_every_command(spark, tmp_path):
         with pytest.raises(NotImplementedError, match="future"):
             command()
     assert replay_log(spark, path).version == 1
+
+    # every reader derives the same view: a table born with the
+    # unknown mode (files under its physical names) refuses to read
+    born = tmp_path / "born"
+    (born / "_delta_log").mkdir(parents=True)
+    stage = born / "stage"
+    _df(
+        spark, [(1, "a", (0.5,))],
+        "`col-aaa` long, `col-bbb` string, `col-ccc` struct<`col-ddd`: double>",
+    ).coalesce(1).write.parquet(str(stage))
+    f = next(n for n in os.listdir(stage) if n.endswith(".parquet"))
+    os.rename(stage / f, born / "part-0.parquet")
+    meta = _mapped_meta()
+    meta["configuration"]["delta.columnMapping.mode"] = "future"
+    with open(born / "_delta_log" / f"{0:020d}.json", "w") as fh:
+        fh.write(json.dumps({"protocol": {
+            "minReaderVersion": 2, "minWriterVersion": 5}}) + "\n")
+        fh.write(json.dumps({"metaData": meta}) + "\n")
+        fh.write(json.dumps({"add": {
+            "path": "part-0.parquet", "partitionValues": {}, "size": 1,
+            "modificationTime": 0, "dataChange": True,
+            "baseRowId": 0}}) + "\n")
+    born = str(born)
+    for read in (
+        lambda: read_delta_lite(spark, born),
+        lambda: dl.read_row_ids(spark, born),
+        lambda: dl.read_delta_changes(spark, born, 0, 0),
+        lambda: dl.cluster_columns(spark, born),
+    ):
+        with pytest.raises(NotImplementedError, match="future"):
+            read()
 
 
 def test_write_column_mapping_append_and_stability(spark, tmp_path):

@@ -39,11 +39,24 @@ bench.py:
     backdated past the horizon, then overwritten dead): wall-time must
     scale with the file count at unlink cost, never opening data.
 
+  the read paths over the same templates: read_delta_lite of the
+    DV-bearing table and of the partitioned one, read_row_ids of the
+    partitioned one, and read_delta_changes of a 1% deletion-vector
+    delete spanning every partition (configs ``read_dvtable``,
+    ``read_part``, ``row_ids_part``, ``changes_dv_part``).
+
 Output: one JSON artifact (default BENCH_writes_r12.json) with
 per-config best/spread, touched-file, added-file, deletion-vector,
 added-byte and change-row counts, plus the Spark jobs one command ran.
 
+Pairs mode (``--pairs N --parent DIR``) resolves differences one
+window of best-of-N cannot: N alternating fresh-process runs (reps 1)
+of this checkout and the checkout at DIR, each process measuring its
+own tree's package, then per config the median and quartiles of each
+side's seconds and the count fields each side reported.
+
 Usage: python tools/scale_writes.py [--reps 3] [--out BENCH_writes_r12.json]
+       python tools/scale_writes.py --pairs 10 --parent DIR [--rows N]
 """
 
 from __future__ import annotations
@@ -52,13 +65,13 @@ import argparse
 import json
 import os
 import shutil
+import statistics
+import subprocess
 import sys
 import tempfile
 import time
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 N_ROWS = 5_000_000
 N_FILES = 32
@@ -67,9 +80,9 @@ N_FILES = 32
 IDLE_BAR = 1.0
 
 
-def _gate(idle_bar: float = IDLE_BAR, max_wait: int = 300) -> float:
+def _gate(max_wait: int = 300) -> float:
     waited = 0
-    while os.getloadavg()[0] > idle_bar and waited < max_wait:
+    while os.getloadavg()[0] > IDLE_BAR and waited < max_wait:
         time.sleep(5)
         waited += 5
     return round(os.getloadavg()[0], 2)
@@ -258,6 +271,62 @@ def measure_dv_layouts(spark, uniform: str, scratch: str, reps: int,
         rec, "optimize_dvtable", measure_optimize,
         spark, dvtable, scratch, reps,
     )
+    measure_reads(spark, part, dvtable, scratch, reps, rec)
+
+
+def measure_reads(spark, part: str, dvtable: str, scratch: str,
+                  reps: int, rec: dict) -> None:
+    """The read paths on the partitioned and the DV-bearing layouts."""
+    from lcr_etl_upgrade_spark.delta_lite import (
+        delete_rows,
+        latest_version,
+        read_delta_changes,
+        read_delta_lite,
+        read_row_ids,
+    )
+
+    def dv_delete(path):
+        _enable_dvs(path)
+        delete_rows(spark, path, "id % 101 = 0")
+
+    for key, template, read, prepare in (
+        ("read_dvtable", dvtable, read_delta_lite, None),
+        ("read_part", part, read_delta_lite, None),
+        ("row_ids_part", part, read_row_ids, None),
+        (
+            "changes_dv_part", part,
+            lambda spark, path: read_delta_changes(
+                spark, path, latest_version(path), latest_version(path)
+            ),
+            dv_delete,
+        ),
+    ):
+        _gated(
+            rec, key, measure_read,
+            spark, template, scratch, reps, read, prepare,
+        )
+
+
+def measure_read(spark, template, scratch, reps, read, prepare=None):
+    """Best/worst wall time of ``read(spark, path).count()`` over
+    ``reps`` runs on one copy of ``template`` (``prepare``d first), with
+    the rows it counted and the Spark jobs one read ran."""
+    path = _fresh_copy(template, scratch)
+    try:
+        if prepare is not None:
+            prepare(path)
+        best, worst = float("inf"), 0.0
+        for _ in range(reps):
+            n, dt, jobs = _timed_jobs(
+                spark, lambda: read(spark, path).count()
+            )
+            best, worst = min(best, dt), max(worst, dt)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+    return {
+        "best_sec": round(best, 3), "worst_sec": round(worst, 3),
+        "rows": n, "jobs": jobs,
+    }
 
 
 def _fresh_copy(template: str, scratch: str) -> str:
@@ -522,11 +591,112 @@ def measure_vacuum(spark, scratch, n_dead, reps):
     }
 
 
+# per-run fields that must agree between the two sides of a pair
+_COUNTS = ("touched_files", "files_added", "dv_files", "change_rows",
+           "jobs", "rows", "files_removed", "bytes_added")
+
+
+def run_pairs(args) -> int:
+    """``args.pairs`` alternating fresh-process runs of this checkout
+    and ``args.parent``: per config the median and quartiles of each
+    side's seconds and the distinct count values each side reported."""
+    trees = {"change": ROOT, "parent": os.path.abspath(args.parent)}
+    runs: dict[str, list[dict]] = {side: [] for side in trees}
+    load = _gate()
+    scratch = tempfile.mkdtemp(prefix="scale_writes_pairs_")
+    try:
+        for i in range(args.pairs):
+            order = ("change", "parent") if i % 2 == 0 else (
+                "parent", "change"
+            )
+            for side in order:
+                out = os.path.join(scratch, f"{side}-{i}.json")
+                # the tree's own package on the driver AND in the
+                # Python workers
+                # alternation, not the load gate, evens out the box's
+                # drift here: waiting for the load the previous
+                # process left to decay would take longer than the run
+                subprocess.run(
+                    [
+                        sys.executable, os.path.abspath(__file__),
+                        "--tree", trees[side], "--reps", "1",
+                        "--rows", str(args.rows), "--out", out,
+                        "--idle-bar", "inf",
+                    ],
+                    cwd=trees[side],
+                    env={**os.environ, "PYTHONPATH": trees[side]},
+                    check=True,
+                    stdout=subprocess.DEVNULL,
+                )
+                with open(out) as fh:
+                    runs[side].append(json.load(fh))
+                print(f"pair {i} {side} done", flush=True)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+    rec: dict = {
+        "rows": args.rows,
+        "files": N_FILES,
+        "pairs": args.pairs,
+        "load_avg_start": load,
+        "cpus": runs["change"][0]["cpus"],
+        "parent": subprocess.run(
+            ["git", "-C", trees["parent"], "rev-parse", "HEAD"],
+            capture_output=True, text=True,
+        ).stdout.strip(),
+        "configs": {},
+    }
+    for key, first in runs["change"][0].items():
+        if not isinstance(first, dict) or "best_sec" not in first:
+            continue
+        cfg: dict = {}
+        for side, side_runs in runs.items():
+            secs = [r[key]["best_sec"] for r in side_runs]
+            q1, med, q3 = statistics.quantiles(
+                secs, n=4, method="inclusive"
+            )
+            cfg[side] = {
+                "median_sec": round(med, 3),
+                "q1_sec": round(q1, 3),
+                "q3_sec": round(q3, 3),
+                "secs": secs,
+                **{
+                    c: sorted({r[key].get(c) for r in side_runs},
+                              key=str)
+                    for c in _COUNTS
+                    if c in first
+                },
+            }
+        cfg["median_within_or_below_parent_q3"] = (
+            cfg["change"]["median_sec"] <= cfg["parent"]["q3_sec"]
+        )
+        rec["configs"][key] = cfg
+    with open(args.out, "w") as fh:
+        fh.write(json.dumps(rec, indent=1) + "\n")
+    print(json.dumps(rec), flush=True)
+    return 0
+
+
 def main() -> int:
+    global IDLE_BAR, N_ROWS
     ap = argparse.ArgumentParser()
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--out", default="BENCH_writes_r12.json")
+    ap.add_argument("--rows", type=int, default=N_ROWS,
+                    help="rows in the uniform/partitioned templates")
+    ap.add_argument("--tree", default=ROOT,
+                    help="checkout whose package is measured")
+    ap.add_argument("--pairs", type=int, default=0,
+                    help="alternating fresh-process runs per side")
+    ap.add_argument("--parent", help="the other checkout of --pairs")
+    ap.add_argument("--idle-bar", type=float, default=IDLE_BAR,
+                    help="1-min load average each config waits for")
     args = ap.parse_args()
+    IDLE_BAR, N_ROWS = args.idle_bar, args.rows
+    if args.pairs:
+        if not args.parent:
+            ap.error("--pairs needs --parent")
+        return run_pairs(args)
+    sys.path.insert(0, os.path.abspath(args.tree))
 
     from pyspark.sql import SparkSession
 
