@@ -591,7 +591,8 @@ def measure_vacuum(spark, scratch, n_dead, reps):
     }
 
 
-# per-run fields that must agree between the two sides of a pair
+# per-run count fields reported side by side (all but bytes_added, which
+# varies by a few KB with shuffle read order, agree when the commands do)
 _COUNTS = ("touched_files", "files_added", "dv_files", "change_rows",
            "jobs", "rows", "files_removed", "bytes_added")
 
@@ -612,10 +613,9 @@ def run_pairs(args) -> int:
             for side in order:
                 out = os.path.join(scratch, f"{side}-{i}.json")
                 # the tree's own package on the driver AND in the
-                # Python workers
-                # alternation, not the load gate, evens out the box's
-                # drift here: waiting for the load the previous
-                # process left to decay would take longer than the run
+                # Python workers; alternation, not the load gate, evens
+                # out the box's drift (waiting for the load the previous
+                # process left to decay would take longer than the run)
                 subprocess.run(
                     [
                         sys.executable, os.path.abspath(__file__),
