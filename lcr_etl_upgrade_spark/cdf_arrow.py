@@ -10,15 +10,16 @@ Two consumers:
   implementation (pyarrow row filtering vs Spark anti/semi joins) to
   differential-test ``read_delta_changes`` against.
 
-Shares the LOG layer with delta_lite (TableState / _apply_action /
-_diff_commit — the protocol semantics must be identical by
-construction) and reimplements the ROW layer: pyarrow parquet reads,
-deletion-vector position sets from roaring_lite, partition-literal
-injection, physical->logical renames.
+Shares the LOG layer with delta_lite (``_Log``'s listing, commit
+parsing and commit times, TableState / _apply_action / _diff_commit —
+the protocol semantics must be identical by construction) and
+reimplements the ROW layer: pyarrow parquet reads, deletion-vector
+position sets from roaring_lite, partition-literal injection,
+physical->logical renames.
 
 State replay (including CLASSIC AND V2 CHECKPOINTS) runs through
-delta_lite.replay_log itself, driven by a pyarrow-backed duck type of
-the two Spark calls it makes (``spark.read.parquet(...).collect()`` +
+delta_lite's ``_Log.replay`` itself, driven by a pyarrow-backed duck
+type of the two Spark calls it makes (``spark.read.parquet(...).collect()`` +
 ``Row.asDict``) — zero protocol logic is duplicated, so the two
 readers cannot drift. Windows whose JSON commits were cleaned up
 still refuse (their row-level changes are genuinely unrecoverable),
@@ -34,36 +35,16 @@ import os
 import urllib.parse
 
 from lcr_etl_upgrade_spark.delta_lite import (
-    _COMMIT_RE,
     TableState,
     _column_mapping_mode,
     _diff_commit,
     _local,
-    _log_dir,
+    _Log,
     _physicalize,
     _resolve_dv_blob,
     _schema_identity,
-    replay_log,
 )
 from lcr_etl_upgrade_spark.roaring_lite import iter_roaring_bitmap_array
-
-
-def _commit_files(path: str) -> dict[int, str]:
-    log_dir = _log_dir(path)
-    if not os.path.isdir(log_dir):
-        raise FileNotFoundError(
-            f"not a Delta table: {path!r} has no _delta_log directory"
-        )
-    return {
-        int(m.group(1)): os.path.join(log_dir, f)
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    }
-
-
-def _read_actions(cpath: str) -> list[dict]:
-    with open(cpath) as fh:
-        return [json.loads(ln) for ln in fh if ln.strip()]
 
 
 def _arrow_value(obj, atype):
@@ -121,7 +102,7 @@ class _ArrowRelation:
 
 
 class _ArrowSparkShim:
-    """Duck type of the TWO SparkSession touchpoints replay_log uses
+    """Duck type of the TWO SparkSession touchpoints log replay uses
     (checkpoint parquet reads), backed by pyarrow — lets the full
     protocol replay (checkpoint discovery, sidecars, gap errors) run
     without a SparkSession."""
@@ -133,13 +114,13 @@ class _ArrowSparkShim:
     read = _Reader()
 
 
-def replay_json_state(path: str, version: int) -> TableState:
+def replay_json_state(log: _Log, version: int) -> TableState:
     """Replay to ``version`` (-1 = empty pre-table state) without a
-    SparkSession — delta_lite.replay_log over the pyarrow shim, so
-    checkpointed histories replay too."""
+    SparkSession — delta_lite's ``_Log.replay`` over the pyarrow shim,
+    so checkpointed histories replay too."""
     if version < 0:
         return TableState()
-    return replay_log(_ArrowSparkShim(), path, version)
+    return log.replay(_ArrowSparkShim(), version)
 
 
 def _dv_positions_set(base: str, dv: dict | None) -> set[int]:
@@ -179,10 +160,8 @@ def change_schema(path: str):
     metadata."""
     from pyspark.sql import types as T
 
-    commits = _commit_files(path)
-    if not commits:
-        raise FileNotFoundError(f"empty _delta_log in {path!r}")
-    state = replay_json_state(path, max(commits))
+    log = _Log(path)
+    state = replay_json_state(log, log.latest())
     if state.metadata is None:
         raise ValueError(f"no metaData action found in {path!r}")
     fields = list(
@@ -206,16 +185,14 @@ def change_plan(
     commit version/timestamp, schema context) that ``materialize_rows``
     turns into tuples. One task = one parquet file = one unit of
     parallelism for the partition-planned stream reader."""
-    commits = _commit_files(path)
-    if not commits:
-        raise FileNotFoundError(f"empty _delta_log in {path!r}")
-    latest = max(commits)
+    log = _Log(path)
+    latest = log.latest()
     if not (0 <= start_version <= end_version <= latest):
         raise ValueError(
             f"invalid change window [{start_version}, {end_version}] "
             f"(latest commit: {latest})"
         )
-    state = replay_json_state(path, start_version - 1)
+    state = replay_json_state(log, start_version - 1)
 
     def _key(meta):
         return (
@@ -228,11 +205,11 @@ def change_plan(
     branches = []
     schema_keys = set()
     for v in range(start_version, end_version + 1):
-        if v not in commits:
+        if v not in log.commits:
             raise ValueError(
                 f"commit {v} is missing from {path!r}'s log"
             )
-        actions = _read_actions(commits[v])
+        actions = list(log.actions(v))
         cdc_files = {
             urllib.parse.unquote(a["cdc"]["path"]): (
                 a["cdc"].get("partitionValues") or {}
@@ -243,10 +220,9 @@ def change_plan(
         key_before = (
             _key(state.metadata) if state.metadata is not None else None
         )
-        inserted, deleted, dv_changed, ts_ms = _diff_commit(state, actions)
+        inserted, deleted, dv_changed = _diff_commit(state, actions)
         state.version = v
-        if ts_ms is None:
-            ts_ms = int(os.path.getmtime(commits[v]) * 1000)
+        ts_ms = log.info(v, actions)["timestamp"]
         if cdc_files:
             # cdc actions are authoritative for their commit: serve the
             # change files, skip derivation (mirrors read_delta_changes)

@@ -14,6 +14,10 @@ So this module implements the protocol directly, Spark-first:
 
 - READ = log replay (driver-side, small) + one plain ``spark.read
   .parquet`` over the active file set with the schema from ``metaData``.
+  Every command reads the log through ``_Log``: one listing of
+  ``_delta_log`` gives the commits and the complete checkpoints, and
+  replay starts from the newest checkpoint that parses (the
+  ``_last_checkpoint`` hint is written for other readers, never read).
   Partitioned tables whose files are hive-layout (everything this
   writer produces) read as ONE ``basePath``-discovered relation, so
   Spark's native partition pruning applies inside a single scan node
@@ -21,11 +25,12 @@ So this module implements the protocol directly, Spark-first:
   logs fall back to a per-partition-group union whose branches
   constant-fold away under partition filters. Time travel = replay to
   ``version``.
-- WRITE = stage parquet files, move them into the table, append one
-  atomically-created JSON commit (``open(..., "x")`` — a concurrent
-  writer loses with a clear error instead of corrupting the log).
-  Tables written here are valid protocol v1 tables (reader 1 / writer 2)
-  readable by any real Delta reader.
+- WRITE = stage parquet files, move them into the table, publish one
+  JSON commit whole: written to a temp file, then hard-linked onto the
+  version name (``_write_commit_file``). Readers never see a partial
+  commit, and a concurrent writer loses the link with a clear error
+  instead of corrupting the log. Tables written here are valid protocol
+  v1 tables (reader 1 / writer 2) readable by any real Delta reader.
 
 Deliberate limits (clear errors, not wrong answers):
 - protocol reader versions 1 and 2 (column mapping: physical->logical
@@ -82,9 +87,10 @@ from lcr_etl_upgrade_spark.roaring_lite import (
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CHECKPOINT_SINGLE = "{v:020d}.checkpoint.parquet"
-# classic checkpoint data files: single-part and {v}.checkpoint.{i}.{n}
-_CHECKPOINT_FILE_RE = re.compile(
-    r"^\d{20}\.checkpoint(\.\d{10}\.\d{10})?\.parquet$"
+# classic checkpoints: single-part and multi-part {v}.checkpoint.{i}.{n}
+_CHECKPOINT_SINGLE_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
+_CHECKPOINT_MULTI_RE = re.compile(
+    r"^(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet$"
 )
 # v2 checkpoints (public protocol "V2 spec"): UUID-named, parquet or json
 _CHECKPOINT_V2_RE = re.compile(
@@ -146,7 +152,7 @@ def _local(path: str) -> str:
 # Table features (minReaderVersion=3) this reader actually implements.
 # Per the public protocol, a reader may open a version-3 table iff it
 # supports EVERY listed readerFeature — anything else must refuse.
-# - v2Checkpoint: UUID-named checkpoints (read in _read_checkpoint)
+# - v2Checkpoint: UUID-named checkpoints (read in _Log.checkpoint)
 # - columnMapping: physical->logical name mapping (read_delta_lite)
 # - timestampNtz: TIMESTAMP_NTZ columns — Spark's parquet reader and
 #   StructType.fromJson ('timestamp_ntz') handle the type natively
@@ -311,268 +317,231 @@ def _apply_action(state: TableState, action: dict) -> None:
     # commitInfo / cdc: transient, no effect on scan or checkpoint state
 
 
-def _parquet_actions(
-    spark: SparkSession, files: list[str], keys: tuple[str, ...]
-) -> list[dict]:
-    """Checkpoint-parquet rows -> action dicts (one non-null struct per
-    row, restricted to ``keys``)."""
-    actions: list[dict] = []
-    for row in spark.read.parquet(*files).collect():
-        d = row.asDict(recursive=True)
-        for key in keys:
-            if d.get(key) is not None:
-                actions.append({key: d[key]})
-    return actions
+# the state-bearing action keys a checkpoint carries (plus ``sidecar``
+# references of the v2 layout)
+_CP_KEYS = ("add", "remove", "metaData", "protocol", "txn",
+            "domainMetadata", "sidecar")
 
 
-def _expand_sidecars(
-    spark: SparkSession, log_dir: str, actions: list[dict]
-) -> list[dict]:
-    """Resolve v2-checkpoint ``sidecar`` actions: each names a parquet
-    file of add/remove actions, relative paths under ``_sidecars/`` per
-    the public protocol. Non-sidecar actions pass through in order."""
-    out: list[dict] = []
-    for a in actions:
-        sc = a.get("sidecar")
-        if sc is None:
-            out.append(a)
-            continue
-        p = urllib.parse.unquote(sc["path"])
-        full = p if os.path.isabs(p) else os.path.join(log_dir, "_sidecars", p)
-        if not os.path.exists(full):
-            raise ValueError(
-                f"v2 checkpoint sidecar {sc['path']!r} missing from "
-                f"{log_dir}/_sidecars"
+class _Log:
+    """One listing of a table's ``_delta_log`` and everything read from
+    it: the only place this module lists the log, parses its JSON,
+    decodes checkpoints or dates a commit.
+
+    The listing holds the commit versions and the COMPLETE checkpoint
+    sets, newest first: classic single-part, classic multi-part with
+    every part present, and v2 UUID-named (parquet or json). At one
+    version the single-file layouts come before a part set (nothing to
+    assemble) and the lexically-last v2 UUID first. Commit files are
+    published whole (``_write_commit_file``), so every listed commit is
+    complete."""
+
+    def __init__(self, path: str):
+        self.path = path
+        self.dir = _log_dir(path)
+        if not os.path.isdir(self.dir):
+            raise FileNotFoundError(
+                f"not a Delta table: {path!r} has no _delta_log directory"
             )
-        out.extend(_parquet_actions(spark, [full], ("add", "remove")))
-    return out
-
-
-def _read_checkpoint(
-    spark: SparkSession, log_dir: str, version: int, parts: int | None
-) -> list[dict]:
-    """Checkpoint -> action dicts, all three public layouts:
-
-    - single-part classic (``{v}.checkpoint.parquet``);
-    - multi-part classic (``{v}.checkpoint.{i}.{n}.parquet`` with the
-      ``parts`` field of ``_last_checkpoint``);
-    - v2 UUID-named (``{v}.checkpoint.{uuid}.parquet|json``), whose
-      add/remove content may live inline or in ``sidecar`` parquet files
-      under ``_delta_log/_sidecars/``. Any ONE complete v2 checkpoint
-      for the version is valid; the lexically-last UUID is chosen."""
-    keys = ("add", "remove", "metaData", "protocol", "txn",
-            "domainMetadata")
-    if parts:
-        files = [
-            os.path.join(
-                log_dir,
-                f"{version:020d}.checkpoint.{i:010d}.{parts:010d}.parquet",
-            )
-            for i in range(1, parts + 1)
-        ]
-        missing = [f for f in files if not os.path.exists(f)]
-        if missing:
-            raise ValueError(
-                f"multi-part checkpoint for version {version} is "
-                f"incomplete ({missing[0]} missing)"
-            )
-        return _parquet_actions(spark, files, keys)
-    single = os.path.join(log_dir, _CHECKPOINT_SINGLE.format(v=version))
-    if os.path.exists(single):
-        return _parquet_actions(spark, [single], keys)
-    v2 = sorted(
-        f
-        for f in os.listdir(log_dir)
-        if (m := _CHECKPOINT_V2_RE.match(f)) and int(m.group(1)) == version
-    )
-    if not v2:
-        raise NotImplementedError(
-            f"no checkpoint file found for version {version} in {log_dir} "
-            "(looked for single-part, multi-part and v2 UUID-named "
-            "layouts); unsupported layouts need delta-spark"
-        )
-    chosen = os.path.join(log_dir, v2[-1])
-    if chosen.endswith(".json"):
-        with open(chosen) as fh:
-            actions = [
-                json.loads(line) for line in fh if line.strip()
+        self.commits: dict[int, str] = {}  # version -> file name
+        # every commit and checkpoint file name -> its version
+        self.versions: dict[str, int] = {}
+        cands: list[tuple[tuple, list[str]]] = []
+        parts: dict[tuple[int, int], set[int]] = {}
+        for f in os.listdir(self.dir):
+            if m := _COMMIT_RE.match(f):
+                self.commits[int(m.group(1))] = f
+            elif m := _CHECKPOINT_SINGLE_RE.match(f):
+                cands.append(((int(m.group(1)), 2, f), [f]))
+            elif m := _CHECKPOINT_V2_RE.match(f):
+                cands.append(((int(m.group(1)), 1, f), [f]))
+            elif m := _CHECKPOINT_MULTI_RE.match(f):
+                parts.setdefault(
+                    (int(m.group(1)), int(m.group(3))), set()
+                ).add(int(m.group(2)))
+            else:
+                continue
+            self.versions[f] = int(m.group(1))
+        # version -> the first missing part of an incomplete part set
+        self.incomplete: dict[int, str] = {}
+        for (v, n), got in parts.items():
+            names = [
+                f"{v:020d}.checkpoint.{i:010d}.{n:010d}.parquet"
+                for i in range(1, n + 1)
             ]
-        actions = [
-            a
-            for a in actions
-            if any(k in a for k in keys) or a.get("sidecar") is not None
+            missing = [f for i, f in enumerate(names, 1) if i not in got]
+            if missing:
+                self.incomplete[v] = missing[0]
+            else:
+                cands.append(((v, 0, ""), names))
+        self.checkpoints: list[tuple[int, list[str]]] = [
+            (key[0], files) for key, files in sorted(cands, reverse=True)
         ]
-    else:
-        actions = _parquet_actions(spark, [chosen], keys + ("sidecar",))
-    return _expand_sidecars(spark, log_dir, actions)
 
+    def latest(self) -> int:
+        """Newest commit version; raises on a log without commits."""
+        if not self.commits:
+            raise FileNotFoundError(f"empty _delta_log in {self.path!r}")
+        return max(self.commits)
 
-_CHECKPOINT_SINGLE_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
-_CHECKPOINT_MULTI_RE = re.compile(
-    r"^(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet$"
-)
+    def _lines(self, name: str):
+        with open(os.path.join(self.dir, name)) as fh:
+            for line in fh:
+                if line.strip():
+                    yield json.loads(line)
 
+    def actions(self, v: int):
+        """Commit ``v``'s actions, parsed line by line."""
+        return self._lines(self.commits[v])
 
-def _checkpoint_present(log_dir: str, version: int, parts: int | None) -> bool:
-    """Do the files of this checkpoint actually exist (every part, for a
-    multi-part set)? The ``_last_checkpoint`` hint may be stale — files
-    deleted after the pointer was written."""
-    if parts:
-        return all(
-            os.path.exists(
-                os.path.join(
-                    log_dir,
-                    f"{version:020d}.checkpoint.{i:010d}.{parts:010d}"
-                    ".parquet",
-                )
+    def info(self, v: int, actions=None) -> dict:
+        """Commit ``v``'s commitInfo (``{}`` without one) with its
+        ``timestamp`` resolved: the header's own, else the commit
+        file's mtime (older tables, foreign writers)."""
+        info = next(
+            (a["commitInfo"] for a in (
+                self.actions(v) if actions is None else actions
+            ) if "commitInfo" in a),
+            None,
+        ) or {}
+        ts = info.get("timestamp")
+        if ts is None:
+            ts = os.path.getmtime(
+                os.path.join(self.dir, self.commits[v])
+            ) * 1000
+        return {**info, "timestamp": int(ts)}
+
+    def times(self) -> dict[int, int]:
+        """Canonical commit times, version -> ms: the running max of
+        ``info`` times over ascending versions — delta-spark's
+        clock-skew adjustment, so timestamp -> version is monotone."""
+        out: dict[int, int] = {}
+        running = -(1 << 62)
+        for v in sorted(self.commits):
+            running = max(running, self.info(v)["timestamp"])
+            out[v] = running
+        return out
+
+    def checkpoint(self, spark: SparkSession, files: list[str]) -> list[dict]:
+        """One checkpoint's files -> action dicts (``_CP_KEYS``, one per
+        non-null struct of each row): parquet, or json for the v2
+        layout. A v2 ``sidecar`` action stays in the list, followed by
+        the add/remove actions of the parquet file it names (relative
+        paths under ``_sidecars/``, per the public protocol)."""
+
+        def parquet(paths: list[str]) -> list[dict]:
+            out = []
+            for row in spark.read.parquet(*paths).collect():
+                d = row.asDict(recursive=True)
+                out += [{k: d[k]} for k in _CP_KEYS if d.get(k) is not None]
+            return out
+
+        if files[0].endswith(".json"):
+            actions = [
+                a for a in self._lines(files[0])
+                if any(a.get(k) is not None for k in _CP_KEYS)
+            ]
+        else:
+            actions = parquet([os.path.join(self.dir, f) for f in files])
+        out: list[dict] = []
+        for a in actions:
+            out.append(a)
+            sc = a.get("sidecar")
+            if sc is None:
+                continue
+            p = urllib.parse.unquote(sc["path"])
+            full = p if os.path.isabs(p) else os.path.join(
+                self.dir, "_sidecars", p
             )
-            for i in range(1, parts + 1)
+            if not os.path.exists(full):
+                raise ValueError(
+                    f"v2 checkpoint sidecar {sc['path']!r} missing from "
+                    f"{self.dir}/_sidecars"
+                )
+            out += parquet([full])
+        return out
+
+    def replay(
+        self, spark: SparkSession, version: int | None = None
+    ) -> TableState:
+        """State at ``version`` (default: latest): the newest complete
+        checkpoint at or below it that parses, then the JSON commits
+        after it. An unreadable checkpoint (a stray or corrupt file from
+        a crashed external writer) falls back to the next older one,
+        then to the JSON chain from version 0; with neither, its own
+        error — or an incomplete part set's — is raised instead of a
+        misleading gap."""
+        state = TableState()
+        failure: Exception | None = None
+        for cp_version, files in self.checkpoints:
+            if version is not None and cp_version > version:
+                continue
+            try:
+                actions = self.checkpoint(spark, files)
+            except Exception as exc:
+                failure = failure or exc
+                continue
+            for action in actions:
+                _apply_action(state, action)
+            state.version = cp_version
+            break
+        # existence of ``version`` is validated AFTER replay (below): it
+        # may be reconstructible from a checkpoint alone when its JSON
+        # commit was cleaned up
+        commits = sorted(
+            v for v in self.commits
+            if v > state.version and (version is None or v <= version)
         )
-    if os.path.exists(os.path.join(log_dir, _CHECKPOINT_SINGLE.format(v=version))):
-        return True
-    return any(
-        (m := _CHECKPOINT_V2_RE.match(f)) and int(m.group(1)) == version
-        for f in os.listdir(log_dir)
-    )
-
-
-def _discover_checkpoint(
-    log_dir: str, max_version: int | None
-) -> tuple[int, int | None] | None:
-    """Newest COMPLETE checkpoint ``(version, parts|None)`` found by
-    listing the log directory — the protocol's fallback when the
-    ``_last_checkpoint`` hint is absent, names a version past the
-    requested one, or points at files that no longer exist. Multi-part
-    sets count only when every part is present; v2 UUID-named files
-    count like single-part (parts=None)."""
-    singles: set[int] = set()
-    multi: dict[tuple[int, int], set[int]] = {}
-    for f in os.listdir(log_dir):
-        if (m := _CHECKPOINT_SINGLE_RE.match(f)) or (
-            m := _CHECKPOINT_V2_RE.match(f)
-        ):
-            singles.add(int(m.group(1)))
-        elif m := _CHECKPOINT_MULTI_RE.match(f):
-            key = (int(m.group(1)), int(m.group(3)))
-            multi.setdefault(key, set()).add(int(m.group(2)))
-    cands: list[tuple[int, int | None]] = [(v, None) for v in singles]
-    cands += [
-        (v, n)
-        for (v, n), parts in multi.items()
-        if parts == set(range(1, n + 1))
-    ]
-    cands = [c for c in cands if max_version is None or c[0] <= max_version]
-    if not cands:
-        return None
-    # newest version wins; at the same version prefer the single-file
-    # layout (nothing to assemble)
-    return max(cands, key=lambda c: (c[0], c[1] is None))
+        if state.version < 0 and commits[:1] != [0]:
+            if failure is not None:
+                raise failure
+            bad = max(
+                (v for v in self.incomplete if version is None or v <= version),
+                default=None,
+            )
+            if bad is not None:
+                raise ValueError(
+                    f"multi-part checkpoint for version {bad} in "
+                    f"{self.dir} is incomplete ({self.incomplete[bad]} "
+                    "missing), and no other complete checkpoint or full "
+                    "JSON chain can reconstruct the table state"
+                )
+        for v in commits:
+            if v != state.version + 1:
+                # a GAP means commits were deleted (e.g. log cleanup
+                # after a checkpoint) — replaying a partial log would
+                # silently reconstruct a WRONG file set, so refuse
+                raise ValueError(
+                    f"cannot reconstruct version "
+                    f"{version if version is not None else 'latest'} of "
+                    f"{self.path!r}: commit {state.version + 1} is missing "
+                    f"(log starts at {v}; earlier commits were removed "
+                    "after a checkpoint?)"
+                )
+            for action in self.actions(v):
+                _apply_action(state, action)
+            state.version = v
+        if version is not None and state.version != version:
+            raise ValueError(
+                f"version {version} not found in {self.dir} "
+                f"(latest eligible: "
+                f"{state.version if state.version >= 0 else 'none'})"
+            )
+        if state.version < 0:
+            self.latest()  # no commit and no checkpoint: the empty-log error
+        if state.metadata is None:
+            raise ValueError(f"no metaData action found in {self.dir}")
+        _check_protocol(state.protocol)
+        return state
 
 
 def replay_log(
     spark: SparkSession, path: str, version: int | None = None
 ) -> TableState:
     """Reconstruct table state at ``version`` (default: latest) by replaying
-    the newest eligible checkpoint plus subsequent JSON commits in order."""
-    log_dir = _log_dir(path)
-    if not os.path.isdir(log_dir):
-        raise FileNotFoundError(
-            f"not a Delta table: {path!r} has no _delta_log directory"
-        )
-    commits = sorted(
-        (int(m.group(1)), os.path.join(log_dir, f))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    )
-    if version is not None:
-        # existence is validated AFTER replay (below): the requested
-        # version may be reconstructible from a checkpoint alone when its
-        # JSON commit was cleaned up
-        commits = [(v, p) for v, p in commits if v <= version]
-    state = TableState()
-    start = 0
-    cp: tuple[int, int | None] | None = None
-    stale_hint: int | None = None
-    last_cp = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(last_cp):
-        with open(last_cp) as fh:
-            cp_meta = json.load(fh)
-        hinted = (int(cp_meta["version"]), cp_meta.get("parts"))
-        if version is None or hinted[0] <= version:
-            if _checkpoint_present(log_dir, *hinted):
-                cp = hinted
-            else:
-                stale_hint = hinted[0]
-    if cp is None:
-        # _last_checkpoint is a HINT per the protocol — absent (never
-        # written, or deleted), pointing past the requested version, or
-        # pointing at files that were since removed, the checkpoint
-        # files themselves are still discoverable by listing; without
-        # this, a table whose pre-checkpoint commits were cleaned up
-        # would refuse with a spurious gap error
-        cp = _discover_checkpoint(log_dir, version)
-        if cp is None and stale_hint is not None and (
-            not commits or commits[0][0] != 0
-        ):
-            # the hint's files are gone/incomplete, nothing else was
-            # discovered, and the JSON chain cannot reconstruct from 0:
-            # name the actual problem instead of a misleading
-            # empty-log/gap error downstream
-            raise ValueError(
-                f"checkpoint for version {stale_hint} in {log_dir} is "
-                "incomplete or its files were removed, and no other "
-                "complete checkpoint or full JSON chain can reconstruct "
-                "the table state"
-            )
-    cp_actions: list[dict] = []
-    if cp is not None:
-        try:
-            cp_actions = _read_checkpoint(spark, log_dir, cp[0], cp[1])
-        except Exception:
-            if commits and commits[0][0] == 0:
-                # a present-but-unreadable checkpoint (stray/corrupt file
-                # from a crashed external writer) must not break a table
-                # whose intact JSON chain reconstructs the state alone
-                cp = None
-            else:
-                raise
-    if cp is not None:
-        for action in cp_actions:
-            _apply_action(state, action)
-        state.version = cp[0]
-        start = cp[0] + 1
-    expected = start
-    for v, commit_path in commits:
-        if v < start:
-            continue
-        if v != expected:
-            # a GAP means commits were deleted (e.g. log cleanup after a
-            # checkpoint) — replaying a partial log would silently
-            # reconstruct a WRONG file set, so refuse instead
-            raise ValueError(
-                f"cannot reconstruct version "
-                f"{version if version is not None else 'latest'} of "
-                f"{path!r}: commit {expected} is missing (log starts at "
-                f"{v}; earlier commits were removed after a checkpoint?)"
-            )
-        expected = v + 1
-        with open(commit_path) as fh:
-            for line in fh:
-                if line.strip():
-                    _apply_action(state, json.loads(line))
-        state.version = v
-    if version is not None and state.version != version:
-        raise ValueError(
-            f"version {version} not found in {log_dir} "
-            f"(latest eligible: "
-            f"{state.version if state.version >= 0 else 'none'})"
-        )
-    if state.version < 0:
-        raise FileNotFoundError(f"empty _delta_log in {path!r}")
-    if state.metadata is None:
-        raise ValueError(f"no metaData action found in {log_dir}")
-    _check_protocol(state.protocol)
-    return state
+    the newest usable checkpoint plus subsequent JSON commits in order
+    (``_Log.replay``)."""
+    return _Log(path).replay(spark, version)
 
 
 # ---- deletion vectors (deletionVectors reader feature) ------------------
@@ -1141,29 +1110,24 @@ def version_at_timestamp(
         ts_ms = int(ts.timestamp() * 1000)
     else:
         ts_ms = int(ts)
-    hist = sorted(table_history(path), key=lambda r: r["version"])
-    if not hist:
-        raise FileNotFoundError(f"empty _delta_log in {path!r}")
-    best: int | None = None
-    running = -(1 << 62)
-    for rec in hist:
-        running = max(running, int(rec["timestamp"]))
-        if running <= ts_ms:
-            best = rec["version"]
-    if best is not None and not allow_future and ts_ms > running:
+    log = _Log(path)
+    latest = log.latest()
+    times = log.times()
+    best = max((v for v, t in times.items() if t <= ts_ms), default=None)
+    if best is not None and not allow_future and ts_ms > times[latest]:
         raise ValueError(
             f"timestamp {ts_ms} (epoch ms) is after the latest commit to "
-            f"{path!r} (version {hist[-1]['version']} at {running} ms); "
+            f"{path!r} (version {latest} at {times[latest]} ms); "
             "reads refuse future timestamps (delta-spark parity) — pass "
             "the latest version explicitly, or use restore_table, whose "
             "permissive rule resolves future times to latest"
         )
     if best is None:
-        first = hist[0]
+        first = min(times)
         raise ValueError(
             f"timestamp {ts_ms} (epoch ms) precedes the first commit to "
-            f"{path!r} (version {first['version']} at "
-            f"{first['timestamp']} ms); nothing existed to read"
+            f"{path!r} (version {first} at {times[first]} ms); nothing "
+            "existed to read"
         )
     return best
 
@@ -1802,24 +1766,26 @@ def _file_stats_json(full_path: str) -> str | None:
 
 
 def _write_commit_file(commit_path: str, actions: list[dict]) -> None:
-    """Write one commit with ``open(.., 'x')`` as the commit point.
-    FileExistsError means the version race was LOST (the file is the
-    winner's — never touched); any failure AFTER creation (disk full,
-    interrupt) unlinks the partial file, because truncated JSON in the
-    log bricks every future replay."""
-    created = False
+    """Publish one commit whole: write the actions to a temp file in the
+    log directory, then ``os.link`` it onto the version name — the
+    commit point. The link is atomic, so a reader lists either no
+    version file or the complete commit, and it raises FileExistsError
+    when the version race was LOST (the winner's file is never
+    touched). The temp name matches no log pattern; it is removed
+    either way, and a hard kill leaves at most that stray file, never a
+    truncated commit."""
+    log_dir, name = os.path.split(commit_path)
+    tmp = os.path.join(log_dir, f".{name}.{uuid.uuid4().hex}.tmp")
     try:
-        with open(commit_path, "x") as fh:
-            created = True
+        with open(tmp, "x") as fh:
             for action in actions:
                 fh.write(json.dumps(action) + "\n")
-    except BaseException:
-        if created:
-            try:
-                os.remove(commit_path)
-            except OSError:
-                pass
-        raise
+        os.link(tmp, commit_path)
+    finally:
+        try:
+            os.remove(tmp)
+        except OSError:
+            pass
 
 
 def _remove_action(
@@ -1996,9 +1962,10 @@ def write_delta_lite(
     standard CHECK. This makes legacy minWriterVersion=3 tables and
     v7 tables listing checkConstraints writable here.
 
-    The commit file is created with ``open(.., "x")`` — creation is the
-    commit point, and a concurrent writer gets FileExistsError (single-
-    writer semantics made explicit rather than log corruption).
+    The commit is published whole by hard-linking a temp file onto the
+    version name — the link is the commit point, and a concurrent
+    writer gets FileExistsError (single-writer semantics made explicit
+    rather than log corruption).
     """
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
@@ -4327,8 +4294,8 @@ def vacuum(
     .bin BEFORE committing; reclaiming those would corrupt the racing
     writer) — only log-referenced-then-expired ones are."""
     base = _local(path)
-    log_dir = _log_dir(path)
-    state = replay_log(spark, path)  # validates before touching files
+    log = _Log(path)
+    state = log.replay(spark)  # validates before touching files
     horizon_ms = (
         None
         if retain_hours is None
@@ -4343,28 +4310,9 @@ def vacuum(
         rel = _dv_bin_rel(base, dv)
         if rel:
             keep.add(rel)
-    commits = sorted(
-        (int(m.group(1)), f)
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    )
-    running_ts = -(1 << 62)
-    for v, f in commits:
-        cpath = os.path.join(log_dir, f)
-        ts_ms = None
-        acts: list[dict] = []
-        with open(cpath) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "commitInfo" in action and ts_ms is None:
-                    ts_ms = action["commitInfo"].get("timestamp")
-                acts.append(action)
-        if ts_ms is None:
-            ts_ms = int(os.path.getmtime(cpath) * 1000)
-        running_ts = max(running_ts, int(ts_ms))
-        for action in acts:
+    for v, ts_ms in log.times().items():
+        retained = horizon_ms is not None and ts_ms >= horizon_ms
+        for action in log.actions(v):
             # cdc change files are referenced ONLY by their commit's
             # cdc actions (never by checkpoints — cdc is transient log
             # state): missing them here would reclaim live change data
@@ -4376,52 +4324,33 @@ def vacuum(
                 or action.get("remove")
                 or action.get("cdc")
             )
-            if a:
-                rel = urllib.parse.unquote(a["path"])
-                referenced.add(rel)
-                last_ref_ms[rel] = running_ts
-                dv_rel = _dv_bin_rel(base, a.get("deletionVector"))
-                if dv_rel:
-                    referenced.add(dv_rel)
-                    last_ref_ms[dv_rel] = running_ts
-        if horizon_ms is not None and running_ts >= horizon_ms:
-            # retained-window commit: everything it names stays
-            for action in acts:
-                a = (
-                    action.get("add")
-                    or action.get("remove")
-                    or action.get("cdc")
-                )
-                if a:
-                    keep.add(urllib.parse.unquote(a["path"]))
-                    dv_rel = _dv_bin_rel(base, a.get("deletionVector"))
-                    if dv_rel:
-                        keep.add(dv_rel)
-    for f in os.listdir(log_dir):
-        if _CHECKPOINT_FILE_RE.match(f) or _CHECKPOINT_V2_RE.match(f):
-            # every checkpoint layout (single-part, multi-part AND v2
-            # UUID-named incl. sidecars): a table whose pre-checkpoint
-            # commits were cleaned up is referenced ONLY here — missing
-            # any form would delete every active file it names
-            full = os.path.join(log_dir, f)
-            if f.endswith(".json"):
-                with open(full) as fh:
-                    actions = [
-                        json.loads(line) for line in fh if line.strip()
-                    ]
-            else:
-                actions = _parquet_actions(spark, [full], ("add", "sidecar"))
-            for action in _expand_sidecars(spark, log_dir, actions):
-                if action.get("add"):
-                    rel = urllib.parse.unquote(action["add"]["path"])
+            if not a:
+                continue
+            for rel in (
+                urllib.parse.unquote(a["path"]),
+                _dv_bin_rel(base, a.get("deletionVector")),
+            ):
+                if rel:
                     referenced.add(rel)
-                    keep.add(rel)  # checkpoint state is always live
-                    dv_rel = _dv_bin_rel(
-                        base, action["add"].get("deletionVector")
-                    )
-                    if dv_rel:
-                        referenced.add(dv_rel)
-                        keep.add(dv_rel)
+                    last_ref_ms[rel] = ts_ms
+                    if retained:  # a retained-window commit's files stay
+                        keep.add(rel)
+    # every complete checkpoint (single-part, multi-part AND v2
+    # UUID-named incl. sidecars): a table whose pre-checkpoint commits
+    # were cleaned up is referenced ONLY here — missing any would delete
+    # every active file it names. Checkpoint state is always live.
+    for _v, files in log.checkpoints:
+        for action in log.checkpoint(spark, files):
+            add = action.get("add")
+            if not add:
+                continue
+            for rel in (
+                urllib.parse.unquote(add["path"]),
+                _dv_bin_rel(base, add.get("deletionVector")),
+            ):
+                if rel:
+                    referenced.add(rel)
+                    keep.add(rel)
     removed: list[str] = []
     for entry in os.listdir(base):
         if entry.startswith("_staging-"):
@@ -4529,46 +4458,26 @@ def cleanup_log(spark: SparkSession, path: str) -> list[str]:
     cleanup, minus wall-clock retention (the caller decides WHEN).
     Returns removed names relative to ``_delta_log``. No-op (``[]``)
     when the table has no checkpoint."""
-    log_dir = _log_dir(path)
-    if not os.path.isdir(log_dir):
-        raise FileNotFoundError(
-            f"not a Delta table: {path!r} has no _delta_log directory"
-        )
-    cp = _discover_checkpoint(log_dir, None)
-    if cp is None:
+    log = _Log(path)
+    if not log.checkpoints:
         return []
-    horizon = cp[0]
-    _read_checkpoint(spark, log_dir, cp[0], cp[1])  # must parse
+    horizon, files = log.checkpoints[0]
+    log.checkpoint(spark, files)  # must parse
     removed: list[str] = []
-    for f in sorted(os.listdir(log_dir)):
-        m = (
-            _COMMIT_RE.match(f)
-            or _CHECKPOINT_SINGLE_RE.match(f)
-            or _CHECKPOINT_MULTI_RE.match(f)
-            or _CHECKPOINT_V2_RE.match(f)
-        )
-        if m and int(m.group(1)) < horizon:
-            os.remove(os.path.join(log_dir, f))
+    for f, v in sorted(log.versions.items()):
+        if v < horizon:
+            os.remove(os.path.join(log.dir, f))
             removed.append(f)
     # sidecar GC: keep exactly the files some RETAINED v2 checkpoint
     # references (an older v2 checkpoint just deleted may have been the
     # only referent of its sidecars)
-    side_dir = os.path.join(log_dir, "_sidecars")
+    side_dir = os.path.join(log.dir, "_sidecars")
     if os.path.isdir(side_dir):
         referenced: set[str] = set()
-        for f in os.listdir(log_dir):
-            m = _CHECKPOINT_V2_RE.match(f)
-            if not m or int(m.group(1)) < horizon:
+        for v, files in log.checkpoints:
+            if v < horizon or not _CHECKPOINT_V2_RE.match(files[0]):
                 continue
-            full = os.path.join(log_dir, f)
-            if f.endswith(".json"):
-                with open(full) as fh:
-                    actions = [
-                        json.loads(line) for line in fh if line.strip()
-                    ]
-            else:
-                actions = _parquet_actions(spark, [full], ("sidecar",))
-            for a in actions:
+            for a in log.checkpoint(spark, files):
                 sc = a.get("sidecar")
                 if sc:
                     p = urllib.parse.unquote(sc["path"])
@@ -4585,8 +4494,9 @@ def cleanup_log(spark: SparkSession, path: str) -> list[str]:
 
 def write_checkpoint(spark: SparkSession, path: str) -> int:
     """Materialize the current replayed state as a parquet checkpoint +
-    ``_last_checkpoint`` pointer (the protocol's replay shortcut):
-    subsequent reads replay from here instead of from version 0, so
+    the ``_last_checkpoint`` hint for other readers (``_Log`` finds
+    checkpoints by listing): subsequent reads replay from here instead
+    of from version 0, so
     log-replay cost stays bounded by CHECKPOINT_INTERVAL no matter how
     many commits the table accumulates. Returns the checkpointed
     version.
@@ -4596,7 +4506,7 @@ def write_checkpoint(spark: SparkSession, path: str) -> int:
     UUID-named top-level ``{v}.checkpoint.{uuid}.parquet`` holding the
     checkpointMetadata/protocol/metaData/txn/domainMetadata actions
     plus ONE ``sidecar`` reference whose ``_sidecars/{uuid}.parquet``
-    carries the add actions — everything ``_read_checkpoint`` (and
+    carries the add actions — everything ``_Log.checkpoint`` (and
     delta-spark's v2 reader) resolves. Every other table gets the
     feature-aware CLASSIC single-part layout (r8). Both carry the full
     state: files + DVs (descriptors incl. maxRowIndex) + stats/tags +
@@ -4774,17 +4684,8 @@ def _diff_commit(state: TableState, actions: list[dict]) -> tuple:
     row-level file changes (pure Python, no Spark):
 
     returns (inserted {rel: (pvals, new_dv)}, deleted {rel: (pvals,
-    old_dv)}, dv_changed {rel: (pvals, old_dv, new_dv)}, ts_ms|None).
+    old_dv)}, dv_changed {rel: (pvals, old_dv, new_dv)}).
     dataChange=false actions (layout rewrites) never contribute."""
-    ts_ms = next(
-        (
-            a["commitInfo"]["timestamp"]
-            for a in actions
-            if "commitInfo" in a
-            and a["commitInfo"].get("timestamp") is not None
-        ),
-        None,
-    )
     files_b, dvs_b = dict(state.files), dict(state.dvs)
     data_change: dict[str, bool] = {}
     for a in actions:
@@ -4813,7 +4714,7 @@ def _diff_commit(state: TableState, actions: list[dict]) -> tuple:
                 dvs_b.get(rel),
                 state.dvs.get(rel),
             )
-    return inserted, deleted, dv_changed, ts_ms
+    return inserted, deleted, dv_changed
 
 
 def _schema_identity(schema_str: str) -> str:
@@ -4886,19 +4787,8 @@ def read_delta_changes(
     contract as replay_log itself.
     """
     base = _local(path)
-    log_dir = _log_dir(path)
-    if not os.path.isdir(log_dir):
-        raise FileNotFoundError(
-            f"not a Delta table: {path!r} has no _delta_log directory"
-        )
-    commit_map = {
-        int(m.group(1)): os.path.join(log_dir, f)
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    }
-    if not commit_map:
-        raise FileNotFoundError(f"empty _delta_log in {path!r}")
-    latest = max(commit_map)
+    log = _Log(path)
+    latest = log.latest()
     end = latest if end_version is None else end_version
     if not (0 <= start_version <= end <= latest):
         raise ValueError(
@@ -4906,7 +4796,7 @@ def read_delta_changes(
             f"(latest commit: {latest})"
         )
     state = (
-        replay_log(spark, path, start_version - 1)
+        log.replay(spark, start_version - 1)
         if start_version > 0
         else TableState()
     )
@@ -4925,14 +4815,12 @@ def read_delta_changes(
     window: dict[tuple, dict] = {}
     files: dict[str, dict] = {}  # every file the window reads
     for v in range(start_version, end + 1):
-        cpath = commit_map.get(v)
-        if cpath is None:
+        if v not in log.commits:
             raise ValueError(
-                f"commit {v} is missing from {log_dir} (cleaned up?) — "
+                f"commit {v} is missing from {log.dir} (cleaned up?) — "
                 "row-level changes for it are unrecoverable"
             )
-        with open(cpath) as fh:
-            actions = [json.loads(ln) for ln in fh if ln.strip()]
+        actions = list(log.actions(v))
         cdc_files = {
             urllib.parse.unquote(a["cdc"]["path"]): (
                 a["cdc"].get("partitionValues") or {}
@@ -4941,10 +4829,9 @@ def read_delta_changes(
             if "cdc" in a
         }
         meta_before = state.metadata
-        inserted, deleted, dv_changed, ts_ms = _diff_commit(state, actions)
+        inserted, deleted, dv_changed = _diff_commit(state, actions)
         state.version = v
-        if ts_ms is None:
-            ts_ms = int(os.path.getmtime(cpath) * 1000)
+        ts_ms = log.info(v, actions)["timestamp"]
         if cdc_files:
             # cdc actions are AUTHORITATIVE for their commit (the
             # spec's rule): serve the change files, ignore derivation —
@@ -4976,7 +4863,7 @@ def read_delta_changes(
     ]
     if not branches:
         if state.metadata is None:
-            raise ValueError(f"no metaData action found in {log_dir}")
+            raise ValueError(f"no metaData action found in {log.dir}")
         tr = _TableRead(spark, path, state)
         return spark.createDataFrame(
             [], T.StructType(list(tr.schema) + change_cols)
@@ -5041,19 +4928,7 @@ def read_delta_changes(
 
 def latest_version(path: str) -> int:
     """Newest commit version present in the log (no replay)."""
-    log_dir = _log_dir(path)
-    if not os.path.isdir(log_dir):
-        raise FileNotFoundError(
-            f"not a Delta table: {path!r} has no _delta_log directory"
-        )
-    versions = [
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    ]
-    if not versions:
-        raise FileNotFoundError(f"empty _delta_log in {path!r}")
-    return max(versions)
+    return _Log(path).latest()
 
 
 # ---- OPTIMIZE (bin-packing compaction + Z-order clustering) --------------
@@ -5685,25 +5560,15 @@ def table_detail(spark: SparkSession, path: str) -> dict:
     properties, protocol versions and features, clustering columns.
     Pure metadata plus the add-action sizes already in the log; no data
     file is opened."""
-    state = replay_log(spark, path)
+    log = _Log(path)
+    state = log.replay(spark)
     meta = state.metadata or {}
     cfg = dict(meta.get("configuration") or {})
     proto = state.protocol or {}
-    log = _log_dir(path)
-    created = None
-    try:
-        v0 = os.path.join(log, f"{0:020d}.json")
-        with open(v0) as fh:
-            for ln in fh:
-                a = json.loads(ln)
-                if "commitInfo" in a:
-                    created = a["commitInfo"].get("timestamp")
-                    break
-    except OSError:
-        pass
-    last_modified = None
-    for rec in table_history(path)[:1]:
-        last_modified = rec.get("timestamp")
+    created = log.info(0)["timestamp"] if 0 in log.commits else None
+    last_modified = (
+        log.info(max(log.commits))["timestamp"] if log.commits else None
+    )
     sizes = 0
     for rel in state.files:
         extras = state.adds.get(rel) or {}
@@ -5771,11 +5636,7 @@ def convert_to_delta(
 
     Returns the committed version (0)."""
     base = _local(path)
-    log = _log_dir(path)
-    if os.path.isdir(log) and any(
-        f.endswith(".json") or f.endswith(".parquet")
-        for f in os.listdir(log)
-    ):
+    if os.path.isdir(_log_dir(path)) and _Log(path).versions:
         raise ValueError(
             f"{path!r} already has a _delta_log; CONVERT TO DELTA only "
             "initializes plain parquet directories"
@@ -5888,40 +5749,17 @@ def table_history(path: str) -> list[dict]:
     writers) report operation None with the commit file's mtime — the
     same fallback the change feed uses. Pure metadata: no data files
     are touched."""
-    log_dir = _log_dir(path)
-    if not os.path.isdir(log_dir):
-        raise FileNotFoundError(
-            f"not a Delta table: {path!r} has no _delta_log directory"
-        )
+    log = _Log(path)
     out: list[dict] = []
-    for f in sorted(os.listdir(log_dir), reverse=True):
-        m = _COMMIT_RE.match(f)
-        if not m:
-            continue
-        cpath = os.path.join(log_dir, f)
-        info = None
-        with open(cpath) as fh:
-            for ln in fh:
-                if ln.strip():
-                    a = json.loads(ln)
-                    if "commitInfo" in a:
-                        info = a["commitInfo"]
-                        break
+    for v in sorted(log.commits, reverse=True):
+        info = log.info(v)
         out.append(
             {
-                "version": int(m.group(1)),
-                "timestamp": int(
-                    info.get("timestamp")
-                    if info and info.get("timestamp") is not None
-                    else os.path.getmtime(cpath) * 1000
-                ),
-                "operation": (info or {}).get("operation"),
-                "operationParameters": (info or {}).get(
-                    "operationParameters"
-                ),
-                "operationMetrics": (info or {}).get(
-                    "operationMetrics"
-                ),
+                "version": v,
+                "timestamp": info["timestamp"],
+                "operation": info.get("operation"),
+                "operationParameters": info.get("operationParameters"),
+                "operationMetrics": info.get("operationMetrics"),
             }
         )
     return out

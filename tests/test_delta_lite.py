@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -1154,6 +1155,303 @@ def test_corrupt_stray_checkpoint_does_not_break_intact_log(spark, tmp_path):
     with open(os.path.join(log_dir, f"{1:020d}.checkpoint.parquet"), "wb") as fh:
         fh.write(b"not parquet at all")
     assert {r.id for r in read_delta_lite(spark, path).collect()} == {1, 2}
+
+
+def _inline_dv(positions, extra=None):
+    """An inline ('i') deletionVector descriptor deleting ``positions``."""
+    from lcr_etl_upgrade_spark.roaring_lite import (
+        ROARING_ARRAY_MAGIC,
+        z85_encode,
+    )
+    from tests.test_roaring_dv import _bitmap32_array
+
+    per_key: dict[int, list[int]] = {}
+    for p in sorted(positions):
+        per_key.setdefault(p >> 16, []).append(p & 0xFFFF)
+    bitmap = struct.pack(
+        "<iq", ROARING_ARRAY_MAGIC, 1
+    ) + _bitmap32_array(per_key)
+    pad = (-len(bitmap)) % 4
+    dv = {
+        "storageType": "i",
+        "pathOrInlineDv": z85_encode(bitmap + b"\x00" * pad),
+        "sizeInBytes": len(bitmap),
+        "cardinality": len(set(positions)),
+    }
+    dv.update(extra or {})
+    return dv
+
+
+def _author_table(spark, path, add_extra=None, meta_extra=None,
+                  dv=None):
+    """Hand-author a 10-row single-file unmapped table at ``path``."""
+    (path / "_delta_log").mkdir(parents=True)
+    sub = path / "stage"
+    spark.range(10).selectExpr("id", "id * 10 as v").coalesce(
+        1
+    ).write.parquet(str(sub))
+    f = next(n for n in os.listdir(sub) if n.endswith(".parquet"))
+    os.rename(sub / f, path / "part-0.parquet")
+    meta = {
+        "id": "0000", "format": {"provider": "parquet", "options": {}},
+        "schemaString": json.dumps({"type": "struct", "fields": [
+            {"name": "id", "type": "long", "nullable": True,
+             "metadata": {}},
+            {"name": "v", "type": "long", "nullable": True,
+             "metadata": {}},
+        ]}),
+        "partitionColumns": [], "configuration": {},
+    }
+    meta.update(meta_extra or {})
+    add = {
+        "path": "part-0.parquet", "partitionValues": {}, "size": 1,
+        "modificationTime": 0, "dataChange": True,
+    }
+    if dv is not None:
+        add["deletionVector"] = dv
+    add.update(add_extra or {})
+    proto = {"minReaderVersion": 1, "minWriterVersion": 2}
+    if dv is not None:
+        proto = {
+            "minReaderVersion": 3, "minWriterVersion": 7,
+            "readerFeatures": ["deletionVectors"],
+            "writerFeatures": ["deletionVectors"],
+        }
+    with open(path / "_delta_log" / f"{0:020d}.json", "w") as fh:
+        fh.write(json.dumps({"protocol": proto}) + "\n")
+        fh.write(json.dumps({"metaData": meta}) + "\n")
+        fh.write(json.dumps({"add": add}) + "\n")
+    return str(path)
+
+
+def test_checkpoint_carries_optional_action_fields(spark, tmp_path):
+    """write_checkpoint carries metaData name/description, add.stats,
+    add.tags and deletionVector.maxRowIndex losslessly."""
+    from lcr_etl_upgrade_spark.delta_lite import write_checkpoint
+
+    path = _author_table(
+        spark,
+        tmp_path / "opt",
+        add_extra={
+            "stats": json.dumps({"numRecords": 10}),
+            "tags": {"OPTIMIZE_TARGET": "x"},
+        },
+        meta_extra={"name": "mytable", "description": "the description"},
+        dv=_inline_dv({1, 3, 7}, extra={"maxRowIndex": 7}),
+    )
+    before = replay_log(spark, path)
+    write_checkpoint(spark, path)
+    # force replay THROUGH the checkpoint by removing the JSON commit
+    os.remove(os.path.join(path, "_delta_log", f"{0:020d}.json"))
+    after = replay_log(spark, path)
+    assert after.metadata["name"] == "mytable"
+    assert after.metadata["description"] == "the description"
+    assert after.adds["part-0.parquet"]["stats"] == json.dumps(
+        {"numRecords": 10}
+    )
+    assert after.adds["part-0.parquet"]["tags"] == {"OPTIMIZE_TARGET": "x"}
+    assert after.dvs["part-0.parquet"]["maxRowIndex"] == 7
+    assert after.files == before.files
+    # and the DV still applies through the checkpoint
+    assert set(
+        r.id for r in read_delta_lite(spark, path).collect()
+    ) == {0, 2, 4, 5, 6, 8, 9}
+
+
+def test_checkpoint_refuses_unrepresentable_add_field(spark, tmp_path):
+    """write_checkpoint REFUSES on state fields its fixed schema cannot
+    represent instead of silently dropping them relative to JSON-log
+    replay. clusteringProvider: a real add field (liquid clustering) the
+    checkpoint schema does not carry; baseRowId/defaultRowCommitVersion
+    moved INTO the schema in r9 (rowTracking checkpoints)."""
+    from lcr_etl_upgrade_spark.delta_lite import write_checkpoint
+
+    path = _author_table(
+        spark, tmp_path / "rt", add_extra={"clusteringProvider": "liquid"}
+    )
+    with pytest.raises(NotImplementedError, match="clusteringProvider"):
+        write_checkpoint(spark, path)
+
+
+def test_checkpoint_refuses_unrepresentable_metadata_field(
+    spark, tmp_path
+):
+    from lcr_etl_upgrade_spark.delta_lite import write_checkpoint
+
+    path = _author_table(
+        spark, tmp_path / "mx", meta_extra={"somethingNew": 1}
+    )
+    with pytest.raises(NotImplementedError, match="somethingNew"):
+        write_checkpoint(spark, path)
+
+
+def test_lineage_survives_checkpoint_and_cleanup(spark, tmp_path):
+    """A checkpoint carries only the LATEST metaData, so a column-mapped
+    table's pre-DROP lineage (historical physicalNames) must persist in
+    the checkpoint-durable table configuration: after DROP + ADD +
+    checkpoint + log cleanup the pre-drop files must still read as this
+    table's own lineage, not trip the foreign-writer guard."""
+    from pyspark.sql import types as T
+
+    from lcr_etl_upgrade_spark.delta_lite import (
+        add_columns,
+        cleanup_log,
+        drop_column,
+        update_rows,
+        write_checkpoint,
+    )
+
+    path = str(tmp_path / "t")
+    write_delta_lite(
+        spark.range(0, 8).select(
+            "id",
+            (F.col("id") % 3).cast("int").alias("v"),
+            F.lit("keep").alias("w"),
+        ),
+        path,
+        column_mapping="name",
+    )
+    drop_column(spark, path, "v")
+    add_columns(spark, path, [T.StructField("v", T.IntegerType(), True)])
+    # pad to a checkpointable depth so cleanup actually removes the
+    # drop-era commits, then checkpoint + cleanup
+    update_rows(spark, path, "id = 0", {"w": F.lit("touched")})
+    write_checkpoint(spark, path)
+    removed = cleanup_log(spark, path)
+    assert removed, "cleanup removed nothing; repro needs expired commits"
+    st = replay_log(spark, path)
+    # the dropped column's physicalName must still be known lineage
+    cfg = (st.metadata.get("configuration") or {})
+    assert cfg.get("lcrspark.columnMapping.historicalPhysicalNames")
+    got = read_delta_lite(spark, path)  # pre-fix: NotImplementedError
+    rows = {r["id"]: (r["w"], r["v"]) for r in got.collect()}
+    assert rows[0] == ("touched", None)
+    assert rows[5] == ("keep", None)
+    # and the table stays WRITABLE (update scans the pre-drop files too)
+    update_rows(spark, path, "id = 1", {"v": F.lit(7)})
+    rows2 = {r["id"]: r["v"] for r in read_delta_lite(spark, path).collect()}
+    assert rows2[1] == 7 and rows2[2] is None
+
+
+# ---- the log reader: one listing per command, whole commits -------------
+
+
+def test_in_flight_commit_is_invisible(spark, tmp_path, monkeypatch):
+    """A commit becomes visible only once complete. While a writer is
+    blocked inside the commit write, replay, scans, latest_version and
+    the change feed all see the previous version — a change-feed
+    watermark moved past a half-written commit would never deliver its
+    rows."""
+    import threading
+
+    import lcr_etl_upgrade_spark.delta_lite as dl
+
+    path = str(tmp_path / "t")
+    write_delta_lite(_df(spark, [(1, "a"), (2, "b")]), path)
+    entered, release = threading.Event(), threading.Event()
+    real_dumps = json.dumps
+    errors: list[BaseException] = []
+
+    def overwrite():
+        try:
+            write_delta_lite(
+                _df(spark, [(3, "c"), (4, "d"), (5, "e")]), path,
+                mode="overwrite",
+            )
+        except BaseException as exc:  # surfaced by the main thread
+            errors.append(exc)
+
+    writer = threading.Thread(target=overwrite)
+
+    def dumps(obj, *a, **k):
+        # block the writer thread, and only it, inside the commit write
+        if (
+            threading.current_thread() is writer
+            and isinstance(obj, dict)
+            and "commitInfo" in obj
+        ):
+            entered.set()
+            release.wait(120)
+        return real_dumps(obj, *a, **k)
+
+    monkeypatch.setattr(dl.json, "dumps", dumps)
+    writer.start()
+    try:
+        assert entered.wait(120), errors
+        assert replay_log(spark, path).version == 0
+        assert {r.id for r in read_delta_lite(spark, path).collect()} == {
+            1, 2,
+        }
+        assert dl.latest_version(path) == 0
+        with pytest.raises(ValueError, match="invalid change window"):
+            dl.read_delta_changes(spark, path, 1)
+    finally:
+        release.set()
+        writer.join(120)
+    monkeypatch.undo()
+    assert not writer.is_alive() and not errors, errors
+    assert dl.latest_version(path) == 1
+    changes = dl.read_delta_changes(spark, path, 1, 1)
+    assert {
+        r.id for r in changes.collect() if r._change_type == "insert"
+    } == {3, 4, 5}
+    # the temp file the commit was written through is gone
+    assert sorted(os.listdir(os.path.join(path, "_delta_log"))) == [
+        f"{0:020d}.json", f"{1:020d}.json",
+    ]
+
+
+@pytest.mark.parametrize("layout", ["classic", "v2"])
+def test_each_command_lists_the_log_once(spark, tmp_path, monkeypatch,
+                                         layout):
+    """Every log reader takes ONE listing of ``_delta_log``: replay
+    (also below the newest checkpoint), the change feed and vacuum share
+    it with the replay they run, history, TIMESTAMP AS OF and an append
+    (outside a lost race and the checkpoint hook) list once too."""
+    import lcr_etl_upgrade_spark.delta_lite as dl
+
+    path = str(tmp_path / "t")
+    write_delta_lite(_df(spark, [(1, "a")]), path)
+    if layout == "v2":
+        dl.enable_v2_checkpoint(spark, path)
+    write_delta_lite(_df(spark, [(2, "b")]), path, mode="append")
+    cp = dl.write_checkpoint(spark, path)
+    write_delta_lite(_df(spark, [(3, "c")]), path, mode="append")
+    ts = dl.table_history(path)[0]["timestamp"]
+    log_dir = os.path.realpath(os.path.join(path, "_delta_log"))
+    calls: list[str] = []
+    real_listdir = os.listdir
+
+    def listdir(p="."):
+        if os.path.realpath(p) == log_dir:
+            calls.append(p)
+        return real_listdir(p)
+
+    monkeypatch.setattr(dl.os, "listdir", listdir)
+
+    def listings(fn, *a, **k) -> int:
+        calls.clear()
+        fn(*a, **k)
+        return len(calls)
+
+    got = {
+        "replay_log": listings(dl.replay_log, spark, path),
+        "replay_log_below_checkpoint": listings(
+            dl.replay_log, spark, path, cp - 1
+        ),
+        "read_delta_changes": listings(
+            dl.read_delta_changes, spark, path, 1
+        ),
+        "vacuum": listings(dl.vacuum, spark, path),
+        "table_history": listings(dl.table_history, path),
+        "version_at_timestamp": listings(
+            dl.version_at_timestamp, path, ts
+        ),
+        "append": listings(
+            write_delta_lite, _df(spark, [(4, "d")]), path, mode="append"
+        ),
+    }
+    assert got == dict.fromkeys(got, 1)
 
 
 def test_append_retry_refuses_concurrent_protocol_upgrade(

@@ -8,7 +8,8 @@
    unreadable. Now: the union of lost names persists in the
    checkpoint-durable table configuration
    (lcrspark.columnMapping.historicalPhysicalNames) and replay merges
-   it back.
+   it back (the checkpoint + cleanup case lives with the other
+   checkpoint tests in test_delta_lite.py).
 2. (medium) convert_to_delta inferred the schema from ONE sample file;
    schema-evolved parquet directories silently lost columns present
    only in non-sample files. Now: mergeSchema across every footer.
@@ -36,15 +37,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lcr_etl_upgrade_spark.delta_lite import (
-    add_columns,
-    cleanup_log,
     convert_to_delta,
     drop_column,
     merge_rows,
     read_delta_lite,
     replay_log,
-    update_rows,
-    write_checkpoint,
     write_delta_lite,
 )
 from lcr_etl_upgrade_spark.operators.merge import apply_changes
@@ -60,33 +57,6 @@ def _mapped(spark, path, n=8):
         F.lit("keep").alias("w"),
     )
     write_delta_lite(df, path, column_mapping="name")
-
-
-def test_lineage_survives_checkpoint_and_cleanup(spark, tmp_path):
-    """The exact ADVICE repro: DROP + ADD + checkpoint + log cleanup;
-    the pre-drop files must still read as this table's own lineage."""
-    path = str(tmp_path / "t")
-    _mapped(spark, path)
-    drop_column(spark, path, "v")
-    add_columns(spark, path, [T.StructField("v", T.IntegerType(), True)])
-    # pad to a checkpointable depth so cleanup actually removes the
-    # drop-era commits, then checkpoint + cleanup
-    update_rows(spark, path, "id = 0", {"w": F.lit("touched")})
-    write_checkpoint(spark, path)
-    removed = cleanup_log(spark, path)
-    assert removed, "cleanup removed nothing; repro needs expired commits"
-    st = replay_log(spark, path)
-    # the dropped column's physicalName must still be known lineage
-    cfg = (st.metadata.get("configuration") or {})
-    assert cfg.get("lcrspark.columnMapping.historicalPhysicalNames")
-    got = read_delta_lite(spark, path)  # pre-fix: NotImplementedError
-    rows = {r["id"]: (r["w"], r["v"]) for r in got.collect()}
-    assert rows[0] == ("touched", None)
-    assert rows[5] == ("keep", None)
-    # and the table stays WRITABLE (update scans the pre-drop files too)
-    update_rows(spark, path, "id = 1", {"v": F.lit(7)})
-    rows2 = {r["id"]: r["v"] for r in read_delta_lite(spark, path).collect()}
-    assert rows2[1] == 7 and rows2[2] is None
 
 
 def test_lineage_key_written_on_drop(spark, tmp_path):

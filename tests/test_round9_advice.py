@@ -12,18 +12,14 @@
    UNVALIDATED rows under it — originally by refusal; since round 10
    the writer evaluates the expressions on the incoming rows, so the
    test asserts enforce-or-unstage instead.
-4. write_checkpoint must carry metaData name/description, add.stats,
-   add.tags and deletionVector.maxRowIndex losslessly, and REFUSE on
-   state fields its fixed schema cannot represent (e.g. rowTracking's
-   add.baseRowId from a foreign writer) instead of silently dropping
-   them relative to JSON-log replay.
+4. write_checkpoint losslessness — those cases live with the other
+   checkpoint tests in test_delta_lite.py.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import struct
 
 import pytest
 from pyspark.sql import types as T
@@ -32,86 +28,8 @@ from lcr_etl_upgrade_spark.delta_lite import (
     delete_rows,
     read_delta_lite,
     replay_log,
-    write_checkpoint,
     write_delta_lite,
 )
-from lcr_etl_upgrade_spark.roaring_lite import ROARING_ARRAY_MAGIC, z85_encode
-
-
-def _bitmap32_array(values16_by_key):
-    keys = sorted(values16_by_key)
-    out = struct.pack("<II", 12346, len(keys))
-    for k in keys:
-        out += struct.pack("<HH", k, len(values16_by_key[k]) - 1)
-    data_start = len(out) + 4 * len(keys)
-    offsets, containers = [], b""
-    for k in keys:
-        offsets.append(data_start + len(containers))
-        vals = sorted(values16_by_key[k])
-        containers += struct.pack(f"<{len(vals)}H", *vals)
-    for off in offsets:
-        out += struct.pack("<I", off)
-    return out + containers
-
-
-def _inline_dv(positions, extra=None):
-    per_key: dict[int, list[int]] = {}
-    for p in sorted(positions):
-        per_key.setdefault(p >> 16, []).append(p & 0xFFFF)
-    bitmap = struct.pack(
-        "<iq", ROARING_ARRAY_MAGIC, 1
-    ) + _bitmap32_array(per_key)
-    pad = (-len(bitmap)) % 4
-    dv = {
-        "storageType": "i",
-        "pathOrInlineDv": z85_encode(bitmap + b"\x00" * pad),
-        "sizeInBytes": len(bitmap),
-        "cardinality": len(set(positions)),
-    }
-    dv.update(extra or {})
-    return dv
-
-
-def _author_table(spark, path, add_extra=None, meta_extra=None,
-                  dv=None):
-    """Hand-author a 10-row single-file unmapped table at ``path``."""
-    (path / "_delta_log").mkdir(parents=True)
-    sub = path / "stage"
-    spark.range(10).selectExpr("id", "id * 10 as v").coalesce(
-        1
-    ).write.parquet(str(sub))
-    f = next(n for n in os.listdir(sub) if n.endswith(".parquet"))
-    os.rename(sub / f, path / "part-0.parquet")
-    meta = {
-        "id": "0000", "format": {"provider": "parquet", "options": {}},
-        "schemaString": json.dumps({"type": "struct", "fields": [
-            {"name": "id", "type": "long", "nullable": True,
-             "metadata": {}},
-            {"name": "v", "type": "long", "nullable": True,
-             "metadata": {}},
-        ]}),
-        "partitionColumns": [], "configuration": {},
-    }
-    meta.update(meta_extra or {})
-    add = {
-        "path": "part-0.parquet", "partitionValues": {}, "size": 1,
-        "modificationTime": 0, "dataChange": True,
-    }
-    if dv is not None:
-        add["deletionVector"] = dv
-    add.update(add_extra or {})
-    proto = {"minReaderVersion": 1, "minWriterVersion": 2}
-    if dv is not None:
-        proto = {
-            "minReaderVersion": 3, "minWriterVersion": 7,
-            "readerFeatures": ["deletionVectors"],
-            "writerFeatures": ["deletionVectors"],
-        }
-    with open(path / "_delta_log" / f"{0:020d}.json", "w") as fh:
-        fh.write(json.dumps({"protocol": proto}) + "\n")
-        fh.write(json.dumps({"metaData": meta}) + "\n")
-        fh.write(json.dumps({"add": add}) + "\n")
-    return str(path)
 
 
 # ---- 1: delete_rows physical-name verification ---------------------------
@@ -238,60 +156,6 @@ def test_incoming_invariants_metadata_enforced_not_refused(spark, tmp_path):
         write_delta_lite(
             spark.createDataFrame([(-1,)], "a long"), path, mode="append"
         )
-
-
-# ---- 4: checkpoint losslessness ------------------------------------------
-
-
-def test_checkpoint_carries_optional_action_fields(spark, tmp_path):
-    path = _author_table(
-        spark,
-        tmp_path / "opt",
-        add_extra={
-            "stats": json.dumps({"numRecords": 10}),
-            "tags": {"OPTIMIZE_TARGET": "x"},
-        },
-        meta_extra={"name": "mytable", "description": "the description"},
-        dv=_inline_dv({1, 3, 7}, extra={"maxRowIndex": 7}),
-    )
-    before = replay_log(spark, path)
-    write_checkpoint(spark, path)
-    # force replay THROUGH the checkpoint by removing the JSON commit
-    os.remove(os.path.join(path, "_delta_log", f"{0:020d}.json"))
-    after = replay_log(spark, path)
-    assert after.metadata["name"] == "mytable"
-    assert after.metadata["description"] == "the description"
-    assert after.adds["part-0.parquet"]["stats"] == json.dumps(
-        {"numRecords": 10}
-    )
-    assert after.adds["part-0.parquet"]["tags"] == {"OPTIMIZE_TARGET": "x"}
-    assert after.dvs["part-0.parquet"]["maxRowIndex"] == 7
-    assert after.files == before.files
-    # and the DV still applies through the checkpoint
-    assert set(
-        r.id for r in read_delta_lite(spark, path).collect()
-    ) == {0, 2, 4, 5, 6, 8, 9}
-
-
-def test_checkpoint_refuses_unrepresentable_add_field(spark, tmp_path):
-    # clusteringProvider: a real add field (liquid clustering) the
-    # checkpoint schema does not carry; baseRowId/defaultRowCommitVersion
-    # moved INTO the schema in r9 (rowTracking checkpoints)
-    path = _author_table(
-        spark, tmp_path / "rt", add_extra={"clusteringProvider": "liquid"}
-    )
-    with pytest.raises(NotImplementedError, match="clusteringProvider"):
-        write_checkpoint(spark, path)
-
-
-def test_checkpoint_refuses_unrepresentable_metadata_field(
-    spark, tmp_path
-):
-    path = _author_table(
-        spark, tmp_path / "mx", meta_extra={"somethingNew": 1}
-    )
-    with pytest.raises(NotImplementedError, match="somethingNew"):
-        write_checkpoint(spark, path)
 
 
 # ---- DELETE_MAX_TOTAL_DV_BYTES valve --------------------------------------
