@@ -38,10 +38,12 @@ Deliberate limits (clear errors, not wrong answers):
   version 3 when every readerFeature is supported (``v2Checkpoint``,
   ``columnMapping``, ``timestampNtz``, ``deletionVectors`` — roaring
   bitmaps integrity-checked driver-side via a streaming count, then
-  expanded EXECUTOR-side (mapInPandas over the descriptors) into a
-  ``_metadata.row_index`` anti-join, broadcast below MAX_DV_POSITIONS
-  total cardinality and shuffled above it — any cardinality reads
-  correctly; ``variantType`` and ``typeWidening``
+  applied as a ``_metadata.row_index`` anti-join: at or below
+  MAX_DV_POSITIONS total cardinality the positions are decoded on the
+  driver into a broadcast local relation, above it they expand in
+  Python workers (mapInPandas over the descriptors) and the join
+  shuffles — any cardinality reads correctly; ``variantType`` and
+  ``typeWidening``
   via Spark's native parquet handling — each combination verified);
   unimplemented features refuse with the feature named;
 - all three checkpoint layouts read (classic single-part, classic
@@ -81,6 +83,8 @@ from pyspark.sql import types as T
 from lcr_etl_upgrade_spark.roaring_lite import (
     count_roaring_bitmap_array,
     iter_roaring_bitmap_array,
+    parse_roaring_bitmap_array,
+    serialize_roaring_bitmap_array,
     z85_decode,
     z85_encode,
 )
@@ -377,6 +381,11 @@ class _Log:
         self.checkpoints: list[tuple[int, list[str]]] = [
             (key[0], files) for key, files in sorted(cands, reverse=True)
         ]
+        # checkpoint files -> decoded actions, or the error decoding
+        # raised: each checkpoint is read once per command
+        self._decoded: dict[tuple[str, ...], list[dict] | Exception] = {}
+        # the checkpoint version the last ``replay`` started from
+        self.used: int | None = None
 
     def latest(self) -> int:
         """Newest commit version; raises on a log without commits."""
@@ -427,7 +436,21 @@ class _Log:
         non-null struct of each row): parquet, or json for the v2
         layout. A v2 ``sidecar`` action stays in the list, followed by
         the add/remove actions of the parquet file it names (relative
-        paths under ``_sidecars/``, per the public protocol)."""
+        paths under ``_sidecars/``, per the public protocol). Decoded
+        once per ``_Log``; an unreadable checkpoint raises its decode
+        error on every call."""
+        got = self._decoded.get(tuple(files))
+        if got is None:
+            try:
+                got = self._decode(spark, files)
+            except Exception as exc:
+                got = exc
+            self._decoded[tuple(files)] = got
+        if isinstance(got, Exception):
+            raise got
+        return got
+
+    def _decode(self, spark: SparkSession, files: list[str]) -> list[dict]:
 
         def parquet(paths: list[str]) -> list[dict]:
             out = []
@@ -483,7 +506,7 @@ class _Log:
                 continue
             for action in actions:
                 _apply_action(state, action)
-            state.version = cp_version
+            state.version = self.used = cp_version
             break
         # existence of ``version`` is validated AFTER replay (below): it
         # may be reconstructible from a checkpoint alone when its JSON
@@ -546,13 +569,28 @@ def replay_log(
 
 # ---- deletion vectors (deletionVectors reader feature) ------------------
 
-# Join-strategy valve, NOT a capability cap: DV positions decode
-# executor-side (one task per deletion vector), so any cardinality
-# reads correctly — but below this total the deleted-row relation is
-# hinted broadcast (the common case: DVs are tiny next to the table),
-# and above it the hint is dropped so the anti-join shuffles instead of
-# forcing a multi-hundred-MB broadcast build side onto every executor.
-MAX_DV_POSITIONS = 10_000_000
+# Route bound, NOT a capability cap: any cardinality reads and writes
+# correctly. At or below this many positions (a read: the in-scan
+# vectors' verified cardinalities; a DML mask pass: its decided rows
+# plus the old vectors', see _dv_union_blobs) deletion vectors are
+# decoded, unioned and serialized on the DRIVER and the deleted-row
+# relation is a broadcast local relation (the common case: DVs are
+# tiny next to the table). Above it they are expanded and serialized
+# in Python workers, one task per vector or file, and the anti-join
+# shuffles instead of forcing a multi-hundred-MB broadcast build side
+# onto every executor. Measured at local[4], 8 files, delete_rows then
+# read_delta_lite().count() of the same positions on both routes (two
+# runs each, driver / workers):
+#   1.0M positions of  4M rows: delete 2.9-3.2 / 3.4-7.5 s,
+#                               read 3.0-3.9 / 3.3-5.5 s;
+#   2.5M positions of 10M rows: delete 6.3 / 7.5-11.0 s,
+#                               read 7.8-8.1 / 7.5-8.9 s;
+#   5.0M positions of 10M rows: delete 10.6-13.2 / 13.1-17.4 s,
+#                               read 12.3-14.4 / 9.8-11.1 s,
+# with 0.54 GB (2.5M) and 0.96 GB (5M) peak driver Python memory. So the
+# bound sits at the largest measured count where the driver route is no
+# slower either way (it was 10M while it only chose the join strategy).
+MAX_DV_POSITIONS = 2_500_000
 
 # Characters a Java URI keeps RAW in its path component (unreserved +
 # sub-delims + ":@/"); everything else ASCII is percent-encoded
@@ -645,9 +683,10 @@ def _dv_verify(base: str, dvs: dict[str, dict]) -> dict[str, tuple[dict, int]]:
     vector: resolve the blob (format-version / size / CRC checks in
     ``_resolve_dv_blob``) and verify the descriptor's cardinality with a
     streaming O(one-container)-memory count — so corrupt tables fail at
-    ``read_delta_lite`` time, loudly, regardless of DV size. Positions
-    are NOT materialized here; expansion happens executor-side in
-    ``_apply_dv_filter``. Returns rel -> (descriptor, cardinality)."""
+    ``read_delta_lite`` time, loudly, regardless of DV size, before any
+    position is used. Positions are NOT materialized here; the scan's
+    ``_dv_positions`` decodes them on the driver or in Python workers,
+    by MAX_DV_POSITIONS. Returns rel -> (descriptor, cardinality)."""
     out: dict[str, tuple[dict, int]] = {}
     for rel, dv in dvs.items():
         n = count_roaring_bitmap_array(_resolve_dv_blob(base, dv))
@@ -661,6 +700,28 @@ def _dv_verify(base: str, dvs: dict[str, dict]) -> dict[str, tuple[dict, int]]:
     return out
 
 
+def _dv_array(base: str, dv: dict, n: int):
+    """One verified deletion vector's positions as numpy int64, decoded
+    on the driver; ``n`` is its verified cardinality, which also bounds
+    the decode in case the blob changed since it was verified."""
+    import itertools
+
+    import numpy as np
+
+    pos = np.fromiter(
+        itertools.chain.from_iterable(
+            iter_roaring_bitmap_array(_resolve_dv_blob(base, dv), max_values=n)
+        ),
+        dtype=np.int64,
+    )
+    if len(pos) != n:
+        raise ValueError(
+            f"deletion vector changed since it was verified: {len(pos)} "
+            f"positions, {n} verified"
+        )
+    return pos
+
+
 def _dv_positions(
     spark: SparkSession,
     base: str,
@@ -668,15 +729,15 @@ def _dv_positions(
     files_in_scan: list[str],
 ):
     """The (encoded file URI, row index) relation of all marked rows in
-    ``files_in_scan``'s deletion vectors, expanded EXECUTOR-side (see
-    _apply_dv_filter for the full story), with the broadcast-vs-shuffle
-    hint already applied. None when no in-scan vector marks any row."""
+    ``files_in_scan``'s deletion vectors, with the broadcast-vs-shuffle
+    hint already applied (see _apply_dv_filter for the full story).
+    None when no in-scan vector marks any row."""
     in_scan = set(files_in_scan)
-    relevant = {
-        rel: dv
+    relevant = sorted(
+        (rel, dv, n)
         for rel, (dv, n) in verified.items()
         if rel in in_scan and n > 0
-    }
+    )
     if not relevant:
         return None
     # abspath, NOT realpath: Spark qualifies the path it was given
@@ -687,18 +748,41 @@ def _dv_positions(
     # percent-encoded uppercase, sub-delims and non-ASCII kept raw).
     # A failed match here would FAIL OPEN (deleted rows silently
     # resurrected), so the encoding equivalence is pinned by tests
-    # over hostile partition-dir names. Keys are still computed on the
-    # DRIVER (the executor task only expands positions) so those pins
-    # cover this path unchanged.
-    desc_rows = [
-        (
-            _file_key(base, rel),
-            json.dumps(dv),
-            int(verified[rel][1]),
+    # over hostile partition-dir names. Keys are computed on the DRIVER
+    # on both routes, so those pins cover both.
+    keys = [_file_key(base, rel) for rel, _, _ in relevant]
+    total = sum(n for _, _, n in relevant)
+    if total <= MAX_DV_POSITIONS:
+        # driver route: decode each vector once into int64 positions
+        # and hand them to the JVM as ONE Arrow table, one row per file
+        # (its path once, its positions as an array) exploded there —
+        # no Python worker, and no per-position path string or python
+        # object on the driver. Measured at local[4], 1M positions in
+        # 8 files: 0.5 s to build and anti-join against 4M rows, where
+        # one (path ordinal, position) row per position took 4-6 s (a
+        # local relation of 1M rows is shipped row by row in the tasks)
+        import pyarrow as pa
+
+        local = spark.createDataFrame(
+            pa.table(
+                {
+                    "__dv_file": keys,
+                    "__dv_idx": pa.array(
+                        [_dv_array(base, dv, n) for _, dv, n in relevant],
+                        type=pa.list_(pa.int64()),
+                    ),
+                }
+            )
         )
-        for rel, dv in sorted(relevant.items())
+        return F.broadcast(
+            local.select(
+                "__dv_file", F.explode("__dv_idx").alias("__dv_idx")
+            )
+        )
+    desc_rows = [
+        (key, json.dumps(dv), int(n))
+        for key, (_, dv, n) in zip(keys, relevant)
     ]
-    total = sum(n for _, _, n in desc_rows)
     desc = spark.createDataFrame(
         desc_rows, "__dv_file string, __dv_json string, __dv_card long"
     )
@@ -741,14 +825,11 @@ def _dv_positions(
                         }
                     )
 
-    deleted = desc.repartition(len(desc_rows)).mapInPandas(
-        _expand, "__dv_file string, __dv_idx long"
+    return (
+        desc.repartition(len(desc_rows))
+        .mapInPandas(_expand, "__dv_file string, __dv_idx long")
+        .hint("shuffle_hash")
     )
-    if total <= MAX_DV_POSITIONS:
-        deleted = F.broadcast(deleted)
-    else:
-        deleted = deleted.hint("shuffle_hash")
-    return deleted
 
 
 def _apply_dv_filter(
@@ -763,22 +844,24 @@ def _apply_dv_filter(
     the scan's ``__file`` / ``__pos`` row identity. (``how="left_semi"``
     inverts the filter — KEEP only the rows the vectors mark — which is
     how the change-feed reader materializes the rows a DV update
-    deleted.) The deleted-row relation is built EXECUTOR-
-    side — a tiny descriptor DataFrame (one row per deletion vector,
-    already integrity-verified by ``_dv_verify``) expands to positions
-    inside ``mapInPandas``, one task per DV, so positions of arbitrary
-    cardinality never materialize on the driver. Requires the table
-    root to be reachable from executors — the same shared-storage
-    assumption the whole reader already makes for the parquet files.
+    deleted.) The vectors were integrity-verified by ``_dv_verify``.
 
-    Below MAX_DV_POSITIONS total cardinality the relation is hinted
-    broadcast (no shuffle of the fact side — the common case); above
-    it, an explicit shuffle_hash hint forces a shuffled hash join.
-    The hint must be explicit: Catalyst's size estimate for the
-    mapInPandas output derives from the tiny one-row-per-DV descriptor
-    relation, so merely DROPPING the broadcast hint would still
-    statically plan a broadcast join of the expanded positions — the
-    exact oversized build table the valve exists to prevent."""
+    At or below MAX_DV_POSITIONS total cardinality the deleted-row
+    relation is built on the DRIVER: each vector decodes once into
+    int64 positions, which travel to the JVM as one Arrow table with
+    one row per file, are exploded there and join broadcast (no shuffle
+    of the fact side, no Python worker — the common case). Above it a
+    tiny descriptor
+    DataFrame (one row per vector) expands to positions inside
+    ``mapInPandas``, one task per vector, so positions of arbitrary
+    cardinality never materialize on the driver; that route needs the
+    table root reachable from executors, the same shared-storage
+    assumption the reader makes for the parquet files. Its explicit
+    shuffle_hash hint forces a shuffled hash join: Catalyst's size
+    estimate for the mapInPandas output derives from the tiny
+    descriptor relation, so merely DROPPING the broadcast hint would
+    still statically plan a broadcast join of the expanded positions —
+    the exact oversized build table the bound exists to prevent."""
     deleted = _dv_positions(spark, base, verified, files_in_scan)
     if deleted is None:
         # no marked rows: anti keeps everything, semi keeps nothing
@@ -2470,23 +2553,56 @@ _APPEND_RETRIES = 10  # bounded optimistic-concurrency retries for append
 # cost a file per delete, huge ones shouldn't bloat the JSON log
 DV_INLINE_THRESHOLD = 512
 
-# delete_rows materializes ONE file's deleted positions in the task
-# serializing that file's DV (a python set, ~60 B/position; 2^25 is
-# ~2 GiB worst case). Past this, most of the file is deleted and a
-# rewrite (overwrite) is the right physical operation anyway — the
-# valve raises with that remedy instead of OOMing the executor.
+# The DV mask pass materializes ONE file's deleted positions where it
+# serializes that file's DV — the driver, or a Python worker above
+# MAX_DV_POSITIONS (a python set, ~60 B/position; 2^25 is ~2 GiB worst
+# case). Past this, most of the file is deleted and a rewrite
+# (overwrite) is the right physical operation anyway — the valve
+# raises with that remedy instead of running out of memory.
 DELETE_MAX_FILE_POSITIONS = 1 << 25
 
-# delete_rows funnels DV bytes through the DRIVER at two points: old
-# blobs are loaded to feed the cogroup, and new per-file blobs stream
-# back for the log commit. Per-file size is bounded by
-# DELETE_MAX_FILE_POSITIONS, but the SUM across files is not — this
-# caps it (raise-with-remedy, same contract as the per-file valve).
-# New blobs stream via toLocalIterator with u-storage .bin files
-# written incrementally, so peak driver memory is one blob + the
-# retained inline descriptors; the cap still bounds the total work a
-# single commit is allowed to funnel driver-side.
+# The DV mask pass funnels DV bytes through the DRIVER on both routes:
+# old blobs are loaded and verified there, and new per-file blobs are
+# built there (at or below MAX_DV_POSITIONS) or stream back from the
+# Python workers, one partition at a time, for the log commit. Per-file
+# size is bounded by DELETE_MAX_FILE_POSITIONS, but the SUM across
+# files is not — this caps it (raise-with-remedy, same contract as the
+# per-file valve). New blobs are turned into descriptors one at a time
+# with u-storage .bin files written immediately, so peak driver memory
+# is the collected positions (driver route) or one blob (worker route)
+# + the retained inline descriptors; the cap still bounds the total
+# work a single commit is allowed to funnel driver-side.
 DELETE_MAX_TOTAL_DV_BYTES = 256 << 20
+
+
+def _dv_union(
+    key: str, positions, old_blob: bytes | None
+) -> tuple[str, bytes, int] | None:
+    """One file's new deletion vector: the union of its old vector's
+    positions and ``positions`` (the rows this command masks),
+    serialized — or None when the union did not grow (every match was
+    ALREADY masked: the predicate runs over the raw scan, and emitting
+    would commit a byte-identical DV under a fresh uuid, so a fully
+    no-op command returns state.version uncommitted). Shared by both
+    routes of ``_dv_union_blobs``."""
+    positions = set(positions)
+    old_n = 0
+    if old_blob:
+        old = parse_roaring_bitmap_array(
+            old_blob, max_values=DELETE_MAX_FILE_POSITIONS
+        )
+        old_n = len(old)
+        positions |= old
+    if len(positions) == old_n:
+        return None
+    if len(positions) > DELETE_MAX_FILE_POSITIONS:
+        raise ValueError(
+            f"{len(positions)} deleted positions for one file "
+            f"exceed DELETE_MAX_FILE_POSITIONS "
+            f"({DELETE_MAX_FILE_POSITIONS}); with most of a file "
+            "deleted, rewrite it via overwrite instead of masking"
+        )
+    return key, serialize_roaring_bitmap_array(positions), len(positions)
 
 
 def _dv_union_blobs(
@@ -2494,19 +2610,23 @@ def _dv_union_blobs(
     base: str,
     matched: DataFrame,
     old_dvs: dict[str, dict],
-) -> DataFrame:
+    bound: int | None,
+):
     """(__file hadoop-encoded path, __pos) matched row positions ->
-    (__file, dv blob, card): each touched file's new deletion vector is
-    the UNION of its existing DV and the matched positions, serialized
-    EXECUTOR-side (one task per file). Old DV blobs, verified once, are
-    shipped per file through a COGROUP (not a broadcast of every blob
-    to every executor, and not a join that would duplicate a blob onto
-    every matched row): each file's compact roaring bytes travel
-    exactly once, to the one task serializing that file's new DV.
-    Files whose position set did not grow (every match already masked)
-    emit nothing, so a fully-no-op command can skip committing.
-    The DML kernel's deletion-vector mask pass (every DELETE, and the
-    masked files of UPDATE and MERGE)."""
+    (__file, dv blob, card) per touched file: each file's new deletion
+    vector is the UNION of its existing DV (verified here first: size,
+    CRC, cardinality) and the matched positions (``_dv_union``). Files
+    whose position set did not grow emit nothing, so a fully-no-op
+    command can skip committing. The DML kernel's deletion-vector mask
+    pass (every DELETE, and the masked files of UPDATE and MERGE).
+
+    ``bound`` is the a-priori number of positions the pass can hold
+    (matched rows plus old vectors; None when unknown). At or below
+    MAX_DV_POSITIONS the matched pairs are collected as one Arrow table
+    and every union is built on the DRIVER. Above it (or unknown) the
+    unions are serialized EXECUTOR-side, one task per file: old blobs
+    travel through a COGROUP, each exactly once to the task that needs
+    it, and the results stream back partition by partition."""
     old_rows = []
     old_total = 0
     for rel, dv in sorted(old_dvs.items()):
@@ -2527,6 +2647,23 @@ def _dv_union_blobs(
                 f"{card} != {n} parsed positions"
             )
         old_rows.append((_file_key(base, rel), bytearray(blob)))
+
+    if bound is not None and bound <= MAX_DV_POSITIONS:
+        old = dict(old_rows)
+        per_file = (
+            matched.toArrow()
+            .group_by("__file")
+            .aggregate([("__pos", "list")])
+        )
+        # positions become python ints one file at a time
+        for key, positions in zip(
+            per_file["__file"].to_pylist(), per_file["__pos_list"]
+        ):
+            row = _dv_union(key, positions.as_py(), old.get(key))
+            if row is not None:
+                yield row
+        return
+
     old_df = spark.createDataFrame(
         old_rows or [("", bytearray(b""))], "__file string, old binary"
     )
@@ -2534,76 +2671,51 @@ def _dv_union_blobs(
     def _serialize(left, right):
         import pandas as pd
 
-        from lcr_etl_upgrade_spark.roaring_lite import (
-            parse_roaring_bitmap_array,
-            serialize_roaring_bitmap_array,
-        )
-
-        if left.empty:  # old DV whose file had no new matches: untouched
-            return pd.DataFrame({"__file": [], "dv": [], "card": []})
-        fname = left["__file"].iloc[0]
-        positions = set(int(p) for p in left["__pos"])
-        old_n = 0
-        if not right.empty and len(right["old"].iloc[0]):
-            old = parse_roaring_bitmap_array(
-                bytes(right["old"].iloc[0]),
-                max_values=DELETE_MAX_FILE_POSITIONS,
+        row = None
+        if not left.empty:  # else an old DV whose file had no new matches
+            row = _dv_union(
+                left["__file"].iloc[0],
+                left["__pos"].tolist(),
+                bytes(right["old"].iloc[0]) if not right.empty else None,
             )
-            old_n = len(old)
-            positions |= old
-        if len(positions) == old_n:
-            # every matched row was ALREADY masked by the existing DV
-            # (the predicate runs over the raw scan): emitting would
-            # commit a byte-identical DV under a fresh uuid — skip, so
-            # a fully-no-op delete returns state.version uncommitted
+        if row is None:
             return pd.DataFrame({"__file": [], "dv": [], "card": []})
-        if len(positions) > DELETE_MAX_FILE_POSITIONS:
-            raise ValueError(
-                f"{len(positions)} deleted positions for one file "
-                f"exceed DELETE_MAX_FILE_POSITIONS "
-                f"({DELETE_MAX_FILE_POSITIONS}); with most of a file "
-                "deleted, rewrite it via overwrite instead of masking"
-            )
-        blob = serialize_roaring_bitmap_array(positions)
         return pd.DataFrame(
-            {
-                "__file": [fname],
-                "dv": [blob],
-                "card": [len(positions)],
-            }
+            {"__file": [row[0]], "dv": [row[1]], "card": [row[2]]}
         )
 
-    return (
+    for r in (
         matched.groupBy("__file")
         .cogroup(old_df.groupBy("__file"))
         .applyInPandas(_serialize, "__file string, dv binary, card long")
-    )
+        .toLocalIterator()
+    ):
+        yield r["__file"], bytes(r["dv"]), int(r["card"])
 
 
 def _materialize_dv_descriptors(
     base: str,
-    touched_df: DataFrame,
+    blobs,
     enc_to_rel: dict[str, str],
     inline_threshold: int,
     dv_written: list[str],
 ) -> list[tuple[str, dict]]:
-    """Stream _dv_union_blobs' result one partition at a time into DV
-    descriptors: u-storage blobs land on disk IMMEDIATELY (staged names
-    appended to ``dv_written`` for rollback) and only compact
-    descriptors (plus inline blobs, each <= inline_threshold) stay
-    driver-side, so peak driver memory is one in-flight blob — with a
-    hard cap on the total bytes a single commit may funnel through."""
+    """Turn _dv_union_blobs' (__file, blob, card) stream into DV
+    descriptors one blob at a time: u-storage blobs land on disk
+    IMMEDIATELY (staged names appended to ``dv_written`` for rollback)
+    and only compact descriptors (plus inline blobs, each <=
+    inline_threshold) stay driver-side — with a hard cap on the total
+    bytes a single commit may funnel through."""
     import zlib
 
     per_file: list[tuple[str, dict]] = []
     new_total = 0
-    for row in touched_df.toLocalIterator():
-        rel = enc_to_rel.get(row["__file"])
+    for key, blob, card in blobs:
+        rel = enc_to_rel.get(key)
         if rel is None:  # file vanished between replay and scan?
             raise ValueError(
-                f"scan produced an unknown file key {row['__file']!r}"
+                f"scan produced an unknown file key {key!r}"
             )
-        blob = bytes(row["dv"])
         new_total += len(blob)
         if new_total > DELETE_MAX_TOTAL_DV_BYTES:
             raise ValueError(
@@ -2620,7 +2732,7 @@ def _materialize_dv_descriptors(
                 "pathOrInlineDv": z85_encode(blob + b"\x00" * pad),
                 "offset": None,
                 "sizeInBytes": len(blob),
-                "cardinality": int(row["card"]),
+                "cardinality": card,
             }
         else:
             dv_uuid = uuid.uuid4()
@@ -2639,7 +2751,7 @@ def _materialize_dv_descriptors(
                 "pathOrInlineDv": z85_encode(dv_uuid.bytes),
                 "offset": 1,
                 "sizeInBytes": len(blob),
-                "cardinality": int(row["card"]),
+                "cardinality": card,
             }
         per_file.append((rel, descriptor))
     return per_file
@@ -2879,7 +2991,8 @@ def merge_rows(
       whose modified-row fraction is at most DV_WRITE_MAX_FRACTION
       commits a deletion vector over its updated+deleted positions
       (the union with any existing vector; per-file bitmaps serialize
-      executor-side and stream to the driver, capped by
+      on the driver, or above MAX_DV_POSITIONS in Python workers that
+      stream them back, capped by
       DELETE_MAX_FILE_POSITIONS / DELETE_MAX_TOTAL_DV_BYTES) plus
       appended replacement rows for the updates, so a small batch
       against a huge target writes data proportional to the BATCH.
@@ -3814,13 +3927,16 @@ def _dml(
         def _dv_card(rel: str) -> int:
             return int((state.dvs.get(rel) or {}).get("cardinality", 0))
 
-        def _live_rows(rel: str) -> int | None:
+        def _num_records(rel: str) -> int | None:
             stats_json = (state.adds.get(rel) or {}).get("stats")
             try:
-                n_rec = int(json.loads(stats_json)["numRecords"])
+                return int(json.loads(stats_json)["numRecords"])
             except (ValueError, KeyError, TypeError):
                 return None  # no footer stats to judge selectivity by
-            return n_rec - _dv_card(rel)
+
+        def _live_rows(rel: str) -> int | None:
+            n_rec = _num_records(rel)
+            return None if n_rec is None else n_rec - _dv_card(rel)
 
         def _mask(rel: str) -> bool:
             if use_dvs is not None:
@@ -4044,6 +4160,17 @@ def _dml(
                 # positions alone need no liveness (the union with the
                 # old vector absorbs already-masked rows): one raw scan
                 j = _affected(touched_dv, live=False)
+            # a-priori positions bound of the mask pass: the decided
+            # rows plus the old vectors' (a raw scan may re-match rows
+            # they already mask); the all-delete pass has no counts, so
+            # every row of its candidate files, when their stats say
+            if mask_all:
+                recs = [_num_records(r) for r in touched_dv]
+                bound = None if None in recs else sum(recs)
+            else:
+                bound = sum(
+                    touched_counts.get(r, 0) + _dv_card(r) for r in touched_dv
+                )
             per_file_dv = _materialize_dv_descriptors(
                 tw.base,
                 _dv_union_blobs(
@@ -4051,6 +4178,7 @@ def _dml(
                     tw.base,
                     j.select("__file", "__pos"),
                     {r: state.dvs[r] for r in touched_dv if r in state.dvs},
+                    bound,
                 ),
                 tw.enc_to_rel,
                 inline_threshold,
@@ -4338,9 +4466,15 @@ def vacuum(
     # every complete checkpoint (single-part, multi-part AND v2
     # UUID-named incl. sidecars): a table whose pre-checkpoint commits
     # were cleaned up is referenced ONLY here — missing any would delete
-    # every active file it names. Checkpoint state is always live.
+    # every active file it names. Checkpoint state is always live. One
+    # that cannot be read is skipped, as replay skips it: no version
+    # reads through it, and the one replay used is already decoded.
     for _v, files in log.checkpoints:
-        for action in log.checkpoint(spark, files):
+        try:
+            actions = log.checkpoint(spark, files)
+        except Exception:
+            continue
+        for action in actions:
             add = action.get("add")
             if not add:
                 continue
@@ -4448,21 +4582,23 @@ def cleanup_log(spark: SparkSession, path: str) -> list[str]:
     checkpoint references — so a long-lived table's ``_delta_log`` stays
     bounded by checkpoint cadence instead of growing forever.
 
-    Safety contract, checked before anything is deleted: the newest
-    discovered checkpoint must actually PARSE (a present-but-corrupt
-    file must not become the only route to the state). After cleanup,
+    Safety contract, checked before anything is deleted: the horizon
+    is the checkpoint that replay of the latest version actually starts
+    from — the newest one that PARSES — so a present-but-corrupt file
+    (skipped by replay, as by every reader) never becomes the only
+    route to the state. After cleanup,
     replay_log reconstructs (a) the latest state and (b) time travel AT
     any retained checkpoint version from checkpoints alone; versions
     below the horizon become unreachable with the existing clear
     gap/missing-version errors — the same contract as delta-spark's log
     cleanup, minus wall-clock retention (the caller decides WHEN).
     Returns removed names relative to ``_delta_log``. No-op (``[]``)
-    when the table has no checkpoint."""
+    when replay starts from no checkpoint."""
     log = _Log(path)
-    if not log.checkpoints:
+    log.replay(spark)
+    if log.used is None:
         return []
-    horizon, files = log.checkpoints[0]
-    log.checkpoint(spark, files)  # must parse
+    horizon = log.used
     removed: list[str] = []
     for f, v in sorted(log.versions.items()):
         if v < horizon:
@@ -4477,7 +4613,11 @@ def cleanup_log(spark: SparkSession, path: str) -> list[str]:
         for v, files in log.checkpoints:
             if v < horizon or not _CHECKPOINT_V2_RE.match(files[0]):
                 continue
-            for a in log.checkpoint(spark, files):
+            try:
+                actions = log.checkpoint(spark, files)
+            except Exception:
+                continue  # unreadable: replay skips it too
+            for a in actions:
                 sc = a.get("sidecar")
                 if sc:
                     p = urllib.parse.unquote(sc["path"])
@@ -4781,10 +4921,10 @@ def read_delta_changes(
     over ONLY the changed files, under the window's one schema view and
     the main reader's layout rule — one relation per change class on
     hive-layout tables, however many partitions the class spans; DV
-    diffs filter that scan with the executor-side position expansion
-    and broadcast-vs-shuffle valve of the main reader. Nothing
-    driver-side grows beyond the file/DV descriptors — the same
-    contract as replay_log itself.
+    diffs filter that scan with the main reader's position relation
+    and route bound. Driver-side state is the file/DV descriptors, plus
+    the decoded positions when they are at or below MAX_DV_POSITIONS —
+    the main reader's contract.
     """
     base = _local(path)
     log = _Log(path)

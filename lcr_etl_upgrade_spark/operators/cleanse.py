@@ -4,8 +4,10 @@ Each reference semantic (C1–C10, F3–F5) is a pure Column expression or a
 single-projection DataFrame transform — JVM-side, codegen-friendly, no
 per-column withColumn chains. The fuzzy-parse fallback (U1/U2) lives in
 ``operators.parsers`` as Arrow-vectorized pandas UDFs and is composed
-native-first (coalesce(to_timestamp(col), fuzzy(col))) so the Python path
-only ever sees rows the built-in parser rejected.
+native-first: ``coalesce(native, fuzzy(when(native IS NULL, col)))``.
+The coalesce alone does not keep rows out of the UDF — Spark evaluates
+its argument for every row — so the rows the built-in parser accepted
+cross as nulls and only the rejected ones reach dateutil.
 """
 
 from __future__ import annotations
@@ -68,7 +70,9 @@ def timestamp_expr(
         return native
     from lcr_etl_upgrade_spark.operators.parsers import fuzzy_parse_timestamp
 
-    fuzzy_col = fuzzy_parse_timestamp(cleaned, as_of=as_of)
+    fuzzy_col = fuzzy_parse_timestamp(
+        F.when(native.isNull(), cleaned), as_of=as_of
+    )
     if ltz_target:
         fuzzy_col = F.from_utc_timestamp(
             fuzzy_col.cast("timestamp"), F.expr("current_timezone()")
@@ -95,7 +99,10 @@ def date_expr(col: Column, fuzzy: bool = True, as_of: str | None = None) -> Colu
         return native
     from lcr_etl_upgrade_spark.operators.parsers import fuzzy_parse_date
 
-    return F.coalesce(native, fuzzy_parse_date(cleaned, as_of=as_of))
+    return F.coalesce(
+        native,
+        fuzzy_parse_date(F.when(native.isNull(), cleaned), as_of=as_of),
+    )
 
 
 def scrub_sql(c: str) -> str:

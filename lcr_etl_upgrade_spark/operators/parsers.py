@@ -2,9 +2,11 @@
 
 The reference implements these as row-at-a-time Python UDFs
 (ingest.py:390-422, 424-443) — the one place it leaves the JVM. Here they
-are pandas UDFs (Arrow batch transfer, ~10-100x less serde overhead) and
-they are only ever invoked via ``coalesce(to_timestamp(col), fuzzy(col))``,
-so at 100 TB the Python path sees only the rows the native parser rejected.
+are pandas UDFs (Arrow batch transfer, ~10-100x less serde overhead),
+invoked only as ``coalesce(native, fuzzy(when(native IS NULL, col)))``
+(``operators.cleanse``): Spark still sends every row to the worker, but
+the rows the native parser accepted arrive as nulls, so only the rows it
+rejected are parsed here.
 
 Reference semantics preserved:
 - reject empty / <=3 chars / digit-free strings;

@@ -64,6 +64,48 @@ def test_timestamp_native_then_fuzzy(spark):
     assert got == [dt.datetime(2024, 3, 1, 5, 0, 0)]  # 00:00 EST == 05:00 UTC
 
 
+def test_fuzzy_fallback_receives_only_native_rejects(spark, monkeypatch):
+    """The fuzzy UDFs are handed ``when(native IS NULL, col)``: strings
+    the native parser accepts reach the Python worker as nulls (Spark
+    evaluates a coalesce argument for every row), and the result is
+    unchanged — native where it parses, fuzzy elsewhere."""
+    from lcr_etl_upgrade_spark.operators import parsers
+
+    args = {}
+    for name in ("fuzzy_parse_timestamp", "fuzzy_parse_date"):
+        real = getattr(parsers, name)
+
+        def spy(col, as_of=None, real=real, name=name):
+            args[name] = col
+            return real(col, as_of=as_of)
+
+        monkeypatch.setattr(parsers, name, spy)
+    df = spark.createDataFrame(
+        [("2024-01-02 03:04:05",), ("03/01/2024 00:00:00",), (None,)],
+        "v string",
+    )
+    ts = timestamp_expr(F.col("v"))
+    rows = df.select(
+        ts.alias("out"), args["fuzzy_parse_timestamp"].alias("arg")
+    ).collect()
+    assert [r.arg for r in rows] == [None, "03/01/2024 00:00:00", None]
+    assert [r.out for r in rows] == [
+        dt.datetime(2024, 1, 2, 3, 4, 5), dt.datetime(2024, 3, 1, 5, 0, 0),
+        None,
+    ]
+    df = spark.createDataFrame(
+        [("2024-01-02",), ("March 1, 2024",), (None,)], "v string"
+    )
+    d = date_expr(F.col("v"))
+    rows = df.select(
+        d.alias("out"), args["fuzzy_parse_date"].alias("arg")
+    ).collect()
+    assert [r.arg for r in rows] == [None, "March 1, 2024", None]
+    assert [r.out for r in rows] == [
+        dt.date(2024, 1, 2), dt.date(2024, 3, 1), None
+    ]
+
+
 def test_fuzzy_parse_clamps_future_to_as_of(spark):
     """The reference clamps fuzzily-parsed FUTURE timestamps to 'now'
     inside its parse UDF (ingest.py:415-418); as_of makes that replayable.

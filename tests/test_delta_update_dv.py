@@ -449,3 +449,144 @@ def test_merge_dv_sequential_batches_union(spark, tmp_path):
         assert vals[k] == 1
     for k in range(20, 25):
         assert vals[k] == 2
+
+
+def _dv_history(spark, path):
+    """Delete, DV UPDATE, DV MERGE and a re-delete on a CDF table; then
+    every version's rows, change rows and vectors, each vector as a
+    (cardinality, decoded bytes) pair."""
+    from lcr_etl_upgrade_spark.delta_lite import _resolve_dv_blob, merge_rows
+
+    _t(spark, path, dv=False)
+    set_table_properties(
+        spark,
+        path,
+        {
+            "delta.enableDeletionVectors": "true",
+            "delta.enableChangeDataFeed": "true",
+        },
+    )
+    v0 = replay_log(spark, path).version
+    delete_rows(spark, path, "v = 3")
+    update_rows(spark, path, "v = 7", {"s": F.lit("upd")})
+    src = spark.createDataFrame(
+        [(5, "U"), (1777, "U"), (333, "D"), (3, "U"), (9001, "I")],
+        "k long, act string",
+    )
+    merge_rows(
+        spark,
+        path,
+        src,
+        "t.id = s.k",
+        matched=(
+            ("delete", "s.act = 'D'"),
+            ("update", None, {"s": "concat('m-', s.act)"}),
+        ),
+        not_matched=(
+            ("insert", None, {"id": "s.k", "v": "cast(1 as int)",
+                              "s": "s.act"}),
+        ),
+    )
+    # re-masks the v = 3 rows too: only the v = 11 rows grow the vectors
+    last = delete_rows(spark, path, "v = 3 OR v = 11")
+    return {
+        "rows": [
+            sorted(
+                tuple(r)
+                for r in read_delta_lite(spark, path, version=v).collect()
+            )
+            for v in range(v0, last + 1)
+        ],
+        "changes": [
+            sorted(
+                tuple(r)
+                for r in read_delta_changes(spark, path, v, v)
+                .drop("_commit_timestamp")
+                .collect()
+            )
+            for v in range(v0 + 1, last + 1)
+        ],
+        "dvs": [
+            sorted(
+                (int(dv["cardinality"]), _resolve_dv_blob(path, dv))
+                for dv in replay_log(spark, path, v).dvs.values()
+            )
+            for v in range(v0 + 1, last + 1)
+        ],
+    }
+
+
+def test_dv_driver_and_executor_routes_agree(spark, tmp_path, monkeypatch):
+    """At or below MAX_DV_POSITIONS deletion vectors are decoded, unioned
+    and serialized on the driver; above it, in Python workers. Lowering
+    the bound to 0 sends every read and write the executor way: rows,
+    change rows and the written vectors' bytes and cardinalities must
+    be the same either way."""
+    import lcr_etl_upgrade_spark.delta_lite as dl
+
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    calls = {"toLocalIterator": 0, "mapInPandas": 0}
+    for name in calls:
+        real = getattr(DataFrame, name)
+
+        def spy(self, *a, real=real, name=name, **kw):
+            calls[name] += 1
+            return real(self, *a, **kw)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+    driver = _dv_history(spark, str(tmp_path / "driver"))
+    assert calls == {"toLocalIterator": 0, "mapInPandas": 0}
+    monkeypatch.setattr(dl, "MAX_DV_POSITIONS", 0)
+    executor = _dv_history(spark, str(tmp_path / "executor"))
+    assert calls["toLocalIterator"] and calls["mapInPandas"]
+    assert [len(d) for d in driver["dvs"]] == [4, 4, 4, 4]
+    assert driver == executor
+
+
+def test_dv_below_bound_plans_no_python_worker(spark, tmp_path, monkeypatch):
+    """Below MAX_DV_POSITIONS a DV read plans no MapInPandas node, and a
+    DV MERGE builds no mapInPandas / cogroup-applyInPandas relation and
+    never calls toLocalIterator (one Spark job per partition)."""
+    from pyspark.sql.pandas.group_ops import PandasCogroupedOps
+
+    from lcr_etl_upgrade_spark.delta_lite import merge_rows
+
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    path = str(tmp_path / "t")
+    _t(spark, path)
+    delete_rows(spark, path, "v = 3")
+    plan = (
+        read_delta_lite(spark, path)._jdf.queryExecution()
+        .executedPlan().toString()
+    )
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert "MapInPandas" not in plan and "FlatMapCoGroupsInPandas" not in plan
+
+    def refuse(*_a, **_kw):
+        raise AssertionError("Python worker route below MAX_DV_POSITIONS")
+
+    monkeypatch.setattr(DataFrame, "toLocalIterator", refuse)
+    monkeypatch.setattr(DataFrame, "mapInPandas", refuse)
+    monkeypatch.setattr(PandasCogroupedOps, "applyInPandas", refuse)
+    src = spark.createDataFrame(
+        [(5, "U"), (333, "D"), (9001, "I")], "k long, act string"
+    )
+    merge_rows(
+        spark,
+        path,
+        src,
+        "t.id = s.k",
+        matched=(
+            ("delete", "s.act = 'D'"),
+            ("update", None, {"s": "s.act"}),
+        ),
+        not_matched=(
+            ("insert", None, {"id": "s.k", "v": "cast(1 as int)",
+                              "s": "s.act"}),
+        ),
+    )
+    st = replay_log(spark, path)
+    assert sum(int(dv["cardinality"]) for dv in st.dvs.values()) == 42
+    got = read_delta_lite(spark, path)
+    assert got.count() == 4000 - 40 - 1 + 1
+    assert got.filter("id = 5 and s = 'U'").count() == 1

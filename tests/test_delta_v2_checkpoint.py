@@ -373,6 +373,37 @@ def test_cleanup_log_noop_without_checkpoint(spark, tmp_path):
     assert read_delta_lite(spark, path).count() == 3
 
 
+def test_vacuum_and_cleanup_skip_corrupt_stray_checkpoint(spark, tmp_path):
+    """A garbage checkpoint file that replay skips (every reader falls
+    back past it) is skipped by vacuum and cleanup_log too: both work
+    from the checkpoint replay actually starts from, instead of failing
+    on the stray file."""
+    from lcr_etl_upgrade_spark.delta_lite import cleanup_log
+
+    path = str(tmp_path / "t")
+    write_delta_lite(spark.range(4).selectExpr("id"), path)         # v0
+    write_delta_lite(spark.range(4, 6).selectExpr("id"), path,
+                     mode="append")                                 # v1
+    stray = f"{1:020d}.checkpoint.parquet"
+    with open(os.path.join(path, "_delta_log", stray), "wb") as fh:
+        fh.write(b"not a parquet file")
+    assert read_delta_lite(spark, path).count() == 6
+    assert vacuum(spark, path) == []
+    # replay starts from no checkpoint: nothing to clean below
+    assert cleanup_log(spark, path) == []
+    assert stray in _log_files(path)
+    write_delta_lite(spark.range(6, 9).selectExpr("id"), path,
+                     mode="append")                                 # v2
+    v_cp = write_checkpoint(spark, path)                            # cp@2
+    removed = cleanup_log(spark, path)
+    assert stray in removed and f"{1:020d}.json" in removed
+    assert f"{v_cp:020d}.checkpoint.parquet" in _log_files(path)
+    assert vacuum(spark, path) == []
+    assert {r.id for r in read_delta_lite(spark, path).collect()} == set(
+        range(9)
+    )
+
+
 def test_checkpoint_policy_property_governs_layout(spark, tmp_path):
     """delta.checkpointPolicy is the switch real writers key off:
     enable_v2_checkpoint sets it (verified), policy 'classic' on a

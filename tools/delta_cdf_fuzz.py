@@ -29,7 +29,9 @@ Extra pins per case: change rows only carry protocol _change_type
 values (update_postimage counts as an insert and update_preimage as a
 delete in the algebra); _commit_version stays inside the window;
 compaction commits contribute zero rows; every final table layout must
-pass the independent cdf_write_validator.
+pass the independent cdf_write_validator. Odd cases run with
+``MAX_DV_POSITIONS`` at 0, so their deletion vectors take the Python
+worker route instead of the driver one.
 
 --mutate ignore_dv_diff simulates a reader that treats DV updates as
 invisible (drops their change rows in the checker): the battery must
@@ -503,15 +505,24 @@ def main() -> int:
     args = ap.parse_args()
     MUTATE = args.mutate
 
+    import lcr_etl_upgrade_spark.delta_lite as dl
     from lcr_etl_upgrade_spark.session import get_session
 
     spark = get_session("delta_cdf_fuzz")
+    bound = dl.MAX_DV_POSITIONS
     failures = []
     for i in range(args.n):
         if args.case is not None and i != args.case:
             continue
         rng = np.random.default_rng(args.seed * 1_000_003 + i)
-        rec = run_case(spark, rng, i)
+        # odd cases run with the deletion-vector positions bound at 0:
+        # their vectors are read and written in Python workers instead
+        # of on the driver, so both routes stay fuzzed
+        dl.MAX_DV_POSITIONS = 0 if i % 2 else bound
+        try:
+            rec = run_case(spark, rng, i)
+        finally:
+            dl.MAX_DV_POSITIONS = bound
         if rec is not None:
             failures.append({"i": i, **rec})
             print(f"FAIL case {i}: {json.dumps(failures[-1])[:500]}",

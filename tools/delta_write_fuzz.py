@@ -43,7 +43,9 @@ deletion vectors enabled, every write one task across all partitions
 random append / update_rows / delete_rows / merge_rows (use_dvs
 None, True or False). After every op the rows must equal the oracle's,
 every row keeps the row id it was first read with, and no two rows
-share an id.
+share an id. Every other row-tracking case (i % 16 == 9) runs with
+``MAX_DV_POSITIONS`` at 0, so its deletion vectors take the Python
+worker route instead of the driver one.
 
 The final read (read_delta_lite) must equal the oracle's multiset over
 the expected column set — old files reading evolved columns as null is
@@ -636,7 +638,9 @@ def run_alter_case(spark, rng, i: int) -> dict | None:
                     r.pop(victim, None)
             elif op == "constrain":
                 c = cols[int(rng.integers(0, len(cols)))]
-                name = f"k{len(constraints)}_{next_col}"
+                # numbered by the ops so far: a count of the live
+                # constraints repeats a live name after a deconstrain
+                name = f"k{len(ops)}_{next_col}"
                 should_refuse = any(
                     r.get(c) is None or r[c] < -25 for r in rows
                 )
@@ -822,7 +826,10 @@ def main() -> int:
 
     from lcr_etl_upgrade_spark.session import get_session
 
+    import lcr_etl_upgrade_spark.delta_lite as dl
+
     spark = get_session("delta_write_fuzz")
+    bound = dl.MAX_DV_POSITIONS
     failures = []
     for i in range(args.n):
         if args.case is not None and i != args.case:
@@ -831,7 +838,15 @@ def main() -> int:
         if i % 8 == 5:
             rec = run_alter_case(spark, rng, i)
         elif i % 8 == 1:
-            rec = run_rowtrack_case(spark, rng, i)
+            # every other row-tracking case runs with the deletion-vector
+            # positions bound at 0: its vectors are read and written in
+            # Python workers instead of on the driver, so both routes
+            # stay fuzzed
+            dl.MAX_DV_POSITIONS = 0 if i % 16 == 9 else bound
+            try:
+                rec = run_rowtrack_case(spark, rng, i)
+            finally:
+                dl.MAX_DV_POSITIONS = bound
         elif i % 4 == 3:
             rec = run_identity_case(spark, rng, i)
         else:

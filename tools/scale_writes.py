@@ -728,8 +728,14 @@ def main() -> int:
         # pays codegen/classload for the whole command machinery — the
         # r12/r13 artifacts recorded it INSIDE update_1pct (making 1%
         # read slower than 50%). One unrecorded warm pass on a scratch
-        # copy, mirroring bench.py's warm-up.
+        # copy, mirroring bench.py's warm-up. The second warm pass is a
+        # DV UPDATE: the deletion-vector path has its own first-use cost
+        # (r18 charged it to update_1pct_dv_nocdf, 5.12 s against 2.03 s
+        # for the same command with CDF right after it).
         measure_update(spark, uniform, scratch, "id % 1000 = 7", True, 1)
+        measure_update(
+            spark, uniform, scratch, "id % 1000 = 7", False, 1, dvs=True
+        )
         for sel, pred in (("1pct", "id % 100 = 0"), ("50pct", "id % 2 = 0")):
             for cdf in (False, True):
                 _gated(
