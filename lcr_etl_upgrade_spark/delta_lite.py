@@ -917,10 +917,26 @@ def _physicalize(dt: T.DataType) -> T.DataType:
     return dt
 
 
-def _quoted(name: str) -> Column:
-    """Column reference by LITERAL name: physical names may contain dots
-    (legal in Delta), which bare F.col would parse as nested access."""
-    return F.col("`" + name.replace("`", "``") + "`")
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier — the one quoting of column
+    names in SQL text: physical names may contain dots (legal in Delta),
+    which a bare name would parse as nested access."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+_TYPE_SQL: dict[str, str] = {}
+
+
+def _type_sql(spark: SparkSession, dt: T.DataType) -> str:
+    """``dt`` as SQL type text, rendered ONCE per distinct type by the
+    JVM's ``DataType.sql`` — quoted nested field names, NOT NULL struct
+    fields and decimal precision included, so every type takes the same
+    path into a ``CAST``."""
+    key = dt.json()
+    if key not in _TYPE_SQL:
+        jtypes = spark._jvm.org.apache.spark.sql.types
+        _TYPE_SQL[key] = jtypes.DataType.fromJson(key).sql()
+    return _TYPE_SQL[key]
 
 
 def _mapped_schema(
@@ -1818,12 +1834,16 @@ def _file_stats_json(full_path: str) -> str | None:
             if "." in name:
                 continue  # nested leaves: skip (top-level only)
             st = c.statistics
-            if st is None or not st.has_min_max:
-                mins.pop(name, None)
-                maxs.pop(name, None)
-                ok_cols.discard(name)
-                continue
-            lo, hi = _plain(st.min), _plain(st.max)
+            try:
+                # pyarrow cannot convert some physical stats (decimals
+                # stored as INT32/INT64): such a column has no stats
+                lo, hi = (
+                    (_plain(st.min), _plain(st.max))
+                    if st is not None and st.has_min_max
+                    else (None, None)
+                )
+            except NotImplementedError:
+                lo = hi = None
             if lo is None or hi is None:
                 mins.pop(name, None)
                 maxs.pop(name, None)
@@ -2292,7 +2312,7 @@ def write_delta_lite(
             identity_obs,
             *[
                 (F.max if i["step"] > 0 else F.min)(
-                    _quoted(i["name"])
+                    F.col(_q(i["name"]))
                 ).alias(f"i{k}")
                 for k, i in enumerate(identity_cols)
             ],
@@ -2902,10 +2922,49 @@ def _merge_norm_clauses(
     return out
 
 
-def _merge_cond_col(cond) -> Column:
-    if cond is None:
-        return F.lit(True)
-    return cond if isinstance(cond, Column) else F.expr(cond)
+def _clause_sql(clauses, prefix: str):
+    """The SQL text of clause conditions and values: None is TRUE, a
+    string is its own (parenthesized) text, and a Column is a reference
+    to a generated name ``<prefix><n>`` — returned with its Column, for
+    the caller to attach to the clause's frame in ONE ``withColumns``.
+    Returns ``([(condition_sql, {column: value_sql} | None)],
+    {generated name: Column})``."""
+    attach: dict[str, Column] = {}
+
+    def sql(e) -> str:
+        if e is None:
+            return "TRUE"
+        if isinstance(e, Column):
+            name = f"{prefix}{len(attach)}"
+            attach[name] = e
+            return _q(name)
+        return f"({e})"
+
+    return [
+        (
+            sql(cond),
+            None
+            if values is None
+            else {c: sql(v) for c, v in values.items()},
+        )
+        for _k, cond, values in clauses
+    ], attach
+
+
+def _first_of(conds: list[str]) -> str:
+    """SQL: the index of the first of ``conds`` that holds, NULL when
+    none does (ordered first-wins clause semantics)."""
+    if not conds:
+        return "CAST(NULL AS INT)"
+    return (
+        "CASE "
+        + " ".join(f"WHEN {c} THEN {i}" for i, c in enumerate(conds))
+        + " END"
+    )
+
+
+def _in(col: str, idx: list[int]) -> str:
+    return f"{col} IN ({', '.join(map(str, idx))})"
 
 
 def merge_rows(
@@ -2972,12 +3031,19 @@ def merge_rows(
       materializes merge sources for the same reason: a
       non-deterministic source must see ONE consistent snapshot across
       the match, rewrite, and insert phases);
-    - matches are computed ONCE as a distributed decision frame keyed
-      by (file, row position): clause index plus the already-evaluated
-      new values for update-assigned columns. Only per-FILE aggregates
-      of it reach the driver (ambiguity check + touched-file set);
-      by-source clauses add one per-file count pass over the live
-      target;
+    - matches are computed ONCE as a distributed decision frame of the
+      MODIFYING (file, row position) pairs only: the first matched
+      clause that holds plus the new values of the update-assigned
+      columns, evaluated against the pristine pair — no aggregate.
+      The ambiguity check and the per-file touched counts come from
+      one aggregate over (file, position) alone, and only its per-FILE
+      rows reach the driver; by-source clauses add the matched set as
+      a distinct (file, position) frame and one per-file count pass
+      over the live target;
+    - every per-column projection is one SQL-text ``selectExpr``
+      (quoted identifiers, types rendered once by the JVM); Column-
+      typed ``on``, conditions and assignments are attached once under
+      generated names and referenced by name;
     - a target row matched by MORE THAN ONE modifying source row
       raises (delta's multiple-source-rows-match error) BEFORE any
       file is staged;
@@ -3273,15 +3339,14 @@ class _TableRead:
                 reader = reader.option("basePath", base_path)
             df = reader.parquet(*[os.path.join(base, r) for r in files])
             if need_ids:
-                df = df.select(
+                df = df.selectExpr(
                     "*",
                     # Hadoop renders local paths as file:/abs or
                     # file:///abs depending on the constructor —
                     # normalize the scheme away
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), r"^file:/+", "/"
-                    ).alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
+                    "regexp_replace(_metadata.file_path, '^file:/+', '/')"
+                    " AS __file",
+                    "_metadata.row_index AS __pos",
                 )
             return df
 
@@ -3329,21 +3394,20 @@ class _TableRead:
             )
             df = df.join(F.broadcast(desc), "__file", "left")
             row_cols = [
-                F.coalesce(
-                    _quoted(rid), F.col("__rt_rid") + F.col("__pos")
-                ).alias(rid),
-                F.coalesce(_quoted(rcv), F.col("__rt_dcv")).alias(rcv),
+                f"coalesce({_q(rid)}, __rt_rid + __pos) AS {_q(rid)}",
+                f"coalesce({_q(rcv)}, __rt_dcv) AS {_q(rcv)}",
             ]
-        return df.select(
+        return df.selectExpr(
             *[
                 # under column mapping the files, the hive path segments
                 # AND the log's partitionValues keys all carry PHYSICAL
                 # names (the protocol's contract), so the scan runs
                 # physical and renames once here — a positional cast,
                 # which renames nested fields too
-                _quoted(pf.name).cast(f.dataType).alias(f.name)
+                f"CAST({_q(pf.name)} AS {_type_sql(spark, f.dataType)})"
+                f" AS {_q(f.name)}"
                 if self.mapping != "none"
-                else _quoted(f.name)
+                else _q(f.name)
                 for f, pf in fields
             ],
             *(["_change_type"] if cdc else []),
@@ -3458,50 +3522,85 @@ class _TableWrite(_TableRead):
         """Logical rows -> the physical parquet layout: physical names
         (stamped with their parquet field ids on mapped tables — what
         id-mode readers resolve by), partition columns dropped unless
-        ``parts``, a ``_change_type`` column riding along. Every table
-        column must be in the frame except the ``omitted`` ones. On an
-        unmapped table a column whose type already reads as the
-        table's (nullability aside) is written as it is: Spark refuses
-        to cast a nullable array element or struct field to a
+        ``parts``, a ``_change_type`` column riding along — one SQL-text
+        projection. Every table column must be in the frame except the
+        ``omitted`` ones. A column whose type already reads as the
+        physical one (nullability aside) is written as it is: Spark
+        refuses to cast a nullable array element or struct field to a
         non-nullable one, and parquet does not care."""
-        mapped = self.mapping != "none"
         have = {
             f.name: f.dataType.simpleString() for f in frame.schema.fields
         }
-
-        def phys(f: T.StructField, pf: T.StructField) -> Column:
-            col = _quoted(f.name)
-            if mapped:
-                return col.cast(pf.dataType).alias(
-                    pf.name,
-                    metadata={
-                        "parquet.field.id": int(
-                            f.metadata["delta.columnMapping.id"]
-                        )
-                    },
-                )
-            if have.get(f.name) != pf.dataType.simpleString():
-                col = col.cast(pf.dataType)
-            return col.alias(pf.name)
-
-        return frame.select(
-            *[
-                phys(f, pf)
-                for f, pf in zip(self.schema.fields, self.phys_schema.fields)
-                if (parts or pf.name not in self.phys_part_cols)
-                and f.name not in self.omitted
-            ],
+        kept = [
+            (f, pf)
+            for f, pf in zip(self.schema.fields, self.phys_schema.fields)
+            if (parts or pf.name not in self.phys_part_cols)
+            and f.name not in self.omitted
+        ]
+        mapped = self.mapping != "none"
+        # a mapped table's columns first project under temporary names
+        # that the field ids attach to, then rename to physical names
+        names = [
+            f"__fid{i}" if mapped else _q(pf.name)
+            for i, (_f, pf) in enumerate(kept)
+        ]
+        rest = [
             *(
-                [_quoted(self.rows.rid_col), _quoted(self.rows.rcv_col)]
+                [_q(self.rows.rid_col), _q(self.rows.rcv_col)]
                 if row_ids
                 else []
             ),
             *(
                 ["_change_type"]
-                if "_change_type" in frame.columns
+                if "_change_type" in have
                 and "_change_type" not in self.logical_to_phys
                 else []
             ),
+        ]
+        out = frame.selectExpr(
+            *[
+                (
+                    _q(f.name)
+                    if have.get(f.name) == pf.dataType.simpleString()
+                    else f"CAST({_q(f.name)} AS "
+                    f"{_type_sql(self.spark, pf.dataType)})"
+                )
+                + f" AS {name}"
+                for (f, pf), name in zip(kept, names)
+            ],
+            *rest,
+        )
+        if not mapped:
+            return out
+        # SQL text carries no column metadata: ``to`` stamps the field
+        # ids onto the temporary columns (same names and types, so it
+        # only attaches metadata), and the renaming alias on top
+        # inherits them into the written parquet schema
+        ids = {
+            name: int(f.metadata["delta.columnMapping.id"])
+            for (f, _pf), name in zip(kept, names)
+        }
+        out = out.to(
+            T.StructType(
+                [
+                    T.StructField(
+                        g.name,
+                        g.dataType,
+                        g.nullable,
+                        {"parquet.field.id": ids[g.name]}
+                        if g.name in ids
+                        else g.metadata,
+                    )
+                    for g in out.schema.fields
+                ]
+            )
+        )
+        return out.selectExpr(
+            *[
+                f"{name} AS {_q(pf.name)}"
+                for (_f, pf), name in zip(kept, names)
+            ],
+            *rest,
         )
 
     def stage_rows(self, rows: DataFrame, what: str,
@@ -3803,94 +3902,86 @@ def _dml(
             n_source_rows = src.count()  # materializes the cached source
             on_cond = on if isinstance(on, Column) else F.expr(on)
 
-        # ---- global decision frame: one match pass ----------------------
-        dec = None
+        m_sql, m_cols = _clause_sql(matched, "__mrg_m")
+        b_sql, b_cols = _clause_sql(nmbs, "__mrg_b")
+        i_sql, i_cols = _clause_sql(not_matched, "__mrg_i")
+
+        def _cast(sql: str, dt: T.DataType) -> str:
+            return f"CAST({sql} AS {_type_sql(tw.spark, dt)})"
+
+        # ---- decision pass: one match pass ------------------------------
+        # ``dec`` holds the MODIFYING (file, position) pairs only: the
+        # first matched clause that holds plus the new values of the
+        # update-assigned columns, computed against the pristine pair.
+        # ``hit`` (by-source clauses only) is every matched position.
+        dec = hit = None
         touched_counts: dict[str, int] = {}
         if src is not None and rels and (matched or nmbs):
             pairs = tw.scan(rels).alias("t").join(
                 src.alias("s"), on_cond, "inner"
             )
-            clause = None
-            for i, (_k, cond, _v) in enumerate(matched):
-                c = _merge_cond_col(cond)
-                clause = (
-                    F.when(c, F.lit(i))
-                    if clause is None
-                    else clause.when(c, F.lit(i))
+            proj = pairs
+            if matched:
+                if m_cols:
+                    pairs = pairs.withColumns(m_cols)
+                proj = pairs.selectExpr(
+                    "*", f"{_first_of([c for c, _v in m_sql])} AS __mrg_clause"
                 )
-            clause_col = (
-                clause if clause is not None else F.lit(None).cast("int")
-            )
-            new_cols = []
-            for c, nm in new_names.items():
-                branch = None
-                for i in assigners[c]:
-                    expr = _merge_cond_col(matched[i][2][c]).cast(
-                        schema[c].dataType
-                    )
-                    branch = (
-                        F.when(clause_col == i, expr)
-                        if branch is None
-                        else branch.when(clause_col == i, expr)
-                    )
-                new_cols.append(
-                    (
-                        branch
-                        if branch is not None
-                        else F.lit(None).cast(schema[c].dataType)
-                    ).alias(nm)
-                )
-            dec = (
-                pairs.select(
-                    F.col("__file"),
-                    F.col("__pos"),
-                    clause_col.alias("__mrg_clause"),
-                    *new_cols,
-                )
-                .groupBy("__file", "__pos")
-                .agg(
-                    F.count(
-                        F.when(F.col("__mrg_clause").isNotNull(), 1)
-                    ).alias("__mrg_nmod"),
-                    F.min("__mrg_clause").alias("__mrg_clause"),
+                if not nmbs:
+                    # matched-but-unmodified pairs only tell "matched"
+                    # from "not matched by source" — drop them early
+                    proj = proj.filter("__mrg_clause IS NOT NULL")
+                proj = proj.selectExpr(
+                    "__file",
+                    "__pos",
+                    "__mrg_clause",
                     *[
-                        F.first(F.col(nm), ignorenulls=True).alias(nm)
-                        for nm in new_names.values()
+                        "CASE __mrg_clause "
+                        + " ".join(
+                            f"WHEN {i} THEN "
+                            + _cast(m_sql[i][1][c], schema[c].dataType)
+                            for i in assigners[c]
+                        )
+                        + f" END AS {nm}"
+                        for c, nm in new_names.items()
                     ],
+                ).persist()
+                tw.persisted.append(proj)
+                dec = proj.filter("__mrg_clause IS NOT NULL") if nmbs else proj
+                # ambiguity and touched counts from the positions alone:
+                # modifying pairs per position, then max / count per file
+                per_file = (
+                    dec.groupBy("__file", "__pos")
+                    .count()
+                    .groupBy("__file")
+                    .agg(
+                        F.max("count").alias("mx"),
+                        F.count(F.lit(1)).alias("n"),
+                    )
+                    .collect()
                 )
-                .withColumn("__mrg_matched", F.lit(True))
-            )
-            if not nmbs:
-                # matched-but-unmodified rows are only needed to tell
-                # "matched" from "not matched by source" — skip them
-                # entirely when no by-source clause exists
-                dec = dec.filter(F.col("__mrg_clause").isNotNull())
-            dec = dec.persist()
-            tw.persisted.append(dec)
-            per_file = (
-                dec.groupBy("__file")
-                .agg(
-                    F.max("__mrg_nmod").alias("mx"),
-                    F.sum(
-                        F.col("__mrg_clause").isNotNull().cast("long")
-                    ).alias("nmod_rows"),
+                if any(int(r["mx"]) > 1 for r in per_file):
+                    raise ValueError(
+                        "merge_rows: multiple source rows match (and would "
+                        "modify) the same target row — deduplicate the "
+                        "source on the merge keys first (delta-spark raises "
+                        "the same error)"
+                    )
+                # per-file MODIFIED-row counts: the touched set and the
+                # DV-vs-rewrite routing input
+                touched_counts = {
+                    tw.enc_to_rel[r["__file"]]: int(r["n"])
+                    for r in per_file
+                    if r["__file"] in tw.enc_to_rel
+                }
+            if nmbs:
+                hit = (
+                    proj.select("__file", "__pos")
+                    .distinct()
+                    .selectExpr("*", "TRUE AS __mrg_matched")
+                    .persist()
                 )
-                .collect()
-            )
-            if any(int(r["mx"] or 0) > 1 for r in per_file):
-                raise ValueError(
-                    "merge_rows: multiple source rows match (and would "
-                    "modify) the same target row — deduplicate the "
-                    "source on the merge keys first (delta-spark raises "
-                    "the same error)"
-                )
-            # per-file MODIFIED-row counts: the touched set and the
-            # DV-vs-rewrite routing input
-            touched_counts = {
-                tw.enc_to_rel[r["__file"]]: int(r["nmod_rows"] or 0)
-                for r in per_file
-                if int(r["nmod_rows"] or 0) and r["__file"] in tw.enc_to_rel
-            }
+                tw.persisted.append(hit)
 
         # all-delete with forced DV routing: every file is a candidate
         # and the mask pass itself finds the matches (the union with the
@@ -3900,27 +3991,26 @@ def _dml(
             touched = list(rels)
         else:
             if nmbs and rels:
-                any_nmbs = F.lit(False)
-                for _k, cond, _v in nmbs:
-                    any_nmbs = any_nmbs | _merge_cond_col(cond)
                 tgt = tw.scan(rels).alias("t")
-                if dec is not None:
+                if b_cols:
+                    tgt = tgt.withColumns(b_cols)
+                if hit is not None:
                     tgt = tgt.join(
-                        dec.select("__file", "__pos"),
+                        hit.select("__file", "__pos"),
                         ["__file", "__pos"],
                         "left_anti",
                     )
                 for r in (
-                    tgt.filter(any_nmbs)
+                    tgt.filter(" OR ".join(c for c, _v in b_sql))
                     .groupBy("__file")
-                    .agg(F.count(F.lit(1)).alias("cnt"))
+                    .count()
                     .collect()
                 ):
                     rel_b = tw.enc_to_rel.get(r["__file"])
                     if rel_b is not None:
                         touched_counts[rel_b] = touched_counts.get(
                             rel_b, 0
-                        ) + int(r["cnt"])
+                        ) + int(r["count"])
             touched = sorted(touched_counts)
 
         # ---- per-file routing: deletion-vector mask vs rewrite ----------
@@ -3965,46 +4055,40 @@ def _dml(
             on file + position), the by-source clause, and the
             __mrg_deleted / __mrg_updated flags."""
             j = frame.alias("t")
+            # no broadcast hints: dec / hit are proportional to matched
+            # rows — AQE flips to BHJ when they are actually small
             if dec is not None:
-                # no broadcast hint: dec is proportional to matched rows
-                # — AQE flips to BHJ when it is actually small
-                j = j.join(
-                    dec.drop("__mrg_nmod"), ["__file", "__pos"], "left"
+                j = j.join(dec, ["__file", "__pos"], "left")
+            if hit is not None:
+                j = j.join(hit, ["__file", "__pos"], "left")
+            if b_cols:
+                j = j.withColumns(b_cols)
+            nmbs_clause = _first_of([c for c, _v in b_sql])
+            if hit is not None:
+                nmbs_clause = (
+                    f"CASE WHEN __mrg_matched IS NULL THEN {nmbs_clause} END"
                 )
-            else:
-                j = j.withColumns(
-                    {
-                        "__mrg_clause": F.lit(None).cast("int"),
-                        "__mrg_matched": F.lit(None).cast("boolean"),
-                    }
-                )
-            nmbs_clause = F.lit(None).cast("int")
-            if nmbs:
-                branch = None
-                for jx, (_k, cond, _v) in enumerate(nmbs):
-                    c = _merge_cond_col(cond)
-                    branch = (
-                        F.when(c, F.lit(jx))
-                        if branch is None
-                        else branch.when(c, F.lit(jx))
-                    )
-                nmbs_clause = F.when(F.col("__mrg_matched").isNull(), branch)
-            j = j.withColumn("__mrg_nmbs", nmbs_clause)
-            deleted = F.lit(False)
-            if del_idx:
-                deleted = deleted | F.col("__mrg_clause").isin(del_idx)
+            j = j.selectExpr(
+                "*",
+                *(
+                    []
+                    if dec is not None
+                    else ["CAST(NULL AS INT) AS __mrg_clause"]
+                ),
+                f"{nmbs_clause} AS __mrg_nmbs",
+            )
+            deleted = [_in("__mrg_clause", del_idx)] if del_idx else []
             if nmbs_del_idx:
-                deleted = deleted | F.col("__mrg_nmbs").isin(nmbs_del_idx)
-            updated = F.lit(False)
-            if upd_idx:
-                updated = updated | F.col("__mrg_clause").isin(upd_idx)
+                deleted.append(_in("__mrg_nmbs", nmbs_del_idx))
+            updated = [_in("__mrg_clause", upd_idx)] if upd_idx else []
             if nmbs_upd_idx:
-                updated = updated | F.col("__mrg_nmbs").isin(nmbs_upd_idx)
-            return j.withColumns(
-                {
-                    "__mrg_deleted": F.coalesce(deleted, F.lit(False)),
-                    "__mrg_updated": F.coalesce(updated, F.lit(False)),
-                }
+                updated.append(_in("__mrg_nmbs", nmbs_upd_idx))
+            return j.selectExpr(
+                "*",
+                f"coalesce({' OR '.join(deleted) or 'FALSE'}, FALSE)"
+                " AS __mrg_deleted",
+                f"coalesce({' OR '.join(updated) or 'FALSE'}, FALSE)"
+                " AS __mrg_updated",
             )
 
         def _new_values(kept: DataFrame, row_ids: bool) -> DataFrame:
@@ -4014,62 +4098,53 @@ def _dml(
             here over the original target columns). Generated columns
             then recompute over the post-assignment values; updated
             rows' materialized commit version falls to this commit."""
-            rid = (
-                [_quoted(tw.rows.rid_col), _quoted(tw.rows.rcv_col)]
-                if row_ids
-                else []
-            )
+            rid, rcv = _q(tw.rows.rid_col), _q(tw.rows.rcv_col)
             out_cols = []
             for f in schema.fields:
                 c = f.name
-                val = None
-                if assigners.get(c):
-                    val = F.when(
-                        F.col("__mrg_clause").isin(assigners[c]),
-                        F.col(new_names[c]),
-                    )
-                for jx in nmbs_upd_idx:
-                    if c in nmbs[jx][2]:
-                        expr = _merge_cond_col(nmbs[jx][2][c]).cast(
-                            f.dataType
-                        )
-                        hit = F.col("__mrg_nmbs") == jx
-                        val = (
-                            F.when(hit, expr)
-                            if val is None
-                            else val.when(hit, expr)
-                        )
+                whens = (
+                    [
+                        f"WHEN {_in('__mrg_clause', assigners[c])} "
+                        f"THEN {new_names[c]}"
+                    ]
+                    if assigners.get(c)
+                    else []
+                ) + [
+                    f"WHEN __mrg_nmbs = {jx} THEN "
+                    + _cast(b_sql[jx][1][c], f.dataType)
+                    for jx in nmbs_upd_idx
+                    if c in b_sql[jx][1]
+                ]
                 out_cols.append(
-                    (
-                        val.otherwise(_quoted(c)) if val is not None
-                        else _quoted(c)
-                    ).alias(c)
+                    f"CASE {' '.join(whens)} ELSE {_q(c)} END AS {_q(c)}"
+                    if whens
+                    else _q(c)
                 )
-            upd = kept.select(*out_cols, *rid, F.col("__mrg_updated"))
+            upd = kept.selectExpr(
+                *out_cols,
+                *(
+                    [
+                        rid,
+                        "CASE WHEN __mrg_updated THEN CAST(NULL AS BIGINT) "
+                        f"ELSE {rcv} END AS {rcv}",
+                    ]
+                    if row_ids
+                    else []
+                ),
+                "__mrg_updated",
+            )
             if gen_cols:
-                upd = upd.select(
+                upd = upd.selectExpr(
                     *[
-                        (
-                            F.when(
-                                F.col("__mrg_updated"),
-                                F.expr(gen_cols[f.name]).cast(f.dataType),
-                            )
-                            .otherwise(_quoted(f.name))
-                            .alias(f.name)
-                            if f.name in gen_cols
-                            else _quoted(f.name)
-                        )
+                        "CASE WHEN __mrg_updated THEN "
+                        + _cast(f"({gen_cols[f.name]})", f.dataType)
+                        + f" ELSE {_q(f.name)} END AS {_q(f.name)}"
+                        if f.name in gen_cols
+                        else _q(f.name)
                         for f in schema.fields
                     ],
-                    *rid,
-                    F.col("__mrg_updated"),
-                )
-            if row_ids:
-                upd = upd.withColumn(
-                    tw.rows.rcv_col,
-                    F.when(
-                        F.col("__mrg_updated"), F.lit(None).cast("long")
-                    ).otherwise(_quoted(tw.rows.rcv_col)),
+                    *([rid, rcv] if row_ids else []),
+                    "__mrg_updated",
                 )
             return upd
 
@@ -4077,8 +4152,8 @@ def _dml(
             obs = Observation()
             return upd.observe(
                 obs,
-                F.coalesce(
-                    F.sum(F.col("__mrg_updated").cast("long")), F.lit(0)
+                F.expr(
+                    "coalesce(sum(CAST(__mrg_updated AS BIGINT)), 0)"
                 ).alias("u"),
             ), obs
 
@@ -4090,9 +4165,9 @@ def _dml(
             and the deleted rows — only the kinds some clause produces,
             since each image is one more read of ``j``."""
             def img(frame, flag, kind):
-                return frame.filter(F.col(flag)).select(
-                    *[_quoted(f.name) for f in schema.fields],
-                    F.lit(kind).alias("_change_type"),
+                return frame.filter(flag).selectExpr(
+                    *[_q(f.name) for f in schema.fields],
+                    f"'{kind}' AS _change_type",
                 )
 
             images = []
@@ -4112,9 +4187,13 @@ def _dml(
             by_part.setdefault(key, []).append(rel)
         for _key, group in sorted(by_part.items()):
             j = _decide(
-                tw.scan(group, row_ids=tw.rows.on, ids=dec is not None)
+                tw.scan(
+                    group,
+                    row_ids=tw.rows.on,
+                    ids=dec is not None or hit is not None,
+                )
             )
-            if tw.cdf_on and dec is not None:
+            if tw.cdf_on and (dec is not None or hit is not None):
                 # the decided group frame feeds the rewrite AND the
                 # change images — persist it for the group's duration
                 # instead of re-running the scan + source join per
@@ -4124,7 +4203,7 @@ def _dml(
                 # CDF UPDATE 2.3x slower at local[4])
                 j = j.persist()
                 tw.persisted.append(j)
-            new = _new_values(j.filter(~F.col("__mrg_deleted")), tw.rows.on)
+            new = _new_values(j.filter("NOT __mrg_deleted"), tw.rows.on)
             # the change images read the UNOBSERVED projection: an
             # observe() node would block pushing their filters below it
             changes = _changes(j, new) if tw.cdf_on else None
@@ -4147,7 +4226,7 @@ def _dml(
             row_ids = live and tw.rows.on and has_updates
             return _decide(
                 tw.scan(rels, live=live, row_ids=row_ids)
-            ).filter(F.col("__mrg_deleted") | F.col("__mrg_updated"))
+            ).filter("__mrg_deleted OR __mrg_updated")
 
         if touched_dv:
             if has_updates:
@@ -4187,9 +4266,7 @@ def _dml(
             if per_file_dv:
                 new = changes = None
                 if has_updates:
-                    new = _new_values(
-                        j.filter(F.col("__mrg_updated")), tw.rows.on
-                    )
+                    new = _new_values(j.filter("__mrg_updated"), tw.rows.on)
                 elif tw.cdf_on:
                     # delete images: the live matches of the files whose
                     # vector grew
@@ -4255,47 +4332,42 @@ def _dml(
                 ins = ins.join(
                     tw.scan(rels, ids=False).alias("t"), on_cond, "left_anti"
                 )
-            branch = None
-            for k, (_kind, cond, _v) in enumerate(not_matched):
-                c = _merge_cond_col(cond)
-                branch = (
-                    F.when(c, F.lit(k))
-                    if branch is None
-                    else branch.when(c, F.lit(k))
-                )
-            ins = ins.withColumn("__mrg_ins", branch).filter(
-                F.col("__mrg_ins").isNotNull()
-            )
+            if i_cols:
+                ins = ins.withColumns(i_cols)
+            ins = ins.selectExpr(
+                "*", f"{_first_of([c for c, _v in i_sql])} AS __mrg_ins"
+            ).filter("__mrg_ins IS NOT NULL")
             # simultaneous projection: every value expression sees the
-            # source row; omitted columns insert as typed nulls
+            # source row; omitted columns insert as typed nulls;
+            # generated columns compute after, from the inserted values
             val_cols = []
             for f in schema.fields:
                 if f.name in gen_cols:
-                    continue  # computed below from the generation expr
-                b = None
-                for k, (_kind, _cond, values) in enumerate(not_matched):
-                    if f.name in values:
-                        expr = _merge_cond_col(values[f.name]).cast(
-                            f.dataType
-                        )
-                        hit = F.col("__mrg_ins") == k
-                        b = F.when(hit, expr) if b is None else b.when(
-                            hit, expr
-                        )
+                    continue
+                whens = [
+                    f"WHEN {k} THEN {_cast(values[f.name], f.dataType)}"
+                    for k, (_c, values) in enumerate(i_sql)
+                    if f.name in values
+                ]
                 val_cols.append(
                     (
-                        b if b is not None else F.lit(None).cast(f.dataType)
-                    ).alias(f.name)
+                        f"CASE __mrg_ins {' '.join(whens)} END"
+                        if whens
+                        else _cast("NULL", f.dataType)
+                    )
+                    + f" AS {_q(f.name)}"
                 )
-            new_rows = ins.select(*val_cols)
+            new_rows = ins.selectExpr(*val_cols)
             if gen_cols:
-                new_rows = new_rows.select(
-                    "*",
+                new_rows = new_rows.selectExpr(
                     *[
-                        F.expr(gexpr).cast(schema[name].dataType).alias(name)
-                        for name, gexpr in gen_cols.items()
-                    ],
-                ).select(*[_quoted(f.name) for f in schema.fields])
+                        _cast(f"({gen_cols[f.name]})", f.dataType)
+                        + f" AS {_q(f.name)}"
+                        if f.name in gen_cols
+                        else _q(f.name)
+                        for f in schema.fields
+                    ]
+                )
             if tw.cdf_on:
                 # reused by the cdc insert staging — one anti-join, not two
                 new_rows = new_rows.persist()
@@ -4307,7 +4379,7 @@ def _dml(
                 counts["inserted"] += n
             if tw.cdf_on:
                 tw.stage_changes(
-                    new_rows.withColumn("_change_type", F.lit("insert"))
+                    new_rows.selectExpr("*", "'insert' AS _change_type")
                 )
 
         # ---- operationMetrics (delta-spark history parity) -------------

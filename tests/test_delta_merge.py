@@ -165,6 +165,42 @@ def test_merge_multiple_source_match_raises(spark, tmp_path):
     assert v == 0  # nothing matched any clause -> no commit
 
 
+@pytest.mark.parametrize("route", ["rewrite", "dv", "by_source"])
+def test_merge_one_of_two_matches_modifies(spark, tmp_path, route):
+    """A target row matched by two source rows of which only ONE
+    satisfies the update clause is not ambiguous: it takes that row's
+    values, whichever order the pairs arrive in."""
+    path = str(tmp_path / "t")
+    write_delta_lite(_tgt(spark, 3), path)
+    dup = spark.createDataFrame(
+        [(1, 7), (1, 200), (2, 300), (2, 8)], "k long, nv int"
+    )
+    v = merge_rows(
+        spark, path, dup, "t.id = s.k",
+        matched=(("update", "s.nv > 100", {"v": "s.nv", "tag": "'upd'"}),),
+        not_matched_by_source=(
+            (("update", None, {"tag": "'gone'"}),)
+            if route == "by_source"
+            else ()
+        ),
+        use_dvs=route == "dv",
+    )
+    assert v == 1
+    assert _snap(spark, path) == [
+        (0, 0, "gone" if route == "by_source" else "old"),
+        (1, 200, "upd"),
+        (2, 300, "upd"),
+    ]
+    adds = [
+        a["add"]
+        for a in map(json.loads, open(
+            os.path.join(path, "_delta_log", f"{v:020d}.json")
+        ))
+        if "add" in a
+    ]
+    assert any("deletionVector" in a for a in adds) == (route == "dv")
+
+
 def test_merge_noop_returns_unchanged(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta_lite(_tgt(spark, 3), path)

@@ -7,6 +7,11 @@ commit timestamps so clock skew between writers cannot make the
 mapping ambiguous; a pre-table timestamp raises, and a future one
 raises on the read path (delta-spark parity) while resolving to latest
 only under allow_future=True (the RESTORE rule) — round-11 ADVICE.
+
+The registry's ``read_delta`` takes the same instant as epoch-ms,
+datetime or ISO string and resolves the same snapshot whichever
+runtime dispatches; the string handed to delta-spark's option renders
+the instant in the SESSION timezone.
 """
 
 from __future__ import annotations
@@ -22,6 +27,11 @@ from lcr_etl_upgrade_spark.delta_lite import (
     restore_table,
     version_at_timestamp,
     write_delta_lite,
+)
+from lcr_etl_upgrade_spark.sources.registry import (
+    _timestamp_as_of_epoch_ms,
+    _timestamp_as_of_session_str,
+    read_delta,
 )
 
 
@@ -106,3 +116,72 @@ def test_restore_to_timestamp(spark, tmp_path):
         restore_table(spark, path)
     with pytest.raises(ValueError, match="exactly one"):
         restore_table(spark, path, version=0, timestamp=1000)
+
+
+def test_future_timestamp_read_refuses_restore_resolves(spark, tmp_path):
+    path = str(tmp_path / "t")
+    _table_with_times(spark, path, [1000, 2000, 3000])
+    with pytest.raises(ValueError, match="after the latest commit"):
+        read_delta_lite(spark, path, timestamp=9999)
+    with pytest.raises(ValueError, match="after the latest commit"):
+        read_delta(spark, path, timestamp=9999)
+    # boundary: exactly the latest commit time still reads
+    assert read_delta_lite(spark, path, timestamp=3000).count() == 30
+    # RESTORE keeps the permissive rule: future -> latest == no-op
+    res = restore_table(spark, path, timestamp=9999)
+    assert res["version"] is None  # already at latest
+
+
+def test_timestamp_forms_canonicalize_to_same_instant():
+    instant = dt.datetime(2026, 3, 1, 12, 30, 45, tzinfo=dt.timezone.utc)
+    ms = int(instant.timestamp() * 1000)
+    assert _timestamp_as_of_epoch_ms(ms) == ms
+    assert _timestamp_as_of_epoch_ms(float(ms)) == ms
+    assert _timestamp_as_of_epoch_ms(instant) == ms
+    # naive datetime / ISO string are UTC
+    assert _timestamp_as_of_epoch_ms(instant.replace(tzinfo=None)) == ms
+    assert _timestamp_as_of_epoch_ms("2026-03-01T12:30:45") == ms
+    assert _timestamp_as_of_epoch_ms("2026-03-01T12:30:45+00:00") == ms
+    # aware non-UTC form still lands on the same instant
+    offset = dt.timezone(dt.timedelta(hours=-5))
+    assert _timestamp_as_of_epoch_ms(instant.astimezone(offset)) == ms
+
+
+def test_session_str_renders_in_session_timezone(spark):
+    instant = dt.datetime(2026, 3, 1, 12, 30, 45, tzinfo=dt.timezone.utc)
+    prior = spark.conf.get("spark.sql.session.timeZone", "UTC")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        assert (
+            _timestamp_as_of_session_str(spark, instant)
+            == "2026-03-01 12:30:45.000"
+        )
+        # the string delta-spark parses in session tz must denote the
+        # SAME instant: UTC-12:30 renders as 07:30 America/New_York (EST)
+        spark.conf.set(
+            "spark.sql.session.timeZone", "America/New_York"
+        )
+        assert (
+            _timestamp_as_of_session_str(spark, instant)
+            == "2026-03-01 07:30:45.000"
+        )
+        # epoch-ms input (what delta-spark's option would reject raw)
+        # normalizes to the same parseable string
+        ms = int(instant.timestamp() * 1000)
+        assert (
+            _timestamp_as_of_session_str(spark, ms)
+            == "2026-03-01 07:30:45.000"
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+
+
+def test_read_delta_accepts_every_form_same_snapshot(spark, tmp_path):
+    path = str(tmp_path / "t")
+    t0 = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+    ms = int(t0.timestamp() * 1000)
+    _table_with_times(spark, path, [ms, ms + 60_000, ms + 120_000])
+    probe = ms + 70_000  # between v1 and v2 -> v1 (20 rows)
+    as_dt = dt.datetime.fromtimestamp(probe / 1000, dt.timezone.utc)
+    for form in (probe, as_dt, as_dt.replace(tzinfo=None).isoformat()):
+        assert read_delta(spark, path, timestamp=form).count() == 20

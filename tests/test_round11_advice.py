@@ -1,122 +1,26 @@
-"""Round-11 regression tests for the four ADVICE.md findings:
+"""Round-11 regression tests for the merge_schema ADVICE.md finding:
+merge_schema append must refuse evolved columns carrying
+delta.generationExpression (not just invariants/identity) —
+pre-existing rows would read the generated column as null and
+retroactively violate the generation contract.
 
-1. TIMESTAMP AS OF input normalization in sources.registry.read_delta:
-   epoch-ms, datetime, and ISO string must resolve the SAME snapshot
-   regardless of which runtime dispatches, and the delta-spark option
-   string must render the instant in the SESSION timezone.
-2. merge_schema append must refuse evolved columns carrying
-   delta.generationExpression (not just invariants/identity) —
-   pre-existing rows would read the generated column as null and
-   retroactively violate the generation contract.
-3. version_at_timestamp raises for timestamps past the latest commit
-   on the read path (delta-spark parity); only restore_table keeps the
-   permissive future->latest rule (allow_future=True).
-4. restore_table's commitInfo.operationParameters values are
-   JSON-encoded STRINGS ({'version': '7'}), matching delta-spark's
-   encoding so history-parsing tooling does not choke.
+The round's TIMESTAMP AS OF cases live in test_delta_timestamp_asof.py;
+its RESTORE operationParameters case was an exact duplicate of the
+string-encoding assertion in test_delta_restore.py's
+test_restore_reverts_appends and was dropped.
 """
 
 from __future__ import annotations
 
-import datetime as dt
 import json
-import os
 
 import pytest
 from pyspark.sql import types as T
 
 from lcr_etl_upgrade_spark.delta_lite import (
     read_delta_lite,
-    restore_table,
-    version_at_timestamp,
     write_delta_lite,
 )
-from lcr_etl_upgrade_spark.sources.registry import (
-    _timestamp_as_of_epoch_ms,
-    _timestamp_as_of_session_str,
-    read_delta,
-)
-
-
-def _table_with_times(spark, path, times_ms):
-    write_delta_lite(spark.range(0, 10).select("id"), path)
-    for i, _ in enumerate(times_ms[1:], start=1):
-        write_delta_lite(
-            spark.range(i * 10, i * 10 + 10).select("id"),
-            path,
-            mode="append",
-        )
-    log = os.path.join(path, "_delta_log")
-    for v, ts in enumerate(times_ms):
-        p = os.path.join(log, f"{v:020d}.json")
-        lines = [json.loads(l) for l in open(p) if l.strip()]
-        for a in lines:
-            if "commitInfo" in a:
-                a["commitInfo"]["timestamp"] = ts
-        with open(p, "w") as fh:
-            for a in lines:
-                fh.write(json.dumps(a) + "\n")
-
-
-# ---- 1: TIMESTAMP AS OF normalization ------------------------------------
-
-
-def test_timestamp_forms_canonicalize_to_same_instant():
-    instant = dt.datetime(2026, 3, 1, 12, 30, 45, tzinfo=dt.timezone.utc)
-    ms = int(instant.timestamp() * 1000)
-    assert _timestamp_as_of_epoch_ms(ms) == ms
-    assert _timestamp_as_of_epoch_ms(float(ms)) == ms
-    assert _timestamp_as_of_epoch_ms(instant) == ms
-    # naive datetime / ISO string are UTC
-    assert _timestamp_as_of_epoch_ms(instant.replace(tzinfo=None)) == ms
-    assert _timestamp_as_of_epoch_ms("2026-03-01T12:30:45") == ms
-    assert _timestamp_as_of_epoch_ms("2026-03-01T12:30:45+00:00") == ms
-    # aware non-UTC form still lands on the same instant
-    offset = dt.timezone(dt.timedelta(hours=-5))
-    assert _timestamp_as_of_epoch_ms(instant.astimezone(offset)) == ms
-
-
-def test_session_str_renders_in_session_timezone(spark):
-    instant = dt.datetime(2026, 3, 1, 12, 30, 45, tzinfo=dt.timezone.utc)
-    prior = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        assert (
-            _timestamp_as_of_session_str(spark, instant)
-            == "2026-03-01 12:30:45.000"
-        )
-        # the string delta-spark parses in session tz must denote the
-        # SAME instant: UTC-12:30 renders as 07:30 America/New_York (EST)
-        spark.conf.set(
-            "spark.sql.session.timeZone", "America/New_York"
-        )
-        assert (
-            _timestamp_as_of_session_str(spark, instant)
-            == "2026-03-01 07:30:45.000"
-        )
-        # epoch-ms input (what delta-spark's option would reject raw)
-        # normalizes to the same parseable string
-        ms = int(instant.timestamp() * 1000)
-        assert (
-            _timestamp_as_of_session_str(spark, ms)
-            == "2026-03-01 07:30:45.000"
-        )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prior)
-
-
-def test_read_delta_accepts_every_form_same_snapshot(spark, tmp_path):
-    path = str(tmp_path / "t")
-    t0 = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
-    ms = int(t0.timestamp() * 1000)
-    _table_with_times(spark, path, [ms, ms + 60_000, ms + 120_000])
-    probe = ms + 70_000  # between v1 and v2 -> v1 (20 rows)
-    as_dt = dt.datetime.fromtimestamp(probe / 1000, dt.timezone.utc)
-    for form in (probe, as_dt, as_dt.replace(tzinfo=None).isoformat()):
-        assert read_delta(spark, path, timestamp=form).count() == 20
-
-
-# ---- 2: merge_schema refuses evolved generated columns -------------------
 
 
 def test_merge_schema_refuses_evolved_generated_column(spark, tmp_path):
@@ -180,43 +84,3 @@ def test_merge_schema_plain_evolution_still_allowed(spark, tmp_path):
     )
     got = read_delta_lite(spark, path)
     assert got.count() == 2 and "n" in got.columns
-
-
-# ---- 3: future TIMESTAMP AS OF refuses on reads, permissive on restore ---
-
-
-def test_future_timestamp_read_refuses_restore_resolves(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _table_with_times(spark, path, [1000, 2000, 3000])
-    with pytest.raises(ValueError, match="after the latest commit"):
-        read_delta_lite(spark, path, timestamp=9999)
-    with pytest.raises(ValueError, match="after the latest commit"):
-        read_delta(spark, path, timestamp=9999)
-    # boundary: exactly the latest commit time still reads
-    assert read_delta_lite(spark, path, timestamp=3000).count() == 30
-    # RESTORE keeps the permissive rule: future -> latest == no-op
-    res = restore_table(spark, path, timestamp=9999)
-    assert res["version"] is None  # already at latest
-    res = restore_table(spark, path, timestamp=2500)  # -> v1
-    assert read_delta_lite(spark, path).count() == 20
-
-
-# ---- 4: RESTORE commitInfo operationParameters are strings ---------------
-
-
-def test_restore_operation_parameters_stringly_encoded(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _table_with_times(spark, path, [1000, 2000, 3000])
-    restore_table(spark, path, version=1)
-    log = os.path.join(path, "_delta_log")
-    latest = sorted(
-        f for f in os.listdir(log) if f.endswith(".json")
-    )[-1]
-    actions = [
-        json.loads(l) for l in open(os.path.join(log, latest)) if l.strip()
-    ]
-    ci = next(a["commitInfo"] for a in actions if "commitInfo" in a)
-    assert ci["operation"] == "RESTORE"
-    params = ci["operationParameters"]
-    assert params["version"] == "1"
-    assert all(isinstance(v, str) for v in params.values())
